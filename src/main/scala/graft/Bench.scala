@@ -84,8 +84,8 @@ object Bench {
     }
     val line = resultJson(timed, sfDir, Some((cSt, cMt)))
     println(line)
-    writeFullLine(line, sfDir)
-    println(compactJson(timed, sfDir, Some((cSt, cMt))))
+    val full = writeFullLine(line, sfDir)
+    println(compactJson(timed, sfDir, Some((cSt, cMt)), full))
     spark.stop()
   }
 
@@ -94,45 +94,63 @@ object Bench {
     * bench output, and the 318-entry full line above is wider than that
     * — its opening brace is truncated away, so `BENCH_r10..r16` all
     * record `parsed: null` and the driver can compute no totals. This
-    * line restores a parseable record (total, n, failed, canaries, the
-    * committed full-line path). It ADDS a line and changes no
-    * measurement: the full per-query line is still printed first and
-    * persisted under scale/. `queries` is intentionally empty here —
-    * the complete map cannot fit in the wrapper's window; consumers
-    * needing per-query data read `full` (committed every run). */
+    * line restores a parseable record (total, n, the first
+    * [[compactFailedCap]] failed names with the full count in
+    * `failed_n`, canaries, and the full-line path when `full` names a
+    * file [[writeFullLine]] wrote). It ADDS a line and changes no
+    * measurement: the full per-query line is still printed first.
+    * `queries` is intentionally empty here — the complete map cannot fit
+    * in the wrapper's window; consumers needing per-query data read
+    * `full`. The caps keep the line bounded for ANY failure count. */
   private[graft] def compactJson(timed: Seq[(String, Double, Boolean)],
-      sfDir: String, canary: Option[(Double, Double)]): String = {
+      sfDir: String, canary: Option[(Double, Double)],
+      full: Option[String]): String = {
     val total = timed.collect { case (_, v, true) => v }.sum
-    val failed = timed.collect { case (k, _, false) => s"\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val can = canary.map { case (st, mt) =>
-      f""""canary_st":$st%.3f,"canary_mt":$mt%.3f,"""
-    }.getOrElse("")
-    val sfBase = new java.io.File(sfDir).getName
+    val failedNames = timed.collect { case (k, _, false) => k }
+    val failed = failedNames.take(compactFailedCap)
+      .map(k => s"\"" + k + "\"").mkString("[", ",", "]")
+    val fullField = full.fold("")(f => s""""full":"$f",""")
     s"""{"metric":"total","value":$total,"unit":"sec","queries":{},""" +
-      s""""n":${timed.size},"failed":$failed,$can""" +
-      s""""full":"scale/bench_full_$sfBase.json","sf":"$sfDir"}"""
+      s""""n":${timed.size},"failed":$failed,""" +
+      s""""failed_n":${failedNames.size},${canaryFields(canary)}""" +
+      s"""$fullField"sf":"$sfDir"}"""
   }
+
+  /** Failed names the compact line lists before eliding to `failed_n`. */
+  private[graft] val compactFailedCap = 20
+
+  /** A timing in seconds to 3dp. Locale.ROOT: the JVM default locale
+    * may write a decimal comma (`0,900`), which is not JSON. */
+  private def sec3(x: Double): String =
+    "%.3f".formatLocal(java.util.Locale.ROOT, x)
+
+  private def canaryFields(canary: Option[(Double, Double)]): String =
+    canary.map { case (st, mt) =>
+      s""""canary_st":${sec3(st)},"canary_mt":${sec3(mt)},"""
+    }.getOrElse("")
 
   /** The driver's wrapper truncates the metric line to its last 2000
     * chars; persist the complete line so every field (canaries included)
     * is recoverable from a committed artifact regardless of wrapper
-    * behavior. Best-effort: a bench run outside the repo root skips it. */
-  private def writeFullLine(line: String, sfDir: String): Unit =
+    * behavior. Best-effort: a bench run outside the repo root skips it.
+    * Returns the per-sf file's path when it was written. */
+  private def writeFullLine(line: String, sfDir: String): Option[String] =
     try {
       val dir = new java.io.File("scale")
-      if (dir.isDirectory) {
+      if (!dir.isDirectory) None
+      else {
         // per-sf file too, so a later smoke run at another scale factor
         // cannot clobber the round's sf0.1 evidence
-        val sfBase = new java.io.File(sfDir).getName
-        Seq("bench_full_latest.json", s"bench_full_$sfBase.json").foreach { f =>
+        val perSf = s"bench_full_${new java.io.File(sfDir).getName}.json"
+        Seq("bench_full_latest.json", perSf).foreach { f =>
           val w = new java.io.PrintWriter(new java.io.File(dir, f))
           try w.println(line) finally w.close()
         }
+        Some(s"scale/$perSf")
       }
-    } catch { case _: Throwable => () }
+    } catch { case _: Throwable => None }
 
-  private def resultJson(timed: Seq[(String, Double, Boolean)],
+  private[graft] def resultJson(timed: Seq[(String, Double, Boolean)],
       sfDir: String, canary: Option[(Double, Double)] = None,
       blockCanaries: Seq[(Double, Double)] = Nil): String = {
     // a failed query reports -1.0 (not its elapsed-until-failure time) and
@@ -143,9 +161,6 @@ object Bench {
     val failed = timed.collect { case (k, _, false) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = timed.collect { case (_, v, true) => v }.sum
-    val can = canary.map { case (st, mt) =>
-      f""""canary_st":$st%.3f,"canary_mt":$mt%.3f,"""
-    }.getOrElse("")
     // per-block canaries (isolated mode): the isolated protocol is the
     // regression detector, and host drift BETWEEN blocks is the one place
     // it could still masquerade as per-query change — each child's
@@ -153,15 +168,15 @@ object Bench {
     val blocks =
       if (blockCanaries.isEmpty) ""
       else {
-        val sts = blockCanaries.map(c => f"${c._1}%.3f").mkString("[", ",", "]")
-        val mts = blockCanaries.map(c => f"${c._2}%.3f").mkString("[", ",", "]")
+        val sts = blockCanaries.map(c => sec3(c._1)).mkString("[", ",", "]")
+        val mts = blockCanaries.map(c => sec3(c._2)).mkString("[", ",", "]")
         s""""block_canary_st":$sts,"block_canary_mt":$mts,"""
       }
     // canaries go AFTER the query map: the driver's bench wrapper keeps
     // only the last 2000 chars of this line, and the 272-entry query map
     // is far wider than that — fields in front of it are truncated away
     // (round-10 verdict "What's wrong" #4 lost r10's canary stamps)
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,$can$blocks"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,${canaryFields(canary)}$blocks"sf":"$sfDir"}"""
   }
 
   /** Isolated-run protocol (round-7 verdict #6): per-query numbers from one
@@ -226,8 +241,8 @@ object Bench {
       else Some((median(cans.map(_._1)), median(cans.map(_._2))))
     val line = resultJson(timed, sfDir, med, cans)
     println(line)
-    writeFullLine(line, sfDir)
-    println(compactJson(timed, sfDir, med))
+    val full = writeFullLine(line, sfDir)
+    println(compactJson(timed, sfDir, med, full))
   }
 
   /** Extract a child's canary fields, if present. */

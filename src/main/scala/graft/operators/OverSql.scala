@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.QueryDef
-import graft.streaming.{StatefulOps, StreamingOverSql}
+import graft.streaming.StreamingOverSql
 
 /** The reference's streaming OVER-aggregate shapes accepted AS SQL TEXT
   * (reference: flink-table-planner-blink
@@ -11,7 +11,7 @@ import graft.streaming.{StatefulOps, StreamingOverSql}
   * DuckDB oracle as its Scala-API twin in
   * [[graft.streaming.StatefulBatch]] — the SQL front-end is thereby
   * proven bit-identical to the API it dispatches onto, closing the
-  * SQL-vs-API asymmetry for the stateful OVER trio the way
+  * SQL-vs-API asymmetry for the stateful OVER family the way
   * [[MatchSql]] closed it for MATCH_RECOGNIZE. */
 object OverSql {
 
@@ -152,9 +152,12 @@ object OverSql {
       .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
+  /** The events table through the stateful executor's collapse — the
+    * route q136–q138 pin too. */
   private def run(sql: String)(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    StreamingOverSql.sql(StatefulOps.typedEvents(spark, dir), sql)
+    StreamingOverSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"), sql,
+      batchNative = false)
 
   /** q74's unbounded running aggregates as SQL text — the oracle text
     * itself is the accepted statement (WINDOW clause, ROUND wrapper,
@@ -196,8 +199,8 @@ object OverSql {
     * same 86400000000 epoch-microseconds horizon). */
   /** The GENERAL-SCHEMA executor ([[graft.streaming.OverAggregates]],
     * new r11) on a non-Event table: the orders fact, ROWS frame, MIN —
-    * the OverWindowITCase surface the Event-typed trio cannot express
-    * (reference: .../stream/sql/OverWindowITCase.scala
+    * the OverWindowITCase surface (reference:
+    * .../stream/sql/OverWindowITCase.scala
     * testRowTimeBoundedPartitionedRowsOver shape). */
   val q136SqlOverAnyRows: QueryDef = QueryDef("q136_sql_over_any_rows",
     """SELECT o_custkey, o_orderkey,
@@ -222,9 +225,8 @@ object OverSql {
   }
 
   /** General-schema RANGE frame partitioned by a STRING key (the IT
-    * cases partition by the string column c) — inexpressible on the
-    * Event-typed operators, whose key is the Long user_id. The oracle
-    * frames on epoch micros like q95's. */
+    * cases partition by the string column c). The oracle frames on epoch
+    * micros like q95's. */
   val q137SqlOverAnyRange: QueryDef = QueryDef("q137_sql_over_any_range",
     """WITH e AS (
       |  SELECT event_type, event_id, value, epoch_us(ts) AS us FROM events)

@@ -4,10 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-/** Count-based windows over an ARBITRARY DataFrame — the general-schema
-  * twin of [[StatefulOps.countTumblePerKey]] /
-  * [[StatefulOps.countSlidePerKey]], the last §2.9 shapes that were
-  * Event-typed (reference: flink-table-runtime-blink
+/** Count-based windows over an ARBITRARY DataFrame — the one
+  * count-window executor (reference: flink-table-runtime-blink
   * .../operators/window/assigners/CountTumblingWindowAssigner.java /
   * CountSlidingWindowAssigner.java — count windows assign on arrival
   * COUNT per key, not time, so no watermark is involved).
@@ -174,7 +172,7 @@ object CountWindows {
             ring.length.toLong, sumRing(ring), ring.head._1, ring.last._1))
       }
       // persist only the trailing size-1 rows any future window can still
-      // contain (the Event-typed operator's bound)
+      // contain (the reference's buffer bound)
       while (ring.length > size - 1) ring.removeHead()
       if (isStreaming) state.update(CWState(seen, ring.toSeq))
       out.result().iterator

@@ -11,14 +11,12 @@ import org.apache.spark.sql.types._
   * table — flink-table-planner-blink
   * .../stream/sql/OverWindowITCase.scala partitions 3-column tuples by a
   * STRING key and aggregates arbitrary columns; the physical routing is
-  * StreamExecOverAggregate.scala:56). The Event-typed operators in
-  * [[StatefulOps]] remain the spec'd fixed-schema fast path; this one
-  * trades their typed state for schema generality:
+  * StreamExecOverAggregate.scala:56). It is the one streaming-OVER
+  * executor, for every row-time and proc-time frame:
   *
   *  - composite (or empty) `partCols`, any column types;
   *  - any numeric value columns; COUNT(*) / COUNT(col) / SUM / MIN /
-  *    MAX / AVG with SQL null-skipping (MIN is exactly what the typed
-  *    trio cannot express — its state emits count/sum/max only);
+  *    MAX / AVG with SQL null-skipping;
   *  - the three row-time frames the reference routes on: UNBOUNDED
   *    PRECEDING, ROWS n PRECEDING, RANGE t PRECEDING (all
   *    ... AND CURRENT ROW).
@@ -354,11 +352,9 @@ object OverAggregates extends Serializable {
   }
 
   /** PROC-TIME streaming OVER with a bounded ROWS frame over an ARBITRARY
-    * DataFrame — the general-schema twin of
-    * [[StatefulOps.procRowsBoundedAggregates]] (reference:
-    * ProcTimeRowsBoundedPrecedingFunction; OverWindowITCase
-    * testProcTimeBoundedPartitionedRowsOver partitions by a non-Event
-    * key and aggregates MIN — neither expressible on the typed op).
+    * DataFrame (reference: ProcTimeRowsBoundedPrecedingFunction;
+    * OverWindowITCase testProcTimeBoundedPartitionedRowsOver partitions
+    * by a string key and aggregates MIN).
     * Proc-time contract: NO watermark, NO buffering, NO event-time
     * reordering — a row frames against whatever arrived before it,
     * emitted immediately. Within one micro-batch arrival order is made
@@ -419,8 +415,7 @@ object OverAggregates extends Serializable {
   }
 
   /** PROC-TIME streaming OVER with a bounded RANGE frame over an
-    * ARBITRARY DataFrame — the general-schema twin of
-    * [[StatefulOps.procRangeBoundedAggregates]] (reference:
+    * ARBITRARY DataFrame (reference:
     * ProcTimeRangeBoundedPrecedingFunction.java — rows buffer under
     * their arrival instant, expired entries retire, and every same-
     * instant peer emits the SAME aggregate over the full peer set).

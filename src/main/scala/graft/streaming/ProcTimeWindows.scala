@@ -43,7 +43,8 @@ import OverAggregates.{Acc, Agg}
   * proc-time WindowOperator.
   *
   * `nowMs` is injectable for deterministic specs; production uses the
-  * wall clock, exactly like [[StatefulOps.procRowsBoundedAggregates]].
+  * wall clock, exactly like [[OverAggregates.procRangeAggregates]]'s
+  * `procClock`.
   */
 object ProcTimeWindows {
 

@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-/** Streaming EVENT-TIME SORT over an ARBITRARY DataFrame — the
-  * general-schema twin of [[StatefulOps.sortByEventTime]], the last
-  * stateful operator that was Event-typed (reference:
+/** Streaming EVENT-TIME SORT over an ARBITRARY DataFrame — the one
+  * streaming-sort executor (reference:
   * flink-table-runtime-blink .../operators/sort/RowTimeSortOperator.java
   * via StreamExecSort / StreamExecTemporalSort — buffer out-of-order
   * rows and release them in order once the watermark passes their

@@ -4,19 +4,19 @@ import org.apache.spark.sql.functions._
 
 import graft.core.QueryDef
 
-/** The stateful trio under the correctness gate: `flatMapGroupsWithState`
-  * executes on batch Datasets too (one invocation per key, empty initial
-  * state), where each operator's semantics collapse to a SQL-expressible
-  * form — so the same code paths exercised by the streaming specs are also
-  * hash-checked against DuckDB:
+/** The stateful executors under the correctness gate:
+  * `flatMapGroupsWithState` executes on batch Datasets too (one invocation
+  * per key, empty initial state), where each operator's semantics collapse
+  * to a SQL-expressible form — so the same code paths exercised by the
+  * streaming specs are also hash-checked against DuckDB:
   *
   *  - top-n          → rank-by-value per key
   *  - keep-last      → latest row per key
   *  - running OVER   → SUM/COUNT/MAX OVER (… ROWS UNBOUNDED PRECEDING)
   *
-  * The running aggregates are bit-deterministic because the operator sorts
-  * each group's rows by (ts, event_id) before folding — the same sequence
-  * the oracle's window frame accumulates in.
+  * The running aggregates are bit-deterministic because the executor sorts
+  * each group's rows by the declared order key (ts, event_id) before
+  * folding — the same sequence the oracle's window frame accumulates in.
   */
 object StatefulBatch {
 
@@ -86,9 +86,8 @@ object StatefulBatch {
     * ProcTimeRangeBoundedPrecedingFunction.java) collapsed to batch: a
     * single batch is ONE processing-time instant, so every row of a key
     * is every other row's peer and the frame is the whole partition —
-    * here keyed by the STRING event_type with a MIN measure, neither
-    * expressible on the Event-typed operator. Horizon eviction across
-    * micro-batches is spec'd with an injected clock in
+    * here keyed by the STRING event_type with a MIN measure. Horizon
+    * eviction across micro-batches is spec'd with an injected clock in
     * OverAggregatesSpec. */
   val q161ProcRangeAny: QueryDef = QueryDef("q161_proc_range_any",
     """SELECT event_type, event_id,
@@ -728,6 +727,28 @@ object StatefulBatch {
       .orderBy(col("user_id"))
   }
 
+  /** The events table in the Event model's five columns. */
+  private def events(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    StatefulOps.typedEvents(spark, dir).toDF()
+
+  /** COUNT(*) / SUM(value) / MAX(value) under the given output names. */
+  private[graft] def countSumMax(cnt: String, sum: String,
+      max: String): Seq[OverAggregates.Agg] =
+    Seq(OverAggregates.Agg("COUNT", None, cnt),
+      OverAggregates.Agg("SUM", Some("value"), sum),
+      OverAggregates.Agg("MAX", Some("value"), max))
+
+  /** The bounded-frame aggregates q94/q95/q120/q121 declare. */
+  private[graft] val frameAggs = countSumMax("n_in_frame", "frame_sum", "frame_max")
+
+  /** The count-window oracle's columns from [[CountWindows]] output;
+    * sums at 4dp (sequential fold vs the oracle's aggregation differ in
+    * the last ulp). */
+  private val countWindowCols = Seq(col("user_id"), col("win_seq"),
+    col("n_rows").as("n_events"), round(col("sum_v"), 4).as("sum_value"),
+    col("first_id").as("first_event"), col("last_id").as("last_event"))
+
   val q72TopnState: QueryDef = QueryDef("q72_topn_state",
     """SELECT user_id, rank, event_id, value FROM (
       |  SELECT user_id, event_id, value,
@@ -735,9 +756,9 @@ object StatefulBatch {
       |                       ORDER BY value DESC, event_id) AS rank
       |  FROM events) WHERE rank <= 3
       |ORDER BY user_id, rank""".stripMargin) { (spark, dir) =>
-    StatefulOps.topNPerKey(StatefulOps.typedEvents(spark, dir), 3).toDF()
-      .select(col("user_id"), col("rank").cast("bigint").as("rank"),
-        col("event_id"), col("value"))
+    RankOps.rankRows(events(spark, dir), Seq("user_id"),
+      Seq("value" -> false, "event_id" -> true), 3, rankAlias = Some("rank"))
+      .select(col("user_id"), col("rank"), col("event_id"), col("value"))
       .orderBy(col("user_id"), col("rank"))
   }
 
@@ -748,7 +769,8 @@ object StatefulBatch {
       |                       ORDER BY ts DESC, event_id DESC) AS rn
       |  FROM events) WHERE rn = 1
       |ORDER BY user_id, event_type""".stripMargin) { (spark, dir) =>
-    StatefulOps.keepLastDedup(StatefulOps.typedEvents(spark, dir)).toDF()
+    RankOps.keepOne(events(spark, dir), Seq("user_id", "event_type"),
+      Seq("ts" -> false, "event_id" -> false))
       .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
       .orderBy(col("user_id"), col("event_type"))
   }
@@ -762,7 +784,9 @@ object StatefulBatch {
       |WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
       |               ROWS UNBOUNDED PRECEDING)
       |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    StatefulOps.runningAggregates(StatefulOps.typedEvents(spark, dir)).toDF()
+    OverAggregates.overAggregates(events(spark, dir), Seq("user_id"),
+      Seq("ts", "event_id"), OverAggregates.UnboundedPreceding,
+      countSumMax("running_count", "running_sum", "running_max"))
       // DuckDB evaluates windowed SUM with a segment tree, so the double
       // association order differs from the operator's sequential fold in
       // the last ulp — compare at 4dp
@@ -810,10 +834,9 @@ object StatefulBatch {
       |FROM seq
       |GROUP BY 1, 2 HAVING COUNT(*) = 3
       |ORDER BY user_id, win_seq""".stripMargin) { (spark, dir) =>
-    StatefulOps.countTumblePerKey(StatefulOps.typedEvents(spark, dir), 3).toDF()
-      .select(col("user_id"), col("win_seq"), col("n_events"),
-        round(col("sum_value"), 4).as("sum_value"),
-        col("first_event"), col("last_event"))
+    CountWindows.countTumble(events(spark, dir), Seq("user_id"),
+      Seq("ts", "event_id"), 3, "value", "event_id")
+      .select(countWindowCols: _*)
       .orderBy(col("user_id"), col("win_seq"))
   }
 
@@ -830,7 +853,8 @@ object StatefulBatch {
       |WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
       |               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    StatefulOps.rowsBoundedAggregates(StatefulOps.typedEvents(spark, dir), 4).toDF()
+    OverAggregates.overAggregates(events(spark, dir), Seq("user_id"),
+      Seq("ts", "event_id"), OverAggregates.RowsPreceding(4), frameAggs)
       .select(col("user_id"), col("event_id"), col("n_in_frame"),
         round(col("frame_sum"), 4).as("frame_sum"), col("frame_max"))
       .orderBy(col("user_id"), col("event_id"))
@@ -853,8 +877,9 @@ object StatefulBatch {
       |WINDOW win AS (PARTITION BY user_id ORDER BY us
       |               RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    StatefulOps.rangeBoundedAggregates(StatefulOps.typedEvents(spark, dir),
-      java.time.Duration.ofHours(24)).toDF()
+    OverAggregates.overAggregates(events(spark, dir), Seq("user_id"),
+      Seq("ts", "event_id"),
+      OverAggregates.RangePreceding(java.time.Duration.ofHours(24)), frameAggs)
       .select(col("user_id"), col("event_id"), col("n_in_frame"),
         round(col("frame_sum"), 4).as("frame_sum"), col("frame_max"))
       .orderBy(col("user_id"), col("event_id"))
@@ -876,8 +901,8 @@ object StatefulBatch {
       |WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
       |               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    StatefulOps.procRowsBoundedAggregates(
-      StatefulOps.typedEvents(spark, dir), 2).toDF()
+    OverAggregates.procRowsAggregates(events(spark, dir), Seq("user_id"),
+      Seq("ts", "event_id"), 2, frameAggs)
       .select(col("user_id"), col("event_id"), col("n_in_frame"),
         round(col("frame_sum"), 4).as("frame_sum"), col("frame_max"))
       .orderBy(col("user_id"), col("event_id"))
@@ -898,9 +923,8 @@ object StatefulBatch {
       |  MAX(value) OVER (PARTITION BY user_id) AS frame_max
       |FROM events
       |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    StatefulOps.procRangeBoundedAggregates(
-      StatefulOps.typedEvents(spark, dir),
-      java.time.Duration.ofHours(1)).toDF()
+    OverAggregates.procRangeAggregates(events(spark, dir), Seq("user_id"),
+      Seq("ts", "event_id"), java.time.Duration.ofHours(1), frameAggs)
       .select(col("user_id"), col("event_id"), col("n_in_frame"),
         round(col("frame_sum"), 4).as("frame_sum"), col("frame_max"))
       .orderBy(col("user_id"), col("event_id"))
@@ -973,10 +997,9 @@ object StatefulBatch {
       |FROM win
       |WHERE rn >= 5 AND (rn - 5) % 2 = 0
       |ORDER BY user_id, win_seq""".stripMargin) { (spark, dir) =>
-    StatefulOps.countSlidePerKey(StatefulOps.typedEvents(spark, dir), 5, 2).toDF()
-      .select(col("user_id"), col("win_seq"), col("n_events"),
-        round(col("sum_value"), 4).as("sum_value"),
-        col("first_event"), col("last_event"))
+    CountWindows.countSlide(events(spark, dir), Seq("user_id"),
+      Seq("ts", "event_id"), 5, 2, "value", "event_id")
+      .select(countWindowCols: _*)
       .orderBy(col("user_id"), col("win_seq"))
   }
 

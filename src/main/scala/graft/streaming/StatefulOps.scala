@@ -6,49 +6,28 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** The stateful streaming operators Spark lacks as primitives (SURVEY.md
-  * §7.3 "custom Catalyst work"): streaming top-n, keep-last deduplication
-  * and streaming OVER (per-key running aggregates), each implemented with
-  * `flatMapGroupsWithState` over a keyed event stream — the Spark-native
-  * equivalent of the reference's keyed-state ProcessFunctions.
+/** The events-table stream model shared by the streaming package: the
+  * typed [[Event]] row, its full-precision event-time key
+  * ([[eventMicros]]), the typed batch loader ([[typedEvents]]) and the
+  * streaming per-stratum reservoir sampler.
   *
-  * Reference semantics reproduced:
-  *  - top-n:   AbstractTopNFunction.java:51 / UpdatableTopNFunction.java:61
-  *             (emit the new top-n whenever it changes)
-  *  - dedup:   DeduplicateKeepLastRowFunction.java:34 (latest row per key
-  *             wins, updates re-emitted downstream)
-  *  - OVER:    ProcTimeUnboundedPrecedingFunction.java (running aggregates
-  *             over everything seen so far per key)
+  * The keyed stateful families (top-n / dedup, streaming OVER, count
+  * windows, event-time sort) each have ONE executor that runs on any
+  * DataFrame — [[RankOps]], [[OverAggregates]], [[CountWindows]] and
+  * [[RowSort]] — the way the reference's Blink runtime runs one keyed
+  * operator per family on any registered table. An Event stream feeds
+  * them through `.toDF()`.
   *
-  * State scale: per-key state is bounded by n for top-n and O(1) for
-  * keep-last / running aggregates — fine with millions of keys sharded
-  * across executors. Idle-state cleanup (reference: CleanupState idle
-  * retention) is opt-in via `idleTtl`: a processing-time timeout makes
-  * Spark schedule continuous empty micro-batches to evaluate expiry, so
-  * it should be enabled only on long-running jobs that need it.
+  * Idle-state cleanup (reference: CleanupState idle retention) is
+  * opt-in via `idleTtl`: a processing-time timeout makes Spark schedule
+  * continuous empty micro-batches to evaluate expiry, so it should be
+  * enabled only on long-running jobs that need it.
   */
 object StatefulOps {
 
   /** One keyed event of the stream (events table shape). */
   case class Event(user_id: Long, event_id: Long, ts: Timestamp,
       event_type: String, value: Double)
-
-  /** Emitted top-n entry: rank refreshed on every change. */
-  case class Ranked(user_id: Long, rank: Int, event_id: Long, value: Double)
-
-  /** Top-n state: best (value desc, id asc) entries seen so far. */
-  case class TopEntry(value: Double, event_id: Long)
-  case class TopState(entries: Seq[TopEntry])
-
-  /** Latest row per (user, event_type). */
-  case class Latest(user_id: Long, event_type: String, event_id: Long,
-      value: Double, ts: Timestamp)
-
-  /** Running per-key aggregates (streaming OVER ... UNBOUNDED PRECEDING). */
-  case class Running(user_id: Long, event_id: Long, running_count: Long,
-      running_sum: Double, running_max: Double)
-
-  case class RunState(count: Long, sum: Double, max: Double)
 
   /** Full-precision event-time sort key: epoch MICROSECONDS.
     * `Timestamp.getTime` truncates to milliseconds — the sub-ms component
@@ -87,8 +66,7 @@ object StatefulOps {
     * [[graft.operators.Sampling.stratifiedSample]] with the same seed —
     * the oracle-checked contract.
     *
-    * State is bounded by k entries per stratum; same TTL discipline as the
-    * other operators here. */
+    * State is bounded by k entries per stratum. */
   def reservoirPerKey(rows: Dataset[(String, Long)], k: Int, seed: Long,
       idleTtl: Option[String] = None): Dataset[Sampled] = {
     implicit val outEnc = Encoders.product[Sampled]
@@ -113,508 +91,6 @@ object StatefulOps {
               }
             } else Iterator.empty
           }
-        })
-  }
-
-  /** Streaming top-n by value per user: whenever the per-key top-n set
-    * changes, re-emit the full refreshed ranking (the reference's
-    * UpdatableTopNFunction contract, minus per-row retractions — downstream
-    * consumers treat each emission as the new ranking). */
-  def topNPerKey(events: Dataset[Event], n: Int,
-      idleTtl: Option[String] = None): Dataset[Ranked] = {
-    implicit val rankedEnc = Encoders.product[Ranked]
-    implicit val stateEnc = Encoders.product[TopState]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf(idleTtl))(
-        (user: Long, rows: Iterator[Event], state: GroupState[TopState]) => {
-          if (handleTtl(state, idleTtl)) Iterator.empty
-          else {
-            val prev = state.getOption.getOrElse(TopState(Nil)).entries
-            val merged = (prev ++ rows.map(e => TopEntry(e.value, e.event_id)))
-              .sortBy(t => (-t.value, t.event_id)).take(n)
-            if (merged != prev) {
-              state.update(TopState(merged))
-              merged.zipWithIndex.iterator.map { case (t, i) =>
-                Ranked(user, i + 1, t.event_id, t.value)
-              }
-            } else Iterator.empty
-          }
-        })
-  }
-
-  /** Keep-last dedup per (user, event_type): latest event (by ts, then
-    * event_id) wins; re-emits on every change. */
-  def keepLastDedup(events: Dataset[Event],
-      idleTtl: Option[String] = None): Dataset[Latest] = {
-    implicit val latestEnc = Encoders.product[Latest]
-    events
-      .groupByKey(e => (e.user_id, e.event_type))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf(idleTtl))(
-        (key: (Long, String), rows: Iterator[Event], state: GroupState[Latest]) => {
-          if (handleTtl(state, idleTtl)) Iterator.empty
-          else {
-            var cur = state.getOption.orNull
-            var changed = false
-            rows.foreach { e =>
-              val newer = cur == null ||
-                e.ts.after(cur.ts) ||
-                (e.ts.equals(cur.ts) && e.event_id > cur.event_id)
-              if (newer) {
-                cur = Latest(e.user_id, e.event_type, e.event_id, e.value, e.ts)
-                changed = true
-              }
-            }
-            // emit only when the kept row actually changed — a batch of
-            // exclusively stale/out-of-order rows must not re-announce
-            // the unchanged latest (DeduplicateKeepLastRowFunction emits
-            // per change, not per arrival)
-            if (changed) { state.update(cur); Iterator.single(cur) }
-            else Iterator.empty
-          }
-        })
-  }
-
-  /** Streaming OVER — per-key running count/sum/max over everything seen so
-    * far, one output row per input row (ROWS UNBOUNDED PRECEDING frame). */
-  def runningAggregates(events: Dataset[Event],
-      idleTtl: Option[String] = None): Dataset[Running] = {
-    implicit val runEnc = Encoders.product[Running]
-    implicit val stEnc = Encoders.product[RunState]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf(idleTtl))(
-        (user: Long, rows: Iterator[Event], state: GroupState[RunState]) => {
-          if (handleTtl(state, idleTtl)) Iterator.empty
-          else {
-            var s = state.getOption.getOrElse(RunState(0L, 0.0, Double.MinValue))
-            // sort the micro-batch's rows by event time for deterministic
-            // running values (within-batch order is not guaranteed)
-            val out = rows.toSeq.sortBy(e => (eventMicros(e.ts), e.event_id)).map { e =>
-              s = RunState(s.count + 1, s.sum + e.value, math.max(s.max, e.value))
-              Running(user, e.event_id, s.count, s.sum, s.max)
-            }
-            state.update(s)
-            out.iterator
-          }
-        })
-  }
-
-  /** Aggregates over one bounded OVER frame, one output row per input
-    * row (streaming ROWS/RANGE bounded-preceding OVER). */
-  case class FrameAgg(user_id: Long, event_id: Long, n_in_frame: Long,
-      frame_sum: Double, frame_max: Double)
-
-  case class RowsFrameState(ring: Seq[Double], pending: Seq[Event],
-      lastUs: Long)
-
-  /** Streaming OVER with a bounded ROWS frame — per-key count/sum/max over
-    * `ROWS BETWEEN <preceding> PRECEDING AND CURRENT ROW` in (ts, event_id)
-    * order, one output row per input row (reference:
-    * RT/operators/over/RowTimeRowsBoundedPrecedingFunction.java — the
-    * "last N rows per key" alerting shape; the unbounded variant is
-    * [[runningAggregates]]).
-    *
-    * Rows BUFFER until the watermark closes them and are only then run
-    * through the frame in (ts, event_id) order — exactly the reference
-    * function's register-a-timer-then-fire-on-watermark protocol. Framing
-    * on arrival order instead would let a late row's frame include rows
-    * with LATER event times (and there would be no correct eviction order
-    * at all for RANGE); the watermark delay is the declared out-of-order
-    * bound, as everywhere else in this package.
-    *
-    * Per-key state is the frame ring (O(preceding + 1) values, the same
-    * bound as the reference's retained-row state — it persists for idle
-    * keys because any future row's frame reaches back into it) plus the
-    * not-yet-closed buffer (bounded by the watermark delay). `idleTtl`,
-    * when set, is the reference's idle-state retention: a key whose ring
-    * has seen no row for `idleTtl` of EVENT time is cleared once the
-    * watermark passes that horizon — a row arriving later starts a fresh
-    * frame, the documented retention trade. The frame aggregates are
-    * recomputed left-to-right over the ring at each row rather than
-    * incrementally maintained: MAX is not invertible under eviction
-    * anyway (the reference re-scans for a new max when the old one
-    * retires), and a full ring fold makes the double sum
-    * bit-deterministic no matter what was evicted. */
-  def rowsBoundedAggregates(events: Dataset[Event], preceding: Int,
-      delay: String = "0 seconds",
-      idleTtl: Option[java.time.Duration] = None): Dataset[FrameAgg] = {
-    require(preceding >= 0, s"ROWS frame bound must be >= 0, got $preceding")
-    val cap = preceding + 1
-    val ttlUs = idleTtl.map(_.toNanos / 1000)
-    val isBatch = !events.isStreaming
-    implicit val outEnc = Encoders.product[FrameAgg]
-    implicit val stEnc = Encoders.product[RowsFrameState]
-    events
-      .withWatermark("ts", delay)
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, rows: Iterator[Event], state: GroupState[RowsFrameState]) => {
-          val st = state.getOption.getOrElse(RowsFrameState(Nil, Nil, Long.MinValue))
-          val buf = (st.pending ++ rows)
-            .sortBy(e => (eventMicros(e.ts), e.event_id))
-          // batch: no watermark exists — the whole input is final
-          val wmUs =
-            if (isBatch) Long.MaxValue
-            else state.getCurrentWatermarkMs() * 1000L
-          val (ripe, pending) = buf.partition(e => eventMicros(e.ts) <= wmUs)
-          val ring = scala.collection.mutable.ArrayDeque.empty[Double]
-          ring.addAll(st.ring)
-          // idle retention must hold even when the expiry timer has not
-          // fired yet: a row whose event-time gap from the previous row
-          // reaches the TTL starts a fresh frame HERE, deterministically,
-          // instead of racing the timer (which may share this very batch
-          // with the row) and framing against the stale ring
-          var prevUs = st.lastUs
-          val out = ripe.map { e =>
-            val eUs = eventMicros(e.ts)
-            ttlUs.foreach { t =>
-              if (prevUs != Long.MinValue && eUs - prevUs >= t) ring.clear()
-            }
-            prevUs = eUs
-            ring.append(e.value)
-            if (ring.length > cap) ring.removeHead()
-            FrameAgg(user, e.event_id, ring.length.toLong, ring.sum, ring.max)
-          }
-          val lastUs =
-            if (ripe.nonEmpty) eventMicros(ripe.last.ts) else st.lastUs
-          val idleExpired = pending.isEmpty &&
-            ttlUs.exists(t => lastUs != Long.MinValue && wmUs >= lastUs + t)
-          if ((ring.isEmpty && pending.isEmpty) || idleExpired) state.remove()
-          else {
-            state.update(RowsFrameState(ring.toSeq, pending, lastUs))
-            if (!isBatch) {
-              if (pending.nonEmpty) {
-                // fire once the watermark can cover the earliest pending row
-                val headMs = eventMicros(pending.head.ts) / 1000
-                state.setTimeoutTimestamp(
-                  math.max(headMs - 1, state.getCurrentWatermarkMs() + 1))
-              } else ttlUs.foreach { t =>
-                // idle retention: clear the ring once the watermark is
-                // `idleTtl` of event time past the key's last row
-                state.setTimeoutTimestamp(
-                  math.max((lastUs + t) / 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1))
-              }
-            }
-          }
-          out.iterator
-        })
-  }
-
-  case class ProcRingState(ring: Seq[Double])
-
-  /** Proc-time streaming OVER with a bounded ROWS frame — per-key
-    * count/sum/max over `ROWS BETWEEN <preceding> PRECEDING AND CURRENT
-    * ROW` in ARRIVAL order, emitted immediately on arrival (reference:
-    * RT/operators/over/ProcTimeRowsBoundedPrecedingFunction.java:129-216 —
-    * accumulate on processElement, retract the row that fell off the
-    * count ring, emit at once).
-    *
-    * The proc-time contract vs [[rowsBoundedAggregates]]: NO watermark,
-    * NO buffering, NO event-time reordering. A row frames against
-    * whatever arrived before it — a late row's frame includes rows with
-    * later event times, by design (the frame axis is processing order).
-    * Within one micro-batch, arrival order is made deterministic as
-    * (ts, event_id) — post-shuffle intra-batch order is otherwise
-    * arbitrary, and the reference has the same freedom within one
-    * network buffer. In batch execution the whole input is one arrival
-    * sequence, so the operator collapses to the plain
-    * `ROWS BETWEEN n PRECEDING AND CURRENT ROW` window over
-    * (ts, event_id) — the q120 oracle.
-    *
-    * Per-key state is the O(preceding + 1) value ring alone — no pending
-    * buffer exists because nothing ever waits. `idleTtl` is the
-    * reference's processing-time cleanup timer
-    * (registerProcessingCleanupTimer): an idle key's ring is dropped
-    * after that much processing time. */
-  def procRowsBoundedAggregates(events: Dataset[Event], preceding: Int,
-      idleTtl: Option[String] = None): Dataset[FrameAgg] = {
-    require(preceding >= 0, s"ROWS frame bound must be >= 0, got $preceding")
-    val cap = preceding + 1
-    implicit val outEnc = Encoders.product[FrameAgg]
-    implicit val stEnc = Encoders.product[ProcRingState]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf(idleTtl))(
-        (user: Long, rows: Iterator[Event], state: GroupState[ProcRingState]) => {
-          if (handleTtl(state, idleTtl)) Iterator.empty
-          else {
-            val ring = scala.collection.mutable.ArrayDeque.empty[Double]
-            state.getOption.foreach(s => ring.addAll(s.ring))
-            val out = rows.toSeq.sortBy(e => (eventMicros(e.ts), e.event_id))
-              .map { e =>
-                ring.append(e.value)
-                if (ring.length > cap) ring.removeHead()
-                // full ring fold per row: MAX is not invertible under
-                // eviction and the left-to-right double sum is
-                // bit-deterministic (same trade as rowsBoundedAggregates)
-                FrameAgg(user, e.event_id, ring.length.toLong, ring.sum, ring.max)
-              }
-            state.update(ProcRingState(ring.toSeq))
-            out.iterator
-          }
-        })
-  }
-
-  case class ProcEntry(ms: Long, value: Double)
-  case class ProcBufState(buf: Seq[ProcEntry])
-
-  /** Proc-time streaming OVER with a bounded RANGE frame — per-key
-    * count/sum/max over rows whose PROCESSING time falls within
-    * `[arrival - horizon, arrival]` (reference:
-    * RT/operators/over/ProcTimeRangeBoundedPrecedingFunction.java — rows
-    * buffer under their arrival millisecond, a +1ms timer fires, expired
-    * entries retract, and every same-millisecond peer emits the SAME
-    * aggregate over the full peer set).
-    *
-    * Micro-batch rendering: the processing-time instant is the batch, so
-    * all of a key's rows in one micro-batch are peers — each emits the
-    * identical aggregates over the retained buffer plus the whole peer
-    * group, exactly the reference's same-millisecond contract at
-    * micro-batch granularity. Entries older than `horizon` of processing
-    * time retire before the peers accumulate. No watermark is involved;
-    * event time plays no role (the q121 batch collapse is therefore the
-    * whole-partition aggregate — a single batch is one instant).
-    *
-    * `procClock` exists for deterministic tests (inject a logical clock);
-    * production uses the wall clock. State is O(rows inside one horizon)
-    * per key, evicted on the key's next arrival; `idleTtl` clears keys
-    * that stop arriving (the reference's cleanup timer). */
-  def procRangeBoundedAggregates(events: Dataset[Event],
-      horizon: java.time.Duration,
-      procClock: () => Long = () => System.currentTimeMillis(),
-      idleTtl: Option[String] = None): Dataset[FrameAgg] = {
-    val horizonMs = horizon.toMillis
-    require(horizonMs >= 0, s"RANGE frame horizon must be >= 0, got $horizon")
-    implicit val outEnc = Encoders.product[FrameAgg]
-    implicit val stEnc = Encoders.product[ProcBufState]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf(idleTtl))(
-        (user: Long, rows: Iterator[Event], state: GroupState[ProcBufState]) => {
-          if (handleTtl(state, idleTtl)) Iterator.empty
-          else {
-            val now = procClock()
-            val buf = scala.collection.mutable.ArrayDeque.empty[ProcEntry]
-            state.getOption.foreach(s => buf.addAll(s.buf))
-            // entries are appended in arrival order, so stamps are
-            // monotone and head-eviction retires everything expired
-            while (buf.nonEmpty && buf.head.ms < now - horizonMs) buf.removeHead()
-            val peers = rows.toSeq.sortBy(e => (eventMicros(e.ts), e.event_id))
-            peers.foreach(e => buf.append(ProcEntry(now, e.value)))
-            // one aggregate over the full frame, shared by every peer
-            val n = buf.length.toLong
-            var sum = 0.0
-            var max = Double.NegativeInfinity
-            buf.foreach { p => sum += p.value; if (p.value > max) max = p.value }
-            state.update(ProcBufState(buf.toSeq))
-            peers.iterator.map(e => FrameAgg(user, e.event_id, n, sum, max))
-          }
-        })
-  }
-
-  case class TsVal(us: Long, value: Double)
-  case class RangeFrameState(buf: Seq[TsVal], pending: Seq[Event])
-
-  /** Streaming OVER with a bounded RANGE frame — per-key count/sum/max
-    * over `RANGE BETWEEN <horizon> PRECEDING AND CURRENT ROW` in event
-    * time, one output row per input row (reference:
-    * RT/operators/over/RowTimeRangeBoundedPrecedingFunction.java — the
-    * "last T time per key" shape).
-    *
-    * SQL RANGE semantics: the frame key is the timestamp alone, so every
-    * row at the SAME event time is a peer and shares one frame that
-    * includes all of them. As in [[rowsBoundedAggregates]], rows buffer
-    * until the watermark closes them and are framed in event-time order —
-    * the head-only eviction below is only correct on a time-monotone
-    * sequence, which the watermark protocol guarantees.
-    *
-    * State is O(rows inside one horizon) per key plus the not-yet-closed
-    * buffer: frame rows retire as the head advances, and once the
-    * watermark passes `last + horizon` no future row can reach the
-    * remaining frame rows, so an event-time timeout clears them — the
-    * eviction bound the reference implements with its cleanup timer.
-    * Event times compare at full micros precision ([[eventMicros]]). */
-  def rangeBoundedAggregates(events: Dataset[Event], horizon: java.time.Duration,
-      delay: String = "0 seconds"): Dataset[FrameAgg] = {
-    val horizonUs = horizon.toNanos / 1000
-    require(horizonUs >= 0, s"RANGE frame horizon must be >= 0, got $horizon")
-    val isBatch = !events.isStreaming
-    implicit val outEnc = Encoders.product[FrameAgg]
-    implicit val stEnc = Encoders.product[RangeFrameState]
-    events
-      .withWatermark("ts", delay)
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, rows: Iterator[Event], state: GroupState[RangeFrameState]) => {
-          val st = state.getOption.getOrElse(RangeFrameState(Nil, Nil))
-          val all = (st.pending ++ rows)
-            .sortBy(e => (eventMicros(e.ts), e.event_id))
-          val wmUs =
-            if (isBatch) Long.MaxValue
-            else state.getCurrentWatermarkMs() * 1000L
-          val (ripe, pending) = all.partition(e => eventMicros(e.ts) <= wmUs)
-          val buf = scala.collection.mutable.ArrayDeque.empty[TsVal]
-          buf.addAll(st.buf)
-          val sorted = ripe.toIndexedSeq
-          val out = Seq.newBuilder[FrameAgg]
-          var i = 0
-          while (i < sorted.length) {
-            val us = eventMicros(sorted(i).ts)
-            var j = i
-            while (j < sorted.length && eventMicros(sorted(j).ts) == us) j += 1
-            // peers first: same-time rows all belong to each other's frame
-            (i until j).foreach(k => buf.append(TsVal(us, sorted(k).value)))
-            while (buf.nonEmpty && buf.head.us < us - horizonUs) buf.removeHead()
-            val n = buf.length.toLong
-            var sum = 0.0
-            var max = Double.NegativeInfinity
-            buf.foreach { tv => sum += tv.value; if (tv.value > max) max = tv.value }
-            (i until j).foreach(k => out += FrameAgg(user, sorted(k).event_id, n, sum, max))
-            i = j
-          }
-          // any still-unreleased row has ts > watermark, so frame rows
-          // below wm - horizon can never appear in a future frame
-          if (!isBatch && wmUs >= horizonUs)
-            while (buf.nonEmpty && buf.head.us < wmUs - horizonUs) buf.removeHead()
-          if (buf.isEmpty && pending.isEmpty) state.remove()
-          else {
-            state.update(RangeFrameState(buf.toSeq, pending))
-            if (!isBatch) {
-              val nextMs =
-                if (pending.nonEmpty) eventMicros(pending.head.ts) / 1000 - 1
-                else (buf.last.us + horizonUs) / 1000 + 1
-              state.setTimeoutTimestamp(
-                math.max(nextMs, state.getCurrentWatermarkMs() + 1))
-            }
-          }
-          out.result().iterator
-        })
-  }
-
-  /** One completed count window (tumbling or sliding). */
-  case class CountWindow(user_id: Long, win_seq: Long, n_events: Long,
-      sum_value: Double, first_event: Long, last_event: Long)
-
-  case class TumbleState(seq: Long, count: Long, sum: Double,
-      first: Long, last: Long)
-
-  /** Count-tumbling windows per key (reference
-    * CountTumblingWindowAssigner.java): every `n` events per key complete
-    * a window and emit its aggregate; a partial window stays in state
-    * until filled. Count windows trigger on arrival count, not time, so
-    * no watermark is involved; within a micro-batch, rows apply in
-    * (ts, event_id) order for determinism. Per-key state is O(1) (the
-    * running aggregate), as in the reference's pane aggregation. */
-  def countTumblePerKey(events: Dataset[Event], n: Int,
-      idleTtl: Option[String] = None): Dataset[CountWindow] = {
-    require(n > 0, s"count-tumble window size must be positive, got $n")
-    implicit val outEnc = Encoders.product[CountWindow]
-    implicit val stEnc = Encoders.product[TumbleState]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf(idleTtl))(
-        (user: Long, rows: Iterator[Event], state: GroupState[TumbleState]) => {
-          if (handleTtl(state, idleTtl)) Iterator.empty
-          else {
-            var s = state.getOption.getOrElse(TumbleState(0L, 0L, 0.0, 0L, 0L))
-            val out = Seq.newBuilder[CountWindow]
-            rows.toSeq.sortBy(e => (eventMicros(e.ts), e.event_id)).foreach { e =>
-              val first = if (s.count == 0L) e.event_id else s.first
-              s = TumbleState(s.seq, s.count + 1, s.sum + e.value, first, e.event_id)
-              if (s.count == n) {
-                out += CountWindow(user, s.seq, s.count, s.sum, s.first, s.last)
-                s = TumbleState(s.seq + 1, 0L, 0.0, 0L, 0L)
-              }
-            }
-            state.update(s)
-            out.result().iterator
-          }
-        })
-  }
-
-  case class SlideState(seen: Long, ring: Seq[(Long, Double)])
-
-  /** Count-sliding windows per key (reference
-    * CountSlidingWindowAssigner.java): once `size` events have arrived, a
-    * window of the most recent `size` events completes at every `slide`-th
-    * subsequent event. Per-key state is the last `size - 1` events (ring
-    * buffer) — O(size), the same bound as the reference's buffer. */
-  def countSlidePerKey(events: Dataset[Event], size: Int, slide: Int,
-      idleTtl: Option[String] = None): Dataset[CountWindow] = {
-    require(size > 0 && slide > 0,
-      s"count-slide size/slide must be positive, got size=$size slide=$slide")
-    implicit val outEnc = Encoders.product[CountWindow]
-    implicit val stEnc = Encoders.product[SlideState]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf(idleTtl))(
-        (user: Long, rows: Iterator[Event], state: GroupState[SlideState]) => {
-          if (handleTtl(state, idleTtl)) Iterator.empty
-          else {
-            val s = state.getOption.getOrElse(SlideState(0L, Nil))
-            // mutable ring: O(1) amortized per row (an immutable Seq with
-            // :+/takeRight would copy O(size) per event — noticeable at
-            // size in the thousands), window fold only on emission
-            val ring = scala.collection.mutable.ArrayDeque.from(s.ring)
-            var seen = s.seen
-            val out = Seq.newBuilder[CountWindow]
-            rows.toSeq.sortBy(e => (eventMicros(e.ts), e.event_id)).foreach { e =>
-              ring.append((e.event_id, e.value))
-              if (ring.length > size) ring.removeHead()
-              seen += 1
-              if (seen >= size && (seen - size) % slide == 0)
-                out += CountWindow(user, (seen - size) / slide, ring.length.toLong,
-                  ring.iterator.map(_._2).sum, ring.head._1, ring.last._1)
-            }
-            // persist only the size-1 trailing events the next window needs
-            while (ring.length > size - 1) ring.removeHead()
-            state.update(SlideState(seen, ring.toSeq))
-            out.result().iterator
-          }
-        })
-  }
-
-  case class SortBuf(rows: Seq[Event])
-
-  /** Streaming event-time sort (reference RowTimeSortOperator via
-    * StreamExecSort / StreamExecTemporalSort): buffer out-of-order rows
-    * and release them in (ts, event_id) order once the watermark passes
-    * their timestamp — i.e. re-establish event-time order up to the
-    * watermark delay. Total order is inherently single-stream, exactly as
-    * the reference runs its streaming sort at parallelism 1; the operator
-    * is therefore for ORDERED TAPS (alert streams, audit logs), not for
-    * bulk data paths. An event-time timeout drains the buffer when the
-    * watermark advances without new rows. */
-  def sortByEventTime(events: Dataset[Event], delay: String): Dataset[Event] = {
-    implicit val evEnc = Encoders.product[Event]
-    implicit val bufEnc = Encoders.product[SortBuf]
-    val isBatch = !events.isStreaming
-    events
-      .withWatermark("ts", delay)
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: Int, rows: Iterator[Event], state: GroupState[SortBuf]) => {
-          val buf = (state.getOption.map(_.rows).getOrElse(Nil) ++ rows)
-            .sortBy(e => (eventMicros(e.ts), e.event_id))
-          // batch: no watermark exists (getCurrentWatermarkMs throws) —
-          // the whole input is final, release everything in one pass
-          val wmUs =
-            if (isBatch) Long.MaxValue
-            else state.getCurrentWatermarkMs() * 1000L
-          val (ripe, pending) = buf.partition(e => eventMicros(e.ts) <= wmUs)
-          if (pending.isEmpty) state.remove()
-          else {
-            state.update(SortBuf(pending))
-            // fire as soon as the watermark can cover the earliest pending
-            // row: ts-1 (ms) fires when wm >= ts; never at/below current wm
-            val headMs = eventMicros(pending.head.ts) / 1000
-            state.setTimeoutTimestamp(
-              math.max(headMs - 1, state.getCurrentWatermarkMs() + 1))
-          }
-          ripe.iterator
         })
   }
 

@@ -1,19 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, round}
-
-import graft.streaming.StatefulOps.Event
 
 /** SQL text entry for the STREAMING OVER-aggregate family — the same
   * move as [[MatchRecognizeSql]] for pattern matching: a thin clause
   * mapper from the reference's streaming OVER shapes (reference:
   * flink-table-planner-blink .../stream/StreamExecOverAggregate.scala:56
   * routing on the window's ROWS/RANGE bound and row-time vs proc-time
-  * order key, and the OverWindowITCase query texts) onto the stateful
-  * operators in [[StatefulOps]], so a reference user can paste the
-  * `OVER (PARTITION BY k ORDER BY rowtime ROWS/RANGE BETWEEN ...
-  * PRECEDING AND CURRENT ROW)` clause instead of calling the API.
+  * order key, and the OverWindowITCase query texts) onto the
+  * general-schema executors in [[OverAggregates]], so a reference user
+  * can paste the `OVER (PARTITION BY k ORDER BY rowtime ROWS/RANGE
+  * BETWEEN ... PRECEDING AND CURRENT ROW)` clause over any DataFrame
+  * instead of calling the API.
   *
   * Accepted grammar (anything else fails loudly — mis-executing a
   * clause silently is worse than rejecting it):
@@ -21,58 +20,43 @@ import graft.streaming.StatefulOps.Event
   * {{{
   * SELECT item [, item]* FROM <ident>
   * [WINDOW <name> AS ( spec )] [ORDER BY out [, out]*]
-  * item  := user_id | event_id
+  * item  := <column>
   *        | [ROUND(] agg OVER ( spec | <name> ) [, digits)] [AS alias]
-  * agg   := COUNT(*) | SUM(value) | MAX(value) | AVG(value)
-  * spec  := PARTITION BY user_id
-  *          ORDER BY ts [, event_id] | proctime
+  * agg   := COUNT(*) | COUNT([DISTINCT] col) | SUM([DISTINCT] col)
+  *        | AVG([DISTINCT] col) | MIN(col) | MAX(col)
+  * spec  := [PARTITION BY col [, col]*]
+  *          ORDER BY col [, col]* | proctime [, col]*
   *          frame
   * frame := ROWS UNBOUNDED PRECEDING
   *        | ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
   *        | ROWS BETWEEN <n> PRECEDING AND CURRENT ROW
+  *        | RANGE UNBOUNDED PRECEDING
+  *        | RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
   *        | RANGE BETWEEN <micros> PRECEDING AND CURRENT ROW
   *        | RANGE BETWEEN INTERVAL '<n>' DAY|HOUR|MINUTE|SECOND
   *                        PRECEDING AND CURRENT ROW
   * }}}
   *
   * Dispatch mirrors the reference's `StreamExecOverAggregate` routing:
-  * row-time order key + unbounded frame →
-  * [[StatefulOps.runningAggregates]]; + bounded ROWS →
-  * [[StatefulOps.rowsBoundedAggregates]]; + bounded RANGE →
-  * [[StatefulOps.rangeBoundedAggregates]]; `ORDER BY proctime` routes
-  * the bounded frames to the proc-time twins (reference
+  * a row-time order key runs [[OverAggregates.overAggregates]] with the
+  * parsed frame (UNBOUNDED, RANGE UNBOUNDED with SQL peer semantics,
+  * ROWS n, RANGE t PRECEDING); `ORDER BY proctime` routes the bounded
+  * frames to [[OverAggregates.procRowsAggregates]] /
+  * [[OverAggregates.procRangeAggregates]] (reference
   * ProcTimeRowsBoundedPrecedingFunction /
-  * ProcTimeRangeBoundedPrecedingFunction). Every OVER item in one
-  * statement must share one window spec — that is one operator pass,
-  * exactly the constraint the reference's per-window physical operator
-  * imposes.
-  *
-  * [[sql]]'s measure surface is the TYPED operator contract: the
-  * StatefulOps trio is typed to the engine's [[Event]] model and emits
-  * (count, sum, max) over `value`, so COUNT(*) / SUM(value) /
-  * MAX(value) map directly, AVG(value) derives as sum/count, and
-  * anything else is rejected with the reason. [[sqlDf]] (r11) lifts
-  * those limits for the row-time family: it runs the clause over an
-  * ARBITRARY DataFrame through [[OverAggregates]] — composite/string/
-  * absent PARTITION BY, any numeric value columns, MIN and COUNT(col)
-  * included — leaving only `ORDER BY proctime` (arrival-order framing)
-  * on the Event-model path. sqlDf additionally accepts
-  * `RANGE UNBOUNDED PRECEDING` (SQL peer semantics) and DISTINCT
-  * aggregates (`COUNT/SUM/AVG(DISTINCT col)` — the reference's
-  * DistinctView family; Spark's WindowExec rejects distinct window
-  * aggregates, so those always execute on the stateful operator's
-  * collapse).
+  * ProcTimeRangeBoundedPrecedingFunction), with any ORDER BY columns
+  * after `proctime` as the intra-batch determinism key. Every OVER item
+  * in one statement must share one window spec — that is one operator
+  * pass, exactly the constraint the reference's per-window physical
+  * operator imposes. DISTINCT aggregates (`COUNT/SUM/AVG(DISTINCT col)`
+  * — the reference's DistinctView family) always execute on the stateful
+  * operator's collapse: Spark's WindowExec rejects distinct window
+  * aggregates.
   */
 object StreamingOverSql {
 
-  private sealed trait Frame
-  private case object Unbounded extends Frame
-  /** RANGE UNBOUNDED PRECEDING — peer-inclusive (general-schema entry
-    * only; the Event-model [[sql]] entry keeps its running-aggregate
-    * trio). */
-  private case object RangeUnbounded extends Frame
-  private final case class RowsPreceding(n: Int) extends Frame
-  private final case class RangePreceding(us: Long) extends Frame
+  import OverAggregates.{Frame, RangePreceding, RangeUnbounded,
+    RowsPreceding, UnboundedPreceding}
 
   private final case class Spec(partCol: String, orderCols: Seq[String],
       procTime: Boolean, frame: Frame)
@@ -83,96 +67,17 @@ object StreamingOverSql {
       spec: Either[String, Spec], roundDigits: Option[Int],
       distinct: Boolean = false) extends Item
 
-  /** Run a streaming-OVER SQL statement against the events dataset
-    * (batch or streaming — the operators collapse identically). */
-  def sql(events: Dataset[Event], text: String): DataFrame = {
-    val p = new MatchRecognizeSql.P(MatchRecognizeSql.tokenize(text))
-    p.expect("SELECT")
-    val items = scala.collection.mutable.ArrayBuffer.empty[Item]
-    items += parseItem(p)
-    while (p.accept(",")) items += parseItem(p)
-    p.expect("FROM")
-    p.ident() // single-input statement; the dataset IS the table
-    var windows = Map.empty[String, Spec]
-    if (p.accept("WINDOW")) {
-      do {
-        val name = p.ident().toLowerCase
-        p.expect("AS"); p.expect("(")
-        windows += name -> parseSpec(p)
-        p.expect(")")
-      } while (p.accept(","))
-    }
-    val outOrder = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (p.accept("ORDER")) {
-      p.expect("BY")
-      do outOrder += p.ident().toLowerCase while (p.accept(","))
-    }
-    require(p.peek.isEmpty, s"unexpected trailing tokens from '${p.peek}'")
-
-    val measures = items.collect { case m: Measure => m }
-    require(measures.nonEmpty, "no OVER aggregate in SELECT list")
-    val specs = measures.map {
-      case Measure(_, _, _, Left(name), _, _) =>
-        windows.getOrElse(name, sys.error(
-          s"OVER references undefined window '$name'"))
-      case Measure(_, _, _, Right(s), _, _) => s
-    }
-    require(specs.distinct.size == 1,
-      "every OVER item must share one window spec (one operator pass); " +
-        s"found ${specs.distinct.size} distinct specs")
-    val spec = specs.head
-
-    // dispatch: the reference's StreamExecOverAggregate routing
-    val (df, cnt, sum, max) = spec.frame match {
-      case RangeUnbounded => sys.error(
-        "RANGE UNBOUNDED PRECEDING (peer semantics) is the general-schema " +
-          "entry's frame — use sqlDf; the Event-model trio is ROWS-running")
-      case Unbounded =>
-        require(!spec.procTime,
-          "proc-time unbounded OVER not in the operator suite (the " +
-            "reference routes it to ProcTimeUnboundedPrecedingFunction; " +
-            "use ORDER BY ts, or the running-aggregate API)")
-        (StatefulOps.runningAggregates(events).toDF(),
-          "running_count", "running_sum", "running_max")
-      case RowsPreceding(n) =>
-        val out =
-          if (spec.procTime) StatefulOps.procRowsBoundedAggregates(events, n)
-          else StatefulOps.rowsBoundedAggregates(events, n)
-        (out.toDF(), "n_in_frame", "frame_sum", "frame_max")
-      case RangePreceding(us) =>
-        val d = java.time.Duration.ofNanos(us * 1000L)
-        val out =
-          if (spec.procTime) StatefulOps.procRangeBoundedAggregates(events, d)
-          else StatefulOps.rangeBoundedAggregates(events, d)
-        (out.toDF(), "n_in_frame", "frame_sum", "frame_max")
-    }
-
-    val cols = items.map {
-      case PassThrough(name) => col(name)
-      case Measure(fn, _, alias, _, dig, _) =>
-        val base = fn match {
-          case "COUNT" => col(cnt)
-          case "SUM" => col(sum)
-          case "MAX" => col(max)
-          case "AVG" => col(sum) / col(cnt)
-        }
-        dig.fold(base)(d => round(base, d)).as(alias)
-    }
-    val sel = df.select(cols.toSeq: _*)
-    if (outOrder.isEmpty) sel else sel.orderBy(outOrder.map(col).toSeq: _*)
-  }
-
   /** Run a streaming-OVER SQL statement against an ARBITRARY DataFrame
-    * (batch or streaming) — the general-schema twin of [[sql]], executed
-    * by [[OverAggregates.overAggregates]] the way
+    * (batch or streaming), executed by [[OverAggregates]] the way
     * [[MatchRecognizeSql.sqlDf]] is executed by
-    * [[PatternMatch.matchRowsBatch]] (reference surface: the row-time
+    * [[PatternMatch.matchRowsBatch]] (reference surface: the
     * OverWindowITCase shapes — string/composite/absent PARTITION BY,
     * COUNT/SUM/MIN/MAX/AVG over any numeric column, UNBOUNDED / ROWS n /
     * RANGE t PRECEDING frames). `FROM <ident>` is nominal: the DataFrame
-    * IS the table. `ORDER BY proctime` is not in this executor's contract
-    * (arrival-order framing is the Event-model path, [[sql]]); it is
-    * rejected with that pointer rather than mis-executed.
+    * IS the table. `ORDER BY proctime` frames ROWS n and RANGE t in
+    * arrival order through [[OverAggregates.procRowsAggregates]] /
+    * [[OverAggregates.procRangeAggregates]]; a proc-time UNBOUNDED frame
+    * is rejected rather than mis-executed.
     *
     * `batchNative` (default ON, r12): a BATCH row-time input plans as
     * Spark's own WindowExec — whole-stage-codegen'd, spill-aware, the
@@ -180,7 +85,7 @@ object StreamingOverSql {
     * (UNBOUNDED / ROWS always; RANGE when the order key is the single
     * timestamp, framed on epoch micros exactly like the executor).
     * Pass false to force the stateful executor's batch collapse (the
-    * correctness gate does for q136–q138, so the declared queries keep
+    * correctness gate does for q133–q138, so the declared queries keep
     * exercising the streaming executor; `StreamingOverSqlSpec` pins the
     * two paths row-identical, decimal exactness included). */
   def sqlDf(df: DataFrame, text: String,
@@ -188,8 +93,8 @@ object StreamingOverSql {
     val p = new MatchRecognizeSql.P(MatchRecognizeSql.tokenize(text))
     p.expect("SELECT")
     val items = scala.collection.mutable.ArrayBuffer.empty[Item]
-    items += parseItemDf(p, df)
-    while (p.accept(",")) items += parseItemDf(p, df)
+    items += parseItem(p, df)
+    while (p.accept(",")) items += parseItem(p, df)
     p.expect("FROM")
     p.ident()
     var windows = Map.empty[String, Spec]
@@ -197,7 +102,7 @@ object StreamingOverSql {
       do {
         val name = p.ident().toLowerCase
         p.expect("AS"); p.expect("(")
-        windows += name -> parseSpecDf(p, df)
+        windows += name -> parseSpec(p, df)
         p.expect(")")
       } while (p.accept(","))
     }
@@ -228,40 +133,22 @@ object StreamingOverSql {
         if (m.arg == "*" || m.arg == "1") None else Some(m.arg), m.alias,
         m.distinct)).toSeq)
     val parts = spec.partCol.split(',').toSeq.filter(_.nonEmpty)
-    nativeBatch(df, spec, aggs, parts, batchNative).foreach { ranked =>
-      val cols2 = items.map {
-        case PassThrough(name) => col(name)
-        case Measure(_, _, alias, _, dig, _) =>
-          dig.fold(col(alias))(d => round(col(alias), d)).as(alias)
-      }
-      val sel2 = ranked.select(cols2.toSeq: _*)
-      return if (outOrder.isEmpty) sel2
-        else sel2.orderBy(outOrder.map(col).toSeq: _*)
-    }
-    val out =
+    val out = nativeBatch(df, spec, aggs, parts, batchNative).getOrElse {
       if (spec.procTime) spec.frame match {
         // proc-time ROWS/RANGE: arrival-order frames on any schema; the
         // trailing ORDER BY columns are the intra-batch determinism key
         // (micro-batch rendering of the reference's arrival order)
         case RowsPreceding(n) => OverAggregates.procRowsAggregates(df,
           parts, spec.orderCols.filterNot(_ == "proctime"), n, aggs)
-        case RangePreceding(us) => OverAggregates.procRangeAggregates(df,
-          parts, spec.orderCols.filterNot(_ == "proctime"),
-          java.time.Duration.ofNanos(us * 1000L), aggs)
-        case other => sys.error(
-          s"proc-time $other OVER is the Event-model operator contract " +
-            "(StreamingOverSql.sql / the StatefulOps proc-time twins); " +
-            "the general executor covers proc-time ROWS and RANGE frames")
-      } else {
-        val frame = spec.frame match {
-          case Unbounded => OverAggregates.UnboundedPreceding
-          case RangeUnbounded => OverAggregates.RangeUnbounded
-          case RowsPreceding(n) => OverAggregates.RowsPreceding(n)
-          case RangePreceding(us) => OverAggregates.RangePreceding(
-            java.time.Duration.ofNanos(us * 1000L))
-        }
-        OverAggregates.overAggregates(df, parts, spec.orderCols, frame, aggs)
-      }
+        case RangePreceding(h) => OverAggregates.procRangeAggregates(df,
+          parts, spec.orderCols.filterNot(_ == "proctime"), h, aggs)
+        case _ => sys.error(
+          "proc-time unbounded OVER is not supported: ORDER BY proctime " +
+            "covers bounded ROWS and RANGE frames only; order by an " +
+            "event-time column for an unbounded frame")
+      } else OverAggregates.overAggregates(df, parts, spec.orderCols,
+        spec.frame, aggs)
+    }
     val cols = items.map {
       case PassThrough(name) => col(name)
       case Measure(_, _, alias, _, dig, _) =>
@@ -295,20 +182,21 @@ object StreamingOverSql {
       if (parts.isEmpty) Window.partitionBy()
       else Window.partitionBy(parts.map(col): _*)
     val w: WindowSpec = spec.frame match {
-      case Unbounded => base.orderBy(spec.orderCols.map(col): _*)
+      case UnboundedPreceding => base.orderBy(spec.orderCols.map(col): _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       case RangeUnbounded => base.orderBy(spec.orderCols.map(col): _*)
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
       case RowsPreceding(n) => base.orderBy(spec.orderCols.map(col): _*)
         .rowsBetween(-n.toLong, 0L)
-      case RangePreceding(us) =>
+      case RangePreceding(h) =>
         // native rangeBetween needs ONE numeric order key; the executor
         // frames on the leading timestamp's epoch micros — same math
         if (spec.orderCols.size != 1) return None
         val c = spec.orderCols.head
         if (df.schema(df.schema.fieldIndex(c)).dataType != TimestampType)
           return None
-        base.orderBy(unix_micros(col(c))).rangeBetween(-us, 0L)
+        base.orderBy(unix_micros(col(c)))
+          .rangeBetween(-(h.toNanos / 1000), 0L)
     }
     val out = aggs.foldLeft(df) { case (acc, OverAggregates.Agg(fn, colOpt, alias, _)) =>
       val expr = (fn, colOpt) match {
@@ -337,7 +225,7 @@ object StreamingOverSql {
     Some(out)
   }
 
-  private def parseItemDf(p: MatchRecognizeSql.P, df: DataFrame): Item = {
+  private def parseItem(p: MatchRecognizeSql.P, df: DataFrame): Item = {
     val rounded = p.acceptWords("ROUND", "(")
     val t = p.peek.toUpperCase
     if (Set("COUNT", "SUM", "MAX", "AVG", "MIN").contains(t) &&
@@ -358,7 +246,7 @@ object StreamingOverSql {
         s"DISTINCT requires a value column, found $t(DISTINCT $arg0)")
       p.expect("OVER")
       val spec: Either[String, Spec] =
-        if (p.accept("(")) { val s = parseSpecDf(p, df); p.expect(")"); Right(s) }
+        if (p.accept("(")) { val s = parseSpec(p, df); p.expect(")"); Right(s) }
         else Left(p.ident().toLowerCase)
       val digits = if (rounded) {
         p.expect(","); val d = p.intLit(); p.expect(")"); Some(d)
@@ -383,7 +271,7 @@ object StreamingOverSql {
     * where streaming/RANGE requires it). Encodes the partition columns
     * comma-joined in Spec.partCol so the shared-spec equality check
     * stays structural. */
-  private def parseSpecDf(p: MatchRecognizeSql.P, df: DataFrame): Spec = {
+  private def parseSpec(p: MatchRecognizeSql.P, df: DataFrame): Spec = {
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
     if (p.accept("PARTITION")) {
       p.expect("BY")
@@ -401,71 +289,14 @@ object StreamingOverSql {
     Spec(parts.mkString(","), orderCols.toSeq, procTime, frame)
   }
 
-  private def parseItem(p: MatchRecognizeSql.P): Item = {
-    val rounded = p.acceptWords("ROUND", "(")
-    val t = p.peek.toUpperCase
-    if (Set("COUNT", "SUM", "MAX", "AVG", "MIN").contains(t) &&
-        p.peekAt(1) == "(") {
-      p.next(); p.expect("(")
-      val arg = p.next()
-      p.expect(")")
-      require(t != "MIN",
-        "MIN over a streaming frame is not in the operator contract " +
-          "(the stateful operators emit count/sum/max over value)")
-      if (t == "COUNT") require(arg == "*",
-        s"only COUNT(*) is supported, found COUNT($arg)")
-      else require(arg.equalsIgnoreCase("value"),
-        s"$t aggregates the Event model's `value` column, found $t($arg)")
-      p.expect("OVER")
-      val spec: Either[String, Spec] =
-        if (p.accept("(")) { val s = parseSpec(p); p.expect(")"); Right(s) }
-        else Left(p.ident().toLowerCase)
-      val digits = if (rounded) {
-        p.expect(","); val d = p.intLit(); p.expect(")"); Some(d)
-      } else None
-      val alias =
-        if (p.accept("AS")) p.ident().toLowerCase
-        else sys.error(s"alias required for $t OVER (the driver compare " +
-          "matches columns by name)")
-      Measure(t, arg, alias, spec, digits)
-    } else {
-      require(!rounded, "ROUND(...) wraps only an aggregate OVER item")
-      val name = p.ident().toLowerCase
-      require(name == "user_id" || name == "event_id",
-        s"pass-through column must be user_id or event_id (the operator " +
-          s"output), found '$name'")
-      PassThrough(name)
-    }
-  }
-
-  private def parseSpec(p: MatchRecognizeSql.P): Spec = {
-    p.expect("PARTITION"); p.expect("BY")
-    val part = p.ident().toLowerCase
-    require(part == "user_id",
-      s"the stateful OVER operators key on user_id (Event model), " +
-        s"found PARTITION BY $part")
-    p.expect("ORDER"); p.expect("BY")
-    val first = p.ident().toLowerCase
-    val procTime = first == "proctime"
-    val orderCols = scala.collection.mutable.ArrayBuffer(first)
-    if (procTime && p.accept("(")) p.expect(")") // proctime() attribute form
-    while (p.accept(",")) orderCols += p.ident().toLowerCase
-    require(procTime && orderCols.size == 1 ||
-        orderCols.toSeq == Seq("ts") || orderCols.toSeq == Seq("ts", "event_id"),
-      "ORDER BY must be the operator's deterministic event-time key " +
-        s"(ts[, event_id]) or proctime, found ${orderCols.mkString(", ")}")
-    val frame = parseFrame(p)
-    Spec(part, orderCols.toSeq, procTime, frame)
-  }
-
   private def parseFrame(p: MatchRecognizeSql.P): Frame = {
     if (p.accept("ROWS")) {
-      if (p.acceptWords("UNBOUNDED", "PRECEDING")) Unbounded
+      if (p.acceptWords("UNBOUNDED", "PRECEDING")) UnboundedPreceding
       else {
         p.expect("BETWEEN")
         if (p.acceptWords("UNBOUNDED", "PRECEDING")) {
           p.expect("AND"); p.expect("CURRENT"); p.expect("ROW")
-          Unbounded
+          UnboundedPreceding
         } else {
           val n = p.intLit()
           p.expect("PRECEDING"); p.expect("AND")
@@ -504,7 +335,7 @@ object StreamingOverSql {
         }
       p.expect("PRECEDING"); p.expect("AND")
       p.expect("CURRENT"); p.expect("ROW")
-      RangePreceding(us)
+      RangePreceding(java.time.Duration.ofNanos(us * 1000L))
     } else sys.error(s"expected ROWS or RANGE frame, found '${p.peek}'")
   }
 }

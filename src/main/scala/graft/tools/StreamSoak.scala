@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{EarlyFire, StatefulOps}
+import graft.streaming.{CountWindows, EarlyFire, OverAggregates, RankOps,
+  StatefulOps}
 import graft.streaming.StatefulOps.Event
 
 /** Dev utility: streaming soak at scale (round-9 VERDICT #6). The
@@ -22,7 +23,7 @@ import graft.streaming.StatefulOps.Event
   * window aggregation (late-fire on an OUT-OF-ORDER replay with genuine
   * straggler batches so the `is_final = 2` path actually fires at
   * volume), q90/q91 count windows, and the streaming event-time sort
-  * (multiset + emission-order check).
+  * (`gen_sort`: multiset + emission-order check).
   *
   * Mechanics:
   *  - events are tiled `factor`× from the base fixture with per-replica
@@ -98,6 +99,10 @@ object StreamSoak {
     // the stream — the watermark never passes the last sentinel)
     val realWin = (df: DataFrame) => df.filter(col("w_start_us") <= maxRealUs)
 
+    // q72's per-user top-3 by value (shared by topn and recovery_topn)
+    val topN = (ds: Dataset[Event]) => RankOps.rankRows(ds.toDF(),
+      Seq("user_id"), Seq("value" -> false, "event_id" -> true), 3,
+      rankAlias = Some("rank"))
     def finalTopN(log: DataFrame): DataFrame = {
       // top-n entries only ever enter through the log; final = top-n of
       // everything logged, ranked the operator's way (value desc, id asc)
@@ -252,21 +257,22 @@ object StreamSoak {
         (mismatch, onlyB, rows)
       }
 
+    // q94/q95's per-user frames, watermarked for the replay
+    def frameOp(frame: OverAggregates.Frame): Op = (ds: Dataset[Event]) =>
+      OverAggregates.overAggregates(ds.toDF(), Seq("user_id"),
+        Seq("ts", "event_id"), frame, graft.streaming.StatefulBatch.frameAggs,
+        delay = "60 seconds")
+
     val ops: Seq[(String, String, Op, Check, Boolean)] = Seq(
-      ("topn", eventsDir,
-        (ds: Dataset[Event]) => StatefulOps.topNPerKey(ds, 3).toDF(),
-        reconstructed(finalTopN), false),
+      ("topn", eventsDir, topN, reconstructed(finalTopN), false),
       ("keeplast", eventsDir,
-        (ds: Dataset[Event]) => StatefulOps.keepLastDedup(ds).toDF(),
+        (ds: Dataset[Event]) => RankOps.keepOne(ds.toDF(),
+          Seq("user_id", "event_type"), Seq("ts" -> false, "event_id" -> false)),
         reconstructed(finalKeepLast), false),
-      ("rows_frame", eventsDir,
-        (ds: Dataset[Event]) =>
-          StatefulOps.rowsBoundedAggregates(ds, 4, "60 seconds").toDF(),
+      ("rows_frame", eventsDir, frameOp(OverAggregates.RowsPreceding(4)),
         reconstructed(real), true),
       ("range_frame", eventsDir,
-        (ds: Dataset[Event]) =>
-          StatefulOps.rangeBoundedAggregates(ds,
-            java.time.Duration.ofHours(1), "60 seconds").toDF(),
+        frameOp(OverAggregates.RangePreceding(java.time.Duration.ofHours(1))),
         reconstructed(real), true),
       ("reservoir", eventsDir,
         (ds: Dataset[Event]) => StatefulOps.reservoirPerKey(
@@ -292,21 +298,15 @@ object StreamSoak {
           val r = (mism, onlyB, sf.count()); sf.unpersist(); r
         }, false),
       ("count_tumble", eventsDir,
-        (ds: Dataset[Event]) => StatefulOps.countTumblePerKey(ds, 5).toDF(),
+        (ds: Dataset[Event]) => CountWindows.countTumble(ds.toDF(),
+          Seq("user_id"), Seq("ts", "event_id"), 5, "value", "event_id"),
         // completed windows are a pure function of per-key (ts, event_id)
         // arrival order, which the ordered replay preserves globally
         reconstructed(identity), true),
       ("count_slide", eventsDir,
-        (ds: Dataset[Event]) =>
-          StatefulOps.countSlidePerKey(ds, 8, 4).toDF(),
+        (ds: Dataset[Event]) => CountWindows.countSlide(ds.toDF(),
+          Seq("user_id"), Seq("ts", "event_id"), 8, 4, "value", "event_id"),
         reconstructed(identity), true),
-      ("sort", eventsDir,
-        (ds: Dataset[Event]) =>
-          StatefulOps.sortByEventTime(ds, "60 seconds").toDF(),
-        // multiset: stream must release exactly the real rows (the last
-        // sentinel stays pending at termination — excluded both sides);
-        // emission ORDER is checked separately below per output file
-        reconstructed(real), true),
       // round-11 extension: the GENERAL-SCHEMA executors (java-serialized
       // row state — OverAggregates.GenState / PatternMatch.GenBufState)
       // at volume — string-keyed OVER frames and streaming SQL
@@ -387,8 +387,10 @@ object StreamSoak {
           delay = "60 seconds",
           idleTtl = Some(java.time.Duration.ofMillis(fileSpanMs * 3))),
         reconstructed(real), true),
-      // round-12: the general-schema streaming sort (RowSort) — same
-      // multiset + per-file order-violation discipline as the Event leg
+      // round-12: the streaming event-time sort (RowSort) — multiset:
+      // the stream must release exactly the real rows (the last sentinel
+      // stays pending at termination — excluded both sides); emission
+      // ORDER is checked separately below per output file
       ("gen_sort", eventsDir,
         (ds: Dataset[Event]) => graft.streaming.RowSort.sortByEventTime(
           ds.toDF(), Seq("ts", "event_id"), "60 seconds"),
@@ -610,7 +612,7 @@ object StreamSoak {
               s""""hot_key_rows":${streamLog.filter(col("user_id") === 0L).count()},""" +
               (if (sr.isEmpty) "" else s""""state_peak":${sr.max},"state_final":${sr.last},""") +
               s""""batch_ms_max":${if (bt.isEmpty) -1L else bt.max}"""
-          case "sort" | "gen_sort" =>
+          case "gen_sort" =>
             s""","order_violations":${sortOrderViolations(spark, sinkDir)}"""
           case "gen_over_ttl" =>
             // the retention claim: per-key state must PLATEAU once the
@@ -752,7 +754,7 @@ object StreamSoak {
       val sinkDir = s"$work/out_recovery_topn"; val ckpt = s"$work/ckpt_recovery_topn"
       wipe(sinkDir, ckpt)
       def mk(): StreamingQuery =
-        StatefulOps.topNPerKey(streamDs(eventsDir), 3).toDF().writeStream
+        topN(streamDs(eventsDir)).writeStream
           .format("parquet").option("path", sinkDir)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
@@ -770,7 +772,7 @@ object StreamSoak {
       val baseDir = new java.io.File(s"$work/out_topn")
       val want =
         if (baseDir.isDirectory) finalTopN(spark.read.parquet(baseDir.getPath))
-        else finalTopN(StatefulOps.topNPerKey(batchDs(eventsDir), 3).toDF())
+        else finalTopN(topN(batchDs(eventsDir)))
       summarize("recovery_topn", wall, got.count(),
         got.exceptAll(want).count(), want.exceptAll(got).count(),
         s""","stopped_midway":$stopped""")

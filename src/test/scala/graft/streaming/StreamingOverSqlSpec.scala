@@ -9,7 +9,7 @@ import graft.operators.OverSql
   * at parse time rather than mis-executing. */
 class StreamingOverSqlSpec extends SparkSpec {
 
-  private def events = StatefulOps.typedEvents(spark, sf())
+  private def events = StatefulOps.typedEvents(spark, sf()).toDF()
 
   test("SQL shapes are row-identical to their Scala-API twins") {
     val pairs = Seq(
@@ -29,8 +29,8 @@ class StreamingOverSqlSpec extends SparkSpec {
 
   test("proctime ORDER BY routes to the proc-time operators") {
     // batch collapse: a single batch is one arrival sequence, so the
-    // proc-rows route over sorted input matches the event-time frame
-    val df = StreamingOverSql.sql(
+    // proc-rows route emits exactly one framed row per input row
+    val df = StreamingOverSql.sqlDf(
       events.orderBy("user_id", "ts", "event_id"),
       """SELECT user_id, event_id, COUNT(*) OVER w AS n_in_frame
         |FROM events
@@ -41,31 +41,29 @@ class StreamingOverSqlSpec extends SparkSpec {
   }
 
   test("contract violations fail loudly with the reason") {
-    def rejects(sql: String, needle: String): Unit = {
-      val e = intercept[Exception](StreamingOverSql.sql(events, sql))
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    def rejectsOn(df: org.apache.spark.sql.DataFrame, sql: String,
+        needle: String): Unit = {
+      val e = intercept[Exception](StreamingOverSql.sqlDf(df, sql))
       assert(e.getMessage != null && e.getMessage.contains(needle),
         s"wrong error for: $sql\n got: ${e.getMessage}")
     }
-    rejects(
-      """SELECT user_id, MIN(value) OVER w AS m FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |             ROWS UNBOUNDED PRECEDING)""".stripMargin,
-      "MIN over a streaming frame")
+    def rejects(sql: String, needle: String): Unit = rejectsOn(events, sql, needle)
     rejects(
       """SELECT user_id, SUM(ts) OVER w AS s FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |             ROWS UNBOUNDED PRECEDING)""".stripMargin,
-      "`value` column")
-    rejects(
-      """SELECT user_id, COUNT(*) OVER w AS c FROM events
-        |WINDOW w AS (PARTITION BY event_type ORDER BY ts
-        |             ROWS UNBOUNDED PRECEDING)""".stripMargin,
-      "key on user_id")
-    rejects(
+      "needs a numeric column")
+    // a stream frames on event time: a non-timestamp leading order key
+    // has no watermark to close frames on
+    rejectsOn(
+      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
+        StatefulOps.Event].toDF(),
       """SELECT user_id, COUNT(*) OVER w AS c FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY value
         |             ROWS UNBOUNDED PRECEDING)""".stripMargin,
-      "deterministic event-time key")
+      "must be a timestamp")
     // two distinct specs in one statement = two operator passes: reject
     rejects(
       """SELECT user_id,
@@ -140,13 +138,16 @@ class StreamingOverSqlSpec extends SparkSpec {
   }
 
   test("AVG derives as sum/count from the operator output") {
-    val df = StreamingOverSql.sql(events,
+    val df = StreamingOverSql.sqlDf(events,
       """SELECT user_id, event_id, AVG(value) OVER w AS running_avg
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |             ROWS UNBOUNDED PRECEDING)
-        |ORDER BY user_id, event_id""".stripMargin)
-    val api = StatefulOps.runningAggregates(events).toDF()
+        |ORDER BY user_id, event_id""".stripMargin, batchNative = false)
+    val api = OverAggregates.overAggregates(events, Seq("user_id"),
+      Seq("ts", "event_id"), OverAggregates.UnboundedPreceding,
+      Seq(OverAggregates.Agg("COUNT", None, "running_count"),
+        OverAggregates.Agg("SUM", Some("value"), "running_sum")))
     import org.apache.spark.sql.functions.col
     val want = rows(api.select(col("user_id"), col("event_id"),
       (col("running_sum") / col("running_count")).as("running_avg"))

@@ -8,6 +8,16 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.streaming.StatefulOps._
 
+/** The executor output columns the specs below assert on (`as[...]`
+  * binds by name and ignores the pass-through input columns). */
+case class RankedOut(user_id: Long, rank: Long, event_id: Long, value: Double)
+case class RunningOut(user_id: Long, event_id: Long, running_count: Long,
+    running_sum: Double, running_max: Double)
+case class FrameOut(user_id: Long, event_id: Long, n_in_frame: Long,
+    frame_sum: Double, frame_max: Double)
+case class CountWindowOut(user_id: Long, win_seq: Long, n_rows: Long,
+    sum_v: Double, first_id: Long, last_id: Long)
+
 /** JVM-static logical clock for the proc-time RANGE spec: local-mode
   * executor threads share the JVM, so the injected `procClock` closure
   * reads the value the test sets between micro-batches (same device as
@@ -16,12 +26,30 @@ object ProcClockProbe {
   val now = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
-/** Structured-Streaming behavior specs: the flatMapGroupsWithState trio
-  * (top-n, keep-last dedup, streaming OVER) fed through MemoryStream in
-  * micro-batches, verified against the equivalent batch computation over
-  * the same rows — plus watermarked windowed aggregation and a
-  * stream-stream join (built-in operators, exercised for semantics). */
+/** Structured-Streaming behavior specs: the stateful executors (top-n /
+  * keep-last dedup, streaming OVER frames, count windows, event-time
+  * sort) fed Event rows through MemoryStream in micro-batches, verified
+  * against the equivalent batch computation over the same rows — plus
+  * watermarked windowed aggregation and a stream-stream join (built-in
+  * operators, exercised for semantics). */
 class StreamingSpec extends SparkSpec {
+
+  private def topN2(ds: org.apache.spark.sql.Dataset[Event]) =
+    RankOps.rankRows(ds.toDF(), Seq("user_id"),
+      Seq("value" -> false, "event_id" -> true), 2, rankAlias = Some("rank"))
+
+  private def keepLast(ds: org.apache.spark.sql.Dataset[Event]) =
+    RankOps.keepOne(ds.toDF(), Seq("user_id", "event_type"),
+      Seq("ts" -> false, "event_id" -> false))
+
+  import StatefulBatch.{countSumMax, frameAggs}
+
+  /** Event-time OVER per user in (ts, event_id) order. */
+  private def frameOver(ds: org.apache.spark.sql.Dataset[Event],
+      frame: OverAggregates.Frame, delay: String = "0 seconds",
+      idleTtl: Option[java.time.Duration] = None) =
+    OverAggregates.overAggregates(ds.toDF(), Seq("user_id"),
+      Seq("ts", "event_id"), frame, frameAggs, delay, idleTtl)
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
@@ -40,7 +68,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = topNPerKey(input.toDS(), 2).writeStream
+    val query = topN2(input.toDS()).writeStream
       .format("memory").queryName("topn").outputMode("append").start()
     input.addData(batch1)
     query.processAllAvailable()
@@ -48,7 +76,7 @@ class StreamingSpec extends SparkSpec {
     query.processAllAvailable()
     query.stop()
     // last emission per user must equal the batch top-2 by value
-    val all = spark.table("topn").as[Ranked].collect()
+    val all = spark.table("topn").as[RankedOut].collect()
     val finalUser1 = all.filter(_.user_id == 1).takeRight(2).sortBy(_.rank)
     assert(finalUser1.map(_.event_id).toSeq == Seq(102, 104)) // values 9.0, 8.0
     assert(finalUser1.map(_.value).toSeq == Seq(9.0, 8.0))
@@ -58,14 +86,14 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = keepLastDedup(input.toDS()).writeStream
+    val query = keepLast(input.toDS()).writeStream
       .format("memory").queryName("keeplast").outputMode("append").start()
     input.addData(batch1)
     query.processAllAvailable()
     input.addData(batch2)
     query.processAllAvailable()
     query.stop()
-    val all = spark.table("keeplast").as[Latest].collect()
+    val all = spark.table("keeplast").as[Event].collect()
     // final emission for (1, view) must be event 104 (latest ts)
     val last1view = all.filter(r => r.user_id == 1 && r.event_type == "view").last
     assert(last1view.event_id == 104)
@@ -77,7 +105,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = keepLastDedup(input.toDS()).writeStream
+    val query = keepLast(input.toDS()).writeStream
       .format("memory").queryName("keeplaststale").outputMode("append").start()
     input.addData(Event(1, 104, ts(3), "view", 8.0))
     query.processAllAvailable()
@@ -85,7 +113,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(Event(1, 99, ts(0), "view", 1.0))
     query.processAllAvailable()
     query.stop()
-    val emissions = spark.table("keeplaststale").as[Latest].collect()
+    val emissions = spark.table("keeplaststale").as[Event].collect()
       .filter(r => r.user_id == 1 && r.event_type == "view")
     assert(emissions.length == 1 && emissions.head.event_id == 104,
       s"stale arrival must not re-announce the unchanged latest, got ${emissions.toSeq}")
@@ -95,14 +123,16 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = runningAggregates(input.toDS()).writeStream
+    val query = OverAggregates.overAggregates(input.toDS().toDF(),
+      Seq("user_id"), Seq("ts", "event_id"), OverAggregates.UnboundedPreceding,
+      countSumMax("running_count", "running_sum", "running_max")).writeStream
       .format("memory").queryName("running").outputMode("append").start()
     input.addData(batch1)
     query.processAllAvailable()
     input.addData(batch2)
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("running").as[Running].collect()
+    val rows = spark.table("running").as[RunningOut].collect()
       .filter(_.user_id == 1).sortBy(_.event_id)
     // user 1 events in ts order: 101(5.0) 102(9.0) 103(3.0) 104(8.0) 105(1.0)
     assert(rows.map(_.running_count).toSeq == Seq(1, 2, 3, 4, 5))
@@ -115,14 +145,14 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Event]
     // ROWS BETWEEN 2 PRECEDING AND CURRENT ROW
-    val query = rowsBoundedAggregates(input.toDS(), preceding = 2).writeStream
+    val query = frameOver(input.toDS(), OverAggregates.RowsPreceding(2)).writeStream
       .format("memory").queryName("rowsframe").outputMode("append").start()
     input.addData(batch1)
     query.processAllAvailable()
     input.addData(batch2) // 104/105 frames must reach back into batch1 rows
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("rowsframe").as[FrameAgg].collect()
+    val rows = spark.table("rowsframe").as[FrameOut].collect()
       .filter(_.user_id == 1).sortBy(_.event_id)
     // user 1 values in ts order: 101(5.0) 102(9.0) 103(3.0) | 104(8.0) 105(1.0)
     assert(rows.map(_.n_in_frame).toSeq == Seq(1, 2, 3, 3, 3))
@@ -135,15 +165,15 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Event]
     // trailing 2-minute frame
-    val query = rangeBoundedAggregates(input.toDS(),
-      java.time.Duration.ofMinutes(2)).writeStream
+    val query = frameOver(input.toDS(),
+      OverAggregates.RangePreceding(java.time.Duration.ofMinutes(2))).writeStream
       .format("memory").queryName("rangeframe").outputMode("append").start()
     input.addData(batch1)
     query.processAllAvailable()
     input.addData(batch2)
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("rangeframe").as[FrameAgg].collect()
+    val rows = spark.table("rangeframe").as[FrameOut].collect()
       .filter(_.user_id == 1).sortBy(_.event_id)
     // frames (ts >= cur - 2 min): 101@10:00 {101}; 102@10:01 {101,102};
     // 103@10:02 {101,102,103}; 104@10:03 {102,103,104} — 101 evicted
@@ -157,7 +187,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = rowsBoundedAggregates(input.toDS(), preceding = 2,
+    val query = frameOver(input.toDS(), OverAggregates.RowsPreceding(2),
       delay = "5 minutes").writeStream
       .format("memory").queryName("rowslate").outputMode("append").start()
     // 102@10:01 arrives AFTER 103@10:02 and in a later micro-batch;
@@ -167,7 +197,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(Event(1, 102, ts(1), "view", 9.0), Event(9, 900, ts(20), "view", 0.0))
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("rowslate").as[FrameAgg].collect()
+    val rows = spark.table("rowslate").as[FrameOut].collect()
       .filter(_.user_id == 1).sortBy(_.event_id)
     assert(rows.map(_.event_id).toSeq == Seq(101L, 102L, 103L))
     // event-time frames: {101}, {101,102}, {101,102,103} — arrival-order
@@ -181,7 +211,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = rowsBoundedAggregates(input.toDS(), preceding = 2,
+    val query = frameOver(input.toDS(), OverAggregates.RowsPreceding(2),
       idleTtl = Some(java.time.Duration.ofMinutes(5))).writeStream
       .format("memory").queryName("rowsttl").outputMode("append").start()
     input.addData(Event(1, 101, ts(0), "view", 5.0), Event(9, 900, ts(1), "view", 0.0))
@@ -193,7 +223,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(Event(1, 102, ts(21), "view", 7.0), Event(9, 902, ts(40), "view", 0.0))
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("rowsttl").as[FrameAgg].collect()
+    val rows = spark.table("rowsttl").as[FrameOut].collect()
       .filter(_.user_id == 1).sortBy(_.event_id)
     assert(rows.map(_.frame_sum).toSeq == Seq(5.0, 7.0),
       s"expired ring must not leak into the new frame, got ${rows.toSeq}")
@@ -206,7 +236,7 @@ class StreamingSpec extends SparkSpec {
     // the TTL timer — the fresh-frame contract must hold without the
     // timer having cleared the ring first
     val input = MemoryStream[Event]
-    val query = rowsBoundedAggregates(input.toDS(), preceding = 2,
+    val query = frameOver(input.toDS(), OverAggregates.RowsPreceding(2),
       idleTtl = Some(java.time.Duration.ofMinutes(5))).writeStream
       .format("memory").queryName("rowsttlrace").outputMode("append").start()
     input.addData(Event(1, 101, ts(0), "view", 5.0), Event(9, 900, ts(1), "view", 0.0))
@@ -216,7 +246,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(Event(1, 102, ts(30), "view", 7.0), Event(9, 902, ts(60), "view", 0.0))
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("rowsttlrace").as[FrameAgg].collect()
+    val rows = spark.table("rowsttlrace").as[FrameOut].collect()
       .filter(_.user_id == 1).sortBy(_.event_id)
     assert(rows.map(_.frame_sum).toSeq == Seq(5.0, 7.0),
       s"a row past the idle horizon must start a fresh frame even when it " +
@@ -227,15 +257,16 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = rangeBoundedAggregates(input.toDS(),
-      java.time.Duration.ofMinutes(2), delay = "5 minutes").writeStream
+    val query = frameOver(input.toDS(),
+      OverAggregates.RangePreceding(java.time.Duration.ofMinutes(2)),
+      delay = "5 minutes").writeStream
       .format("memory").queryName("rangelate").outputMode("append").start()
     input.addData(Event(1, 101, ts(0), "view", 5.0), Event(1, 103, ts(2), "view", 3.0))
     query.processAllAvailable()
     input.addData(Event(1, 102, ts(1), "view", 9.0), Event(9, 900, ts(20), "view", 0.0))
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("rangelate").as[FrameAgg].collect()
+    val rows = spark.table("rangelate").as[FrameOut].collect()
       .filter(_.user_id == 1).sortBy(_.event_id)
     assert(rows.map(_.event_id).toSeq == Seq(101L, 102L, 103L))
     assert(rows.map(_.frame_sum).toSeq == Seq(5.0, 14.0, 17.0),
@@ -247,18 +278,19 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Event]
     // ROWS BETWEEN 1 PRECEDING AND CURRENT ROW over PROCESSING order
-    val query = procRowsBoundedAggregates(input.toDS(), preceding = 1).writeStream
+    val query = OverAggregates.procRowsAggregates(input.toDS().toDF(),
+      Seq("user_id"), Seq("ts", "event_id"), 1, frameAggs).writeStream
       .format("memory").queryName("procrows").outputMode("append").start()
     input.addData(Event(1, 101, ts(0), "view", 5.0), Event(1, 103, ts(2), "view", 3.0))
     query.processAllAvailable()
     // 102@10:01 arrives LATE: the proc-time contract frames it against
     // what ARRIVED before it (103), never re-orders by event time — the
-    // exact divergence from rowsBoundedAggregates (see "frames follow
+    // exact divergence from the event-time ROWS frame (see "frames follow
     // event-time order" above, which asserts 5.0/14.0/17.0 on this input)
     input.addData(Event(1, 102, ts(1), "view", 9.0))
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("procrows").as[FrameAgg].collect()
+    val rows = spark.table("procrows").as[FrameOut].collect()
     // emission order IS arrival order: 101, 103, then late 102
     assert(rows.map(_.event_id).toSeq == Seq(101L, 103L, 102L))
     assert(rows.map(_.frame_sum).toSeq == Seq(5.0, 8.0, 12.0),
@@ -271,9 +303,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Event]
     ProcClockProbe.now.set(100000L)
-    val query = procRangeBoundedAggregates(input.toDS(),
-      java.time.Duration.ofHours(1),
-      procClock = () => ProcClockProbe.now.get()).writeStream
+    val query = OverAggregates.procRangeAggregates(input.toDS().toDF(),
+      Seq("user_id"), Seq("ts", "event_id"), java.time.Duration.ofHours(1),
+      frameAggs, procClock = () => ProcClockProbe.now.get()).writeStream
       .format("memory").queryName("procrange").outputMode("append").start()
     // batch 1: both rows are peers — each emits the SAME aggregate over
     // the full peer set (the reference's same-millisecond contract)
@@ -289,7 +321,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(Event(1, 104, ts(3), "view", 8.0))
     query.processAllAvailable()
     query.stop()
-    val rows = spark.table("procrange").as[FrameAgg].collect()
+    val rows = spark.table("procrange").as[FrameOut].collect()
     assert(rows.map(_.event_id).toSeq == Seq(101L, 102L, 103L, 104L))
     assert(rows.map(_.frame_sum).toSeq == Seq(14.0, 14.0, 17.0, 8.0),
       s"peers must share one frame and the horizon must evict, got ${rows.toSeq}")
@@ -425,7 +457,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = countTumblePerKey(input.toDS(), 3).writeStream
+    val query = CountWindows.countTumble(input.toDS().toDF(), Seq("user_id"),
+      Seq("ts", "event_id"), 3, "value", "event_id").writeStream
       .format("memory").queryName("ctumble").outputMode("append").start()
     // 4 user-1 events: first window (101,102,103) completes, 104 pends
     input.addData(batch1)
@@ -434,28 +467,29 @@ class StreamingSpec extends SparkSpec {
     input.addData(batch2 :+ Event(1, 106, ts(6), "view", 4.0))
     query.processAllAvailable()
     query.stop()
-    val wins = spark.table("ctumble").as[CountWindow].collect()
+    val wins = spark.table("ctumble").as[CountWindowOut].collect()
       .filter(_.user_id == 1).sortBy(_.win_seq)
-    assert(wins.map(w => (w.win_seq, w.first_event, w.last_event, w.n_events)).toSeq ==
+    assert(wins.map(w => (w.win_seq, w.first_id, w.last_id, w.n_rows)).toSeq ==
       Seq((0L, 101L, 103L, 3L), (1L, 104L, 106L, 3L)))
-    assert(wins.head.sum_value == 5.0 + 9.0 + 3.0)
+    assert(wins.head.sum_v == 5.0 + 9.0 + 3.0)
   }
 
   test("count-sliding windows emit every slide-th event after warmup") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = countSlidePerKey(input.toDS(), size = 3, slide = 2).writeStream
+    val query = CountWindows.countSlide(input.toDS().toDF(), Seq("user_id"),
+      Seq("ts", "event_id"), 3, 2, "value", "event_id").writeStream
       .format("memory").queryName("cslide").outputMode("append").start()
     input.addData(batch1) // user 1: 101,102,103 -> first window at event 3
     query.processAllAvailable()
     input.addData(batch2 :+ Event(1, 106, ts(6), "view", 4.0)) // events 4,5,6
     query.processAllAvailable()
     query.stop()
-    val wins = spark.table("cslide").as[CountWindow].collect()
+    val wins = spark.table("cslide").as[CountWindowOut].collect()
       .filter(_.user_id == 1).sortBy(_.win_seq)
     // windows end at events 3 (seen=3) and 5 (seen=5): (101..103), (103..105)
-    assert(wins.map(w => (w.win_seq, w.first_event, w.last_event)).toSeq ==
+    assert(wins.map(w => (w.win_seq, w.first_id, w.last_id)).toSeq ==
       Seq((0L, 101L, 103L), (1L, 103L, 105L)))
   }
 
@@ -463,7 +497,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = sortByEventTime(input.toDS(), delay = "5 minutes").writeStream
+    val query = RowSort.sortByEventTime(input.toDS().toDF(), Seq("ts", "event_id"),
+      delay = "5 minutes").writeStream
       .format("memory").queryName("ssort").outputMode("append").start()
     // arrive out of order across batches
     input.addData(Event(1, 103, ts(3), "view", 1.0), Event(1, 101, ts(1), "view", 1.0))
@@ -544,7 +579,7 @@ class StreamingSpec extends SparkSpec {
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val input = MemoryStream[Event]
-      val query = topNPerKey(input.toDS(), 2).writeStream
+      val query = topN2(input.toDS()).writeStream
         .format("memory").queryName("topn_rocks").outputMode("append").start()
       input.addData(batch1)
       query.processAllAvailable()
@@ -554,7 +589,7 @@ class StreamingSpec extends SparkSpec {
       // displaced batch1's 101 in user 1's top-2 — impossible without
       // reading back batch1's stored entries
       query.stop()
-      val all = spark.table("topn_rocks").as[Ranked].collect()
+      val all = spark.table("topn_rocks").as[RankedOut].collect()
       val finalUser1 = all.filter(_.user_id == 1).takeRight(2).sortBy(_.rank)
       assert(finalUser1.map(_.event_id).toSeq == Seq(102, 104))
       assert(finalUser1.map(_.value).toSeq == Seq(9.0, 8.0))
