@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{QueryDef, Tables}
 
-/** Ordered-pattern detection over keyed event sequences — the tractable
-  * core of the reference's MATCH_RECOGNIZE surface (StreamExecMatch.scala:
-  * 68; full NFA semantics stay deferred per SURVEY §7.3): a fixed
-  * A→B→C pattern over consecutive events compiles to lead() windows, which
-  * both batch and the DuckDB oracle evaluate identically. The streaming
-  * equivalent of the same shape is `StatefulOps` + a per-key state machine.
+/** Ordered-pattern detection over keyed event sequences — the reference's
+  * MATCH_RECOGNIZE surface (StreamExecMatch.scala:68). The fixed A→B→C
+  * shapes (q76, q83) compile to lead() windows, which both batch and the
+  * DuckDB oracle evaluate identically. The quantified shapes (q89–q113)
+  * run the real per-key NFA through the programmatic
+  * [[graft.streaming.PatternMatch.Step]] surface — `Row` predicates over
+  * the events table, apart from the SQL compiler — and their SQL twins
+  * in [[MatchSql]] (q125–q130) must match them row for row.
   */
 object Funnel {
 
@@ -90,6 +92,17 @@ object Funnel {
       .orderBy(col("user_id"), col("purchase_id"))
   }
 
+  // The programmatic MATCH_RECOGNIZE surface over the events table:
+  // partition by user, event-time order, Row predicates by field name
+  private def events(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.core.Catalog.load(spark, dir, "events")
+  private val byUser = Seq("user_id")
+  private val byTime = Seq("ts", "event_id")
+  private def isType(t: String): org.apache.spark.sql.Row => Boolean =
+    _.getAs[String]("event_type") == t
+  private def id(r: org.apache.spark.sql.Row): Long = r.getAs[Long]("event_id")
+  private def value(r: org.apache.spark.sql.Row): Double = r.getAs[Double]("value")
+
   /** One match of `view click+ purchase` with FIRST/LAST measures. */
   case class PatternHit(user_id: Long, view_id: Long, first_click: Long,
       last_click: Long, n_clicks: Long, purchase_id: Long)
@@ -121,18 +134,17 @@ object Funnel {
       |WHERE p.event_type = 'purchase' AND p.rn - p.s >= 2
       |ORDER BY p.user_id, purchase_id""".stripMargin) { (spark, dir) =>
     import graft.streaming.PatternMatch._
-    import graft.streaming.StatefulOps
     implicit val enc = org.apache.spark.sql.Encoders.product[PatternHit]
-    matchPattern(StatefulOps.typedEvents(spark, dir), Seq(
-      Step("A", _.event_type == "view", One),
-      Step("B", _.event_type == "click", Plus),
-      Step("C", _.event_type == "purchase", One)),
+    matchPattern(events(spark, dir), byUser, byTime, Seq(
+      Step("A", isType("view"), One),
+      Step("B", isType("click"), Plus),
+      Step("C", isType("purchase"), One)),
       delay = "0 seconds",
       (key, bound) => {
         val b = bound.map(s => s.name -> s.rows).toMap
-        PatternHit(key, b("A").head.event_id,
-          b("B").head.event_id, b("B").last.event_id, b("B").size.toLong,
-          b("C").head.event_id)
+        PatternHit(key.getLong(0), id(b("A").head),
+          id(b("B").head), id(b("B").last), b("B").size.toLong,
+          id(b("C").head))
       })
       .toDF()
       .orderBy(col("user_id"), col("purchase_id"))
@@ -182,16 +194,15 @@ object Funnel {
       |JOIN seq ld ON ld.user_id = h.user_id AND ld.rn = h.end_rn
       |ORDER BY h.user_id, first_down""".stripMargin) { (spark, dir) =>
     import graft.streaming.PatternMatch._
-    import graft.streaming.StatefulOps
     implicit val enc = org.apache.spark.sql.Encoders.product[VShape]
-    matchPattern(StatefulOps.typedEvents(spark, dir), Seq(
-      Step.withPrev("D", Plus)((cur, prev) => cur.value < prev.value),
-      Step.withPrev("U", One)((cur, prev) => cur.value > prev.value)),
+    matchPattern(events(spark, dir), byUser, byTime, Seq(
+      Step.withPrev("D", Plus)((cur, prev) => value(cur) < value(prev)),
+      Step.withPrev("U", One)((cur, prev) => value(cur) > value(prev))),
       delay = "0 seconds",
       (key, bound) => {
         val b = bound.map(s => s.name -> s.rows).toMap
-        VShape(key, b("D").head.event_id, b("D").last.event_id,
-          b("D").size.toLong, b("U").head.event_id)
+        VShape(key.getLong(0), id(b("D").head), id(b("D").last),
+          b("D").size.toLong, id(b("U").head))
       })
       .toDF()
       .orderBy(col("user_id"), col("first_down"))
@@ -230,16 +241,15 @@ object Funnel {
       |JOIN seq sv ON sv.user_id = v.user_id AND sv.rn = v.vrn
       |ORDER BY v.user_id, view_id""".stripMargin) { (spark, dir) =>
     import graft.streaming.PatternMatch._
-    import graft.streaming.StatefulOps
     implicit val enc = org.apache.spark.sql.Encoders.product[NearestClick]
-    matchPattern(StatefulOps.typedEvents(spark, dir), Seq(
-      Step("V", _.event_type == "view", One),
+    matchPattern(events(spark, dir), byUser, byTime, Seq(
+      Step("V", isType("view"), One),
       Step("A", _ => true, StarReluctant),
-      Step("C", _.event_type == "click", One)),
+      Step("C", isType("click"), One)),
       delay = "0 seconds",
       (key, bound) => {
         val b = bound.map(s => s.name -> s.rows).toMap
-        NearestClick(key, b("V").head.event_id, b("C").head.event_id,
+        NearestClick(key.getLong(0), id(b("V").head), id(b("C").head),
           b("A").size.toLong)
       })
       .toDF()
@@ -265,15 +275,14 @@ object Funnel {
       |WHERE event_type = 'view' AND nt = 'purchase'
       |ORDER BY user_id, view_id""".stripMargin) { (spark, dir) =>
     import graft.streaming.PatternMatch._
-    import graft.streaming.StatefulOps
     implicit val enc = org.apache.spark.sql.Encoders.product[AboutToBuy]
-    matchPattern(StatefulOps.typedEvents(spark, dir), Seq(
-      Step("A", _.event_type == "view", One,
-        nextPred = Some((_, next) => next.event_type == "purchase"))),
+    matchPattern(events(spark, dir), byUser, byTime, Seq(
+      Step("A", isType("view"), One,
+        nextPred = Some((_, next) => isType("purchase")(next)))),
       delay = "0 seconds",
       (key, bound) => {
         val a = bound.head.rows.head
-        AboutToBuy(key, a.event_id, a.value)
+        AboutToBuy(key.getLong(0), id(a), value(a))
       })
       .toDF()
       .orderBy(col("user_id"), col("view_id"))
@@ -300,15 +309,14 @@ object Funnel {
       |WHERE event_type = 'purchase' AND next_type = 'purchase'
       |ORDER BY user_id, first_purchase""".stripMargin) { (spark, dir) =>
     import graft.streaming.PatternMatch._
-    import graft.streaming.StatefulOps
     implicit val enc = org.apache.spark.sql.Encoders.product[PurchasePair]
-    matchPattern(StatefulOps.typedEvents(spark, dir), Seq(
-      Step("P1", _.event_type == "purchase", One),
-      Step("P2", _.event_type == "purchase", One)),
+    matchPattern(events(spark, dir), byUser, byTime, Seq(
+      Step("P1", isType("purchase"), One),
+      Step("P2", isType("purchase"), One)),
       delay = "0 seconds",
       (key, bound) => {
         val b = bound.map(s => s.name -> s.rows).toMap
-        PurchasePair(key, b("P1").head.event_id, b("P2").head.event_id)
+        PurchasePair(key.getLong(0), id(b("P1").head), id(b("P2").head))
       },
       skip = SkipToNextRow)
       .toDF()
@@ -353,13 +361,13 @@ object Funnel {
       |JOIN seq q ON q.user_id = h.user_id AND q.rn BETWEEN h.srn AND h.prn
       |ORDER BY h.user_id, match_no, pos""".stripMargin) { (spark, dir) =>
     import graft.streaming.PatternMatch._
-    import graft.streaming.StatefulOps
-    matchPatternAllRows(StatefulOps.typedEvents(spark, dir), Seq(
-      Step("A", _.event_type == "view", One),
-      Step("B", _.event_type == "click", Plus),
-      Step("C", _.event_type == "purchase", One)),
+    matchPatternAllRows(events(spark, dir), byUser, byTime, Seq(
+      Step("A", isType("view"), One),
+      Step("B", isType("click"), Plus),
+      Step("C", isType("purchase"), One)),
       delay = "0 seconds")
-      .toDF()
+      .select(col("user_id"), col("match_no"), col("pos"), col("classifier"),
+        col("event_id"), col("running_n"), col("final_n"))
       .orderBy(col("user_id"), col("match_no"), col("pos"))
   }
 

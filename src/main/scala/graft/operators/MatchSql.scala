@@ -1,18 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 
 import graft.core.QueryDef
-import graft.streaming.{MatchRecognizeSql, StatefulOps}
+import graft.streaming.MatchRecognizeSql
 
 /** The reference's MATCH_RECOGNIZE shapes accepted AS SQL TEXT
   * (reference: flink-table-planner-blink StreamExecMatch.scala:68,
   * MatchCodeGenerator.scala:82, MatchRecognizeITCase grammar surface)
-  * through [[graft.streaming.MatchRecognizeSql]], each hash-checked by
-  * the SAME DuckDB oracle as its Scala-API twin in [[Funnel]] — so the
-  * SQL front-end is verified to produce bit-identical results to the
-  * API it rewrites onto, and a reference user can paste the clause
-  * instead of building [[graft.streaming.PatternMatch.Step]]s. */
+  * through [[graft.streaming.MatchRecognizeSql.sqlDf]], each of q125–q130
+  * hash-checked by the SAME DuckDB oracle as its programmatic-API twin in
+  * [[Funnel]] — so the SQL compiler is verified to produce bit-identical
+  * results to the [[graft.streaming.PatternMatch.Step]] surface over the
+  * same executor, and a reference user can paste the clause instead of
+  * building steps. */
 object MatchSql {
 
   def defs: Seq[QueryDef] =
@@ -28,10 +29,9 @@ object MatchSql {
     * anchor at the match's LAST row: `PREV(value)` is the row before it
     * (here inside the match — V's value), `PREV(value, 2)` reaches
     * BEFORE the match's first row (the captured predecessor context),
-    * and `NEXT(event_id)` reads the row after the match (batch-only —
-    * the streaming executor rejects NEXT in MEASURES loudly). The
-    * oracle states the same navigation with lag/lead over the
-    * (ts, event_id) sequence. */
+    * and `NEXT(event_id)` reads the row after the match (on a stream the
+    * match is held until that row closes — q180). The oracle states the
+    * same navigation with lag/lead over the (ts, event_id) sequence. */
   val q175MeasureNav: QueryDef = QueryDef("q175_sql_measure_nav",
     """WITH seq AS (
       |  SELECT user_id, event_id, event_type, value,
@@ -176,7 +176,7 @@ object MatchSql {
 
   private def run(sql: String)(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    MatchRecognizeSql.sql(StatefulOps.typedEvents(spark, dir), sql)
+    MatchRecognizeSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"), sql)
 
   /** q89's funnel (`A B+ C`, FIRST/LAST/COUNT measures) as SQL text. */
   val q125SqlFunnel: QueryDef = QueryDef("q125_sql_match_funnel",
@@ -376,12 +376,25 @@ object MatchSql {
   }
 
   /** q113's ALL ROWS PER MATCH with the canonical CLASSIFIER() /
-    * MATCH_NUMBER() / RUNNING-vs-FINAL projection. */
+    * MATCH_NUMBER() / RUNNING-vs-FINAL projection in standard SQL:
+    * `COUNT(*)` under RUNNING semantics is the row's position, and the
+    * count of the row's own classifier is picked from per-variable
+    * RUNNING and SQL:2016 `FINAL` counts by a narrow CASE projection
+    * (no window, no Exchange beyond the executor's own key shuffle). */
   val q130SqlAllRows: QueryDef = QueryDef("q130_sql_match_all_rows",
     Funnel.q113AllRows.oracle.get) { (spark, dir) =>
+    def byClassifier(a: String, b: String, c: String) =
+      expr(s"CASE classifier WHEN 'A' THEN $a WHEN 'B' THEN $b ELSE $c END")
     run("""SELECT * FROM events MATCH_RECOGNIZE (
           |  PARTITION BY user_id
           |  ORDER BY ts, event_id
+          |  MEASURES MATCH_NUMBER() AS match_no,
+          |           COUNT(*) AS pos,
+          |           CLASSIFIER() AS classifier,
+          |           COUNT(A.*) AS run_a, COUNT(B.*) AS run_b,
+          |           COUNT(C.*) AS run_c,
+          |           FINAL COUNT(A.*) AS fin_a, FINAL COUNT(B.*) AS fin_b,
+          |           FINAL COUNT(C.*) AS fin_c
           |  ALL ROWS PER MATCH
           |  AFTER MATCH SKIP PAST LAST ROW
           |  PATTERN (A B+ C)
@@ -389,6 +402,10 @@ object MatchSql {
           |         B AS event_type = 'click',
           |         C AS event_type = 'purchase'
           |)""".stripMargin)(spark, dir)
+      .select(col("user_id"), col("match_no"), col("pos"), col("classifier"),
+        col("event_id"),
+        byClassifier("run_a", "run_b", "run_c").as("running_n"),
+        byClassifier("fin_a", "fin_b", "fin_c").as("final_n"))
       .orderBy(col("user_id"), col("match_no"), col("pos"))
   }
 }

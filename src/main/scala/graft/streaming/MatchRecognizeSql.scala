@@ -2,11 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 import graft.streaming.PatternMatch._
-import graft.streaming.StatefulOps.Event
 
 /** SQL-syntax entry for MATCH_RECOGNIZE — a clause parser and expression
   * compiler onto the generic NFA ([[PatternMatch]]), covering the
@@ -16,18 +15,12 @@ import graft.streaming.StatefulOps.Event
   * and stream/sql/MatchRecognizeITCase.scala exercises the grammar),
   * while Spark's parser has no MATCH_RECOGNIZE production at all.
   *
-  * Two entries share ONE parser and ONE expression compiler:
-  *
-  *  - [[sqlDf]] — ARBITRARY DataFrames, schema-driven field registry,
-  *    composite or empty `PARTITION BY`, arbitrary `ORDER BY` columns
-  *    with ASC/DESC (reference MatchRecognizeITCase.scala:169-183
-  *    partitions a 4-column table by two keys; :230 orders by three).
-  *    Batch AND streaming (r11: [[PatternMatch.matchRowsStream]] is the
-  *    general-schema streaming executor under the Event path's
-  *    watermark protocol).
-  *  - [[sql]] — the event-model entry (`PARTITION BY user_id`,
-  *    `ORDER BY ts[, event_id]`), streaming AND batch through the keyed
-  *    RocksDB-compatible NFA executor.
+  * One entry, [[sqlDf]]: ARBITRARY DataFrames, schema-driven field
+  * registry, composite or empty `PARTITION BY`, arbitrary `ORDER BY`
+  * columns with ASC/DESC (reference MatchRecognizeITCase.scala:169-183
+  * partitions a 4-column table by two keys; :230 orders by three),
+  * batch AND streaming through the one executor
+  * [[PatternMatch.matchRows]].
   *
   * Grammar (the reference IT-case surface):
   *
@@ -35,7 +28,7 @@ import graft.streaming.StatefulOps.Event
   * SELECT * FROM <table> MATCH_RECOGNIZE (
   *   [PARTITION BY col [, col ...]]
   *   ORDER BY col [ASC|DESC] [, ...]
-  *   [MEASURES <expr> AS <alias> [, ...]]
+  *   [MEASURES [FINAL|RUNNING] <expr> AS <alias> [, ...]]
   *   [ONE ROW PER MATCH | ALL ROWS PER MATCH]
   *   [AFTER MATCH SKIP PAST LAST ROW | SKIP TO NEXT ROW
   *     | SKIP TO FIRST <var> | SKIP TO LAST <var>]
@@ -55,7 +48,7 @@ import graft.streaming.StatefulOps.Event
   * previous DOWN row and `LAST(A.name, 2) IS NULL` holds when A bound
   * fewer than 3 rows; MatchRecognizeITCase.scala:178-182,404-409),
   * input navigation `PREV(expr[, n])` / `NEXT(expr[, n])` at arbitrary
-  * offsets in both modes (r14 — the streaming executors retain the last
+  * offsets in both modes (r14 — the streaming executor retains the last
   * k consumed rows as the predecessor marker, k = the deepest PREV
   * offset declared; r15 — also in MEASURES, anchored at the match's
   * LAST row under FINAL semantics and at each output row under ALL
@@ -67,7 +60,10 @@ import graft.streaming.StatefulOps.Event
   * per SQL), `CLASSIFIER()` / `MATCH_NUMBER()`, and `MATCH_ROWTIME()`
   * (the last matched row's primary order value, the reference's
   * MatchRowTimeFunction — enables windowed GROUP BY over the clause
-  * result, MatchRecognizeITCase.testWindowedGroupingAppliedTo...).
+  * result, MatchRecognizeITCase.testWindowedGroupingAppliedTo...), and
+  * the SQL:2016 `FINAL` / `RUNNING` modifiers on an aggregate or
+  * FIRST/LAST in MEASURES (`FINAL COUNT(B.*)` on an ALL ROWS row is the
+  * whole match's count; DEFINE rejects FINAL at parse time).
   *
   * Bounded quantifiers `{n}` / `{n,}` / `{n,m}` carry the reference's
   * POSSESSIVE-greedy semantics (see [[PatternMatch.Times]]): the
@@ -83,12 +79,10 @@ import graft.streaming.StatefulOps.Event
   * analysis in `MatchRecognizeAnySpec`).
   *
   * ONE ROW PER MATCH output is partition columns + MEASURES aliases
-  * (FINAL semantics). ALL ROWS PER MATCH with MEASURES outputs every
-  * input column + the measures with RUNNING semantics per matched row;
-  * on the event-model entry WITHOUT measures it keeps the engine's
-  * canonical projection (user_id, match_no, pos, classifier, event_id,
-  * running_n, final_n). Anything outside the grammar fails loudly at
-  * parse time rather than mis-executing.
+  * (FINAL semantics). ALL ROWS PER MATCH outputs every input column +
+  * the measures, RUNNING per matched row unless marked FINAL. Anything
+  * outside the grammar fails loudly at parse time rather than
+  * mis-executing.
   */
 object MatchRecognizeSql {
 
@@ -127,6 +121,11 @@ object MatchRecognizeSql {
     * matched row's event time, the reference's
     * `MatchRowTimeFunction`). */
   private case object MatchRowtimeEx extends Ex
+  /** SQL:2016 `FINAL` on an aggregate or FIRST/LAST navigation in
+    * MEASURES: evaluated over the WHOLE match's bindings even on an
+    * ALL ROWS PER MATCH row, where every measure is RUNNING by default.
+    * (`RUNNING` parses to the bare expression.) */
+  private final case class FinalEx(e: Ex) extends Ex
 
   private final case class Parsed(partCols: Seq[String],
       orderKeys: Seq[(String, Boolean)],
@@ -138,44 +137,13 @@ object MatchRecognizeSql {
   // Field access (schema-driven registry; reference MatchRecognizeITCase
   // runs the clause over arbitrary registered tables)
   // =====================================================================
-  private trait FieldAccess[R] extends Serializable {
-    def indexOf(name: String): Option[Int]
-    def canonical(i: Int): String
-    def dataType(i: Int): DataType
-    def get(r: R, i: Int): Any
-    def fieldNames: Seq[String]
-  }
-
-  private final class RowAccess(schema: StructType) extends FieldAccess[Row] {
+  private final class RowAccess(schema: StructType) extends Serializable {
     private val byLower =
       schema.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
-    override def indexOf(name: String): Option[Int] =
-      byLower.get(name.toLowerCase)
-    override def canonical(i: Int): String = schema.fieldNames(i)
-    override def dataType(i: Int): DataType = schema.fields(i).dataType
-    override def get(r: Row, i: Int): Any = r.get(i)
-    override def fieldNames: Seq[String] = schema.fieldNames.toSeq
-  }
-
-  private object EventAccess extends FieldAccess[Event] {
-    private val names = Vector("user_id", "event_id", "ts", "event_type", "value")
-    private val types = Vector[DataType](LongType, LongType, TimestampType,
-      StringType, DoubleType)
-    override def indexOf(name: String): Option[Int] =
-      names.indexOf(name.toLowerCase) match {
-        case -1 => None
-        case i => Some(i)
-      }
-    override def canonical(i: Int): String = names(i)
-    override def dataType(i: Int): DataType = types(i)
-    override def get(e: Event, i: Int): Any = i match {
-      case 0 => e.user_id
-      case 1 => e.event_id
-      case 2 => e.ts
-      case 3 => e.event_type
-      case 4 => e.value
-    }
-    override def fieldNames: Seq[String] = names
+    def indexOf(name: String): Option[Int] = byLower.get(name.toLowerCase)
+    def canonical(i: Int): String = schema.fieldNames(i)
+    def dataType(i: Int): DataType = schema.fields(i).dataType
+    def fieldNames: Seq[String] = schema.fieldNames.toSeq
   }
 
   // =====================================================================
@@ -188,24 +156,27 @@ object MatchRecognizeSql {
   private case object Pending
 
   /** Evaluation environment: the pinned context row (for bare fields and
-    * navigated sub-expressions), the attempt/match bindings, and — in
-    * DEFINE position — the key's input order. */
-  private final class Env[R](
-      val acc: FieldAccess[R],
-      val cur: Option[R],
-      boundF: Option[String] => IndexedSeq[R],
-      inputF: Int => Option[R],
+    * navigated sub-expressions), the attempt/match bindings (`boundF`,
+    * RUNNING; `finalF`, the whole match for FINAL), and — in DEFINE
+    * position — the key's input order. */
+  private final class Env(
+      val cur: Option[Row],
+      boundF: Option[String] => IndexedSeq[Row],
+      inputF: Int => Option[Row],
       pendingF: Int => Boolean,
       val classifier: String,
-      val matchNo: Long) {
-    def bound(v: Option[String]): IndexedSeq[R] = boundF(v)
-    def inputAt(off: Int): Option[R] = inputF(off)
+      val matchNo: Long,
+      finalF: Option[String] => IndexedSeq[Row]) {
+    def bound(v: Option[String]): IndexedSeq[Row] = boundF(v)
+    def inputAt(off: Int): Option[Row] = inputF(off)
     def inputPending(off: Int): Boolean = pendingF(off)
-    def withCur(r: R): Env[R] =
-      new Env(acc, Some(r), boundF, inputF, pendingF, classifier, matchNo)
+    def withCur(r: Row): Env = new Env(Some(r), boundF, inputF, pendingF,
+      classifier, matchNo, finalF)
+    def finalView: Env =
+      new Env(cur, finalF, inputF, pendingF, classifier, matchNo, finalF)
   }
 
-  private type Eval[R] = Env[R] => Any
+  private type Eval = Env => Any
 
   private def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -220,7 +191,7 @@ object MatchRecognizeSql {
     * the arithmetic mode. Integral arithmetic stays exact in Long; any
     * fractional/decimal operand promotes to Double (documented
     * simplification: decimal-typed MEASURE arithmetic returns DOUBLE). */
-  private def typeOf[R](e: Ex, acc: FieldAccess[R]): DataType = e match {
+  private def typeOf(e: Ex, acc: RowAccess): DataType = e match {
     case Lit(_, dt) => dt
     case CurField(f) => acc.dataType(fieldIdx(acc, f))
     case VarField(_, f) => acc.dataType(fieldIdx(acc, f))
@@ -239,11 +210,12 @@ object MatchRecognizeSql {
     case AggEx(fn, _, None) => sys.error(s"$fn requires an argument")
     case ClassifierEx => StringType
     case MatchNumberEx => LongType
+    case FinalEx(inner) => typeOf(inner, acc)
     case _: Cmp | _: IsNullEx | _: LikeEx | _: AndEx | _: OrEx | _: NotEx =>
       BooleanType
   }
 
-  private def fieldIdx[R](acc: FieldAccess[R], f: String): Int =
+  private def fieldIdx(acc: RowAccess, f: String): Int =
     acc.indexOf(f).getOrElse(sys.error(
       s"unknown field '$f' (have: ${acc.fieldNames.mkString(", ")})"))
 
@@ -297,13 +269,13 @@ object MatchRecognizeSql {
     * the same outcome (Unsat), so AND(Pending, null) — whose truth value
     * is confined to {FALSE, NULL} — is already decided and must not hold
     * the NFA buffer as Undecided (advice r10). */
-  private def compile[R](e: Ex, acc: FieldAccess[R],
-      lenient: Boolean = false): Eval[R] = e match {
+  private def compile(e: Ex, acc: RowAccess,
+      lenient: Boolean = false): Eval = e match {
     case Lit(v, _) => _ => v
     case CurField(f) =>
       val i = fieldIdx(acc, f)
-      env => acc.get(env.cur.getOrElse(sys.error(
-        s"field '$f' has no context row here")), i)
+      env => env.cur.getOrElse(sys.error(
+        s"field '$f' has no context row here")).get(i)
     case VarField(v, f) =>
       // post-finalization this only remains as sugar for LAST(v, 0)
       compile(Nav(first = false, Some(v), CurField(f), 0), acc)
@@ -464,23 +436,26 @@ object MatchRecognizeSql {
       }
     case ClassifierEx => env => env.classifier
     case MatchNumberEx => env => env.matchNo
+    case FinalEx(inner) =>
+      val f = compile(inner, acc)
+      env => f(env.finalView)
   }
 
   /** A compiled DEFINE predicate: boolean root collapsed to the NFA's
     * tri-state (TRUE → Sat; FALSE/NULL → Unsat; Pending → Undecided). */
-  private def compilePred[R](e: Ex, acc: FieldAccess[R])
-      : MatchCtx[R] => PredRes = {
+  private def compilePred(e: Ex, acc: RowAccess)
+      : MatchCtx => PredRes = {
     val f = compile(e, acc, lenient = true)
-    ctx => f(defineEnv(ctx, acc)) match {
+    ctx => f(defineEnv(ctx)) match {
       case java.lang.Boolean.TRUE => Sat
       case Pending => Undecided
       case _ => Unsat
     }
   }
 
-  private def defineEnv[R](ctx: MatchCtx[R], acc: FieldAccess[R]): Env[R] =
-    new Env[R](acc, Some(ctx.row), ctx.boundRows, ctx.inputAt,
-      ctx.pendingAt, "", 0L)
+  private def defineEnv(ctx: MatchCtx): Env =
+    new Env(Some(ctx.row), ctx.boundRows, ctx.inputAt,
+      ctx.pendingAt, "", 0L, ctx.boundRows)
 
   // =====================================================================
   // AST walks (validation)
@@ -497,6 +472,7 @@ object MatchRecognizeSql {
     case OrEx(l, r) => Seq(l, r)
     case NotEx(i) => Seq(i)
     case AggEx(_, _, i) => i.toSeq
+    case FinalEx(i) => Seq(i)
     case _ => Nil
   }
   private def walk(e: Ex)(f: Ex => Unit): Unit = {
@@ -512,8 +488,8 @@ object MatchRecognizeSql {
     }
     b.result()
   }
-  /** Deepest PREV offset in a DEFINE — the streaming executors size
-    * their O(k) predecessor marker by it (r14: arbitrary physical
+  /** Deepest PREV offset in a DEFINE — the streaming executor sizes
+    * its O(k) predecessor marker by it (r14: arbitrary physical
     * offsets on streams, matching the reference CEP). */
   private def maxPrevOffset(e: Ex): Int = {
     var m = 0
@@ -735,6 +711,13 @@ object MatchRecognizeSql {
     val knownVars = patternVars.map(_._1).toSet
     defines.keys.foreach(v => require(knownVars(v),
       s"DEFINE names '$v' which is not a PATTERN variable ($knownVars)"))
+    // SQL:2016: a DEFINE sees only the rows bound so far — FINAL is a
+    // MEASURES-only modifier
+    defines.foreach { case (v, ex) =>
+      var fin = false
+      walk(ex) { case _: FinalEx => fin = true; case _ => () }
+      require(!fin, s"FINAL is only allowed in MEASURES (found in DEFINE $v)")
+    }
     (defines.values ++ measures.map(_._2)).foreach { ex =>
       referencedVars(ex).foreach(v => require(knownVars(v),
         s"expression references '$v' which is not a PATTERN variable " +
@@ -855,6 +838,13 @@ object MatchRecognizeSql {
         "PREV/NEXT cannot nest navigation")
       InputNav(dir, stripVarsToCur(inner, "PREV/NEXT"), off)
     }
+    else if (Set("FINAL", "RUNNING")(t.toUpperCase) &&
+        (AggFns ++ Set("FIRST", "LAST"))(p.peekAt(1).toUpperCase) &&
+        p.peekAt(2) == "(") {
+      p.next()
+      val inner = parsePrimary(p)
+      if (t.equalsIgnoreCase("FINAL")) FinalEx(inner) else inner
+    }
     else if (AggFns(t.toUpperCase)) {
       val fn = t.toUpperCase
       p.next(); p.expect("(")
@@ -944,39 +934,46 @@ object MatchRecognizeSql {
     * row (SQL:2016 FINAL semantics) and navigates the contiguous input
     * window `preCtx ++ matched ++ postCtx` the scan captured with the
     * match. */
-  private def finalEnv[R](acc: FieldAccess[R], bound: Seq[Bound[R]],
-      matchNo: Long, preCtx: IndexedSeq[R] = IndexedSeq.empty,
-      postCtx: IndexedSeq[R] = IndexedSeq.empty): Env[R] = {
-    val byVar = bound.map(b => b.name -> b.rows.toIndexedSeq).toMap
-    val all = bound.flatMap(_.rows).toIndexedSeq
+  private def finalEnv(bound: Seq[Bound],
+      matchNo: Long, preCtx: IndexedSeq[Row] = IndexedSeq.empty,
+      postCtx: IndexedSeq[Row] = IndexedSeq.empty): Env = {
+    val whole = wholeMatch(bound)
+    val all = whole(None)
     val lastCls = bound.reverse.find(_.rows.nonEmpty).map(_.name).getOrElse("")
     val phys = preCtx ++ all ++ postCtx
     val anchor = preCtx.length + all.length - 1
-    new Env[R](acc, None,
-      v => v.map(byVar.getOrElse(_, Vector.empty[R])).getOrElse(all),
+    new Env(None, whole,
       off => { val j = anchor + off
         if (j >= 0 && j < phys.length) Some(phys(j)) else None },
-      _ => false, lastCls, matchNo)
+      _ => false, lastCls, matchNo, whole)
+  }
+
+  /** The bindings of a complete match by variable (None = all rows). */
+  private def wholeMatch(bound: Seq[Bound]): Option[String] => IndexedSeq[Row] = {
+    val byVar = bound.map(b => b.name -> b.rows.toIndexedSeq).toMap
+    val all = bound.flatMap(_.rows).toIndexedSeq
+    v => v.map(byVar.getOrElse(_, Vector.empty[Row])).getOrElse(all)
   }
 
   /** RUNNING-semantics rows of a match: for each matched row in order,
-    * (row, classifier, env truncated to the rows seen so far) — SQL's
-    * ALL ROWS PER MATCH measure semantics. Physical PREV/NEXT anchors
-    * at the current output row. */
-  private def runningEnvs[R](acc: FieldAccess[R], bound: Seq[Bound[R]],
-      matchNo: Long, preCtx: IndexedSeq[R] = IndexedSeq.empty,
-      postCtx: IndexedSeq[R] = IndexedSeq.empty): Iterator[(R, Env[R])] = {
+    * (row, env truncated to the rows seen so far) — SQL's ALL ROWS PER
+    * MATCH measure semantics; FINAL measures still see the whole match.
+    * Physical PREV/NEXT anchors at the current output row. */
+  private def runningEnvs(bound: Seq[Bound],
+      matchNo: Long, preCtx: IndexedSeq[Row] = IndexedSeq.empty,
+      postCtx: IndexedSeq[Row] = IndexedSeq.empty): Iterator[(Row, Env)] = {
     val seq = bound.flatMap(b => b.rows.map(r => (b.name, r))).toIndexedSeq
     val phys = preCtx ++ seq.map(_._2) ++ postCtx
+    val whole = wholeMatch(bound)
     seq.indices.iterator.map { p =>
       val sofar = seq.take(p + 1)
       val (cls, row) = seq(p)
       val anchor = preCtx.length + p
-      val env = new Env[R](acc, Some(row),
+      val env = new Env(Some(row),
         v => sofar.collect { case (n, r) if v.forall(_ == n) => r },
         off => { val j = anchor + off
           if (j >= 0 && j < phys.length) Some(phys(j)) else None },
-        _ => false, cls, matchNo)
+        _ => false, cls, matchNo, whole)
       (row, env)
     }
   }
@@ -987,13 +984,12 @@ object MatchRecognizeSql {
   /** Parse + execute `text` over any DataFrame — schema-driven field
     * registry, composite or empty PARTITION BY, arbitrary ORDER BY.
     * ONE ROW PER MATCH returns partition columns + measures; ALL ROWS
-    * PER MATCH returns every input column + RUNNING measures. A
-    * STREAMING input runs the same NFA through
-    * [[PatternMatch.matchRowsStream]] (r11) under the Event path's
-    * watermark protocol: the leading ORDER BY column must be an
-    * ascending timestamp; physical PREV/NEXT offsets are arbitrary
-    * (r14 — the retained predecessor marker holds the deepest declared
-    * PREV depth); `delay` is the watermark. */
+    * PER MATCH returns every input column + RUNNING (or FINAL)
+    * measures. Both modes run [[PatternMatch.matchRows]]; a STREAMING
+    * input follows its watermark protocol: the leading ORDER BY column
+    * must be an ascending timestamp; physical PREV/NEXT offsets are
+    * arbitrary (r14 — the retained predecessor marker holds the deepest
+    * declared PREV depth); `delay` is the watermark. */
   def sqlDf(df: DataFrame, text: String, delay: String = "0 seconds")
       : DataFrame = {
     val q = parse(text)
@@ -1013,128 +1009,32 @@ object MatchRecognizeSql {
     // emission (r16) — the executor holds a match until the context closes
     val (measPrev, measNext) = navDepths(q.measures.map(_._2))
 
-    if (q.allRows) {
-      val outSchema = StructType(df.schema.fields.toSeq ++ measureFields)
-      val emitAll = (key: Row, matchNo: Long, bound: Seq[Bound[Row]],
-          pre: IndexedSeq[Row], post: IndexedSeq[Row]) =>
-        runningEnvs(acc, bound, matchNo, pre, post).map { case (row, env) =>
-          Row.fromSeq(row.toSeq ++ measureEvals.map(_(env)))
-        }
-      if (df.isStreaming)
-        PatternMatch.matchRowsStream(df, partCols, orderKeys, steps, q.skip,
-          q.within, emitAll, outSchema, delay,
-          measPrev = measPrev, measNext = measNext)
+    val (outSchema, emit) =
+      if (q.allRows)
+        (StructType(df.schema.fields.toSeq ++ measureFields),
+          (_: Row, matchNo: Long, bound: Seq[Bound], pre: IndexedSeq[Row],
+              post: IndexedSeq[Row]) =>
+            runningEnvs(bound, matchNo, pre, post).map { case (row, env) =>
+              Row.fromSeq(row.toSeq ++ measureEvals.map(_(env)))
+            })
       else
-        PatternMatch.matchRowsBatch(df, partCols, orderKeys, steps, q.skip,
-          q.within, emitAll, outSchema, measPrev, measNext)
-    } else {
-      val keyFields = partCols.map(c => df.schema(df.schema.fieldIndex(c)))
-      val outSchema = StructType(keyFields ++ measureFields)
-      val emitOne = (key: Row, matchNo: Long, bound: Seq[Bound[Row]],
-          pre: IndexedSeq[Row], post: IndexedSeq[Row]) => {
-        val env = finalEnv(acc, bound, matchNo, pre, post)
-        Iterator.single(Row.fromSeq(key.toSeq ++ measureEvals.map(_(env))))
-      }
-      if (df.isStreaming)
-        PatternMatch.matchRowsStream(df, partCols, orderKeys, steps, q.skip,
-          q.within, emitOne, outSchema, delay,
-          measPrev = measPrev, measNext = measNext)
-      else
-        PatternMatch.matchRowsBatch(df, partCols, orderKeys, steps, q.skip,
-          q.within, emitOne, outSchema, measPrev, measNext)
-    }
-  }
-
-  // =====================================================================
-  // Entry: the event model (streaming + batch through the keyed NFA)
-  // =====================================================================
-  /** Parse + execute `text` over the engine's event stream/table. The
-    * NFA is keyed and event-time-ordered on the event model, so
-    * PARTITION BY must be user_id and ORDER BY must lead with ts —
-    * arbitrary schemas go through [[sqlDf]]. `delay` is the streaming
-    * watermark. */
-  def sql(events: Dataset[Event], text: String,
-      delay: String = "0 seconds"): DataFrame = {
-    val q = parse(text)
-    val acc: FieldAccess[Event] = EventAccess
-    require(q.partCols.map(_.toLowerCase) == Seq("user_id"),
-      "PARTITION BY must be user_id on the event-model entry (the NFA's " +
-        s"key column), got '${q.partCols.mkString(", ")}' — use sqlDf " +
-        "for arbitrary schemas")
-    require(q.orderKeys.headOption.exists(k => k._1.toLowerCase == "ts" && k._2),
-      s"ORDER BY must lead with ts ascending (the NFA's event-time " +
-        s"order), got '${q.orderKeys.map(_._1).mkString(", ")}'")
-    require(q.orderKeys.tail.forall(k => k._1.toLowerCase == "event_id" && k._2),
-      "the only supported ORDER BY tie-break is event_id ascending")
-    val steps = compileSteps(q, acc)
-    val measureEvals = q.measures.map { case (_, ex) => compile(ex, acc) }
-    val (measPrev, measNext) = navDepths(q.measures.map(_._2))
-
-    if (q.allRows && q.measures.isEmpty) {
-      // the engine's canonical ALL ROWS projection (CLASSIFIER /
-      // MATCH_NUMBER / RUNNING-vs-FINAL counts as columns)
-      matchPatternAllRowsG(events, steps, delay, q.within, q.skip).toDF()
-    } else if (q.allRows) {
-      val schema = StructType(
-        EventAccess.fieldNames.zipWithIndex.map { case (n, i) =>
-          StructField(n, EventAccess.dataType(i),
-            nullable = i == 2 || i == 3) // ts / event_type
-        } ++ q.measures.map { case (alias, ex) =>
-          StructField(alias, typeOf(ex, acc))
-        })
-      implicit val enc = Encoders.row(schema)
-      PatternMatch.matchPatternNumbered(events, steps, delay,
-        (key: Long, matchNo: Long, bound: Seq[Bound[Event]],
-            pre: IndexedSeq[Event], post: IndexedSeq[Event]) =>
-          runningEnvs(acc, bound, matchNo, pre, post).map { case (e, env) =>
-            Row.fromSeq(Seq(e.user_id, e.event_id, e.ts, e.event_type,
-              e.value) ++ measureEvals.map(_(env)))
-          }, q.within, q.skip, measPrev, measNext).toDF()
-    } else {
-      val schema = StructType(
-        StructField("user_id", LongType, nullable = false) +:
-          q.measures.map { case (alias, ex) =>
-            StructField(alias, typeOf(ex, acc))
+        (StructType(partCols.map(c => df.schema(df.schema.fieldIndex(c))) ++
+          measureFields),
+          (key: Row, matchNo: Long, bound: Seq[Bound], pre: IndexedSeq[Row],
+              post: IndexedSeq[Row]) => {
+            val env = finalEnv(bound, matchNo, pre, post)
+            Iterator.single(Row.fromSeq(key.toSeq ++ measureEvals.map(_(env))))
           })
-      implicit val enc = Encoders.row(schema)
-      PatternMatch.matchPatternNumbered(events, steps, delay,
-        (key: Long, matchNo: Long, bound: Seq[Bound[Event]],
-            pre: IndexedSeq[Event], post: IndexedSeq[Event]) => {
-          val env = finalEnv(acc, bound, matchNo, pre, post)
-          Iterator.single(Row.fromSeq(key +: measureEvals.map(_(env))))
-        }, q.within, q.skip, measPrev, measNext).toDF()
-    }
+    PatternMatch.matchRows(df, partCols, orderKeys, steps, q.skip, q.within,
+      emit, Encoders.row(outSchema), delay, measPrev, measNext)
   }
 
-  /** matchPatternAllRows over pre-compiled generic steps (the Step-typed
-    * public surface adapts the same way). */
-  private def matchPatternAllRowsG(events: Dataset[Event],
-      steps: Seq[GStep[Event]], delay: String,
-      within: Option[java.time.Duration], skip: SkipStrategy)
-      : Dataset[ClassifiedRow] = {
-    implicit val enc = Encoders.product[ClassifiedRow]
-    PatternMatch.matchPatternNumbered(events, steps, delay,
-      (key: Long, matchNo: Long, bound: Seq[Bound[Event]],
-          _: IndexedSeq[Event], _: IndexedSeq[Event]) => {
-        val finals = bound.map(b => b.name -> b.rows.size.toLong).toMap
-        val running = scala.collection.mutable.Map.empty[String, Long]
-        var pos = 0L
-        bound.iterator.flatMap(b => b.rows.iterator.map { row =>
-          pos += 1
-          val r = running.getOrElse(b.name, 0L) + 1
-          running(b.name) = r
-          ClassifiedRow(key, matchNo, pos, b.name, row.event_id,
-            r, finals(b.name))
-        })
-      }, within, skip)
-  }
-
-  private def compileSteps[R](q: Parsed, acc: FieldAccess[R])
-      : Seq[GStep[R]] = q.pattern.map { case (v, quant) =>
+  private def compileSteps(q: Parsed, acc: RowAccess)
+      : Seq[GStep] = q.pattern.map { case (v, quant) =>
     q.defines.get(v) match {
-      case None => GStep[R](v, quant, _ => Sat) // SQL default: any row
+      case None => GStep(v, quant, _ => Sat) // SQL default: any row
       case Some(ex) =>
-        GStep[R](v, quant, compilePred(ex, acc),
+        GStep(v, quant, compilePred(ex, acc),
           prevDepth = maxPrevOffset(ex))
     }
   }

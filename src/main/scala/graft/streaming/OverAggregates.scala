@@ -5,10 +5,9 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState
 import org.apache.spark.sql.types._
 
 /** Streaming OVER aggregates over an ARBITRARY DataFrame — the
-  * general-schema executor behind [[StreamingOverSql.sqlDf]], the same
-  * generalization move [[PatternMatch.matchRowsBatch]] made for
-  * MATCH_RECOGNIZE (reference: the OVER clause accepts any registered
-  * table — flink-table-planner-blink
+  * general-schema executor behind [[StreamingOverSql.sqlDf]], as
+  * [[PatternMatch.matchRows]] is for MATCH_RECOGNIZE (reference: the
+  * OVER clause accepts any registered table — flink-table-planner-blink
   * .../stream/sql/OverWindowITCase.scala partitions 3-column tuples by a
   * STRING key and aggregates arbitrary columns; the physical routing is
   * StreamExecOverAggregate.scala:56). It is the one streaming-OVER

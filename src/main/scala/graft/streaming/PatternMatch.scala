@@ -1,43 +1,45 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DataType, StructType, TimestampType}
+import org.apache.spark.sql.types._
 
-import graft.streaming.StatefulOps.Event
-
-/** Quantified MATCH_RECOGNIZE subset — a real per-key NFA, not a lead()
-  * rewrite (reference: StreamExecMatch.scala:68 + MatchCodeGenerator.scala:82
-  * compile DEFINE/PATTERN to a codegen'd NFA; the fixed-pattern and
-  * `view* purchase` shapes are already covered by [[graft.operators.Funnel]]).
+/** Quantified MATCH_RECOGNIZE — a real per-key NFA over an ARBITRARY
+  * DataFrame, not a lead() rewrite (reference: StreamExecMatch.scala:68 +
+  * MatchCodeGenerator.scala:82 compile DEFINE/PATTERN to a codegen'd NFA
+  * over any registered table; MatchRecognizeITCase.scala:169-183
+  * partitions a 4-column table by two keys).
   *
   * Supported grammar: a PATTERN is a sequence of steps, each a named
   * row-predicate with a quantifier — `A` (exactly one), `A?`, `A+`, `A*`
   * matched GREEDILY with backtracking, plus the reluctant forms `A??`,
-  * `A+?`, `A*?` (shortest binding first) — over each key's
-  * event-time-ordered sequence, with the full AFTER MATCH SKIP family
-  * ([[SkipStrategy]]): PAST LAST ROW (the reference's default), TO NEXT
-  * ROW, TO FIRST/LAST variable.
-  * DEFINE predicates may reference the PREVIOUS or NEXT row in the key's
-  * input order ([[Step.withPrev]] / [[Step.withNext]] — SQL `PREV(expr, 1)`
-  * / `NEXT(expr, 1)`, reference MatchCodeGenerator.scala:82 /
+  * `A+?`, `A*?` (shortest binding first) and the bounded `{n,m}` family
+  * — over each partition's ORDER BY sequence, with the full AFTER MATCH
+  * SKIP family ([[SkipStrategy]]): PAST LAST ROW (the reference's
+  * default), TO NEXT ROW, TO FIRST/LAST variable. DEFINE predicates may
+  * reference rows before or after the current one in the key's input
+  * order (SQL `PREV(expr, k)` / `NEXT(expr, k)`, reference
   * IterativeConditionRunner.java:31; a NEXT-bearing row whose successor
   * has not arrived is held undecided), and the whole match can be bounded
   * by a `WITHIN` duration: every row of a match must lie within `within`
   * of the match's first row, mirroring Flink CEP's `Pattern.within`
   * (reference: EventTimeTriggers / the NFA's window-time pruning).
-  * MEASURES come from the per-step row bindings handed to the caller's
-  * `emit` (FIRST/LAST/count of any step are projections of those
-  * bindings).
   *
-  * Execution: one code path for both modes via `flatMapGroupsWithState`.
-  * Streaming: rows buffer per key; on every trigger (or event-time
-  * timeout) the watermark-closed, (ts, event_id)-sorted prefix runs
+  * Two surfaces share ONE executor, [[matchRows]]: the SQL compiler
+  * ([[MatchRecognizeSql.sqlDf]]) builds tri-state [[GStep]]s directly,
+  * and the programmatic [[Step]] API ([[matchPattern]] /
+  * [[matchPatternAllRows]]) adapts plain `Row` predicates onto them.
+  *
+  * Execution: one `flatMapGroupsWithState` path for both modes. Batch: a
+  * single pass over each key's full sorted sequence (watermark = ∞), in
+  * any ORDER BY. Streaming: the leading ORDER BY column must be an
+  * ascending timestamp (the event-time axis); rows buffer per key; on
+  * every trigger (or event-time timeout) the watermark-closed prefix runs
   * through the NFA; complete matches emit, consumed rows drop, and a
   * partial match still viable at the prefix end retains its rows — so
   * out-of-order arrival within the watermark delay cannot corrupt a
-  * match. Batch: a single pass over each key's full sorted sequence
-  * (watermark = ∞), which is what the q89/q96 DuckDB oracles hash-check.
+  * match.
   *
   * State is O(pending rows of an open partial match) per key, matching
   * the reference NFA's per-key buffer. WITHOUT a `within` bound, a partial
@@ -101,32 +103,34 @@ object PatternMatch extends Serializable {
     * WITHIN bound once `min` rows bound. */
   final case class TimesReluctant(min: Int, max: Option[Int]) extends Quant
 
-  /** One PATTERN step: a named predicate with a quantifier. `prevPred`
-    * (`nextPred`), when present, is ANDed in against (current,
-    * previous-input-row) (resp. (current, next-input-row)); a row with no
-    * predecessor (successor) fails it, mirroring SQL's `x < PREV(x)` /
-    * `x < NEXT(x)` evaluating to NULL (not true) at the partition edge. */
-  final case class Step(name: String, pred: Event => Boolean, quant: Quant,
-      prevPred: Option[(Event, Event) => Boolean] = None,
-      nextPred: Option[(Event, Event) => Boolean] = None)
+  /** One PATTERN step of the programmatic surface: a named row predicate
+    * with a quantifier. `prevPred` (`nextPred`), when present, is ANDed
+    * in against (current, previous-input-row) (resp. (current,
+    * next-input-row)); a row with no predecessor (successor) fails it,
+    * mirroring SQL's `x < PREV(x)` / `x < NEXT(x)` evaluating to NULL
+    * (not true) at the partition edge. Rows carry their schema, so
+    * predicates may read fields by name (`r.getAs[String]("kind")`). */
+  final case class Step(name: String, pred: Row => Boolean, quant: Quant,
+      prevPred: Option[(Row, Row) => Boolean] = None,
+      nextPred: Option[(Row, Row) => Boolean] = None)
 
   object Step {
     /** DEFINE with a PREV reference: `p(current, previous)` over the key's
-      * event-time-ordered input — the previous row counts even when a
-      * prior match consumed it (PREV reads input order, not bindings). */
-    def withPrev(name: String, quant: Quant)(p: (Event, Event) => Boolean): Step =
+      * ordered input — the previous row counts even when a prior match
+      * consumed it (PREV reads input order, not bindings). */
+    def withPrev(name: String, quant: Quant)(p: (Row, Row) => Boolean): Step =
       Step(name, _ => true, quant, Some(p))
 
     /** DEFINE with a NEXT reference: `p(current, next)` over the key's
-      * event-time-ordered input. In streaming, a row whose successor has
-      * not yet arrived is undecidable and is held until it does (or the
-      * input ends: NEXT at the partition tail is NULL → not true). */
-    def withNext(name: String, quant: Quant)(p: (Event, Event) => Boolean): Step =
+      * ordered input. In streaming, a row whose successor has not yet
+      * arrived is undecidable and is held until it does (or the input
+      * ends: NEXT at the partition tail is NULL → not true). */
+    def withNext(name: String, quant: Quant)(p: (Row, Row) => Boolean): Step =
       Step(name, _ => true, quant, nextPred = Some(p))
   }
 
   /** Rows bound to one step in one match (empty for unused Opt/Star). */
-  final case class Bound[R](name: String, rows: Seq[R])
+  final case class Bound(name: String, rows: Seq[Row])
 
   /** Tri-state DEFINE evaluation: a NEXT reference at the buffer tail of
     * a non-final input cannot be decided yet. */
@@ -141,17 +145,17 @@ object PatternMatch extends Serializable {
     * cross-variable DEFINE references — `LAST(A.price, n)` /
     * `FIRST(A.price)` navigate rows already bound, reference
     * MatchRecognizeITCase.scala:169-183,390-410). */
-  final class MatchCtx[R](val rows: IndexedSeq[R], val idx: Int,
-      bufPrev: IndexedSeq[R], val finalInput: Boolean,
+  final class MatchCtx(val rows: IndexedSeq[Row], val idx: Int,
+      bufPrev: IndexedSeq[Row], val finalInput: Boolean,
       stepName: Int => String, acc: List[(Int, Int)]) {
-    def row: R = rows(idx)
+    def row: Row = rows(idx)
 
     /** Input row at relative offset (−k = SQL PREV(x, k), +k = NEXT).
       * None when outside the available buffer; negative offsets fall
       * back to the retained predecessor marker (the last `prevDepth`
       * consumed rows, r14 — previously a single row) so PREV survives
       * consumption across triggers at any declared depth. */
-    def inputAt(off: Int): Option[R] = {
+    def inputAt(off: Int): Option[Row] = {
       val j = idx + off
       if (j >= 0 && j < rows.length) Some(rows(j))
       else if (j < 0 && bufPrev.length + j >= 0) Some(bufPrev(bufPrev.length + j))
@@ -166,8 +170,8 @@ object PatternMatch extends Serializable {
       * INCLUDING the current provisional row (SQL RUNNING semantics: the
       * row under DEFINE evaluation counts as bound to its own variable).
       * `None` = the universal row-pattern variable (all bound rows). */
-    def boundRows(variable: Option[String]): IndexedSeq[R] = {
-      val b = Vector.newBuilder[R]
+    def boundRows(variable: Option[String]): IndexedSeq[Row] = {
+      val b = Vector.newBuilder[Row]
       // acc is most-recent-first; rebuild in binding order
       acc.reverseIterator.foreach { case (si, ri) =>
         if (variable.forall(_ == stepName(si))) b += rows(ri)
@@ -176,25 +180,24 @@ object PatternMatch extends Serializable {
     }
   }
 
-  /** Generic pattern step over row type R: a named tri-state predicate
-    * with a quantifier. The Event-typed [[Step]] surface adapts onto
-    * this; the SQL front-end compiles DEFINE clauses to it directly. */
-  final case class GStep[R](name: String, quant: Quant,
-      pred: MatchCtx[R] => PredRes,
+  /** Executor-level pattern step: a named tri-state predicate with a
+    * quantifier. The programmatic [[Step]] surface adapts onto this; the
+    * SQL front-end compiles DEFINE clauses to it directly. */
+  final case class GStep(name: String, quant: Quant,
+      pred: MatchCtx => PredRes,
       /** Deepest negative input offset `pred` may ask for
         * (`ctx.inputAt(-k)` → prevDepth >= k; 0 = none) — the streaming
-        * executors then retain the last `prevDepth` consumed rows as an
+        * executor then retains the last `prevDepth` consumed rows as an
         * O(k) predecessor marker so PREV stays exact across triggers at
         * any declared depth (r14; reference CEP allows arbitrary
         * physical offsets, MatchCodeGenerator.scala:82 region). */
       prevDepth: Int = 0)
 
-  /** Adapt the Event-typed Step (row predicate + optional PREV/NEXT
-    * cross-row predicates) onto the generic tri-state form, preserving
-    * its exact semantics: predicate first, then PREV (no predecessor
-    * fails it), then NEXT (tail of a final input fails; tail of a
-    * non-final input is undecided). */
-  private def adapt(s: Step): GStep[Event] = GStep(s.name, s.quant, ctx => {
+  /** Adapt a [[Step]] (row predicate + optional PREV/NEXT cross-row
+    * predicates) onto the tri-state form: predicate first, then PREV (no
+    * predecessor fails it), then NEXT (tail of a final input fails; tail
+    * of a non-final input is undecided). */
+  private def adapt(s: Step): GStep = GStep(s.name, s.quant, ctx => {
     if (!s.pred(ctx.row)) Unsat
     else if (!s.prevPred.forall(p => ctx.inputAt(-1).exists(p(ctx.row, _)))) Unsat
     else s.nextPred match {
@@ -205,15 +208,6 @@ object PatternMatch extends Serializable {
       }
     }
   }, prevDepth = if (s.prevPred.isDefined) 1 else 0)
-
-  /** `prev` carries the last `prevDepth` input rows immediately before
-    * `rows.head` (dropped from the buffer by consumption, oldest first)
-    * so PREV predicates stay exact across triggers and match boundaries
-    * at any declared depth; `nMatches` is the per-key MATCH_NUMBER
-    * high-water mark (exact in batch; in streaming it survives as long
-    * as the key holds any state). */
-  case class BufState(rows: Seq[Event], prev: Seq[Event],
-      nMatches: Long = 0L)
 
   /** Result of attempting a match at a fixed start offset. `binds` is in
     * binding (row) order. */
@@ -237,18 +231,18 @@ object PatternMatch extends Serializable {
     * recursion (`acc`, most-recent-first), so every predicate evaluation
     * sees the attempt's bindings so far — the substrate for
     * cross-variable DEFINE references. */
-  private def tryMatch[R](steps: IndexedSeq[GStep[R]], rows: IndexedSeq[R],
+  private def tryMatch(steps: IndexedSeq[GStep], rows: IndexedSeq[Row],
       start: Int, end: Int, finalAtEnd: Boolean, finalInput: Boolean,
-      bufPrev: IndexedSeq[R]): Attempt = {
+      bufPrev: IndexedSeq[Row]): Attempt = {
     val names: Int => String = si => steps(si).name
-    def ok(st: GStep[R], si: Int, ri: Int, acc: List[(Int, Int)]): PredRes =
+    def ok(st: GStep, si: Int, ri: Int, acc: List[(Int, Int)]): PredRes =
       st.pred(new MatchCtx(rows, ri, bufPrev, finalInput, names,
         (si, ri) :: acc))
     // greedy/reluctant run extent: rows [ri, j) satisfy the step; if the
     // row at j is UNDECIDED (a NEXT reference awaiting its successor) the
     // run extent itself is unknown. states(k - ri) is the binding
     // accumulator after binding rows [ri, k) to this step.
-    def runExtent(st: GStep[R], si: Int, ri: Int, acc: List[(Int, Int)],
+    def runExtent(st: GStep, si: Int, ri: Int, acc: List[(Int, Int)],
         cap: Int): (Int, Boolean, Vector[List[(Int, Int)]]) = {
       var j = ri
       var a = acc
@@ -393,11 +387,11 @@ object PatternMatch extends Serializable {
     * retained predecessor marker) and up to `measNext` rows after its
     * last row. A match consumes a contiguous input run, so this context
     * plus the bound rows is the complete navigation window. */
-  private def scan[R](steps: IndexedSeq[GStep[R]], rows: IndexedSeq[R],
+  private def scan(steps: IndexedSeq[GStep], rows: IndexedSeq[Row],
       finalInput: Boolean, wmUs: Long, withinUs: Long,
-      bufPrev: IndexedSeq[R], skip: SkipStrategy, microsOf: R => Long,
+      bufPrev: IndexedSeq[Row], skip: SkipStrategy, microsOf: Row => Long,
       measPrev: Int = 0, measNext: Int = 0)
-      : (List[(List[Bound[R]], IndexedSeq[R], IndexedSeq[R])], Int) = {
+      : (List[(List[Bound], IndexedSeq[Row], IndexedSeq[Row])], Int) = {
     def boundIdx(variable: String, binds: List[(Int, Int)], first: Boolean,
         start: Int): Int = {
       val si = steps.indexWhere(_.name == variable)
@@ -411,7 +405,7 @@ object PatternMatch extends Serializable {
           "same row — an infinite loop; the reference rejects this strategy too")
       t
     }
-    val out = List.newBuilder[(List[Bound[R]], IndexedSeq[R], IndexedSeq[R])]
+    val out = List.newBuilder[(List[Bound], IndexedSeq[Row], IndexedSeq[Row])]
     var i = 0
     var retain = rows.length
     var open = true
@@ -442,9 +436,9 @@ object PatternMatch extends Serializable {
           retain = i; open = false
         case Matched(e, binds) =>
           val byStep = binds.groupBy(_._1)
-          val preCtx = if (measPrev == 0) IndexedSeq.empty[R]
+          val preCtx = if (measPrev == 0) IndexedSeq.empty[Row]
             else (bufPrev ++ rows.take(i)).takeRight(measPrev)
-          val postCtx = if (measNext == 0) IndexedSeq.empty[R]
+          val postCtx = if (measNext == 0) IndexedSeq.empty[Row]
             else rows.slice(e, e + measNext)
           out += ((steps.indices.map(si =>
             Bound(steps(si).name,
@@ -463,36 +457,43 @@ object PatternMatch extends Serializable {
     }
     (out.result(), if (open) rows.length else retain)
   }
-
-  /** Run `steps` over each key's event-time-ordered sequence; one output
-    * row per match via `emit(key, boundSteps)`. Works on streaming and
-    * batch Datasets (see object doc). `within` bounds every match's
-    * event-time span from its first row and prunes partial-match state
-    * once the watermark closes the window. */
-  def matchPattern[O: Encoder](events: Dataset[Event], steps: Seq[Step],
-      delay: String, emit: (Long, Seq[Bound[Event]]) => O,
+  /** Run `steps` over each partition's ordered sequence (`orderBy`, all
+    * ascending); one output row per match via `emit(partitionKey,
+    * boundSteps)`. Works on streaming and batch DataFrames (see object
+    * doc). `within` bounds every match's event-time span from its first
+    * row and prunes partial-match state once the watermark closes the
+    * window. */
+  def matchPattern[O: Encoder](df: DataFrame, partCols: Seq[String],
+      orderBy: Seq[String], steps: Seq[Step], delay: String,
+      emit: (Row, Seq[Bound]) => O,
       within: Option[java.time.Duration] = None,
       skip: SkipStrategy = SkipPastLastRow): Dataset[O] =
-    matchPatternNumbered(events, steps.map(adapt), delay,
-      (key, _: Long, bound: Seq[Bound[Event]], _, _) =>
-        Iterator.single(emit(key, bound)),
-      within, skip)
+    matchRows(df, partCols, orderBy.map(_ -> true), steps.map(adapt), skip,
+      within, (key, _, bound, _, _) => Iterator.single(emit(key, bound)),
+      implicitly[Encoder[O]], delay)
 
-  /** One output row per MATCHED ROW — SQL's `ALL ROWS PER MATCH` with
-    * `CLASSIFIER()` (the step that bound the row), `MATCH_NUMBER()` (the
-    * per-key 1-based match ordinal), the row's 1-based position in its
-    * match, and the RUNNING vs FINAL count of the row's own classifier
+  /** One output row per MATCHED ROW — SQL's `ALL ROWS PER MATCH`: every
+    * input column plus `match_no` (`MATCH_NUMBER()`, the per-key
+    * 1-based match ordinal), `pos` (the row's 1-based position in its
+    * match), `classifier` (`CLASSIFIER()`, the step that bound the row),
+    * and the RUNNING vs FINAL count of the row's own classifier
     * (reference: MatchCodeGenerator.scala:82 `CLASSIFIER`/`MATCH_NUMBER`
     * calls, FlinkSqlOperatorTable RUNNING/FINAL operators): `running_n`
     * counts the classifier's rows up to and including this one — the
     * RUNNING semantics every MEASURES expression has per row — while
     * `final_n` is the whole-match count the FINAL modifier exposes. */
-  def matchPatternAllRows(events: Dataset[Event], steps: Seq[Step],
-      delay: String, within: Option[java.time.Duration] = None,
-      skip: SkipStrategy = SkipPastLastRow): Dataset[ClassifiedRow] = {
-    implicit val enc: Encoder[ClassifiedRow] = Encoders.product[ClassifiedRow]
-    matchPatternNumbered(events, steps.map(adapt), delay,
-      (key, matchNo: Long, bound: Seq[Bound[Event]], _, _) => {
+  def matchPatternAllRows(df: DataFrame, partCols: Seq[String],
+      orderBy: Seq[String], steps: Seq[Step], delay: String,
+      within: Option[java.time.Duration] = None,
+      skip: SkipStrategy = SkipPastLastRow): DataFrame = {
+    val outSchema = StructType(df.schema.fields ++ Seq(
+      StructField("match_no", LongType, nullable = false),
+      StructField("pos", LongType, nullable = false),
+      StructField("classifier", StringType, nullable = false),
+      StructField("running_n", LongType, nullable = false),
+      StructField("final_n", LongType, nullable = false)))
+    matchRows(df, partCols, orderBy.map(_ -> true), steps.map(adapt), skip,
+      within, (_, matchNo, bound, _, _) => {
         val finals = bound.map(b => b.name -> b.rows.size.toLong).toMap
         val running = scala.collection.mutable.Map.empty[String, Long]
         var pos = 0L
@@ -500,30 +501,72 @@ object PatternMatch extends Serializable {
           pos += 1
           val r = running.getOrElse(b.name, 0L) + 1
           running(b.name) = r
-          ClassifiedRow(key, matchNo, pos, b.name, row.event_id,
-            r, finals(b.name))
+          Row.fromSeq(row.toSeq ++ Seq(matchNo, pos, b.name, r, finals(b.name)))
         })
-      }, within, skip)
+      }, Encoders.row(outSchema), delay)
   }
 
-  /** One emitted row of [[matchPatternAllRows]]. */
-  final case class ClassifiedRow(user_id: Long, match_no: Long, pos: Long,
-      classifier: String, event_id: Long, running_n: Long, final_n: Long)
+  /** Serialized per-key streaming state: the unadjudicated buffer, the
+    * last `prevDepth` input rows before it (so PREV predicates stay exact
+    * across triggers and match boundaries at any declared depth), and the
+    * per-key MATCH_NUMBER high-water mark (it survives as long as the key
+    * holds any state). Raw row values, java-serialized (see
+    * OverAggregates.GenState note; public because the serialized-state
+    * encoder requires a public class). */
+  final case class MatchState(rows: Seq[Seq[Any]], prev: Seq[Seq[Any]],
+      nMatches: Long = 0L)
 
-  /** The Event-model executor over GENERIC steps — the SQL front-end
-    * compiles its (wider) DEFINE grammar straight to [[GStep]]s and runs
-    * them here, streaming or batch; the Event-typed [[Step]] surface
-    * arrives via [[adapt]]. */
-  def matchPatternNumbered[O: Encoder](events: Dataset[Event],
-      steps: Seq[GStep[Event]], delay: String,
-      emitAll: (Long, Long, Seq[Bound[Event]], IndexedSeq[Event],
-        IndexedSeq[Event]) => Iterator[O],
-      within: Option[java.time.Duration],
-      skip: SkipStrategy,
+  /** The MATCH_RECOGNIZE executor — the one path behind both surfaces,
+    * batch and streaming.
+    *
+    * Batch: each key's rows sort by `orderKeys` (any columns, ASC or DESC;
+    * WITHIN needs a leading ascending timestamp) and run once as a final
+    * input. Streaming: the leading ORDER BY column must be an ascending
+    * timestamp (the event-time axis, watermarked by `delay`); rows BUFFER
+    * per key until the watermark closes them, the NFA scans the closed
+    * prefix, unadjudicated partial matches retain their rows, an
+    * event-time timer re-fires when the watermark reaches the earliest
+    * retained row, and a PREV-using pattern keeps the O(prevDepth)
+    * predecessor marker across full consumption (expiring with WITHIN,
+    * the same pruning the reference NFA applies to its shared buffer). A
+    * streaming pattern ending in a greedy quantifier needs WITHIN (see
+    * below).
+    *
+    * `emit(key, matchNo, binds, preCtx, postCtx)` renders one match —
+    * `preCtx`/`postCtx` are up to `measPrev` input rows before the match
+    * and `measNext` after it, for MEASURES-side PREV/NEXT (on a stream a
+    * match is held until its `measNext` successors close — delayed
+    * emission, see `scan`).
+    *
+    * Scale: one shuffle on the partition columns (`groupByKey`), then a
+    * per-key in-memory sort + single-pass NFA — batch state is O(one
+    * key's rows), the same bound every MATCH_RECOGNIZE engine has;
+    * streaming state is the unadjudicated buffer, bounded by WITHIN + the
+    * watermark delay. An EMPTY `partCols` is accepted (the reference IT
+    * cases use partitionless patterns) but is inherently sequential —
+    * one group — on any engine; partition when the data is large. */
+  def matchRows[O](df: DataFrame, partCols: Seq[String],
+      orderKeys: Seq[(String, Boolean)], steps: Seq[GStep],
+      skip: SkipStrategy, within: Option[java.time.Duration],
+      emit: (Row, Long, Seq[Bound], IndexedSeq[Row], IndexedSeq[Row])
+        => Iterator[O],
+      outEnc: Encoder[O], delay: String = "0 seconds",
       measPrev: Int = 0, measNext: Int = 0): Dataset[O] = {
     require(steps.nonEmpty, "PATTERN must have at least one step")
-    val stepsArr = steps.toIndexedSeq
-    val isBatch = !events.isStreaming
+    require(orderKeys.nonEmpty, "ORDER BY must name at least one column")
+    val schema = df.schema
+    val isStreaming = df.isStreaming
+    val ordKeys = orderKeys.map { case (c, asc) =>
+      OverAggregates.requireOrderable(schema, c) // fail loudly, not mid-query
+      val i = schema.fieldIndex(c); (i, asc, schema.fields(i).dataType)
+    }
+    val (leadIdx, leadAsc, leadType) = ordKeys.head
+    val leadIsTime = leadType == TimestampType && leadAsc
+    require(!isStreaming || leadIsTime,
+      "streaming MATCH_RECOGNIZE orders on event time: the leading ORDER " +
+        s"BY column must be an ascending timestamp, got $leadType")
+    require(within.isEmpty || leadIsTime, "WITHIN requires the leading " +
+      s"ORDER BY column to be an ascending timestamp, got $leadType")
     val withinUs = within.map(_.toNanos / 1000).getOrElse(Long.MaxValue)
     require(withinUs > 0, s"WITHIN must be a positive duration, got $within")
     // A STREAMING pattern ending in a GREEDY quantifier can never be
@@ -543,210 +586,7 @@ object PatternMatch extends Serializable {
       case Times(min, max) => !max.contains(min)
       case _ => false
     }
-    require(isBatch || !greedyTail || within.isDefined,
-      "a streaming PATTERN must end with an exactly-one or reluctant step " +
-        s"or carry a WITHIN bound: a trailing greedy '${steps.last.name}' " +
-        s"(${steps.last.quant}) can always be extended by future rows and " +
-        "would never finalize")
-    // NEXT in MEASURES on a stream (r16): served by DELAYED EMISSION —
-    // scan() holds an adjudicated match until its measNext successor
-    // rows close (see the Matched guard there); batch emits immediately
-    // with null past input end, per SQL
-    val maxPrev = steps.map(_.prevDepth).foldLeft(measPrev)(math.max)
-    val usesPrev = maxPrev > 0
-    implicit val stateEnc: Encoder[BufState] = Encoders.product[BufState]
-    events
-      .withWatermark("ts", delay)
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: Long, rows: Iterator[Event], state: GroupState[BufState]) => {
-          import StatefulOps.eventMicros
-          val st = state.getOption
-          val buf = st.map(_.rows).getOrElse(Nil) ++ rows
-          // full-precision (micros) ordering and watermark comparison —
-          // getTime truncates to ms and would mis-order same-ms events
-          val wmUs =
-            if (isBatch) Long.MaxValue
-            else state.getCurrentWatermarkMs() * 1000L
-          val sorted = buf.sortBy(e => (eventMicros(e.ts), e.event_id)).toIndexedSeq
-          val closedN = sorted.segmentLength(e => eventMicros(e.ts) <= wmUs)
-          val bufPrev = st.map(_.prev.toIndexedSeq).getOrElse(IndexedSeq.empty)
-          val (matches, retainFrom) =
-            scan(stepsArr, sorted.take(closedN), isBatch, wmUs, withinUs,
-              bufPrev, skip, (e: Event) => eventMicros(e.ts),
-              measPrev, measNext)
-          val baseNo = st.map(_.nMatches).getOrElse(0L)
-          val newCount = baseNo + matches.size
-          val kept = sorted.slice(retainFrom, closedN) ++ sorted.drop(closedN)
-          // the last maxPrev input rows preceding the retained buffer,
-          // for PREV across triggers at any declared depth (consumed
-          // rows append to the old marker; the window keeps O(maxPrev))
-          val newPrev =
-            if (!usesPrev) IndexedSeq.empty[Event]
-            else (bufPrev ++ sorted.take(retainFrom)).takeRight(maxPrev)
-          if (kept.isEmpty) {
-            // PREV-using patterns keep an O(prevDepth) tail marker so
-            // the next arrival still sees its predecessors; others clear
-            // fully. With a WITHIN bound the marker expires once the
-            // watermark is `within` past its NEWEST row — the same
-            // pruning the reference NFA applies to its shared buffer —
-            // so idle keys do not accumulate state forever (a row
-            // arriving after that horizon sees no predecessor, the
-            // documented WITHIN trade). Without WITHIN the marker is
-            // load-bearing indefinitely and is retained.
-            val markerDeadUs = newPrev.lastOption.map(p => eventMicros(p.ts))
-              .map(us => if (withinUs == Long.MaxValue) Long.MaxValue
-                         else us + withinUs)
-            if (usesPrev && newPrev.nonEmpty &&
-                (isBatch || markerDeadUs.exists(_ > wmUs))) {
-              state.update(BufState(Nil, newPrev, newCount))
-              if (!isBatch && markerDeadUs.get != Long.MaxValue)
-                state.setTimeoutTimestamp(
-                  math.max(markerDeadUs.get / 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1))
-            } else state.remove()
-          } else {
-            state.update(BufState(kept, newPrev, newCount))
-            if (!isBatch) {
-              // ts-1 (ms) fires once the watermark REACHES the earliest
-              // retained row (Spark fires strictly-after the registered
-              // timestamp); clamp above the current watermark
-              val headMs = eventMicros(kept.head.ts) / 1000
-              state.setTimeoutTimestamp(
-                math.max(headMs - 1, state.getCurrentWatermarkMs() + 1))
-            }
-          }
-          matches.iterator.zipWithIndex.flatMap { case ((m, pre, post), i) =>
-            emitAll(key, baseNo + i + 1, m, pre, post)
-          }
-        })
-  }
-
-  /** BATCH MATCH_RECOGNIZE over an ARBITRARY DataFrame — the
-    * general-schema executor behind [[MatchRecognizeSql.sqlDf]]
-    * (reference: the clause accepts any registered table,
-    * MatchRecognizeITCase.scala:169-183 partitions a 4-column table by
-    * two keys). The Event-model path above stays the streaming executor;
-    * this one trades the typed state machinery for schema generality and
-    * runs the SAME generic scan core, so the two paths cannot diverge on
-    * match semantics.
-    *
-    * Scale: one shuffle on the partition columns (`groupByKey`), then a
-    * per-key in-memory sort + single-pass NFA — state is O(one key's
-    * rows), the same bound every MATCH_RECOGNIZE engine has. An EMPTY
-    * `partCols` is accepted (the reference IT cases use partitionless
-    * patterns) but is inherently sequential — one group — on any engine;
-    * partition when the data is large.
-    *
-    * `emit(key, matchNo, binds)` produces output rows with `outSchema`.
-    */
-  def matchRowsBatch(df: DataFrame, partCols: Seq[String],
-      orderKeys: Seq[(String, Boolean)], steps: Seq[GStep[Row]],
-      skip: SkipStrategy, within: Option[java.time.Duration],
-      emit: (Row, Long, Seq[Bound[Row]], IndexedSeq[Row], IndexedSeq[Row])
-        => Iterator[Row],
-      outSchema: StructType,
-      measPrev: Int = 0, measNext: Int = 0): DataFrame = {
-    require(!df.isStreaming,
-      "the general-schema MATCH_RECOGNIZE path is batch-only; streaming " +
-        "pattern match runs on the event model (MatchRecognizeSql.sql)")
-    require(steps.nonEmpty, "PATTERN must have at least one step")
-    require(orderKeys.nonEmpty, "ORDER BY must name at least one column")
-    val schema = df.schema
-    val partIdx = partCols.map(schema.fieldIndex).toArray
-    val keySchema = StructType(partIdx.map(schema.fields(_)).toSeq)
-    val ordKeys = orderKeys.map { case (c, asc) =>
-      OverAggregates.requireOrderable(schema, c) // fail loudly, not mid-query
-      val i = schema.fieldIndex(c); (i, asc, schema.fields(i).dataType)
-    }
-    val withinUs = within.map(_.toNanos / 1000).getOrElse(Long.MaxValue)
-    require(withinUs > 0, s"WITHIN must be a positive duration, got $within")
-    val microsOf: Row => Long = within match {
-      case None => _ => 0L
-      case Some(_) =>
-        val (i, asc, dt) = ordKeys.head
-        require(dt == TimestampType && asc, "WITHIN requires the leading " +
-          s"ORDER BY column to be an ascending timestamp, got $dt")
-        r => StatefulOps.eventMicros(r.getAs[java.sql.Timestamp](i))
-    }
-    val ord = rowOrdering(ordKeys)
-    val stepsArr = steps.toIndexedSeq
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    def run(key: Row, it: Iterator[Row]): Iterator[Row] = {
-      val sorted = it.toIndexedSeq.sorted(ord)
-      val (matches, _) = scan(stepsArr, sorted, finalInput = true,
-        Long.MaxValue, withinUs, IndexedSeq.empty, skip, microsOf,
-        measPrev, measNext)
-      matches.iterator.zipWithIndex.flatMap { case ((m, pre, post), i) =>
-        emit(key, i + 1L, m, pre, post)
-      }
-    }
-    if (partIdx.isEmpty) {
-      // partitionless clause (the reference IT cases use them): one
-      // sequential group — a constant key, since Spark rejects an
-      // empty clustering expression list
-      df.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapGroups((_: Int, it: Iterator[Row]) => run(Row.empty, it))(outEnc)
-    } else {
-      val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-      df.groupByKey(r => Row.fromSeq(partIdx.toSeq.map(r.get)))(keyEnc)
-        .flatMapGroups((key: Row, it: Iterator[Row]) => run(key, it))(outEnc)
-    }
-  }
-
-  /** Serialized per-key streaming state for the general-schema
-    * executor — the [[BufState]] shape with raw row values
-    * (java-serialized: see OverAggregates.GenState note; public because
-    * the serialized-state encoder requires a public class). */
-  final case class GenBufState(rows: Seq[Seq[Any]], prev: Seq[Seq[Any]],
-      nMatches: Long = 0L)
-
-  /** STREAMING MATCH_RECOGNIZE over an ARBITRARY DataFrame — the
-    * general-schema twin of the Event-typed streaming executor, closing
-    * the gap [[matchRowsBatch]] left (it is batch-only): reference CEP
-    * SQL runs on any schema in both execution modes. Same watermark
-    * protocol as the Event path: rows BUFFER per key until the watermark
-    * closes them, the NFA scans the closed prefix in `orderKeys` order
-    * (leading key must be an ascending timestamp — the event-time axis),
-    * unadjudicated partial matches retain their rows, an event-time
-    * timer re-fires when the watermark reaches the earliest retained
-    * row, and a PREV-using pattern keeps the O(prevDepth) predecessor
-    * marker across full consumption (expiring with WITHIN, the same
-    * pruning the reference NFA applies to its shared buffer).
-    *
-    * Scale: one shuffle on the partition columns; per-key state is the
-    * unadjudicated buffer — bounded by WITHIN + the watermark delay,
-    * exactly the Event path's bound. Empty `partCols` is accepted but
-    * single-group sequential, as everywhere in this package. */
-  def matchRowsStream(df: DataFrame, partCols: Seq[String],
-      orderKeys: Seq[(String, Boolean)], steps: Seq[GStep[Row]],
-      skip: SkipStrategy, within: Option[java.time.Duration],
-      emit: (Row, Long, Seq[Bound[Row]], IndexedSeq[Row], IndexedSeq[Row])
-        => Iterator[Row],
-      outSchema: StructType, delay: String = "0 seconds",
-      idleTtl: Option[java.time.Duration] = None,
-      measPrev: Int = 0, measNext: Int = 0): DataFrame = {
-    require(df.isStreaming, "matchRowsStream is the streaming executor; " +
-      "batch inputs take matchRowsBatch")
-    // measNext > 0 (r16): served by delayed emission — see scan()
-    require(steps.nonEmpty, "PATTERN must have at least one step")
-    require(orderKeys.nonEmpty, "ORDER BY must name at least one column")
-    val schema = df.schema
-    val leadIdx = schema.fieldIndex(orderKeys.head._1)
-    require(schema.fields(leadIdx).dataType == TimestampType && orderKeys.head._2,
-      "streaming MATCH_RECOGNIZE orders on event time: the leading ORDER " +
-        s"BY column must be an ascending timestamp, got " +
-        s"${schema.fields(leadIdx).dataType}")
-    val withinUs = within.map(_.toNanos / 1000).getOrElse(Long.MaxValue)
-    require(withinUs > 0, s"WITHIN must be a positive duration, got $within")
-    // same finalization contract as the Event streaming path: a trailing
-    // greedy arm (except exact {n}) never self-finalizes without WITHIN
-    val greedyTail = steps.last.quant match {
-      case Opt | Plus | Star => true
-      case Times(min, max) => !max.contains(min)
-      case _ => false
-    }
-    require(!greedyTail || within.isDefined,
+    require(!isStreaming || !greedyTail || within.isDefined,
       "a streaming PATTERN must end with an exactly-one or reluctant step " +
         s"or carry a WITHIN bound: a trailing greedy '${steps.last.name}' " +
         s"(${steps.last.quant}) can always be extended by future rows and " +
@@ -754,83 +594,96 @@ object PatternMatch extends Serializable {
     val maxPrev = steps.map(_.prevDepth).foldLeft(measPrev)(math.max)
     val usesPrev = maxPrev > 0
     val stepsArr = steps.toIndexedSeq
-    val ordKeys = orderKeys.map { case (c, asc) =>
-      OverAggregates.requireOrderable(schema, c) // fail loudly, not mid-query
-      val i = schema.fieldIndex(c); (i, asc, schema.fields(i).dataType)
-    }
     val ord = rowOrdering(ordKeys)
+    // full-precision (micros) event time — getTime truncates to ms and
+    // would mis-order same-ms rows; read only on streams or under WITHIN,
+    // both of which require the timestamp lead checked above
     val microsOf: Row => Long =
       r => StatefulOps.eventMicros(r.getAs[java.sql.Timestamp](leadIdx))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[GenBufState] = Encoders.javaSerialization[GenBufState]
+    // rows rebuilt from state keep the schema, so Step predicates can
+    // read fields by name on every trigger
+    def toRow(vals: Seq[Any]): Row = new GenericRowWithSchema(vals.toArray, schema)
+    implicit val stEnc: Encoder[MatchState] = Encoders.javaSerialization[MatchState]
 
     def process(key: Row, rows: Iterator[Row],
-        state: GroupState[GenBufState]): Iterator[Row] = {
+        state: GroupState[MatchState]): Iterator[O] = {
       val st = state.getOption
-      val buf = st.map(_.rows.map(Row.fromSeq)).getOrElse(Nil) ++ rows
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
+      val buf = st.map(_.rows.map(toRow)).getOrElse(Nil) ++ rows
       val sorted = buf.sorted(ord).toIndexedSeq
-      val closedN = sorted.segmentLength(r => microsOf(r) <= wmUs)
-      val bufPrev = st.map(_.prev.map(Row.fromSeq).toIndexedSeq)
+      // batch: the key's whole sequence is one final input (watermark ∞)
+      val wmUs =
+        if (isStreaming) state.getCurrentWatermarkMs() * 1000L
+        else Long.MaxValue
+      val closedN =
+        if (isStreaming) sorted.segmentLength(r => microsOf(r) <= wmUs)
+        else sorted.length
+      val bufPrev = st.map(_.prev.map(toRow).toIndexedSeq)
         .getOrElse(IndexedSeq.empty)
       val (matches, retainFrom) = scan(stepsArr, sorted.take(closedN),
-        finalInput = false, wmUs, withinUs, bufPrev, skip, microsOf,
+        finalInput = !isStreaming, wmUs, withinUs, bufPrev, skip, microsOf,
         measPrev, measNext)
       val baseNo = st.map(_.nMatches).getOrElse(0L)
-      val newCount = baseNo + matches.size
-      val kept = sorted.slice(retainFrom, closedN) ++ sorted.drop(closedN)
-      // the last maxPrev input rows preceding the retained buffer (r14:
-      // arbitrary PREV depth — consumed rows append to the old marker)
-      val newPrev: IndexedSeq[Row] =
-        if (!usesPrev) IndexedSeq.empty
-        else (bufPrev ++ sorted.take(retainFrom)).takeRight(maxPrev)
-      if (kept.isEmpty) {
-        // the buffer is fully adjudicated; only the O(prevDepth) PREV
-        // marker may remain. Without WITHIN it is semantically needed
-        // forever — the opt-in idleTtl (the reference's idle-state
-        // retention) bounds it: the marker drops `idleTtl` of event time
-        // after its NEWEST row, and a later row sees no predecessor
-        // (PREV -> null), the documented retention trade.
-        val markerLifeUs = math.min(withinUs,
-          idleTtl.map(_.toNanos / 1000).getOrElse(Long.MaxValue))
-        val markerDeadUs = newPrev.lastOption.map(microsOf)
-          .map(us => if (markerLifeUs == Long.MaxValue) Long.MaxValue
-                     else us + markerLifeUs)
-        if (usesPrev && newPrev.nonEmpty && markerDeadUs.exists(_ > wmUs)) {
-          state.update(GenBufState(Nil, newPrev.map(_.toSeq), newCount))
-          if (markerDeadUs.get != Long.MaxValue)
-            state.setTimeoutTimestamp(
-              math.max(markerDeadUs.get / 1000 + 1,
-                state.getCurrentWatermarkMs() + 1))
-        } else state.remove()
-      } else {
-        state.update(GenBufState(kept.map(_.toSeq),
-          newPrev.map(_.toSeq), newCount))
-        val headMs = microsOf(kept.head) / 1000
-        state.setTimeoutTimestamp(
-          math.max(headMs - 1, state.getCurrentWatermarkMs() + 1))
+      if (isStreaming) {
+        val newCount = baseNo + matches.size
+        val kept = sorted.slice(retainFrom, closedN) ++ sorted.drop(closedN)
+        // the last maxPrev input rows preceding the retained buffer (r14:
+        // arbitrary PREV depth — consumed rows append to the old marker)
+        val newPrev: IndexedSeq[Row] =
+          if (!usesPrev) IndexedSeq.empty
+          else (bufPrev ++ sorted.take(retainFrom)).takeRight(maxPrev)
+        if (kept.isEmpty) {
+          // the buffer is fully adjudicated; only the O(prevDepth) PREV
+          // marker may remain. With a WITHIN bound it expires once the
+          // watermark is `within` past its NEWEST row — a row arriving
+          // after that horizon sees no predecessor, the documented WITHIN
+          // trade. Without WITHIN the marker is load-bearing indefinitely
+          // and is retained.
+          val markerDeadUs = newPrev.lastOption.map(microsOf)
+            .map(us => if (withinUs == Long.MaxValue) Long.MaxValue
+                       else us + withinUs)
+          if (usesPrev && newPrev.nonEmpty && markerDeadUs.exists(_ > wmUs)) {
+            state.update(MatchState(Nil, newPrev.map(_.toSeq), newCount))
+            if (markerDeadUs.get != Long.MaxValue)
+              state.setTimeoutTimestamp(
+                math.max(markerDeadUs.get / 1000 + 1,
+                  state.getCurrentWatermarkMs() + 1))
+          } else state.remove()
+        } else {
+          state.update(MatchState(kept.map(_.toSeq),
+            newPrev.map(_.toSeq), newCount))
+          // ts-1 (ms) fires once the watermark REACHES the earliest
+          // retained row (Spark fires strictly-after the registered
+          // timestamp); clamp above the current watermark
+          val headMs = microsOf(kept.head) / 1000
+          state.setTimeoutTimestamp(
+            math.max(headMs - 1, state.getCurrentWatermarkMs() + 1))
+        }
       }
       matches.iterator.zipWithIndex.flatMap { case ((m, pre, post), i) =>
         emit(key, baseNo + i + 1, m, pre, post)
       }
     }
 
-    val wmDf = df.withWatermark(orderKeys.head._1, delay)
+    val input =
+      if (isStreaming) df.withWatermark(orderKeys.head._1, delay) else df
+    val timeout =
+      if (isStreaming) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout
     if (partCols.isEmpty) {
-      wmDf.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-          (_: Int, rows: Iterator[Row], state: GroupState[GenBufState]) =>
+      // partitionless clause (the reference IT cases use them): one
+      // sequential group — a constant key, since Spark rejects an empty
+      // clustering expression list
+      input.groupByKey(_ => 0)(Encoders.scalaInt)
+        .flatMapGroupsWithState(OutputMode.Append, timeout)(
+          (_: Int, rows: Iterator[Row], state: GroupState[MatchState]) =>
             process(Row.empty, rows, state))(stEnc, outEnc)
     } else {
-      val partIdx = partCols.map(schema.fieldIndex).toArray
-      val keySchema = StructType(partIdx.map(schema.fields(_)).toSeq)
-      val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-      wmDf.groupByKey(r => Row.fromSeq(partIdx.toSeq.map(r.get)))(keyEnc)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-          (key: Row, rows: Iterator[Row], state: GroupState[GenBufState]) =>
-            process(key, rows, state))(stEnc, outEnc)
+      val partIdx = partCols.map(schema.fieldIndex)
+      val keyEnc: Encoder[Row] =
+        Encoders.row(StructType(partIdx.map(schema.fields(_))))
+      input.groupByKey(r => Row.fromSeq(partIdx.map(r.get)))(keyEnc)
+        .flatMapGroupsWithState(OutputMode.Append, timeout)(process)(
+          stEnc, outEnc)
     }
   }
 

@@ -23,7 +23,7 @@ object StatefulBatch {
   def defs: Seq[QueryDef] =
     Seq(q72TopnState, q73KeepLastState, q74RunningOver, q88TemporalJoinState,
       q90CountTumble, q91CountSlide, q94RowsFrame, q95RangeFrame,
-      q97EarlyFire, q110LateFire, q104UpsertSink, q105RetractApply,
+      q97WindowEarly, q110LateFire, q104UpsertSink, q105RetractApply,
       q120ProcRowsFrame, q121ProcRangeFrame, q124StreamReservoir,
       q150StreamSortAny, q158WindowEarlyAny, q159WindowLateAny,
       q160TemporalJoinAny, q161ProcRangeAny, q169SqlRankJoinStream,
@@ -110,9 +110,8 @@ object StatefulBatch {
   /** GENERAL-SCHEMA streaming temporal join (r13; reference
     * TemporalRowTimeJoinOperator.java joins any two keyed row streams)
     * collapsed to batch: purchases enriched with the latest click per
-    * user, carrying payload the Event-typed operator cannot express —
-    * the fact's event_type string and the DIM ROW'S TIMESTAMP in the
-    * output. The oracle is DuckDB's own ASOF LEFT JOIN (tie-free on the
+    * user, carrying payload q88 projects away — the fact's event_type
+    * string and the DIM ROW'S TIMESTAMP in the output. The oracle is DuckDB's own ASOF LEFT JOIN (tie-free on the
     * fixture: no same-user same-ts clicks). */
   val q160TemporalJoinAny: QueryDef = QueryDef("q160_temporal_join_any",
     """SELECT p.event_id, p.user_id, p.event_type,
@@ -138,8 +137,8 @@ object StatefulBatch {
     * streaming operator family that was Event-typed; reference
     * WindowEmitStrategy early fires on any registered table) collapsed to
     * batch: a 1-hour tumble keyed by the STRING event_type with MIN and
-    * COUNT(DISTINCT) measures — none expressible on the Event-typed
-    * [[EarlyFire]]. With no watermark every emission is the final one,
+    * COUNT(DISTINCT) measures (q97/q110 are the user_id-keyed
+    * COUNT/SUM shape). With no watermark every emission is the final one,
     * i.e. the plain tumbling aggregate the oracle hash-checks; the
     * partial-then-final sequence is pinned by `WindowAggAnySpec`. */
   val q158WindowEarlyAny: QueryDef = QueryDef("q158_window_early_any",
@@ -727,7 +726,7 @@ object StatefulBatch {
       .orderBy(col("user_id"))
   }
 
-  /** The events table in the Event model's five columns. */
+  /** The events table in its five event columns (`StatefulOps.Event`). */
   private def events(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     StatefulOps.typedEvents(spark, dir).toDF()
@@ -738,6 +737,12 @@ object StatefulBatch {
     Seq(OverAggregates.Agg("COUNT", None, cnt),
       OverAggregates.Agg("SUM", Some("value"), sum),
       OverAggregates.Agg("MAX", Some("value"), max))
+
+  /** The per-window COUNT(*) / SUM(value) q97/q110 (and the soak's
+    * early/late-fire legs) declare. */
+  private[graft] val userWindowAggs: Seq[OverAggregates.Agg] =
+    Seq(OverAggregates.Agg("COUNT", None, "n_events"),
+      OverAggregates.Agg("SUM", Some("value"), "sum_value"))
 
   /** The bounded-frame aggregates q94/q95/q120/q121 declare. */
   private[graft] val frameAggs = countSumMax("n_in_frame", "frame_sum", "frame_max")
@@ -795,9 +800,11 @@ object StatefulBatch {
       .orderBy(col("user_id"), col("event_id"))
   }
 
-  /** The streaming temporal join (TemporalJoin.temporalJoin) collapsed to
-    * batch, against the same ASOF oracle as the batch rewrite (q63) — one
-    * operator, two execution modes, one answer. */
+  /** The streaming temporal join ([[TemporalJoinAny.temporalJoin]], the
+    * views of a user as its versioned dimension, `event_id` the version
+    * tie-break) collapsed to batch, against the same ASOF oracle as the
+    * batch rewrite (q63) — one operator, two execution modes, one
+    * answer. */
   val q88TemporalJoinState: QueryDef = QueryDef("q88_temporal_join_state",
     """SELECT p.event_id AS purchase_id, p.user_id,
       |  CAST(p.value AS DOUBLE) AS purchase_value,
@@ -806,16 +813,16 @@ object StatefulBatch {
       |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
       |  ON p.user_id = v.user_id AND p.ts >= v.ts
       |ORDER BY purchase_id""".stripMargin) { (spark, dir) =>
-    import spark.implicits._
-    val ev = StatefulOps.typedEvents(spark, dir)
-    val facts = ev.filter(_.event_type == "purchase")
-      .map(e => TemporalJoin.Fact(e.user_id, e.ts, e.event_id, e.value))
-    val dims = ev.filter(_.event_type == "view")
-      .map(e => TemporalJoin.DimVersion(e.user_id, e.ts, e.event_id, e.value))
-    TemporalJoin.temporalJoin(facts, dims, delay = "0 seconds").toDF()
-      .select(col("fact_id").as("purchase_id"), col("k").as("user_id"),
-        col("fact_value").as("purchase_value"),
-        col("dim_ver").as("viewed_event"), col("dim_value").as("viewed_value"))
+    def side(eventType: String) = events(spark, dir)
+      .filter(col("event_type") === eventType)
+      .select("user_id", "ts", "event_id", "value")
+    TemporalJoinAny.temporalJoin(side("purchase"), side("view"),
+      keyCols = Seq("user_id"), tsCol = "ts",
+      dimVerCols = Seq("event_id"), factTieBreak = Seq("event_id"))
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("value").as("purchase_value"),
+        col("dim_event_id").as("viewed_event"),
+        col("dim_value").as("viewed_value"))
       .orderBy(col("purchase_id"))
   }
 
@@ -934,8 +941,8 @@ object StatefulBatch {
     * fires + EventTimeTriggers final) collapsed to batch: with no
     * watermark every emission is the final one, i.e. a plain 1-hour
     * tumbling aggregate — which is what the oracle hash-checks; the
-    * partial-then-final emission sequence is spec'd in EarlyFireSpec. */
-  val q97EarlyFire: QueryDef = QueryDef("q97_early_fire",
+    * partial-then-final emission sequence is spec'd in WindowAggAnySpec. */
+  val q97WindowEarly: QueryDef = QueryDef("q97_early_fire",
     """WITH e AS (
       |  SELECT user_id, value, epoch_us(ts) AS us FROM events)
       |SELECT user_id,
@@ -945,8 +952,8 @@ object StatefulBatch {
       |FROM e
       |GROUP BY 1, 2
       |ORDER BY user_id, w_start_us""".stripMargin) { (spark, dir) =>
-    EarlyFire.earlyFireWindowAgg(StatefulOps.typedEvents(spark, dir),
-      java.time.Duration.ofHours(1)).toDF()
+    WindowAggAny.earlyLateFireWindowAgg(events(spark, dir), Seq("user_id"),
+      "ts", Seq("event_id"), java.time.Duration.ofHours(1), userWindowAggs)
       .select(col("user_id"), col("w_start_us"), col("n_events"),
         round(col("sum_value"), 4).as("sum_value"), col("is_final"))
       .orderBy(col("user_id"), col("w_start_us"))
@@ -967,9 +974,9 @@ object StatefulBatch {
       |FROM e
       |GROUP BY 1, 2
       |ORDER BY user_id, w_start_us""".stripMargin) { (spark, dir) =>
-    EarlyFire.lateFireWindowAgg(StatefulOps.typedEvents(spark, dir),
-      java.time.Duration.ofHours(1), delay = java.time.Duration.ZERO,
-      allowedLateness = java.time.Duration.ofMinutes(10)).toDF()
+    WindowAggAny.earlyLateFireWindowAgg(events(spark, dir), Seq("user_id"),
+      "ts", Seq("event_id"), java.time.Duration.ofHours(1), userWindowAggs,
+      allowedLateness = java.time.Duration.ofMinutes(10))
       .select(col("user_id"), col("w_start_us"), col("n_events"),
         round(col("sum_value"), 4).as("sum_value"), col("is_final"))
       .orderBy(col("user_id"), col("w_start_us"))

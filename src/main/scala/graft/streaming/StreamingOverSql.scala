@@ -70,7 +70,7 @@ object StreamingOverSql {
   /** Run a streaming-OVER SQL statement against an ARBITRARY DataFrame
     * (batch or streaming), executed by [[OverAggregates]] the way
     * [[MatchRecognizeSql.sqlDf]] is executed by
-    * [[PatternMatch.matchRowsBatch]] (reference surface: the
+    * [[PatternMatch.matchRows]] (reference surface: the
     * OverWindowITCase shapes — string/composite/absent PARTITION BY,
     * COUNT/SUM/MIN/MAX/AVG over any numeric column, UNBOUNDED / ROWS n /
     * RANGE t PRECEDING frames). `FROM <ident>` is nominal: the DataFrame

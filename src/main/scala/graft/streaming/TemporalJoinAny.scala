@@ -5,12 +5,10 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-/** Streaming event-time temporal (as-of) join over ARBITRARY DataFrames —
-  * the general-schema twin of [[TemporalJoin]], the same generalization
-  * move [[OverAggregates]] / [[WindowAggAny]] made for OVER and windowed
-  * aggregation (reference: TemporalRowTimeJoinOperator.java:71 joins any
-  * two keyed row streams; the Event-model [[TemporalJoin]] remains the
-  * spec'd fixed-schema fast path). Each FACT row enriches with the latest
+/** Streaming event-time temporal (as-of) join over ARBITRARY DataFrames
+  * (reference: TemporalRowTimeJoinOperator.java:71, ~400 LoC of keyed
+  * state, joins any two keyed row streams — the SURVEY §7.3 committed
+  * custom operator). Each FACT row enriches with the latest
   * DIM version whose event time is ≤ the fact's event time (ties on the
   * dim timestamp resolved by `dimVerCols`, higher wins), emitting a fact
   * only once the watermark passes its timestamp — so out-of-order and
@@ -42,8 +40,7 @@ object TemporalJoinAny {
     * pending fact envelopes + retained dim envelopes. */
   final case class TjState(facts: Seq[Seq[Any]], dims: Seq[Seq[Any]])
 
-  /** PROCESSING-time temporal join over arbitrary DataFrames — the
-    * general-schema twin of [[TemporalJoin.temporalJoinProcTime]]
+  /** PROCESSING-time temporal join over arbitrary DataFrames
     * (reference TemporalProcessTimeJoinOperator.java:126): each fact
     * enriches with the latest dimension version SEEN so far — no
     * watermark, no buffering, facts emit immediately; within one
@@ -222,7 +219,7 @@ object TemporalJoinAny {
     }
 
     // withWatermark is a no-op on batch inputs; applying it always keeps
-    // one code path (same as the Event-typed operator)
+    // one code path
     env.withWatermark("__ts", delay)
       .groupByKey(r => Row.fromSeq(keyIdx.map(r.get)))(keyEnc)
       .flatMapGroupsWithState(OutputMode.Append,

@@ -58,8 +58,8 @@ import scala.collection.concurrent.TrieMap
   *
   * Streaming: these spellings rewrite to a plain join, which Spark
   * plans on a stream only in its stream-static form (static versioned
-  * dim). For a CHANGING dim stream use the stateful executors
-  * ([[TemporalJoinAny.temporalJoin]] / [[TemporalJoin]]) directly —
+  * dim). For a CHANGING dim stream use the stateful executor
+  * ([[TemporalJoinAny.temporalJoin]]) directly —
   * the SQL spelling serves the batch/stream-static surface.
   */
 object TemporalSql {

@@ -8,17 +8,15 @@ import OverAggregates.{Acc, Agg}
 
 /** Early-fire / late-fire windowed aggregation over an ARBITRARY
   * DataFrame, for all three window assigners — TUMBLING, HOP (sliding)
-  * and SESSION — the general-schema twin of [[EarlyFire]], the same
-  * generalization move [[OverAggregates]] made for streaming OVER
-  * (reference: the emit strategy applies to any windowed aggregate on any
-  * registered table and composes with every assigner —
+  * and SESSION — the one emit-strategy operator family (reference: the
+  * emit strategy applies to any windowed aggregate on any registered
+  * table and composes with every assigner —
   * flink-table-planner-blink PB/plan/utils/WindowEmitStrategy.scala:155-193,
   * `table.exec.emit.early-fire.*` / `late-fire.*`; assigners
   * RT/operators/window/assigners/TumblingWindowAssigner.java:34,
   * SlidingWindowAssigner.java:40, SessionWindowAssigner.java:37; runtime
   * triggers RT/operators/window/triggers/EventTimeTriggers.java
-  * `AfterEndOfWindow#withEarlyFirings/withLateFirings`; the Event-typed
-  * [[EarlyFire]] operators remain the spec'd fixed-schema fast path).
+  * `AfterEndOfWindow#withEarlyFirings/withLateFirings`).
   *
   * HOP assigns each row to ceil(size/slide) windows by EXPANSION before
   * the shuffle (the reference's SlidingWindowAssigner returns the same
@@ -41,7 +39,7 @@ import OverAggregates.{Acc, Agg}
   *  - when the event-time watermark passes the window end, the FINAL
   *    emits (`is_final = 1`) — guaranteed exactly once per non-empty
   *    window even when one micro-batch jumps the watermark past the
-  *    whole retention horizon (a hole the Event-typed operator accepts);
+  *    whole retention horizon;
   *  - rows arriving within `allowedLateness` after the close re-emit an
   *    updated final (`is_final = 2` — the reference's late firing, at
   *    its tightest late-fire delay of 0); once the horizon passes, state

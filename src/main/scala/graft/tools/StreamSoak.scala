@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{CountWindows, EarlyFire, OverAggregates, RankOps,
-  StatefulOps}
+import graft.streaming.{CountWindows, OverAggregates, RankOps,
+  StatefulOps, WindowAggAny}
 import graft.streaming.StatefulOps.Event
 
 /** Dev utility: streaming soak at scale (round-9 VERDICT #6). The
@@ -280,18 +280,23 @@ object StreamSoak {
         reconstructed(finalReservoir), false),
       // round-9 extension: the emit-strategy + count-window + sort family
       ("early_fire", eventsDir,
-        (ds: Dataset[Event]) => EarlyFire.earlyFireWindowAgg(ds, dayWin,
-          earlyFire = "100 milliseconds", delay = "60 seconds").toDF(),
+        (ds: Dataset[Event]) => WindowAggAny.earlyLateFireWindowAgg(ds.toDF(),
+          Seq("user_id"), "ts", Seq("event_id"), dayWin,
+          graft.streaming.StatefulBatch.userWindowAggs,
+          earlyFire = "100 milliseconds",
+          delay = java.time.Duration.ofSeconds(60)),
         // stream finals (is_final=1) must equal the batch collapse
         // bit-exactly: both fold each window's rows in (ts, event_id)
         // order, incremental vs one-shot left fold associate identically
         reconstructed(df => realWin(df).filter(col("is_final") === 1)
           .drop("is_final")), true),
       ("late_fire", straggDir,
-        (ds: Dataset[Event]) => EarlyFire.lateFireWindowAgg(ds, dayWin,
+        (ds: Dataset[Event]) => WindowAggAny.earlyLateFireWindowAgg(ds.toDF(),
+          Seq("user_id"), "ts", Seq("event_id"), dayWin,
+          graft.streaming.StatefulBatch.userWindowAggs,
           earlyFire = "100 milliseconds",
           delay = java.time.Duration.ofSeconds(60),
-          allowedLateness = lateness).toDF(),
+          allowedLateness = lateness),
         (s, b) => {
           val sf = finalWindowFire(s).cache()
           val (mism, onlyB) = pairedWindowCompare(sf, finalWindowFire(b))
@@ -308,7 +313,7 @@ object StreamSoak {
           Seq("user_id"), Seq("ts", "event_id"), 8, 4, "value", "event_id"),
         reconstructed(identity), true),
       // round-11 extension: the GENERAL-SCHEMA executors (java-serialized
-      // row state — OverAggregates.GenState / PatternMatch.GenBufState)
+      // row state — OverAggregates.GenState / PatternMatch.MatchState)
       // at volume — string-keyed OVER frames and streaming SQL
       // MATCH_RECOGNIZE, each against its own batch collapse
       ("gen_over_rows", eventsDir,
@@ -863,7 +868,7 @@ object StreamSoak {
       val ckpt = s"$work/ckpt_recovery_match"
       wipe(sinkDir, ckpt)
       def matchOp(ds: Dataset[Event]): DataFrame =
-        graft.streaming.MatchRecognizeSql.sql(ds,
+        graft.streaming.MatchRecognizeSql.sqlDf(ds.toDF(),
           """SELECT * FROM events MATCH_RECOGNIZE (
             |  PARTITION BY user_id
             |  ORDER BY ts, event_id
@@ -881,7 +886,7 @@ object StreamSoak {
           .trigger(Trigger.AvailableNow()).start()
       val t0 = System.nanoTime()
       val stopped = runInterrupted(mk, nFiles / 2)
-      // the NFA's partial-match buffers (BufState: pending rows, PREV
+      // the NFA's partial-match buffers (MatchState: pending rows, PREV
       // marker, match counter) recover from the state store; a replayed
       // batch re-finds its matches with the same match ordinals
       val q2 = mk(); q2.awaitTermination()

@@ -5,14 +5,24 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
-import graft.streaming.EarlyFire._
 import graft.streaming.StatefulOps.Event
 
-/** Emission-sequence spec for the allowed-lateness windowed aggregate:
-  * partials while open, one final on close, an UPDATED final
-  * (`is_final = 2`) for a row arriving inside the allowed-lateness
-  * horizon, and silence once the horizon passes. */
+/** Emission-sequence spec for the allowed-lateness windowed aggregate
+  * ([[WindowAggAny.earlyLateFireWindowAgg]] in q110's shape: events keyed
+  * by user_id, COUNT/SUM(value)): partials while open, one final on
+  * close, an UPDATED final (`is_final = 2`) for a row arriving inside
+  * the allowed-lateness horizon, and silence once the horizon passes. */
 class LateFireSpec extends SparkSpec {
+
+  private def lateFireWindowAgg(events: org.apache.spark.sql.Dataset[Event],
+      window: java.time.Duration, earlyFire: String = "1 second",
+      delay: java.time.Duration, allowedLateness: java.time.Duration)
+      : org.apache.spark.sql.Dataset[WindowFire] = {
+    import spark.implicits._
+    WindowAggAny.earlyLateFireWindowAgg(events.toDF(), Seq("user_id"), "ts",
+      Seq("event_id"), window, StatefulBatch.userWindowAggs, earlyFire,
+      delay, allowedLateness).as[WindowFire]
+  }
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")

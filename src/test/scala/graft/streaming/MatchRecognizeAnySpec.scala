@@ -316,7 +316,7 @@ class MatchRecognizeAnySpec extends SparkSpec {
     assert(gotN == Set(5, 3, 6, 7), s"got $gotN")
   }
 
-  test("r14 STREAMING deep PREV on the Event-model entry: offset 3 " +
+  test("r14 STREAMING deep PREV over the events' five columns: offset 3 " +
       "across single-row batches equals the batch collapse") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -336,7 +336,7 @@ class MatchRecognizeAnySpec extends SparkSpec {
                  |)""".stripMargin
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Event]
-    val query = MatchRecognizeSql.sql(input.toDS(), text)
+    val query = MatchRecognizeSql.sqlDf(input.toDF(), text)
       .writeStream.format("memory").queryName("mrprev3ev")
       .outputMode("append").start()
     evs.foreach { e => input.addData(e); query.processAllAvailable() }
@@ -346,9 +346,69 @@ class MatchRecognizeAnySpec extends SparkSpec {
     // yes; i8 1<7 no
     val want = Set(5L, 7L)
     assert(got == want, s"got $got")
-    val batchGot = MatchRecognizeSql.sql(evs.toDS(), text)
+    val batchGot = MatchRecognizeSql.sqlDf(evs.toDF(), text)
       .select("eid").as[Long].collect().toSet
     assert(batchGot == want, s"batch twin disagrees: $batchGot")
+  }
+
+  test("FINAL vs RUNNING in ALL ROWS PER MATCH: per-row RUNNING " +
+      "COUNT(B.*) climbs 1, 2, 3 while FINAL COUNT(B.*) is the whole " +
+      "match's count on every row, batch and streaming alike; FINAL " +
+      "outside MEASURES fails at parse time") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    def ts(m: Long) = new java.sql.Timestamp(m * 60000L)
+    val prices = Seq(5, 11, 12, 13, 25, 6, 14, 15, 16, 17, 30)
+    val ticks = prices.zipWithIndex.map { case (p, i) =>
+      MrTick("ACME", p, i + 1L, ts(i + 1L))
+    }
+    val text = """SELECT * FROM t MATCH_RECOGNIZE (
+                 |  PARTITION BY sym
+                 |  ORDER BY rowtime
+                 |  MEASURES MATCH_NUMBER() AS mno, CLASSIFIER() AS cls,
+                 |           COUNT(B.*) AS run_b,
+                 |           RUNNING COUNT(B.*) AS run_b2,
+                 |           FINAL COUNT(B.*) AS fin_b,
+                 |           FINAL LAST(B.price) AS last_b
+                 |  ALL ROWS PER MATCH
+                 |  PATTERN (A B+ C)
+                 |  DEFINE A AS price < 10,
+                 |         B AS price >= 10 AND price < 20,
+                 |         C AS price >= 20
+                 |)""".stripMargin
+    def proj(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id", $"mno", $"cls", $"run_b", $"run_b2", $"fin_b",
+        $"last_b").as[(Long, Long, String, Long, Long, Long, Int)]
+        .collect().toSeq.sortBy(_._1)
+    val want = Seq(
+      (1L, 1L, "A", 0L, 0L, 3L, 13), (2L, 1L, "B", 1L, 1L, 3L, 13),
+      (3L, 1L, "B", 2L, 2L, 3L, 13), (4L, 1L, "B", 3L, 3L, 3L, 13),
+      (5L, 1L, "C", 3L, 3L, 3L, 13),
+      (6L, 2L, "A", 0L, 0L, 4L, 17), (7L, 2L, "B", 1L, 1L, 4L, 17),
+      (8L, 2L, "B", 2L, 2L, 4L, 17), (9L, 2L, "B", 3L, 3L, 4L, 17),
+      (10L, 2L, "B", 4L, 4L, 4L, 17), (11L, 2L, "C", 4L, 4L, 4L, 17))
+    val batch = proj(MatchRecognizeSql.sqlDf(ticks.toDF(), text))
+    assert(batch == want, s"batch: $batch")
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[MrTick]
+    val query = MatchRecognizeSql.sqlDf(input.toDF(), text)
+      .writeStream.format("memory").queryName("mrfinal")
+      .outputMode("append").start()
+    // the same rows split mid-match across micro-batches, then two
+    // far-future rows of another key push the watermark past the tail
+    Seq(ticks.take(3), ticks.slice(3, 7), ticks.drop(7),
+      Seq(MrTick("ZZZ", 50, 100L, ts(1000L))),
+      Seq(MrTick("ZZZ", 50, 101L, ts(2000L)))).foreach { chunk =>
+      input.addData(chunk); query.processAllAvailable()
+    }
+    query.stop()
+    val streamed = proj(spark.table("mrfinal"))
+    assert(streamed == batch, s"stream $streamed vs batch $batch")
+    val e = intercept[IllegalArgumentException](MatchRecognizeSql.sqlDf(
+      ticks.toDF(), text.replace("B AS price >= 10 AND price < 20",
+        "B AS price >= 10 AND FINAL COUNT(B.*) < 9")))
+    assert(e.getMessage.contains("FINAL is only allowed in MEASURES"),
+      e.getMessage)
   }
 
   test("r15 PREV in MEASURES (FINAL anchor = the match's LAST row): " +

@@ -3,12 +3,14 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.{Funnel, MatchSql}
 
-/** The SQL MATCH_RECOGNIZE front-end must be a faithful rewriter: every
-  * SQL-shape query returns bit-identical rows to the Scala-API twin it
-  * rewrites onto, and unsupported grammar fails loudly at parse time. */
+/** The SQL MATCH_RECOGNIZE front-end ([[MatchRecognizeSql.sqlDf]]) must
+  * be a faithful compiler: every SQL-shape query returns bit-identical
+  * rows to its programmatic-API twin over the same executor, and
+  * unsupported grammar fails loudly at parse time. Inputs are the events'
+  * five columns. */
 class MatchRecognizeSqlSpec extends SparkSpec {
 
-  private def events = StatefulOps.typedEvents(spark, sf())
+  private def events = StatefulOps.typedEvents(spark, sf()).toDF()
 
   test("SQL shapes are row-identical to their Scala-API twins") {
     val pairs = Seq(
@@ -33,7 +35,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
 
   test("WITHIN bounds a match's event-time span from its first row") {
     // fixture sessions span days; a tight WITHIN must prune matches
-    val all = MatchRecognizeSql.sql(events,
+    val all = MatchRecognizeSql.sqlDf(events,
       """SELECT * FROM events MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts, event_id
         |  MEASURES A.event_id AS view_id, C.event_id AS purchase_id
@@ -42,7 +44,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
         |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
         |         C AS event_type = 'purchase'
         |)""".stripMargin).count()
-    val tight = MatchRecognizeSql.sql(events,
+    val tight = MatchRecognizeSql.sqlDf(events,
       """SELECT * FROM events MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts, event_id
         |  MEASURES A.event_id AS view_id, C.event_id AS purchase_id
@@ -55,7 +57,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
   }
 
   test("SKIP TO FIRST/LAST variable parses and runs") {
-    val df = MatchRecognizeSql.sql(events,
+    val df = MatchRecognizeSql.sqlDf(events,
       """MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts
         |  MEASURES FIRST(B.event_id) AS first_click, C.event_id AS p_id
@@ -70,7 +72,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
 
   test("unsupported grammar fails loudly at parse time") {
     def bad(sql: String, fragment: String): Unit = {
-      val e = intercept[Exception](MatchRecognizeSql.sql(events, sql))
+      val e = intercept[Exception](MatchRecognizeSql.sqlDf(events, sql))
       assert(e.getMessage.contains(fragment),
         s"error '${e.getMessage}' should mention '$fragment'")
     }
@@ -78,10 +80,6 @@ class MatchRecognizeSqlSpec extends SparkSpec {
     bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
           |PATTERN (A) DEFINE A AS price > 5)""".stripMargin,
       "unknown field")
-    // wrong partition key on the EVENT-MODEL entry (sqlDf takes any)
-    bad("""MATCH_RECOGNIZE (PARTITION BY event_type ORDER BY ts
-          |PATTERN (A))""".stripMargin,
-      "PARTITION BY must be user_id")
     // DEFINE of a variable the PATTERN does not name
     bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
           |PATTERN (A) DEFINE Z AS value > 0)""".stripMargin,
@@ -111,7 +109,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
     // B's DEFINE references A's binding (LAST(A.value)) and a 2-deep
     // physical PREV — the round-9 front-end rejected both (reference
     // grammar: MatchRecognizeITCase.scala:178-182 `LAST(A.name, 2)`)
-    val df = MatchRecognizeSql.sql(events,
+    val df = MatchRecognizeSql.sqlDf(events,
       """MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts, event_id
         |  MEASURES A.event_id AS a_id, B.event_id AS b_id,
@@ -128,7 +126,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
   }
 
   test("MEASURES under ALL ROWS PER MATCH carry RUNNING semantics") {
-    val df = MatchRecognizeSql.sql(events,
+    val df = MatchRecognizeSql.sqlDf(events,
       """MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts, event_id
         |  MEASURES MATCH_NUMBER() AS mno, CLASSIFIER() AS cls,
@@ -157,7 +155,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
   }
 
   test("string escapes and numeric literals in DEFINE evaluate correctly") {
-    val df = MatchRecognizeSql.sql(events,
+    val df = MatchRecognizeSql.sqlDf(events,
       """MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts, event_id
         |  MEASURES A.event_id AS eid, A.value AS v
@@ -172,7 +170,7 @@ class MatchRecognizeSqlSpec extends SparkSpec {
   test("integer division by zero in DEFINE fails loudly, not as NULL") {
     // Calcite/Flink raise on integral /0; a silent NULL would quietly
     // un-match the predicate instead of surfacing the bad expression
-    val df = MatchRecognizeSql.sql(events,
+    val df = MatchRecognizeSql.sqlDf(events,
       """MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts, event_id
         |  MEASURES A.event_id AS eid

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
@@ -13,28 +13,41 @@ import graft.streaming.StatefulOps.Event
   * cannot instantiate suite-inner classes). */
 case class M(a: Seq[Long], b: Seq[Long], c: Seq[Long])
 
-/** NFA spec matrix mirroring the reference's basic MatchRecognizeITCase
-  * cases: greedy quantifier binding, AFTER MATCH SKIP PAST LAST ROW,
-  * optional/star steps, backtracking under overlapping predicates, and
-  * streaming (out-of-order + cross-batch partial match) agreeing with the
-  * batch pass. The batch↔oracle gate is q89. */
+/** NFA spec matrix for the programmatic [[PatternMatch.Step]] surface
+  * (Row predicates over the events' five columns, partitioned by user_id
+  * in (ts, event_id) order), mirroring the reference's basic
+  * MatchRecognizeITCase cases: greedy quantifier binding, AFTER MATCH
+  * SKIP PAST LAST ROW, optional/star steps, backtracking under
+  * overlapping predicates, and streaming (out-of-order + cross-batch
+  * partial match) agreeing with the batch pass. The batch↔oracle gate is
+  * q89. */
 class PatternMatchSpec extends SparkSpec {
+  import PatternMatchSpec._
 
   private def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
   private def ev(id: Long, m: Int, t: String): Event = Event(1L, id, ts(m), t, 1.0)
 
+  /** [[PatternMatch.matchPattern]] over an events Dataset (batch or
+    * stream), keyed by user in event-time order. */
+  private def matchEvents[O: Encoder](events: Dataset[Event], steps: Seq[Step],
+      delay: String, emit: (Row, Seq[Bound]) => O,
+      within: Option[java.time.Duration] = None,
+      skip: SkipStrategy = SkipPastLastRow): Dataset[O] =
+    matchPattern(events.toDF(), Seq("user_id"), Seq("ts", "event_id"), steps,
+      delay, emit, within, skip)
+
   private val ABplusC = Seq(
-    Step("A", _.event_type == "view", One),
-    Step("B", _.event_type == "click", Plus),
-    Step("C", _.event_type == "purchase", One))
+    Step("A", isType("view"), One),
+    Step("B", isType("click"), Plus),
+    Step("C", isType("purchase"), One))
 
   private implicit val mEnc: org.apache.spark.sql.Encoder[M] = Encoders.product[M]
 
   private def runBatch(events: Seq[Event], steps: Seq[Step]): Seq[M] = {
     import spark.implicits._
-    matchPattern(spark.createDataset(events), steps, "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+    matchEvents(spark.createDataset(events), steps, "0 seconds",
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by.getOrElse("A", Nil), by.getOrElse("B", Nil), by.getOrElse("C", Nil))
       }).collect().toSeq.sortBy(_.c.headOption.getOrElse(0L))
   }
@@ -60,9 +73,9 @@ class PatternMatchSpec extends SparkSpec {
 
   test("optional and star steps match empty") {
     val aOptBstarC = Seq(
-      Step("A", _.event_type == "view", Opt),
-      Step("B", _.event_type == "click", Star),
-      Step("C", _.event_type == "purchase", One))
+      Step("A", isType("view"), Opt),
+      Step("B", isType("click"), Star),
+      Step("C", isType("purchase"), One))
     val out = runBatch(Seq(
       ev(1, 0, "purchase"), // C alone: A?, B* both empty
       ev(2, 1, "view"), ev(3, 2, "purchase")), aOptBstarC)
@@ -73,9 +86,9 @@ class PatternMatchSpec extends SparkSpec {
     // B's predicate also covers C's rows: B+ = anything non-view,
     // C = purchase. Greedy B+ swallows the purchase, then backtracks.
     val steps = Seq(
-      Step("A", _.event_type == "view", One),
-      Step("B", _.event_type != "view", Plus),
-      Step("C", _.event_type == "purchase", One))
+      Step("A", isType("view"), One),
+      Step("B", r => !isType("view")(r), Plus),
+      Step("C", isType("purchase"), One))
     val out = runBatch(Seq(
       ev(1, 0, "view"), ev(2, 1, "click"), ev(3, 2, "click"), ev(4, 3, "purchase")),
       steps)
@@ -87,16 +100,16 @@ class PatternMatchSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Event]
     val e = intercept[IllegalArgumentException] {
-      matchPattern(input.toDS(), Seq(
-        Step("A", _.event_type == "view", One),
-        Step("B", _.event_type == "click", Plus)), // trailing B+ never finalizes
-        delay = "0 seconds", (_: Long, _: Seq[Bound[Event]]) => 0)
+      matchEvents(input.toDS(), Seq(
+        Step("A", isType("view"), One),
+        Step("B", isType("click"), Plus)), // trailing B+ never finalizes
+        delay = "0 seconds", (_: Row, _: Seq[Bound]) => 0)
     }
     assert(e.getMessage.contains("never finalize"))
     // the same pattern IS valid in batch, where the input end is final
     val out = runBatch(Seq(ev(1, 0, "view"), ev(2, 1, "click")), Seq(
-      Step("A", _.event_type == "view", One),
-      Step("B", _.event_type == "click", Plus)))
+      Step("A", isType("view"), One),
+      Step("B", isType("click"), Plus)))
     assert(out == Seq(M(Seq(1), Seq(2), Nil)))
   }
 
@@ -104,16 +117,16 @@ class PatternMatchSpec extends SparkSpec {
     // D+ U with D: value < PREV(value), U: value > PREV(value)
     def evv(id: Long, m: Int, v: Double): Event = Event(1L, id, ts(m), "x", v)
     val steps = Seq(
-      Step.withPrev("D", Plus)((c, p) => c.value < p.value),
-      Step.withPrev("U", One)((c, p) => c.value > p.value))
+      Step.withPrev("D", Plus)((c, p) => value(c) < value(p)),
+      Step.withPrev("U", One)((c, p) => value(c) > value(p)))
     import spark.implicits._
-    val out = matchPattern(spark.createDataset(Seq(
+    val out = matchEvents(spark.createDataset(Seq(
       evv(1, 0, 9.0), evv(2, 1, 7.0), evv(3, 2, 4.0), evv(4, 3, 6.0), // V at 2-4
       evv(5, 4, 6.0), // equal: neither D nor U — breaks any run
       evv(6, 5, 5.0), evv(7, 6, 8.0))), // second V at 6-7
       steps, "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by("D"), by("U"), Nil)
       }).collect().toSeq.sortBy(_.a.head)
     // row 1 has no PREV -> cannot open a D run; run {2,3} rebounds at 4;
@@ -125,15 +138,15 @@ class PatternMatchSpec extends SparkSpec {
     // after the first match consumes ...U, the next D's PREV is that U row
     def evv(id: Long, m: Int, v: Double): Event = Event(1L, id, ts(m), "x", v)
     val steps = Seq(
-      Step.withPrev("D", Plus)((c, p) => c.value < p.value),
-      Step.withPrev("U", One)((c, p) => c.value > p.value))
+      Step.withPrev("D", Plus)((c, p) => value(c) < value(p)),
+      Step.withPrev("U", One)((c, p) => value(c) > value(p)))
     import spark.implicits._
-    val out = matchPattern(spark.createDataset(Seq(
+    val out = matchEvents(spark.createDataset(Seq(
       evv(1, 0, 9.0), evv(2, 1, 5.0), evv(3, 2, 8.0), // match: D={2} U={3}
       evv(4, 3, 6.0), evv(5, 4, 7.0))), // 4 is D only if PREV=row3 (8.0) visible
       steps, "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by("D"), by("U"), Nil)
       }).collect().toSeq.sortBy(_.a.head)
     assert(out == Seq(M(Seq(2), Seq(3), Nil), M(Seq(4), Seq(5), Nil)),
@@ -145,10 +158,10 @@ class PatternMatchSpec extends SparkSpec {
     // same A B+ C shape; C arrives 10 minutes after A -> outside WITHIN
     val far = Seq(ev(1, 0, "view"), ev(2, 1, "click"), ev(3, 10, "purchase"))
     import spark.implicits._
-    def run(events: Seq[Event]) = matchPattern(
+    def run(events: Seq[Event]) = matchEvents(
       spark.createDataset(events), ABplusC, "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by("A"), by("B"), by("C"))
       }, within = within).collect().toSeq
     assert(run(far).isEmpty, "span 10 min > WITHIN 5 min must not match")
@@ -162,12 +175,12 @@ class PatternMatchSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = matchPattern(input.toDS(), Seq(
-      Step("A", _.event_type == "view", One),
-      Step("B", _.event_type == "click", Plus)),
+    val query = matchEvents(input.toDS(), Seq(
+      Step("A", isType("view"), One),
+      Step("B", isType("click"), Plus)),
       delay = "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by("A"), by("B"), Nil)
       }, within = Some(java.time.Duration.ofMinutes(5)))
       .writeStream.format("memory").queryName("nfawithin").outputMode("append").start()
@@ -190,9 +203,9 @@ class PatternMatchSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = matchPattern(input.toDS(), ABplusC, delay = "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+    val query = matchEvents(input.toDS(), ABplusC, delay = "0 seconds",
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by("A"), by("B"), by("C"))
       }, within = Some(java.time.Duration.ofMinutes(5)))
       .writeStream.format("memory").queryName("nfaprune").outputMode("append").start()
@@ -217,22 +230,22 @@ class PatternMatchSpec extends SparkSpec {
     for (q <- Seq(Times(2, None), Times(2, Some(3)))) {
       val in2 = MemoryStream[Event]
       val e = intercept[IllegalArgumentException] {
-        matchPattern(in2.toDS(), Seq(
-          Step("A", _.event_type == "view", One),
-          Step("B", _.event_type == "click", q)),
-          delay = "0 seconds", (_: Long, _: Seq[Bound[Event]]) => 0)
+        matchEvents(in2.toDS(), Seq(
+          Step("A", isType("view"), One),
+          Step("B", isType("click"), q)),
+          delay = "0 seconds", (_: Row, _: Seq[Bound]) => 0)
       }
       assert(e.getMessage.contains("never finalize"), s"$q must stay rejected")
     }
     // exact {2}: a max-length possessive run cannot be extended — legal
     // without WITHIN, and the run finalizes at max (advice r10)
     val input = MemoryStream[Event]
-    val query = matchPattern(input.toDS(), Seq(
-      Step("A", _.event_type == "view", One),
-      Step("B", _.event_type == "click", Times(2, Some(2)))),
+    val query = matchEvents(input.toDS(), Seq(
+      Step("A", isType("view"), One),
+      Step("B", isType("click"), Times(2, Some(2)))),
       delay = "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by("A"), by("B"), Nil)
       })
       .writeStream.format("memory").queryName("nfaexactn")
@@ -253,9 +266,9 @@ class PatternMatchSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val query = matchPattern(input.toDS(), ABplusC, delay = "5 minutes",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+    val query = matchEvents(input.toDS(), ABplusC, delay = "5 minutes",
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by("A"), by("B"), by("C"))
       }).writeStream.format("memory").queryName("nfa").outputMode("append").start()
     // batch 1: A and a partial B; the C and a LATE click arrive in batch 2
@@ -280,9 +293,9 @@ class PatternMatchSpec extends SparkSpec {
       ev(1, 0, "view"), ev(2, 1, "click"), ev(3, 2, "purchase"),
       ev(4, 3, "click"), ev(5, 4, "purchase"))
     def pat(q: Quant) = Seq(
-      Step("A", _.event_type == "view", One),
+      Step("A", isType("view"), One),
       Step("B", _ => true, q),
-      Step("C", _.event_type == "purchase", One))
+      Step("C", isType("purchase"), One))
     // greedy: B* swallows through the LAST purchase-preceding position
     assert(runBatch(rows, pat(Star)) ==
       Seq(M(Seq(1), Seq(2, 3, 4), Seq(5))))
@@ -296,9 +309,9 @@ class PatternMatchSpec extends SparkSpec {
       ev(1, 0, "view"), ev(2, 1, "purchase"),
       ev(3, 2, "view"), ev(4, 3, "click"), ev(5, 4, "purchase"), ev(6, 5, "purchase"))
     val pat = Seq(
-      Step("A", _.event_type == "view", One),
+      Step("A", isType("view"), One),
       Step("B", _ => true, PlusReluctant),
-      Step("C", _.event_type == "purchase", One))
+      Step("C", isType("purchase"), One))
     // B+? must consume >= 1 row, so the adjacent purchase 2 cannot be C;
     // the shortest viable extension is B={2,3,4} (consuming view 3 on the
     // way), C=purchase 5. SKIP PAST LAST ROW leaves row 6 alone → no
@@ -311,12 +324,12 @@ class PatternMatchSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Event]
     // A C+? ≡ A C: the reluctant tail finalizes without WITHIN
-    val q = matchPattern(input.toDS(), Seq(
-      Step("A", _.event_type == "view", One),
-      Step("C", _.event_type == "click", PlusReluctant)),
+    val q = matchEvents(input.toDS(), Seq(
+      Step("A", isType("view"), One),
+      Step("C", isType("click"), PlusReluctant)),
       "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by.getOrElse("A", Nil), Nil, by.getOrElse("C", Nil))
       }).writeStream.format("memory").queryName("relu").outputMode("append").start()
     input.addData(ev(1, 0, "view"), ev(2, 1, "click"), ev(3, 2, "click"))
@@ -335,8 +348,8 @@ class PatternMatchSpec extends SparkSpec {
     val out = runBatch(Seq(
       ev(1, 0, "view"), ev(2, 1, "view"), ev(3, 2, "purchase"),
       ev(4, 3, "view"), ev(5, 4, "click"), ev(6, 5, "view")),
-      Seq(Step("A", _.event_type == "view", One,
-        nextPred = Some((_, n) => n.event_type == "purchase"))))
+      Seq(Step("A", isType("view"), One,
+        nextPred = Some((_, n) => isType("purchase")(n)))))
     assert(out.map(_.a) == Seq(Seq(2)),
       s"only the view directly before the purchase may match, got $out")
   }
@@ -345,12 +358,12 @@ class PatternMatchSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Event]
-    val q = matchPattern(input.toDS(), Seq(
-      Step("A", _.event_type == "view", One,
-        nextPred = Some((_, n) => n.event_type == "purchase"))),
+    val q = matchEvents(input.toDS(), Seq(
+      Step("A", isType("view"), One,
+        nextPred = Some((_, n) => isType("purchase")(n)))),
       "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) =>
-        M(bound.head.rows.map(_.event_id), Nil, Nil))
+      (_: Row, bound: Seq[Bound]) =>
+        M(bound.head.rows.map(id), Nil, Nil))
       .writeStream.format("memory").queryName("nextdef")
       .outputMode("append").start()
     input.addData(ev(1, 0, "view"))
@@ -369,8 +382,8 @@ class PatternMatchSpec extends SparkSpec {
   // ---- AFTER MATCH SKIP strategies (PP = two consecutive purchases) ----
 
   private val PP = Seq(
-    Step("A", _.event_type == "purchase", One),
-    Step("B", _.event_type == "purchase", One))
+    Step("A", isType("purchase"), One),
+    Step("B", isType("purchase"), One))
 
   private def purchases4 = Seq(
     ev(1, 0, "purchase"), ev(2, 1, "purchase"),
@@ -379,9 +392,9 @@ class PatternMatchSpec extends SparkSpec {
   private def runSkip(events: Seq[Event], steps: Seq[Step],
       skip: SkipStrategy): Seq[M] = {
     import spark.implicits._
-    matchPattern(spark.createDataset(events), steps, "0 seconds",
-      (_: Long, bound: Seq[Bound[Event]]) => {
-        val by = bound.map(s => s.name -> s.rows.map(_.event_id)).toMap
+    matchEvents(spark.createDataset(events), steps, "0 seconds",
+      (_: Row, bound: Seq[Bound]) => {
+        val by = bound.map(s => s.name -> s.rows.map(id)).toMap
         M(by.getOrElse("A", Nil), by.getOrElse("B", Nil), by.getOrElse("C", Nil))
       }, skip = skip).collect().toSeq.sortBy(_.a.headOption.getOrElse(0L))
   }
@@ -409,10 +422,12 @@ class PatternMatchSpec extends SparkSpec {
     val events = Seq(
       ev(1, 0, "view"), ev(2, 1, "click"), ev(3, 2, "click"), ev(4, 3, "purchase"),
       ev(5, 4, "view"), ev(6, 5, "click"), ev(7, 6, "purchase"))
-    val out = matchPatternAllRows(spark.createDataset(events), ABplusC,
-      "0 seconds").collect().sortBy(r => (r.match_no, r.pos)).toSeq
-    assert(out.map(r => (r.match_no, r.pos, r.classifier, r.event_id,
-      r.running_n, r.final_n)) == Seq(
+    val out = matchPatternAllRows(spark.createDataset(events).toDF(),
+      Seq("user_id"), Seq("ts", "event_id"), ABplusC, "0 seconds")
+      .select($"match_no", $"pos", $"classifier", $"event_id", $"running_n",
+        $"final_n").as[(Long, Long, String, Long, Long, Long)]
+      .collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(out == Seq(
       (1L, 1L, "A", 1L, 1L, 1L),
       (1L, 2L, "B", 2L, 1L, 2L), // RUNNING count(B)=1 of FINAL 2
       (1L, 3L, "B", 3L, 2L, 2L),
@@ -433,4 +448,12 @@ class PatternMatchSpec extends SparkSpec {
       Option(c.getMessage).exists(_.contains("infinite loop"))),
       s"expected the infinite-loop rejection, got $e")
   }
+}
+
+/** Row field readers for the step predicates — on the companion so the
+  * closures that use them do not capture the (non-serializable) suite. */
+object PatternMatchSpec {
+  def isType(t: String): Row => Boolean = _.getAs[String]("event_type") == t
+  def id(r: Row): Long = r.getAs[Long]("event_id")
+  def value(r: Row): Double = r.getAs[Double]("value")
 }

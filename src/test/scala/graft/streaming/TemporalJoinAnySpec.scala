@@ -7,13 +7,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The general-schema streaming temporal join must reproduce the
-  * Event-typed [[TemporalJoin]] semantics (watermark-gated emission,
+/** The streaming temporal join's semantics (watermark-gated emission,
   * late-version honoring, newest-at-watermark pruning, left-outer NULLs,
-  * idle retention) on a row shape the typed operator cannot express —
-  * STRING key, extra payload columns on both sides, the dim timestamp in
-  * the output — and its batch collapse must match the typed operator /
-  * the q63 ASOF oracle on the events fixture. */
+  * idle retention — `TemporalJoinSpec` pins them on a long-keyed shape)
+  * must hold on a STRING key with extra payload columns on both sides and
+  * the dim timestamp in the output, and its batch collapse must match the
+  * q63 ASOF oracle on the events fixture. */
 class TemporalJoinAnySpec extends SparkSpec {
 
   private def ts(h: Int, m: Int): Timestamp =
@@ -168,8 +167,8 @@ class TemporalJoinAnySpec extends SparkSpec {
       s"got $got")
   }
 
-  test("batch collapse matches the Event-typed operator and the q63 " +
-    "ASOF oracle on the events fixture") {
+  test("batch collapse matches the q63 batch as-of join on the events " +
+    "fixture") {
     import spark.implicits._
     val ev = graft.core.Catalog.load(spark, sf(), "events")
     val facts = ev.filter($"event_type" === "purchase")

@@ -2,13 +2,23 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.streaming.TemporalJoin._
 
-/** Streaming temporal/as-of join specs, mirroring the reference's
+/** Fact-stream row (left side) — top level for the encoders. */
+case class Fact(k: Long, ts: Timestamp, fact_id: Long, fact_value: Double)
+
+/** Dimension-version row (right side); higher `ver` wins ties on ts. */
+case class DimVersion(k: Long, ts: Timestamp, ver: Long, dim_value: Double)
+
+/** Enriched output; dim fields are None when no version precedes. */
+case class Enriched(k: Long, ts: Timestamp, fact_id: Long,
+    fact_value: Double, dim_ver: Option[Long], dim_value: Option[Double])
+
+/** Streaming temporal/as-of join specs for [[TemporalJoinAny]] on a
+  * long-keyed fact/version shape, mirroring the reference's
   * TemporalJoinITCase semantics (reference
   * TemporalRowTimeJoinOperator.java:71): watermark-gated emission,
   * enrichment with the latest version at-or-before the fact's event time
@@ -16,6 +26,25 @@ import graft.streaming.TemporalJoin._
   * watermark), left-outer None for facts with no preceding version — and
   * batch-collapse parity against the q63 as-of oracle data. */
 class TemporalJoinSpec extends SparkSpec {
+
+  private def enriched(df: DataFrame): Dataset[Enriched] = {
+    import spark.implicits._
+    df.select($"k", $"ts", $"fact_id", $"fact_value", $"dim_ver",
+      $"dim_dim_value".as("dim_value")).as[Enriched]
+  }
+
+  private def temporalJoin(facts: Dataset[Fact], dims: Dataset[DimVersion],
+      delay: String, idleRetentionMs: Option[Long] = None): Dataset[Enriched] =
+    enriched(TemporalJoinAny.temporalJoin(facts.toDF(), dims.toDF(),
+      keyCols = Seq("k"), tsCol = "ts", dimVerCols = Seq("ver"),
+      factTieBreak = Seq("fact_id"), delay = delay,
+      idleRetentionMs = idleRetentionMs))
+
+  private def temporalJoinProcTime(facts: Dataset[Fact],
+      dims: Dataset[DimVersion]): Dataset[Enriched] =
+    enriched(TemporalJoinAny.temporalJoinProcTime(facts.toDF(), dims.toDF(),
+      keyCols = Seq("k"), tsCol = "ts", dimVerCols = Seq("ver"),
+      factTieBreak = Seq("fact_id")))
 
   private def ts(h: Int, m: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")

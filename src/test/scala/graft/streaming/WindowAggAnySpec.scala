@@ -7,15 +7,20 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.streaming.OverAggregates.Agg
+import graft.streaming.StatefulOps.Event
 
-/** Emission-sequence and collapse spec for the GENERAL-SCHEMA early/late
-  * fire windowed aggregate: the [[EarlyFire]] contract (partials on the
-  * proc-time interval, one final on watermark close, late finals inside
-  * allowed lateness) on an arbitrary row shape the Event-typed operator
-  * cannot express — string partition key, MIN/AVG/COUNT(DISTINCT)
-  * aggregates — plus the close guarantee the Event op does not make:
-  * the final fires even when one micro-batch jumps the watermark past
-  * close AND retention horizon. */
+/** One emission of the q97/q110-shaped window aggregate (events keyed by
+  * user_id, COUNT/SUM(value)) — top level: Spark encoders cannot
+  * instantiate suite-inner classes. */
+case class WindowFire(user_id: Long, w_start_us: Long, n_events: Long,
+    sum_value: Double, is_final: Int)
+
+/** Emission-sequence and collapse spec for the early/late fire windowed
+  * aggregate: partials on the proc-time interval, one final on watermark
+  * close, late finals inside allowed lateness — on q97's events shape
+  * and on string partition keys with MIN/AVG/COUNT(DISTINCT) aggregates
+  * — plus the close guarantee: the final fires even when one
+  * micro-batch jumps the watermark past close AND retention horizon. */
 class WindowAggAnySpec extends SparkSpec {
 
   private def ts(minute: Int): Timestamp =
@@ -33,6 +38,74 @@ class WindowAggAnySpec extends SparkSpec {
     Agg("COUNT", None, "n"),
     Agg("MIN", Some("v"), "mn"),
     Agg("COUNT", Some("u"), "du", distinct = true))
+
+  /** q97's early-fire shape over the events' five columns. */
+  private def earlyFireWindowAgg(events: org.apache.spark.sql.Dataset[Event],
+      window: java.time.Duration, earlyFire: String = "1 second")
+      : org.apache.spark.sql.Dataset[WindowFire] = {
+    import spark.implicits._
+    WindowAggAny.earlyLateFireWindowAgg(events.toDF(), Seq("user_id"), "ts",
+      Seq("event_id"), window, StatefulBatch.userWindowAggs, earlyFire)
+      .as[WindowFire]
+  }
+
+  test("early-fire emits changed partials on the interval, then a final on close") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Event]
+    val query = earlyFireWindowAgg(input.toDS(),
+      java.time.Duration.ofMinutes(5), earlyFire = "100 milliseconds")
+      .writeStream.format("memory").queryName("efire")
+      .outputMode("append").start()
+    def fires(): Seq[WindowFire] = spark.table("efire").as[WindowFire]
+      .collect().filter(_.user_id == 1).toSeq
+
+    // NOTE: no processAllAvailable anywhere in this test — with a
+    // processing-time timer re-armed every 100 ms the engine never
+    // quiesces, so processAllAvailable can block indefinitely; the
+    // continuously-running engine picks the data up on its own and the
+    // sink is polled instead.
+    // Two rows land in the [10:00, 10:05) window; watermark is still
+    // behind the window end, so only PARTIALS may fire
+    input.addData(Event(1, 101, ts(0), "view", 2.0), Event(1, 102, ts(1), "view", 3.0))
+    assert(await(fires().nonEmpty), "no early fire within the timeout")
+    val partials = fires()
+    assert(partials.forall(_.is_final == 0),
+      s"window is still open — nothing may be final yet: $partials")
+    assert(partials.last.n_events == 2L && partials.last.sum_value == 5.0,
+      s"partial must carry the current aggregate: $partials")
+
+    // unchanged aggregate → the interval timer must NOT re-emit
+    val countBefore = fires().size
+    Thread.sleep(500)
+    assert(fires().size == countBefore,
+      "early fire re-emitted an unchanged partial")
+
+    // advance the watermark past 10:05 → the next firing finalizes
+    input.addData(Event(9, 900, ts(30), "view", 0.0))
+    assert(await(fires().exists(_.is_final == 1)), "no final fire on close")
+    query.stop()
+    val all = fires()
+    val finals = all.filter(_.is_final == 1)
+    assert(finals.size == 1, s"exactly one final per window, got $all")
+    assert(finals.head.n_events == 2L && finals.head.sum_value == 5.0)
+    // the final is the LAST emission for the window
+    assert(all.last.is_final == 1, s"emissions after the final: $all")
+  }
+
+  test("batch collapse emits exactly the final rows") {
+    import spark.implicits._
+    val events = Seq(
+      Event(1, 101, ts(0), "view", 2.0),
+      Event(1, 102, ts(1), "view", 3.0),
+      Event(1, 103, ts(7), "view", 4.0),
+      Event(2, 201, ts(1), "view", 1.0)).toDS()
+    val out = earlyFireWindowAgg(events, java.time.Duration.ofMinutes(5))
+      .collect().sortBy(f => (f.user_id, f.w_start_us))
+    assert(out.forall(_.is_final == 1))
+    assert(out.map(f => (f.user_id, f.n_events, f.sum_value)).toSeq ==
+      Seq((1L, 2L, 5.0), (1L, 1L, 4.0), (2L, 1L, 1.0)))
+  }
 
   test("general early-fire: changed partials on the interval, one final " +
     "on close, on a string-keyed schema with MIN and COUNT(DISTINCT)") {
