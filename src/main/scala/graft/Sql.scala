@@ -8,8 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * statement including embedded MATCH_RECOGNIZE), where graft previously
   * exposed per-family entries (`spark.sql`, [[
   * graft.streaming.MatchRecognizeSql.sqlDf]], [[
-  * graft.streaming.StreamingOverSql.sqlDf]], [[
-  * graft.streaming.RankSql.sqlDf]]).
+  * graft.streaming.WindowSql.sqlDf]]).
   *
   * Division of labor: Spark SQL already evaluates OVER windows,
   * ROW_NUMBER filters, joins, subqueries and unions natively in batch —
@@ -39,9 +38,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stream — and leaves natively streamable statements (projections,
   * filters, group/window aggregates, stream-static joins, windows on
   * the STATIC side of a stream-static join, CTEs over any of those)
-  * with Spark. The routing decision reads the parsed plan, never the
-  * raw text. The df-parameterized per-family entries remain for
-  * sources not registered in the catalog.
+  * with Spark. This routing reads the parsed plan, never the raw text,
+  * and registers no view. The df-parameterized per-family entries
+  * remain for sources not registered in the catalog.
   *
   * DML parity: the reference's `sqlUpdate` accepts exactly INSERT /
   * CREATE TABLE / DROP TABLE (TableEnvironmentImpl.java:339-384); all
@@ -72,336 +71,37 @@ object Sql {
 
   /** Statements over a STREAMING registered table that Spark SQL cannot
     * plan on a stream — the reference's rank/dedup `ROW_NUMBER()` filter
-    * (StreamExecDeduplicateRule / StreamExecRank) and OVER frame
-    * aggregates (StreamExecOverAggregate) — route to the stateful
-    * executors, so one `sql(text)` call serves them by table NAME just
-    * like everything else. Detection reads the PARSED plan, not the raw
-    * text (r13): the router steps in only when a window expression's own
-    * subtree reads streaming data, so a window that sits entirely on the
-    * static side of a stream-static statement — which Spark plans
-    * natively — falls through, and OVER/ROW_NUMBER inside a string
-    * literal or comment never trips it. CTE-defined names resolve through
-    * their bodies (a rank over `WITH e AS (SELECT ... FROM stream)` is a
-    * rank over the stream): the router registers each CTE body through
-    * this same front door as a temp view — NOTE: that name becomes a
-    * session temp view, shadowing any previous view of the same name —
-    * and re-routes the stripped statement, so the executor grammar sees
-    * the flat form. Spark itself could never run the routed statements
-    * (UnsupportedOperationChecker rejects rank/OVER on streams at query
-    * start), so there is nothing the rerouting can shadow — a statement
-    * that deviates from the executor grammar fails loudly in its parser
-    * instead of obscurely at writeStream start. Everything else
-    * (streaming or batch) stays with Spark SQL. */
+    * (StreamExecDeduplicateRule / StreamExecRank), OVER frame aggregates
+    * (StreamExecOverAggregate), and the sort / limit shapes — route to
+    * the stateful executors, so one `sql(text)` call serves them by
+    * table NAME just like everything else. The route reads the PARSED
+    * plan, never the raw text: [[graft.streaming.WindowSql.route]]
+    * splices an executor under each window Project whose child reads a
+    * stream (any child Spark can analyze — joins, derived tables, CTEs,
+    * qualified columns), and a window entirely on the static side of a
+    * stream-static statement, or OVER/ROW_NUMBER inside a string
+    * literal or comment, never trips it. Spark itself could never run
+    * the routed statements (UnsupportedOperationChecker rejects
+    * rank/OVER/sort on streams at query start), so there is nothing the
+    * routing can shadow. Everything else (streaming or batch) stays with
+    * Spark SQL. */
   private def routeStreaming(spark: SparkSession,
       text: String): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{Expression, UnresolvedWindowExpression, WindowExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
-    // parse only — no analysis, so rank/OVER-on-stream shapes Spark
-    // cannot plan still parse; an unparsable statement falls through to
-    // spark.sql for its real error
-    val plan = scala.util.Try(spark.sessionState.sqlParser.parsePlan(text))
+    import graft.streaming.WindowSql
+    // parse only — an unparsable statement falls through to spark.sql
+    // for its real error
+    val parsed = scala.util.Try(spark.sessionState.sqlParser.parsePlan(text))
       .getOrElse(return None)
-    val cteDefs: Map[String, LogicalPlan] = plan.collect {
-      case w: UnresolvedWith =>
-        w.cteRelations.map(r => r._1.toLowerCase -> (r._2: LogicalPlan))
-    }.flatten.toMap
-    def relNames(p: LogicalPlan): Seq[String] = p.collect {
-      case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
-    }.distinct
-    def isStreamingTable(n: String): Boolean =
-      scala.util.Try(spark.table(n).isStreaming).getOrElse(false)
-    def subtreeStreaming(p: LogicalPlan, seen: Set[String]): Boolean =
-      relNames(p).exists { n =>
-        val ln = n.toLowerCase
-        cteDefs.get(ln) match {
-          case Some(body) => !seen(ln) && subtreeStreaming(body, seen + ln)
-          case None => isStreamingTable(n)
-        }
-      }
-    def winFns(e: Expression): Seq[String] = e.collect {
-      case WindowExpression(f: UnresolvedFunction, _) =>
-        f.nameParts.last.toUpperCase
-      case UnresolvedWindowExpression(f: UnresolvedFunction, _) =>
-        f.nameParts.last.toUpperCase
-    }
-    // window functions computed OVER streaming data: the plan node
-    // carrying the window expression must read a streaming relation
-    // below it
-    val streamingWinFns = plan.collect {
-      case p if p.expressions.exists(winFns(_).nonEmpty) &&
-          subtreeStreaming(p, Set.empty) =>
-        p.expressions.flatMap(winFns)
-    }.flatten
-    if (streamingWinFns.isEmpty) return routeStreamingSort(spark, plan)
-    // reference parity: StreamExecRank supports only ROW_NUMBER on a
-    // stream and throws on the other rank types (StreamExecRank.scala:
-    // 139-143) — reject them with the same message instead of a
-    // confusing OVER-parser error
-    Seq("RANK", "DENSE_RANK").foreach { fn =>
-      require(!streamingWinFns.contains(fn),
-        s"$fn() on streaming table is not supported currently " +
-          "(reference parity: only ROW_NUMBER ranks a stream)")
-    }
-    if (cteDefs.nonEmpty) return Some(sql(spark, stripCtes(spark, text)))
-    // r14/r15: a rank/OVER over a COMPOSED streaming input — a
-    // FROM-clause join or a derived table (the reference plans rank over
-    // an arbitrary stream subtree: FlinkStreamRuleSets' full logical
-    // pipeline feeding StreamExecRank). Run the topmost composed source
-    // natively (Spark plans stream-static joins and derived-table
-    // subtrees itself; a stream-stream combination is adjudicated by
-    // Spark's own checker at start), register it as a temp view, splice
-    // the view name over the source's text span (parser Origin offsets),
-    // and re-route — the executor then sees the one-table form.
-    // Statement columns must be unqualified for joins (the executor
-    // grammar reads the join's flat output schema). A derived table
-    // carrying the window expression itself (the rank idiom's own
-    // `FROM (SELECT …, ROW_NUMBER() …)` wrapper) is never lifted — it IS
-    // the executor grammar.
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, SubqueryAlias}
-    // r16: a derived table that itself computes a window lifts too, as
-    // long as the statement carries window expressions OUTSIDE it — the
-    // outer shape is then a rank/OVER over the derived table and the
-    // recursive sql() call plans the inner one through this same front
-    // door (reference: rank composes over any stream subtree). When ALL
-    // window expressions live inside the derived table it IS the rank
-    // idiom's own `FROM (SELECT …, ROW_NUMBER() …)` executor-grammar
-    // wrapper and must not be lifted.
-    val planWinExprs = countWindowExprs(plan)
-    val composed: Seq[LogicalPlan] = plan.collect {
-      case j: Join => j: LogicalPlan
-      case sa: SubqueryAlias if !sa.child.isInstanceOf[UnresolvedRelation]
-          && countWindowExprs(sa) < planWinExprs => sa: LogicalPlan
-    }
-    composed.headOption match { // collect is pre-order: topmost source
-      case Some(j: Join) =>
-        return Some(sql(spark, spliceSourceJoin(spark, text, j)))
-      case Some(sa: SubqueryAlias) =>
-        return Some(sql(spark, spliceDerivedTable(spark, text, sa)))
-      case _ =>
-    }
-    val rels = relNames(plan)
-    require(rels.size == 1,
-      "a streaming rank/OVER statement must read one table, a join of " +
-        "sources, or a derived table in its FROM clause; compose other " +
-        "shapes in a view over this front door first")
-    val df = spark.table(rels.head)
-    if (streamingWinFns.contains("ROW_NUMBER"))
-      Some(graft.streaming.RankSql.sqlDf(df, text))
-    else Some(graft.streaming.StreamingOverSql.sqlDf(df, text))
+    val plan = WindowSql.prepare(spark, parsed)
+    WindowSql.route(spark, plan).orElse(routeStreamingSort(spark, plan))
   }
 
-  private val srcJoinViews = new java.util.concurrent.atomic.AtomicInteger
-
-  /** r16: when a splice composes a stateful executor ATOP another graft
-    * stateful executor (rank over a derived table computing an OVER
-    * aggregate), Spark's UnsupportedOperationChecker conservatively
-    * rejects the chain — `checkStreamingQueryGlobalWatermarkLimit`
-    * refuses ANY stateful operator downstream of a
-    * flatMapGroupsWithState in append mode, because an arbitrary FMGWS
-    * may emit rows older than the global watermark which a downstream
-    * event-time operator would silently drop. The graft chain is safe by
-    * construction: the inner executor emits a row only once the
-    * watermark has passed its event time, the projection drops the
-    * event-time column, and the outer executor (rank/top-n) keys on
-    * ordinary columns with order-insensitive state — no downstream
-    * late-row filter exists to drop anything. Spark's sanctioned escape
-    * is the session conf below (error → logged warning), which this
-    * route sets ONLY when the spliced subtree actually contains a
-    * stateful executor (a window-free splice never touches it). */
-  private def allowChainedStateful(spark: SparkSession,
-      df: DataFrame): Unit = {
-    import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
-    val stateful = df.isStreaming && df.queryExecution.logical.exists {
-      case _: FlatMapGroupsWithState => true
-      case _ => false
-    }
-    if (stateful) spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-      "false")
-  }
-
-  /** Number of window expressions in the subtree (r16) — the
-    * derived-table lift compares the count inside a SubqueryAlias with
-    * the statement total: equal counts mean every window lives inside
-    * the derived table, i.e. it is the rank idiom's own
-    * `FROM (SELECT …, ROW_NUMBER() …)` executor-grammar wrapper and must
-    * not be lifted; a smaller count means the statement windows OVER the
-    * derived table, which then lifts and plans recursively. */
-  private def countWindowExprs(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{UnresolvedWindowExpression, WindowExpression}
-    p.collect {
-      case q => q.expressions.map(_.collect {
-        case _: WindowExpression => 1
-        case _: UnresolvedWindowExpression => 1
-      }.sum).sum
-    }.sum
-  }
-
-  /** Smallest text span [start, stop] covering a parsed subtree, from
-    * the parser Origin offsets recorded on its nodes. */
-  private def originSpan(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : (Int, Int) = {
-    val starts = p.collect {
-      case n if n.origin.startIndex.isDefined => n.origin.startIndex.get
-    }
-    val stops = p.collect {
-      case n if n.origin.stopIndex.isDefined => n.origin.stopIndex.get
-    }
-    require(starts.nonEmpty && stops.nonEmpty,
-      "internal: parser origin offsets unavailable for the source span")
-    (starts.min, stops.max)
-  }
-
-  /** Rebuild the topmost FROM-clause join of a routed streaming
-    * rank/OVER statement as a native DataFrame join, register it as a
-    * temp view, and return the statement with the join's text span
-    * replaced by the view name (parser Origin offsets locate the span:
-    * leftmost source start .. join stop). Join inputs may be relations,
-    * aliases, nested joins, or window-free derived tables (planned back
-    * through the front door, r15); anything else — including a derived
-    * table computing its own window — fails loudly: compose it in a
-    * view first. USING joins keep their coalesced-key semantics;
-    * NATURAL joins are rejected loudly (r15 — a missing joinType match
-    * previously cross-joined them). */
-  private def spliceSourceJoin(spark: SparkSession, text: String,
-      top: org.apache.spark.sql.catalyst.plans.logical.Join): String = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.{Cross, Inner, NaturalJoin, UsingJoin}
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, SubqueryAlias}
-    import org.apache.spark.sql.functions.expr
-    def build(p: LogicalPlan): DataFrame = p match {
-      case SubqueryAlias(id, child) => child match {
-        case _: UnresolvedRelation | _: Join | _: SubqueryAlias =>
-          build(child).as(id.name)
-        case other =>
-          // a derived table under the join: run its inner statement back
-          // through the front door — nested group windows, UNNEST, and
-          // (r16) window/agg shapes the front door serves (a rank idiom
-          // or OVER frame inside the derived table routes recursively to
-          // its own executor); genuinely unplannable shapes fail loudly
-          // inside the recursive call
-          val (s0, s1) = originSpan(other)
-          val planned = sql(spark, text.substring(s0, s1 + 1))
-          allowChainedStateful(spark, planned)
-          planned.as(id.name)
-      }
-      case r: UnresolvedRelation =>
-        spark.table(r.multipartIdentifier.mkString("."))
-      case Join(l, r, jt, cond, _) =>
-        val ld = build(l); val rd = build(r)
-        jt match {
-          // USING/NATURAL carry their keys in the joinType, not the
-          // condition — falling through to cond=None would CROSS join
-          case UsingJoin(tpe, cols) =>
-            ld.join(rd, cols, tpe.sql.toLowerCase.replace(" ", ""))
-          case NaturalJoin(tpe) =>
-            // r16 (reference accepts NATURAL JOIN via the Calcite
-            // parser): resolve the common columns — case-insensitive,
-            // left-side order, exactly Spark's own
-            // ResolveNaturalAndUsingJoin — and join USING them
-            val rset = rd.columns.map(_.toLowerCase).toSet
-            val common = ld.columns.filter(c => rset(c.toLowerCase))
-            require(common.nonEmpty,
-              "NATURAL JOIN on the streaming rank/OVER route requires " +
-                "at least one common column between the inputs; found " +
-                "none — spell the join with ON or CROSS JOIN")
-            ld.join(rd, common.toSeq, tpe.sql.toLowerCase.replace(" ", ""))
-          case _ => cond match {
-            case Some(c) =>
-              ld.join(rd, expr(c.sql), jt.sql.toLowerCase.replace(" ", ""))
-            case None if jt == Inner || jt == Cross => ld.crossJoin(rd)
-            case None => sys.error(
-              s"${jt.sql} JOIN with no ON condition cannot be planned " +
-                "on the streaming rank/OVER route")
-          }
-        }
-      case other => sys.error(
-        "streaming rank/OVER join source supports relations, aliases, " +
-          s"joins and derived tables; found ${other.nodeName} — compose " +
-          "it in a view over this front door first")
-    }
-    require(top.origin.sqlText.contains(text),
-      "internal: join origin text does not match the routed statement")
-    val (start, stop) = originSpan(top)
-    val view = s"graft_srcjoin_${srcJoinViews.getAndIncrement()}"
-    build(top).createOrReplaceTempView(view)
-    text.substring(0, start) + view + text.substring(stop + 1)
-  }
-
-  /** Lift a FROM-clause derived table of a routed streaming rank/OVER
-    * statement (r15; reference: rank over any stream subtree is plain
-    * FlinkStreamRuleSets composition): run the inner statement back
-    * through the front door — so nested joins, group windows, UNNEST and
-    * (r16) window/agg shapes the front door itself serves all compose —
-    * register the result as a temp view under a GENERATED unique name
-    * (r16: never the user's alias, which would clobber a same-named
-    * session temp view for the rest of the session — unlike a CTE the
-    * splice would outlive the statement), and return the statement with
-    * the `(subquery) [AS] alias` span replaced by the view name. The
-    * alias is consumed by the splice: the downstream executor grammars
-    * read a single unqualified `FROM <ident>` and unqualified columns
-    * only, so no reference could have resolved through it. */
-  private def spliceDerivedTable(spark: SparkSession, text: String,
-      sa: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias)
-      : String = {
-    require(sa.origin.sqlText.contains(text),
-      "internal: derived-table origin text does not match the statement")
-    require(!sa.child.isInstanceOf[
-        org.apache.spark.sql.catalyst.analysis.UnresolvedSubqueryColumnAliases],
-      "derived-table column-alias lists are not supported on the " +
-        "streaming rank/OVER route; alias the columns in the subquery")
-    val (s0, s1) = originSpan(sa.child)
-    val inner = text.substring(s0, s1 + 1)
-    var open = s0 - 1
-    while (open >= 0 && text.charAt(open).isWhitespace) open -= 1
-    require(open >= 0 && text.charAt(open) == '(',
-      "internal: derived table not parenthesized in the routed statement")
-    var close = s1 + 1
-    while (close < text.length && text.charAt(close).isWhitespace) close += 1
-    require(close < text.length && text.charAt(close) == ')',
-      "internal: derived table close paren not found")
-    // locate the trailing `[AS] alias` (if the next word is neither AS
-    // nor the parsed alias, the parser auto-generated the alias name —
-    // splice ends at the paren and a generated view name is used)
-    def word(at: Int): (Int, Int) = {
-      var a = at
-      while (a < text.length && text.charAt(a).isWhitespace) a += 1
-      var e = a
-      while (e < text.length && isIdentChar(text.charAt(e))) e += 1
-      (a, e)
-    }
-    val alias = sa.identifier.name
-    val (w0, w1) = word(close + 1)
-    val aliasEnd =
-      if (w1 > w0 && text.substring(w0, w1).equalsIgnoreCase("AS")) {
-        val (a0, a1) = word(w1)
-        require(a1 > a0 && text.substring(a0, a1).equalsIgnoreCase(alias),
-          s"internal: expected derived-table alias '$alias' after AS")
-        a1
-      } else if (w1 > w0 && text.substring(w0, w1).equalsIgnoreCase(alias))
-        w1
-      else -1
-    if (aliasEnd >= 0) {
-      var a = aliasEnd
-      while (a < text.length && text.charAt(a).isWhitespace) a += 1
-      require(a >= text.length || text.charAt(a) != '(',
-        "derived-table column-alias lists are not supported on the " +
-          "streaming rank/OVER route; alias the columns in the subquery")
-    }
-    val view = s"graft_srcsub_${srcJoinViews.getAndIncrement()}"
-    val planned = sql(spark, inner)
-    allowChainedStateful(spark, planned)
-    planned.createOrReplaceTempView(view)
-    text.substring(0, open) + view +
-      text.substring(if (aliasEnd >= 0) aliasEnd else close + 1)
-  }
-
-  /** Streaming sort / limit shapes Spark cannot plan on a stream,
-    * routed to the stateful executors (grammar = a plain projection over
-    * ONE streaming table; everything else falls through untouched):
+  /** Streaming sort / limit shapes Spark cannot plan on a stream, routed
+    * to the stateful executors with the same child splice as the window
+    * route: the Sort or Limit node is replaced by the executor's plan
+    * over the projection's (streaming, aggregate-free) child, and Spark
+    * analyzes the projection above it. Everything else falls through
+    * untouched:
     *
     *  - `ORDER BY <rowtime>[, ties]` (no LIMIT) — the reference's
     *    temporal sort (TemporalSortITCase; StreamExecSortRule admits
@@ -420,111 +120,61 @@ object Sql {
   private def routeStreamingSort(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Literal, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedStar
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression, Literal, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
+    import org.apache.spark.sql.graftbridge.Bridge
+    import graft.streaming.{RankOps, RowSort, WindowSql}
 
-    // a plain projection chain over one streaming relation, or nothing
-    def source(p: LogicalPlan): Option[(Option[Project], DataFrame)] = {
-      val (proj, rel) = p match {
-        case pr @ Project(_, r: UnresolvedRelation) => (Some(pr), r)
-        case r: UnresolvedRelation => (None, r)
-        case _ => return None
+    // splice `exec` under the projection when its child is a stream
+    def under(p: LogicalPlan, keys: => Seq[Expression])(
+        exec: (DataFrame, Seq[String]) => DataFrame): Option[LogicalPlan] = {
+      val (proj, child) = p match {
+        case pr: Project => (Some(pr), pr.child)
+        case c => (None, c)
       }
-      val name = rel.multipartIdentifier.mkString(".")
-      if (!scala.util.Try(spark.table(name).isStreaming).getOrElse(false))
-        None
-      else Some((proj, spark.table(name)))
+      if (child.exists(_.isInstanceOf[Aggregate]) ||
+          !WindowSql.readsStream(spark, child)) return None
+      scala.util.Try(Bridge.ofRows(spark, child)).toOption
+        .filter(_.isStreaming).map { df =>
+          val s = WindowSql.splice(spark, df, keys)(exec)
+          proj.fold(s.plan)(pr => Project(pr.projectList.flatMap {
+            case UnresolvedStar(None) => s.restored
+            case e => Seq(e)
+          }, s.plan))
+        }
     }
-    def project(proj: Option[Project], df: DataFrame): DataFrame =
-      proj.map(p => df.selectExpr(p.projectList.map {
-        case s: org.apache.spark.sql.catalyst.analysis.UnresolvedStar =>
-          s.target.map(_.mkString(".") + ".*").getOrElse("*")
-        // the parser wraps an un-aliased computed item (`value + 1`) in
-        // UnresolvedAlias, whose .sql renders as `unresolvedalias(...)`
-        // — selectExpr on the CHILD's sql instead (Spark then derives
-        // the output name exactly as it would have natively)
-        case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAlias =>
-          ua.child.sql
-        case e => e.sql
-      }: _*)).getOrElse(df)
-    def orderKeys(order: Seq[SortOrder], requireAsc: Boolean)
-        : Seq[(String, Boolean)] =
+    def checked(order: Seq[SortOrder], requireAsc: Boolean): Seq[SortOrder] =
       order.map {
-        case SortOrder(a: UnresolvedAttribute, dir, _, _)
-            if dir == Ascending || (!requireAsc && dir == Descending) =>
-          (a.name, dir == Ascending)
-        case o => sys.error("streaming ORDER BY supports only plain " +
-          (if (requireAsc) "ascending columns with the time attribute " +
+        case o if (o.direction == Ascending ||
+            (!requireAsc && o.direction == Descending)) &&
+            o.nullOrdering == o.direction.defaultNullOrdering => o
+        case o => sys.error("streaming ORDER BY supports only " +
+          (if (requireAsc) "ascending keys with the time attribute " +
             "leading (reference StreamExecSortRule), got: "
-           else "columns, got: ") + o.sql)
+           else "keys in default null order, got: ") + o.sql)
       }
 
-    plan match {
+    (plan match {
       // ORDER BY ... LIMIT n -> global streaming top-n (retract rank)
       case GlobalLimit(Literal(n: Int, _),
           LocalLimit(_, Sort(order, true, child, _))) =>
-        source(child).map { case (proj, df) =>
-          project(proj, graft.streaming.RankOps.rankRows(
-            df, Seq.empty, orderKeys(order, requireAsc = false), n))
+        lazy val o = checked(order, requireAsc = false)
+        under(child, o.map(_.child)) { (df, cols) =>
+          RankOps.rankRows(df, Nil, cols.zip(o.map(_.direction == Ascending)), n)
         }
       // LIMIT n -> first n rows in arrival order
       case GlobalLimit(Literal(n: Int, _), LocalLimit(_, child)) =>
-        source(child).map { case (proj, df) =>
-          project(proj, graft.streaming.RankOps.rankRows(
-            df, Seq.empty, Seq(("proctime", true)), n))
+        under(child, Nil) { (df, _) =>
+          RankOps.rankRows(df, Nil, Seq(("proctime", true)), n)
         }
       // bare ORDER BY -> event-time (temporal) sort
       case Sort(order, true, child, _) =>
-        source(child).map { case (proj, df) =>
-          project(proj, graft.streaming.RowSort.sortByEventTime(
-            df, orderKeys(order, requireAsc = true).map(_._1)))
+        under(child, checked(order, requireAsc = true).map(_.child)) {
+          (df, cols) => RowSort.sortByEventTime(df, cols)
         }
       case _ => None
-    }
-  }
-
-  /** Register each `WITH name AS (body)` through the front door as a
-    * temp view (streaming bodies yield streaming views) and return the
-    * main statement with the WITH prefix stripped — the streaming-route
-    * rendering of CTEs, used only when the statement routes to a
-    * stateful executor (Spark SQL serves its own CTEs everywhere else).
-    * Column-alias CTE lists (`WITH e (a, b) AS ...`) and RECURSIVE are
-    * not in the route's grammar and fail loudly. */
-  private def stripCtes(spark: SparkSession, text: String): String = {
-    var i = 0
-    while (i < text.length && text.charAt(i).isWhitespace) i += 1
-    require(text.regionMatches(true, i, "WITH", 0, 4) &&
-        (i + 4 >= text.length || !isIdentChar(text.charAt(i + 4))),
-      "streaming rank/OVER with CTEs: the WITH clause must lead the " +
-        "statement (CTEs nested in subqueries or DML are not in the " +
-        "streaming route's grammar)")
-    i += 4
-    var done = false
-    while (!done) {
-      while (i < text.length && text.charAt(i).isWhitespace) i += 1
-      val ns = i
-      while (i < text.length && isIdentChar(text.charAt(i))) i += 1
-      val name = text.substring(ns, i)
-      require(name.nonEmpty && !name.equalsIgnoreCase("RECURSIVE"),
-        "streaming rank/OVER route: RECURSIVE CTEs are not supported")
-      while (i < text.length && text.charAt(i).isWhitespace) i += 1
-      require(text.regionMatches(true, i, "AS", 0, 2),
-        s"CTE '$name': expected AS (column-alias lists are not in the " +
-          "streaming route's grammar)")
-      i += 2
-      while (i < text.length && text.charAt(i).isWhitespace) i += 1
-      require(i < text.length && text.charAt(i) == '(',
-        s"CTE '$name': expected '(' after AS")
-      val close = balancedClose(text, i)
-      val body = text.substring(i + 1, close).trim
-      require(body.nonEmpty, s"CTE '$name': empty body")
-      sql(spark, body).createOrReplaceTempView(name)
-      i = close + 1
-      while (i < text.length && text.charAt(i).isWhitespace) i += 1
-      if (i < text.length && text.charAt(i) == ',') i += 1 else done = true
-    }
-    text.substring(i)
+    }).map(Bridge.ofRows(spark, _))
   }
 
   /** Replace every `<table> MATCH_RECOGNIZE (...)` reference with a temp

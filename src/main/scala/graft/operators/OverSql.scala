@@ -1,13 +1,13 @@
 package graft.operators
 
 import graft.core.QueryDef
-import graft.streaming.StreamingOverSql
+import graft.streaming.WindowSql
 
 /** The reference's streaming OVER-aggregate shapes accepted AS SQL TEXT
   * (reference: flink-table-planner-blink
   * .../stream/StreamExecOverAggregate.scala:56 routing; the
   * OverWindowITCase query surface) through
-  * [[graft.streaming.StreamingOverSql]], each hash-checked by the SAME
+  * [[graft.streaming.WindowSql]], each hash-checked by the SAME
   * DuckDB oracle as its Scala-API twin in
   * [[graft.streaming.StatefulBatch]] — the SQL front-end is thereby
   * proven bit-identical to the API it dispatches onto, closing the
@@ -37,7 +37,7 @@ object OverSql {
       |             ROWS BETWEEN 50 PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.functions.col
-    StreamingOverSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"),
+    WindowSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"),
       """SELECT user_id, event_id,
         |  COUNT(DISTINCT user_id) OVER w AS du,
         |  SUM(DISTINCT user_id) OVER w AS su
@@ -72,7 +72,7 @@ object OverSql {
     val e = graft.core.Catalog.load(spark, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"),
         date_trunc("minute", col("ts")).as("tmin"))
-    StreamingOverSql.sqlDf(e,
+    WindowSql.sqlDf(e,
       """SELECT user_id, event_id,
         |  ROUND(SUM(value) OVER w, 4) AS sv,
         |  COUNT(value) OVER w AS cv
@@ -100,7 +100,7 @@ object OverSql {
       |WINDOW win AS (PARTITION BY user_id ORDER BY us
       |               RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin) { (spark, dir) =>
-    graft.streaming.StreamingOverSql.sqlDf(
+    graft.streaming.WindowSql.sqlDf(
       graft.core.Catalog.load(spark, dir, "events"),
       """SELECT user_id, event_id,
         |  COUNT(value) OVER win AS cnt_v,
@@ -156,7 +156,7 @@ object OverSql {
     * route q136–q138 pin too. */
   private def run(sql: String)(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    StreamingOverSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"), sql,
+    WindowSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"), sql,
       batchNative = false)
 
   /** q74's unbounded running aggregates as SQL text — the oracle text
@@ -211,7 +211,7 @@ object OverSql {
       |WINDOW win AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
       |               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
       |ORDER BY o_custkey, o_orderkey""".stripMargin) { (spark, dir) =>
-    graft.streaming.StreamingOverSql.sqlDf(
+    graft.streaming.WindowSql.sqlDf(
       graft.core.Catalog.load(spark, dir, "orders"),
       """SELECT o_custkey, o_orderkey,
         |  COUNT(*) OVER win AS cnt_w,
@@ -238,7 +238,7 @@ object OverSql {
       |WINDOW win AS (PARTITION BY event_type ORDER BY us
       |               RANGE BETWEEN 60000000 PRECEDING AND CURRENT ROW)
       |ORDER BY event_type, event_id""".stripMargin) { (spark, dir) =>
-    graft.streaming.StreamingOverSql.sqlDf(
+    graft.streaming.WindowSql.sqlDf(
       graft.core.Catalog.load(spark, dir, "events"),
       """SELECT event_type, event_id,
         |  COUNT(*) OVER win AS cnt_w,
@@ -268,7 +268,7 @@ object OverSql {
       |WINDOW win AS (PARTITION BY user_id, event_type ORDER BY ts, event_id
       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_type, event_id""".stripMargin) { (spark, dir) =>
-    graft.streaming.StreamingOverSql.sqlDf(
+    graft.streaming.WindowSql.sqlDf(
       graft.core.Catalog.load(spark, dir, "events"),
       """SELECT user_id, event_type, event_id,
         |  COUNT(*) OVER win AS cnt_w,
@@ -295,7 +295,7 @@ object OverSql {
       |WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id
       |               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
       |ORDER BY event_type, event_id""".stripMargin) { (spark, dir) =>
-    graft.streaming.StreamingOverSql.sqlDf(
+    graft.streaming.WindowSql.sqlDf(
       graft.core.Catalog.load(spark, dir, "events"),
       """SELECT event_type, event_id,
         |  ROUND(SUM(value) OVER win, 4) AS sum_v,

@@ -1,13 +1,13 @@
 package graft.operators
 
 import graft.core.QueryDef
-import graft.streaming.RankSql
+import graft.streaming.WindowSql
 
 /** The reference's streaming TOP-N / DEDUPLICATION SQL patterns as
   * declared queries on NON-Event tables (reference:
   * StreamExecDeduplicateRule.scala's `ROW_NUMBER() = 1` routing and the
   * RankITCase / DeduplicateITCase `<= k` / `= k` surfaces), executed by
-  * [[graft.streaming.RankOps.rankRows]] through [[RankSql.sqlDf]] and
+  * [[graft.streaming.RankOps.rankRows]] through [[WindowSql.sqlDf]] and
   * hash-checked by DuckDB running the IDENTICAL statement — the batch
   * collapse of the streaming operator is the plain window query. */
 object RankDedupSql {
@@ -21,7 +21,7 @@ object RankDedupSql {
   private def run(table: String, sql: String)(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    RankSql.sqlDf(graft.core.Catalog.load(spark, dir, table), sql,
+    WindowSql.sqlDf(graft.core.Catalog.load(spark, dir, table), sql,
       batchNative = false)
 
   /** The DEFAULT batch route of the same SQL entry: Spark's native
@@ -36,7 +36,7 @@ object RankDedupSql {
       |  FROM orders)
       |WHERE rn <= 2
       |ORDER BY o_custkey, rn""".stripMargin) { (spark, dir) =>
-    RankSql.sqlDf(graft.core.Catalog.load(spark, dir, "orders"),
+    WindowSql.sqlDf(graft.core.Catalog.load(spark, dir, "orders"),
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
         |    ORDER BY o_totalprice ASC, o_orderkey ASC) AS rn

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState
 import org.apache.spark.sql.types._
 
 /** Streaming OVER aggregates over an ARBITRARY DataFrame — the
-  * general-schema executor behind [[StreamingOverSql.sqlDf]], as
+  * general-schema executor behind [[WindowSql.sqlDf]], as
   * [[PatternMatch.matchRows]] is for MATCH_RECOGNIZE (reference: the
   * OVER clause accepts any registered table — flink-table-planner-blink
   * .../stream/sql/OverWindowITCase.scala partitions 3-column tuples by a
@@ -509,7 +509,7 @@ object OverAggregates extends Serializable {
 
   /** Validate the agg list; per-agg input descriptor. Also the shared
     * up-front contract for the native-WindowExec batch route
-    * (StreamingOverSql.nativeBatch): every route must reject a
+    * (WindowSql.nativeBatch): every route must reject a
     * non-numeric SUM/MIN/MAX/AVG input with this error, never a
     * mid-query ANSI cast failure. */
   private[streaming] def checkAggs(schema: StructType, aggs: Seq[Agg]): Seq[AggIn] =

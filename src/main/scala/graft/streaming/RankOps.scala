@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 /** Streaming TOP-N and keep-first/keep-last DEDUPLICATION over an
   * ARBITRARY DataFrame — the one rank/dedup executor, behind
-  * [[RankSql.sqlDf]] and the q72/q73 API q-defs (reference: the rank
+  * [[WindowSql.sqlDf]] and the q72/q73 API q-defs (reference: the rank
   * and deduplicate operators run on any registered table —
   * flink-table-runtime-blink
   * .../runtime/operators/rank/AbstractTopNFunction.java:51 keeps the

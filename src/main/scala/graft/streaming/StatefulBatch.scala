@@ -96,7 +96,7 @@ object StatefulBatch {
       |  MIN(value) OVER (PARTITION BY event_type) AS frame_min
       |FROM events
       |ORDER BY event_type, event_id""".stripMargin) { (spark, dir) =>
-    StreamingOverSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"),
+    WindowSql.sqlDf(graft.core.Catalog.load(spark, dir, "events"),
       """SELECT event_type, event_id,
         |  COUNT(*) OVER w AS n_in_frame,
         |  ROUND(SUM(value) OVER w, 4) AS frame_sum,
@@ -396,8 +396,8 @@ object StatefulBatch {
     * (reference: rank over a joined stream is plain FlinkStreamRuleSets
     * composition — no one-table restriction). The events fixture replays
     * as a bounded stream, joins a static cohort dim inside the routed
-    * statement (Sql.spliceSourceJoin runs the join natively and feeds
-    * the rank executor its flat output), and the append changelog
+    * statement (WindowSql splices the rank executor over the join Spark
+    * analyzes natively), and the append changelog
     * collapses through the upsert sink: for a keep-1 rank the emissions
     * per key improve monotonically, so latest-by-(value, event_id) IS
     * the final top-1 — the same answer DuckDB computes directly. */
@@ -438,10 +438,9 @@ object StatefulBatch {
   /** r15: the front door's streaming rank over a DERIVED TABLE — the
     * most common SQL idiom after a plain table (reference: rank over any
     * stream subtree is plain FlinkStreamRuleSets composition feeding
-    * StreamExecRank.scala). `Sql.spliceDerivedTable` runs the inner
-    * filtered/projected subquery natively (it stays a stream), registers
-    * it under its own alias, and re-routes the one-table form to the
-    * rank executor. Collapse contract as q169: keep-1 emissions improve
+    * StreamExecRank.scala). The inner filtered/projected subquery is the
+    * rank Project's child: Spark analyzes it (it stays a stream) and
+    * WindowSql runs the rank executor over it. Collapse contract as q169: keep-1 emissions improve
     * monotonically, so the upsert sink's latest-by-(value, event_id) IS
     * the final top-1 per key. */
   val q173SqlRankDerivedStream: QueryDef = QueryDef(
@@ -476,9 +475,9 @@ object StatefulBatch {
 
   /** r15: streaming rank over a SUBQUERY-UNDER-JOIN — a window-free
     * derived table feeding a stream-static join feeding the rank
-    * executor (`Sql.spliceSourceJoin` plans the derived table back
-    * through the front door inside its native join build). Same
-    * collapse contract as q169. */
+    * executor (Spark analyzes the whole join with its derived table;
+    * WindowSql runs the rank executor over it). Same collapse contract
+    * as q169. */
   val q174SqlRankSubqueryJoinStream: QueryDef = QueryDef(
     "q174_sql_rank_subquery_join_stream",
     """WITH d AS (SELECT DISTINCT user_id AS uid, user_id % 5 AS cohort
@@ -521,9 +520,9 @@ object StatefulBatch {
     * streaming OVER aggregate — the round-15 dialect seam closed
     * (reference: rank composes over any stream subtree,
     * FlinkStreamRuleSets feeding StreamExecRank.scala:56 region). The
-    * front door lifts the windowed subquery, plans it recursively
-    * through the streaming OVER executor, and ranks its output — two
-    * chained stateful executors in ONE statement. The watermark sentinel
+    * front door splices the streaming OVER executor under the windowed
+    * subquery, then the rank executor over its output — two chained
+    * stateful executors in ONE statement. The watermark sentinel
     * ([[sentinelEventsStream]]) flushes the OVER executor's tail, the
     * Flink bounded-input MAX_WATERMARK contract; the sentinel's own key
     * never ripens, so it emits nothing. Collapse contract as q169/q173:
@@ -569,8 +568,8 @@ object StatefulBatch {
   }
 
   /** r16: streaming rank over a JOIN whose derived table computes a
-    * streaming OVER aggregate — the windowed subquery plans recursively
-    * inside the join build, joins the static cohort dim, and the rank
+    * streaming OVER aggregate — the windowed subquery runs the OVER
+    * executor, joins the static cohort dim, and the rank
     * executor keys on the dim column. Same sentinel + collapse contract
     * as q177; the sentinel user (-1) is additionally dropped by the
     * inner join (not in the dim).

@@ -317,7 +317,7 @@ object StreamSoak {
       // at volume — string-keyed OVER frames and streaming SQL
       // MATCH_RECOGNIZE, each against its own batch collapse
       ("gen_over_rows", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.StreamingOverSql.sqlDf(
+        (ds: Dataset[Event]) => graft.streaming.WindowSql.sqlDf(
           ds.toDF(),
           """SELECT event_type, event_id,
             |  COUNT(*) OVER w AS cnt_w,
@@ -350,7 +350,7 @@ object StreamSoak {
       // collapse. Sentinels sit in their own partitions (event_type
       // 'sentinel' / user_id 0) and are dropped by the real() filter.
       ("gen_topn", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.RankSql.sqlDf(ds.toDF(),
+        (ds: Dataset[Event]) => graft.streaming.WindowSql.sqlDf(ds.toDF(),
           """SELECT * FROM (
             |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
             |    ORDER BY value DESC, event_id ASC) AS rn
@@ -368,7 +368,7 @@ object StreamSoak {
         },
         reconstructed(genSortLimitFinal), false),
       ("gen_keeplast", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.RankSql.sqlDf(ds.toDF(),
+        (ds: Dataset[Event]) => graft.streaming.WindowSql.sqlDf(ds.toDF(),
           """SELECT user_id, event_type, event_id, ts, value FROM (
             |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
             |    ORDER BY ts DESC, event_id DESC) AS rn

@@ -579,29 +579,39 @@ class SqlSpec extends SparkSpec {
       .agg(max("a").as("a"), max_by(col("tag"), col("a")).as("tag"))
       .as[(Long, Int, String)].collect().toSet
     assert(fin == Set((1L, 5, "z")), s"got $fin")
-    // no common columns: loud, actionable rejection (not a cross join)
+    // no common columns: Spark's analyzer resolves the join, and SQL
+    // makes a NATURAL JOIN without common columns a cross join
     Seq((1, "x")).toDF("nocol", "tag2")
       .createOrReplaceTempView("sql_nat_dim2")
-    val e = intercept[IllegalArgumentException](graft.Sql.sql(spark,
+    val input2 = MemoryStream[RankT3]
+    input2.toDF().createOrReplaceTempView("sql_stream_nat2")
+    val crossed = graft.Sql.sql(spark,
       """SELECT * FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY b ORDER BY a) AS rn
-        |  FROM sql_stream_nat NATURAL JOIN sql_nat_dim2)
-        |WHERE rn = 1""".stripMargin))
-    assert(e.getMessage.contains("common column"), e.getMessage)
+        |  FROM sql_stream_nat2 NATURAL JOIN sql_nat_dim2)
+        |WHERE rn = 1""".stripMargin)
+    assert(crossed.columns.toSeq == Seq("a", "b", "c", "nocol", "tag2", "rn"))
+    val q2 = crossed.writeStream.format("memory").queryName("sqlnatcross")
+      .outputMode("append").start()
+    input2.addData(RankT3(1, 1L, "x"), RankT3(5, 1L, "y"), RankT3(3, 2L, "z"))
+    q2.processAllAvailable(); q2.stop()
+    assert(spark.table("sqlnatcross").select("b", "a", "tag2")
+      .as[(Long, Int, String)].collect().toSet ==
+      Set((1L, 1, "x"), (2L, 3, "x")))
   }
 
-  test("r15/r16: composed-source fail-loud negatives — a windowed " +
-    "derived table whose inner shape no executor serves fails in the " +
-    "recursive route's own parser, and derived-table column-alias lists") {
+  test("r15/r16: composed sources — a windowed derived table whose inner " +
+    "shape no executor serves fails loudly; a derived-table column-alias " +
+    "list routes") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[RankT3]
     input.toDF().createOrReplaceTempView("sql_stream_rank5")
     Seq((1, "x")).toDF("id", "tag").createOrReplaceTempView("sql_dim5")
     // RankT3 carries no timestamp, so the inner OVER (no ORDER BY at
-    // all) is genuinely unplannable — the recursive front-door call must
-    // surface the executor's own loud error, not cross-join or hang
-    val e1 = intercept[Exception](graft.Sql.sql(spark,
+    // all) is genuinely unplannable — the route must surface its own
+    // loud error, not cross-join or hang
+    val e1 = intercept[IllegalArgumentException](graft.Sql.sql(spark,
       """SELECT * FROM (
         |  SELECT b, a, tag,
         |    ROW_NUMBER() OVER (PARTITION BY b ORDER BY a) AS rn
@@ -609,13 +619,88 @@ class SqlSpec extends SparkSpec {
         |        FROM sql_stream_rank5) t
         |  JOIN sql_dim5 d ON t.a = d.id)
         |WHERE rn = 1""".stripMargin))
-    assert(e1.getMessage != null && e1.getMessage.nonEmpty)
-    val e2 = intercept[IllegalArgumentException](graft.Sql.sql(spark,
+    assert(e1.getMessage.contains("ORDER BY"), e1.getMessage)
+    // Spark's analyzer applies the alias list; the rank executor reads
+    // the renamed columns
+    val routed = graft.Sql.sql(spark,
       """SELECT * FROM (
         |  SELECT x, y, ROW_NUMBER() OVER (PARTITION BY y ORDER BY x) AS rn
         |  FROM (SELECT a, b FROM sql_stream_rank5) t(x, y))
-        |WHERE rn = 1""".stripMargin))
-    assert(e2.getMessage.contains("column-alias lists"), e2.getMessage)
+        |WHERE rn = 1""".stripMargin)
+    assert(routed.isStreaming)
+    assert(routed.columns.toSeq == Seq("x", "y", "rn"))
+    val q = routed.writeStream.format("memory").queryName("sqlaliaslist")
+      .outputMode("append").start()
+    input.addData(RankT3(4, 1L, "p"), RankT3(1, 1L, "q"), RankT3(7, 2L, "r"))
+    q.processAllAvailable()
+    input.addData(RankT3(2, 2L, "s"), RankT3(9, 2L, "t"))
+    q.processAllAvailable(); q.stop()
+    // keep-first on x ascending: emissions improve monotonically, so the
+    // smallest logged x per key is the final rank-1 row
+    val fin = spark.table("sqlaliaslist").groupBy("y").agg(min("x").as("x"))
+      .as[(Long, Int)].collect().toSet
+    assert(fin == Set((1L, 1), (2L, 2)), s"got $fin")
+  }
+
+  test("qualified column names over a stream-static join whose inputs " +
+    "share a column name route to the rank executor") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[RankT3]
+    input.toDF().createOrReplaceTempView("sql_stream_qual")
+    Seq((1, "x"), (3, "y"), (5, "z")).toDF("a", "tag")
+      .createOrReplaceTempView("sql_dim_qual")
+    // both inputs carry `a`: unqualified it would be ambiguous
+    val routed = graft.Sql.sql(spark,
+      """SELECT b, a, tag, rn FROM (
+        |  SELECT e.b, e.a, d.tag,
+        |    ROW_NUMBER() OVER (PARTITION BY e.b ORDER BY e.a DESC) AS rn
+        |  FROM sql_stream_qual e JOIN sql_dim_qual d ON e.a = d.a)
+        |WHERE rn = 1""".stripMargin)
+    assert(routed.isStreaming)
+    val q = routed.writeStream.format("memory").queryName("sqlqualrank")
+      .outputMode("append").start()
+    input.addData(RankT3(1, 1L, "x"), RankT3(5, 1L, "y"), RankT3(3, 2L, "z"),
+      RankT3(2, 2L, "u")) // a=2 has no dim row: dropped by the inner join
+    q.processAllAvailable(); q.stop()
+    val fin = spark.table("sqlqualrank").groupBy("b")
+      .agg(max("a").as("a"), max_by(col("tag"), col("a")).as("tag"))
+      .as[(Long, Int, String)].collect().toSet
+    assert(fin == Set((1L, 5, "z"), (2L, 3, "y")), s"got $fin")
+  }
+
+  test("routed streaming statements register no temp views: a session " +
+    "view named like a statement's CTE keeps its rows, and no graft_src* " +
+    "view appears") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    Seq((42, "mine")).toDF("id", "tag").createOrReplaceTempView("e")
+    val input = MemoryStream[RankT3]
+    input.toDF().createOrReplaceTempView("sql_stream_noleak")
+    Seq((1, "x")).toDF("id", "tag").createOrReplaceTempView("sql_dim_noleak")
+    def views(): Set[String] =
+      spark.catalog.listTables().collect().map(_.name).toSet
+    val before = views()
+    Seq(
+      """WITH e AS (SELECT a, b FROM sql_stream_noleak)
+        |SELECT b, a, rn FROM (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY b ORDER BY a) AS rn
+        |  FROM e)
+        |WHERE rn = 1""".stripMargin,
+      """SELECT b, a, rn FROM (
+        |  SELECT b, a, ROW_NUMBER() OVER (PARTITION BY b ORDER BY a) AS rn
+        |  FROM (SELECT a, b FROM sql_stream_noleak WHERE a > 0) t)
+        |WHERE rn = 1""".stripMargin,
+      """SELECT b, a, rn FROM (
+        |  SELECT b, a, ROW_NUMBER() OVER (PARTITION BY b ORDER BY a) AS rn
+        |  FROM sql_stream_noleak s JOIN sql_dim_noleak d ON s.a = d.id)
+        |WHERE rn = 1""".stripMargin)
+      .foreach(stmt => assert(graft.Sql.sql(spark, stmt).isStreaming))
+    assert(!spark.table("e").isStreaming)
+    assert(rows(spark.table("e")) == Seq(Seq(42, "mine")))
+    val gained = views() -- before
+    assert(!gained.exists(_.startsWith("graft_src")), s"gained $gained")
+    spark.catalog.dropTempView("e")
   }
 
   test("r16: rank over a derived table that itself computes a streaming " +

@@ -60,12 +60,17 @@ class ExecutorPropertySpec extends SparkSpec {
            |  MIN(v) OVER w AS min_v,
            |  MAX(v) OVER w AS max_v,
            |  SUM(d) OVER w AS sum_d
-           |FROM t
+           |FROM ep_over
            |WINDOW w AS (PARTITION BY grp ORDER BY $order $frame)""".stripMargin
-      val exec = StreamingOverSql.sqlDf(df, sql, batchNative = false)
-      val native = StreamingOverSql.sqlDf(df, sql, batchNative = true)
+      val exec = WindowSql.sqlDf(df, sql, batchNative = false)
+      val native = WindowSql.sqlDf(df, sql, batchNative = true)
       assert(multisetEqual(exec, native),
         s"seed=$seed frame=$frame: executor disagrees with WindowExec")
+      // the statement text is its own oracle: Spark's evaluation of the
+      // identical SQL over the same rows
+      df.createOrReplaceTempView("ep_over")
+      assert(multisetEqual(exec, spark.sql(sql)),
+        s"seed=$seed frame=$frame: executor disagrees with spark.sql")
       df.unpersist()
     }
   }
@@ -81,6 +86,18 @@ class ExecutorPropertySpec extends SparkSpec {
       val exec = RankOps.rankRows(df, Seq("grp"), keys, n)
       val native = RankOps.rankRowsBatchNative(df, Seq("grp"), keys, n)
       assert(multisetEqual(exec, native), s"seed=$seed n=$n topn")
+      // the same shape as SQL text, through the executor and through
+      // spark.sql: the statement is its own oracle
+      val filter = if (seed % 3 == 0) s"rn = $n" else s"rn <= $n"
+      val sql =
+        s"""SELECT * FROM (
+           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY grp
+           |    ORDER BY v ${if (keys.head._2) "ASC" else "DESC"}, id) AS rn
+           |  FROM ep_rank)
+           |WHERE $filter""".stripMargin
+      df.createOrReplaceTempView("ep_rank")
+      assert(multisetEqual(WindowSql.sqlDf(df, sql, batchNative = false),
+        spark.sql(sql)), s"seed=$seed $filter: executor disagrees with spark.sql")
       df.unpersist()
     }
   }
@@ -170,7 +187,7 @@ class ExecutorPropertySpec extends SparkSpec {
            |FROM t
            |WINDOW w AS (PARTITION BY grp ORDER BY ts, id
            |             ROWS BETWEEN $w PRECEDING AND CURRENT ROW)""".stripMargin
-      val exec = StreamingOverSql.sqlDf(df, sql)
+      val exec = WindowSql.sqlDf(df, sql)
         .withColumn("sdd", col("sdd").cast("string"))
       df.createOrReplaceTempView("ep_distinct")
       val native = spark.sql(

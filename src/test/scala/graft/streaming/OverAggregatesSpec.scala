@@ -67,7 +67,7 @@ class OverAggregatesSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[OverT1]
-    val out = StreamingOverSql.sqlDf(input.toDF(), overRowsSql)
+    val out = WindowSql.sqlDf(input.toDF(), overRowsSql)
     val q = out.writeStream.format("memory").queryName("genover1")
       .outputMode("append").start()
     input.addData(boundedRowsData: _*)
@@ -88,7 +88,7 @@ class OverAggregatesSpec extends SparkSpec {
   test("the same clause collapses identically in batch") {
     import spark.implicits._
     val df = (boundedRowsData ++ boundedRowsData2).toDF()
-    val got = StreamingOverSql.sqlDf(df, overRowsSql)
+    val got = WindowSql.sqlDf(df, overRowsSql)
       .as[(String, Long, Long, Double)].collect().toSeq
     assert(got.sorted == boundedRowsExpected.sorted)
   }
@@ -111,7 +111,7 @@ class OverAggregatesSpec extends SparkSpec {
     val df = data.map { case (a, b, c, ms) =>
       OverT1(a, b, c, new Timestamp(ms))
     }.toDF()
-    val got = StreamingOverSql.sqlDf(df,
+    val got = WindowSql.sqlDf(df,
       """SELECT c, b,
         |  COUNT(a) OVER (ORDER BY rowtime RANGE BETWEEN INTERVAL '1'
         |                 SECOND PRECEDING AND CURRENT ROW) AS cnt,
@@ -146,7 +146,7 @@ class OverAggregatesSpec extends SparkSpec {
       r(26, 1, 7, "Hello world"), r(25, 1, 8, "Hello world"),
       r(22, 1, 9, "Hello world"))
     val input = MemoryStream[OverT1]
-    val out = StreamingOverSql.sqlDf(input.toDF(),
+    val out = WindowSql.sqlDf(input.toDF(),
       """SELECT a, b, c,
         |  SUM(b) OVER w AS sum_b, COUNT(b) OVER w AS cnt_b,
         |  AVG(b) OVER w AS avg_b, MAX(b) OVER w AS max_b,
@@ -188,7 +188,7 @@ class OverAggregatesSpec extends SparkSpec {
     val ev = graft.core.Catalog.load(spark, sf(), "events")
       .withColumn("v2", when(col("event_id") % 7 === 0, lit(null))
         .otherwise(col("value")))
-    val got = StreamingOverSql.sqlDf(ev,
+    val got = WindowSql.sqlDf(ev,
       """SELECT user_id, event_id,
         |  COUNT(v2) OVER w AS cnt_v,
         |  ROUND(SUM(v2) OVER w, 4) AS sum_v,
@@ -230,7 +230,7 @@ class OverAggregatesSpec extends SparkSpec {
               |             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)""".stripMargin
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[OverT5]
-    val out = StreamingOverSql.sqlDf(input.toDF(), q)
+    val out = WindowSql.sqlDf(input.toDF(), q)
     val query = out.writeStream.format("memory").queryName("genproc")
       .outputMode("append").start()
     // group a=4's ring crosses the batch boundary (c=6,7 | c=8,9)
@@ -248,7 +248,7 @@ class OverAggregatesSpec extends SparkSpec {
     assert(got.sorted == expected.sorted,
       s"\n got ${got.sorted}\nwant ${expected.sorted}")
     // batch collapse: the whole input is one arrival sequence
-    val batchGot = StreamingOverSql.sqlDf(data.toDF(), q)
+    val batchGot = WindowSql.sqlDf(data.toDF(), q)
       .as[(Int, Double, Double)].collect().toSeq
     assert(batchGot.sorted == expected.sorted)
   }
@@ -259,20 +259,23 @@ class OverAggregatesSpec extends SparkSpec {
     val df = boundedRowsData.toDF()
     // bounded proc-time RANGE routes to procRangeAggregates (r13); the
     // UNBOUNDED peer form remains outside the proc-time contract
-    val e1 = intercept[RuntimeException](StreamingOverSql.sqlDf(df,
+    val e1 = intercept[RuntimeException](WindowSql.sqlDf(df,
       """SELECT c, COUNT(1) OVER (PARTITION BY c ORDER BY proctime
         |RANGE UNBOUNDED PRECEDING) AS cnt
         |FROM T1""".stripMargin))
     assert(e1.getMessage.contains("proc-time"))
-    val e2 = intercept[Exception](StreamingOverSql.sqlDf(df,
+    val e2 = intercept[Exception](WindowSql.sqlDf(df,
       """SELECT c, SUM(c) OVER (PARTITION BY a ORDER BY rowtime
         |ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS s FROM T1""".stripMargin)
       .collect())
     assert(e2.getMessage.toLowerCase.contains("numeric"))
-    val e3 = intercept[Exception](StreamingOverSql.sqlDf(df,
+    val e3 = intercept[Exception](WindowSql.sqlDf(df,
       """SELECT nope, COUNT(1) OVER (PARTITION BY c ORDER BY rowtime
         |ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS cnt FROM T1""".stripMargin))
-    assert(e3.getMessage.contains("nope"))
+    // Spark's analyzer resolves the pass-through columns and names the
+    // unknown one
+    assert(e3.getMessage.contains("UNRESOLVED_COLUMN") &&
+      e3.getMessage.contains("nope"), e3.getMessage)
   }
 
   test("decimal inputs stay decimal-exact through the frame fold " +
@@ -435,7 +438,7 @@ class OverAggregatesSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[OverT1]
-    val out = StreamingOverSql.sqlDf(input.toDF(), rangeUnbSql)
+    val out = WindowSql.sqlDf(input.toDF(), rangeUnbSql)
     val q = out.writeStream.format("memory").queryName("rangeunb")
       .outputMode("append").start()
     input.addData(rangeUnbData1: _*); q.processAllAvailable()
@@ -468,7 +471,7 @@ class OverAggregatesSpec extends SparkSpec {
         |  ORDER BY rowtime RANGE UNBOUNDED PRECEDING) AS dc
         |FROM T""".stripMargin
     val input = MemoryStream[OverT1]
-    val q = StreamingOverSql.sqlDf(input.toDF(), sql)
+    val q = WindowSql.sqlDf(input.toDF(), sql)
       .writeStream.format("memory").queryName("distover")
       .outputMode("append").start()
     input.addData(data.take(5): _*); q.processAllAvailable()
@@ -488,7 +491,7 @@ class OverAggregatesSpec extends SparkSpec {
       want.sortBy(r => (r._2, r._3, Option(r._1).getOrElse(""))),
       s"got $got")
     // batch collapse agrees
-    val batch = StreamingOverSql.sqlDf(data.toDF(), sql)
+    val batch = WindowSql.sqlDf(data.toDF(), sql)
       .as[(String, Long, Long)].collect().toSeq
     assert(batch.sortBy(r => (r._2, r._3, Option(r._1).getOrElse(""))) ==
       want.sortBy(r => (r._2, r._3, Option(r._1).getOrElse(""))))
@@ -503,7 +506,7 @@ class OverAggregatesSpec extends SparkSpec {
       .map { case (i, v) => OverT1(1, i, "x", sTs(i)) -> v }
       .map { case (t, v) => (t.a, t.b, v, t.rowtime) }
       .toDF("a", "b", "v", "rowtime")
-    val got = StreamingOverSql.sqlDf(df,
+    val got = WindowSql.sqlDf(df,
       """SELECT b, COUNT(DISTINCT v) OVER w AS dc,
         |  SUM(DISTINCT v) OVER w AS ds
         |FROM T
@@ -513,7 +516,7 @@ class OverAggregatesSpec extends SparkSpec {
     assert(got == Seq((1, 1L, 10.0), (2, 1L, 10.0), (3, 2L, 30.0),
       (4, 2L, 30.0), (5, 2L, 30.0)), s"got $got")
     // the native route never takes DISTINCT (Spark WindowExec rejects it)
-    val native = StreamingOverSql.sqlDf(df,
+    val native = WindowSql.sqlDf(df,
       """SELECT b, COUNT(DISTINCT v) OVER w AS dc
         |FROM T
         |WINDOW w AS (PARTITION BY a ORDER BY rowtime, b
@@ -523,7 +526,7 @@ class OverAggregatesSpec extends SparkSpec {
       Seq((1, 1L), (2, 1L), (3, 2L), (4, 2L), (5, 2L)))
     // MIN(DISTINCT) is accepted and equals the plain MIN (SQL; the
     // reference's proc-time distinct IT uses it)
-    val m = StreamingOverSql.sqlDf(df,
+    val m = WindowSql.sqlDf(df,
       """SELECT b, MIN(DISTINCT v) OVER (PARTITION BY a ORDER BY rowtime, b
         |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS m
         |FROM T""".stripMargin)
@@ -549,7 +552,7 @@ class OverAggregatesSpec extends SparkSpec {
     // streaming across two micro-batches (the formerly-crashing path:
     // unboundedOut hit sys.error on a distinct MIN/MAX)
     val input = MemoryStream[OverT1]
-    val q = StreamingOverSql.sqlDf(input.toDF(), rowsSql)
+    val q = WindowSql.sqlDf(input.toDF(), rowsSql)
       .writeStream.format("memory").queryName("distunb")
       .outputMode("append").start()
     input.addData(data.take(2): _*); q.processAllAvailable()
@@ -563,12 +566,12 @@ class OverAggregatesSpec extends SparkSpec {
     // batch: executor collapse and the native WindowExec route agree
     // (normalization makes MIN/MAX(DISTINCT) native-eligible)
     for (native <- Seq(false, true)) {
-      val b = StreamingOverSql.sqlDf(data.toDF(), rowsSql,
+      val b = WindowSql.sqlDf(data.toDF(), rowsSql,
         batchNative = native).as[(Int, Double, Double)].collect().toSeq
       assert(b.sorted == want.sorted, s"native=$native got $b")
     }
     // RANGE UNBOUNDED (peer semantics) takes the same normalized path
-    val r = StreamingOverSql.sqlDf(data.toDF(),
+    val r = WindowSql.sqlDf(data.toDF(),
       """SELECT b, MAX(DISTINCT b) OVER (PARTITION BY a ORDER BY rowtime
         |  RANGE UNBOUNDED PRECEDING) AS mx
         |FROM T""".stripMargin, batchNative = false)
@@ -681,7 +684,7 @@ class OverAggregatesSpec extends SparkSpec {
               |             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)""".stripMargin
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[OverT5]
-    val query = StreamingOverSql.sqlDf(input.toDF(), q)
+    val query = WindowSql.sqlDf(input.toDF(), q)
       .writeStream.format("memory").queryName("procdist")
       .outputMode("append").start()
     input.addData(data.take(8): _*); query.processAllAvailable()
@@ -702,16 +705,16 @@ class OverAggregatesSpec extends SparkSpec {
     "the reference rows; the ROWS twin differs exactly on the tied rows") {
     import spark.implicits._
     val df = (rangeUnbData1 ++ rangeUnbData2).toDF()
-    val exec = StreamingOverSql.sqlDf(df, rangeUnbSql, batchNative = false)
+    val exec = WindowSql.sqlDf(df, rangeUnbSql, batchNative = false)
       .as[(Long, Int, String, Double, Long, Double, Double, Double)]
       .collect().toSeq
     assert(exec.sorted == rangeUnbExpected.sorted)
-    val native = StreamingOverSql.sqlDf(df, rangeUnbSql, batchNative = true)
+    val native = WindowSql.sqlDf(df, rangeUnbSql, batchNative = true)
       .as[(Long, Int, String, Double, Long, Double, Double, Double)]
       .collect().toSeq
     assert(native.sorted == rangeUnbExpected.sorted)
     // ROWS UNBOUNDED must NOT share frames across the ties
-    val rows = StreamingOverSql.sqlDf(df,
+    val rows = WindowSql.sqlDf(df,
       rangeUnbSql.replace("RANGE BETWEEN", "ROWS BETWEEN"),
       batchNative = false)
       .as[(Long, Int, String, Double, Long, Double, Double, Double)]

@@ -3,10 +3,11 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.OverSql
 
-/** The streaming-OVER SQL front-end must be a faithful dispatcher: each
-  * SQL shape returns bit-identical rows to the Scala-API operator it
-  * routes onto, and anything outside the operator contract fails loudly
-  * at parse time rather than mis-executing. */
+/** The streaming-OVER SQL front-end ([[WindowSql.sqlDf]]) must be a
+  * faithful dispatcher: each SQL shape returns bit-identical rows to the
+  * Scala-API operator it routes onto, and anything outside the operator
+  * contract fails loudly when the statement is read rather than
+  * mis-executing. */
 class StreamingOverSqlSpec extends SparkSpec {
 
   private def events = StatefulOps.typedEvents(spark, sf()).toDF()
@@ -30,7 +31,7 @@ class StreamingOverSqlSpec extends SparkSpec {
   test("proctime ORDER BY routes to the proc-time operators") {
     // batch collapse: a single batch is one arrival sequence, so the
     // proc-rows route emits exactly one framed row per input row
-    val df = StreamingOverSql.sqlDf(
+    val df = WindowSql.sqlDf(
       events.orderBy("user_id", "ts", "event_id"),
       """SELECT user_id, event_id, COUNT(*) OVER w AS n_in_frame
         |FROM events
@@ -45,7 +46,7 @@ class StreamingOverSqlSpec extends SparkSpec {
     import spark.implicits._
     def rejectsOn(df: org.apache.spark.sql.DataFrame, sql: String,
         needle: String): Unit = {
-      val e = intercept[Exception](StreamingOverSql.sqlDf(df, sql))
+      val e = intercept[Exception](WindowSql.sqlDf(df, sql))
       assert(e.getMessage != null && e.getMessage.contains(needle),
         s"wrong error for: $sql\n got: ${e.getMessage}")
     }
@@ -81,6 +82,23 @@ class StreamingOverSqlSpec extends SparkSpec {
     rejects(
       """SELECT user_id, COUNT(*) OVER missing AS c FROM events""",
       "undefined window")
+    // window functions outside the executors' contract name themselves
+    // and the supported set, never a misleading column error
+    rejects(
+      """SELECT user_id, LAG(value) OVER w AS prev FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
+      "LAG() is not supported on the streaming OVER/rank route; " +
+        "supported: ROW_NUMBER, COUNT, SUM, AVG, MIN, MAX")
+    rejects(
+      """SELECT user_id, NTILE(2) OVER w AS half FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
+      "NTILE() is not supported on the streaming OVER/rank route")
+    // a ROWS frame counts rows: an INTERVAL bound is not a row count
+    rejects(
+      """SELECT user_id, COUNT(*) OVER w AS c FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+        |  ROWS BETWEEN INTERVAL '1' SECOND PRECEDING AND CURRENT ROW)""".stripMargin,
+      "unsupported OVER frame")
   }
 
   test("the native batch route is row-identical to the executor's " +
@@ -114,8 +132,8 @@ class StreamingOverSqlSpec extends SparkSpec {
         |  RANGE BETWEEN INTERVAL '30' DAY PRECEDING AND CURRENT ROW)
         |ORDER BY o_custkey, o_orderkey""".stripMargin)
     shapes.foreach { q =>
-      val native = StreamingOverSql.sqlDf(orders, q)
-      val exec = StreamingOverSql.sqlDf(orders, q, batchNative = false)
+      val native = WindowSql.sqlDf(orders, q)
+      val exec = WindowSql.sqlDf(orders, q, batchNative = false)
       assert(native.schema.map(f => (f.name, f.dataType)) ==
         exec.schema.map(f => (f.name, f.dataType)), q)
       assert(rows(native) == rows(exec), q)
@@ -126,7 +144,7 @@ class StreamingOverSqlSpec extends SparkSpec {
     }
     // a RANGE frame with a composite order key is NOT native-expressible:
     // the entry must fall back to the executor, not mis-plan
-    val fallback = StreamingOverSql.sqlDf(orders,
+    val fallback = WindowSql.sqlDf(orders,
       """SELECT o_custkey, o_orderkey, COUNT(*) OVER w AS c
         |FROM t WINDOW w AS (PARTITION BY o_custkey
         |  ORDER BY o_orderdate, o_orderkey
@@ -138,7 +156,7 @@ class StreamingOverSqlSpec extends SparkSpec {
   }
 
   test("AVG derives as sum/count from the operator output") {
-    val df = StreamingOverSql.sqlDf(events,
+    val df = WindowSql.sqlDf(events,
       """SELECT user_id, event_id, AVG(value) OVER w AS running_avg
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
