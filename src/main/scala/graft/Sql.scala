@@ -1,6 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{PersistedView, UnresolvedRelation, UnresolvedStar, UnresolvedTVFAliases, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression, LateralSubquery, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, AlterViewAs, CacheTableAsSelect, CreateView, GlobalLimit, Join, LateralJoin, LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.CreateViewCommand
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.streaming.{GroupWindowSql, MatchRecognizeSql, TemporalSql, WindowSql}
 
 /** The single SQL front door — parity with the reference's one
   * `sqlQuery(String)` entry (reference: flink-table
@@ -10,98 +18,200 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * graft.streaming.MatchRecognizeSql.sqlDf]], [[
   * graft.streaming.WindowSql.sqlDf]]).
   *
-  * Division of labor: Spark SQL already evaluates OVER windows,
-  * ROW_NUMBER filters, joins, subqueries and unions natively in batch —
-  * the forms it cannot parse are MATCH_RECOGNIZE and three reference
-  * spellings rewritten in front of everything else, batch and
-  * streaming alike: group windows (TUMBLE/HOP/SESSION + auxiliaries →
-  * `window()`/`session_window()`, [[graft.streaming.GroupWindowSql]]),
-  * `UNNEST` (→ `LATERAL explode`/`inline`,
-  * [[graft.streaming.UnnestSql]]), and the temporal-join spellings
-  * (`LATERAL TABLE (fn(ts))` / `FOR SYSTEM_TIME AS OF` → versioned
-  * equi-joins, [[graft.streaming.TemporalSql]]). For pattern matching
-  * the router extracts each `<table> MATCH_RECOGNIZE ( ... )` or
-  * `(subquery) MATCH_RECOGNIZE ( ... )` source from the statement,
-  * executes it through the existing general-schema executor (the
-  * subquery form runs through `spark.sql` first — a windowed aggregate
-  * feeding pattern matching is the reference's own IT composition),
-  * registers the result as a temp view, and hands the spliced
-  * statement to `spark.sql` — the surrounding query (joins,
-  * aggregations, set ops over the clause result) composes untouched. Tables named in the statement must be resolvable through
-  * the session catalog (temp views or tables), exactly as in the
-  * reference's registered-table model.
+  * Division of labor: a statement is parsed ONCE, by Spark's parser,
+  * the way the reference's planner rules match nodes of its one Calcite
+  * tree. Spark SQL evaluates OVER windows, ROW_NUMBER filters, joins,
+  * subqueries and unions natively in batch; graft adds four steps in
+  * front of it, batch and streaming alike:
+  *
+  *  1. a text pre-pass for exactly the spellings Spark's parser rejects —
+  *     each `<table> MATCH_RECOGNIZE (…)` or `(subquery) MATCH_RECOGNIZE
+  *     (…)` source becomes a placeholder relation name (Spark has no
+  *     MATCH_RECOGNIZE grammar), `FOR SYSTEM_TIME AS OF <column>` becomes
+  *     a versioned join ([[graft.streaming.TemporalSql]]; Spark's time
+  *     travel refuses column references), and the precision suffix of
+  *     `INTERVAL '5.111' SECOND(1,3)` is dropped. All three share one
+  *     [[Scan]], so string literals, quoted identifiers and comments
+  *     never match;
+  *  2. one `parsePlan`;
+  *  3. one rewrite of the parsed plan ([[rewrite]]): each placeholder
+  *     becomes a `SubqueryAlias` over the pattern executor's plan — the
+  *     subquery source runs through this same entry first, as a windowed
+  *     aggregate feeding pattern matching is the reference's own IT
+  *     composition; `UNNEST(x)` and `LATERAL TABLE (udtf(x))` become
+  *     Spark's lateral generators (`explode` for one alias column,
+  *     `inline` for more), `LATERAL TABLE (fn(ts))` over a registered
+  *     temporal table function a versioned equi-join, and the group
+  *     windows `TUMBLE`/`HOP`/`SESSION` with their auxiliaries
+  *     `window()`/`session_window()` grouping
+  *     ([[graft.streaming.GroupWindowSql]]);
+  *  4. the streaming routes below, else `Bridge.ofRows` on the rewritten
+  *     plan — the same call `spark.sql` makes on its own parse. A view
+  *     defined by a statement that steps 1 or 3 changed stores its
+  *     analyzed plan, not its text ([[storedAsPlan]]).
+  *
+  * Quotes, escapes and comments are Spark's lexer's business, query
+  * blocks are `Aggregate` nodes, and alias column counts are
+  * `UnresolvedTVFAliases` — no step re-derives them from text, and no
+  * step registers a temp view. Tables named in the statement must be
+  * resolvable through the session catalog (temp views or tables),
+  * exactly as in the reference's registered-table model.
   *
   * Streaming tables take the same door: a statement whose window
   * expressions compute OVER streaming data routes rank/dedup
   * (`ROW_NUMBER()` filter) and OVER-frame shapes to the stateful
-  * executors ([[routeStreaming]]) — Spark SQL cannot plan either on a
-  * stream — and leaves natively streamable statements (projections,
-  * filters, group/window aggregates, stream-static joins, windows on
-  * the STATIC side of a stream-static join, CTEs over any of those)
-  * with Spark. This routing reads the parsed plan, never the raw text,
-  * and registers no view. The df-parameterized per-family entries
-  * remain for sources not registered in the catalog.
+  * executors ([[graft.streaming.WindowSql.route]]), and sort / limit
+  * shapes likewise ([[routeStreamingSort]]) — Spark SQL cannot plan
+  * either on a stream — and leaves natively streamable statements
+  * (projections, filters, group/window aggregates, stream-static joins,
+  * windows on the STATIC side of a stream-static join, CTEs over any of
+  * those) with Spark. The df-parameterized per-family entries remain
+  * for sources not registered in the catalog.
   *
   * DML parity: the reference's `sqlUpdate` accepts exactly INSERT /
   * CREATE TABLE / DROP TABLE (TableEnvironmentImpl.java:339-384); all
   * three are Spark SQL statements and flow through this same entry —
-  * including an INSERT whose SELECT embeds a MATCH_RECOGNIZE clause
-  * (the splicer is position-based, so it works inside any statement
-  * form). Pinned by `SqlSpec`.
+  * including an INSERT whose SELECT embeds a MATCH_RECOGNIZE clause.
+  * Pinned by `SqlSpec`.
   */
 object Sql {
 
   def sql(spark: SparkSession, text: String): DataFrame = {
-    // r16: the reference's PROC-TIME TUMBLE spelling routes to its own
-    // executor (GroupWindowSql.procTumbleRoute; wall-clock window starts
-    // never surface through SQL) before the text pipeline — HOP/SESSION
-    // over proc-time remain tested rejections inside the rewrite
-    graft.streaming.GroupWindowSql.procTumbleRoute(spark, text)
-      .foreach(df => return df)
-    // group-window SQL (TUMBLE/HOP/SESSION + auxiliaries) becomes
-    // Spark's native window()/session_window() grouping — a pure text
-    // rewrite, so the clause composes anywhere in the statement
-    // (including inside a MATCH_RECOGNIZE source subquery)
-    val gw = graft.streaming.TemporalSql.rewrite(
-      graft.streaming.UnnestSql.rewrite(
-        graft.streaming.GroupWindowSql.rewrite(text)))
-    val spliced = spliceMatchRecognize(spark, gw)
-    routeStreaming(spark, spliced).getOrElse(spark.sql(spliced))
+    val (placed, matches) = placeMatchRecognize(text)
+    val spelled = dropIntervalPrecision(TemporalSql.rewrite(placed))
+    // an unparsable statement goes to spark.sql for its real error
+    val parsed = scala.util.Try(spark.sessionState.sqlParser.parsePlan(spelled))
+      .getOrElse(return spark.sql(spelled))
+    val rewritten = rewrite(spark, parsed, matches)
+    val plan =
+      if (spelled == text && rewritten == parsed) rewritten
+      else storedAsPlan(rewritten)
+    val prepared = WindowSql.prepare(spark, plan)
+    WindowSql.route(spark, prepared)
+      .orElse(routeStreamingSort(spark, prepared))
+      .getOrElse(Bridge.ofRows(spark, plan))
   }
+
+  /** A view-defining statement that step 1 or 3 changed. Spark stores a
+    * view's SQL text and re-parses it on every read, and that text still
+    * spells what only this entry understands (a group window, UNNEST,
+    * LATERAL TABLE, a MATCH_RECOGNIZE placeholder). A temp view stores
+    * the analyzed plan instead; the text-only forms are refused. */
+  private def storedAsPlan(plan: LogicalPlan): LogicalPlan = plan match {
+    case c: CreateViewCommand if c.viewType != PersistedView =>
+      c.copy(originalText = None)
+    case _: CreateView | _: CreateViewCommand | _: AlterViewAs |
+        _: CacheTableAsSelect => throw new IllegalArgumentException(
+      s"${plan.nodeName}: Spark stores this view as SQL text and re-parses " +
+        "it on every read, and the text uses a spelling only graft.Sql.sql " +
+        "rewrites; define it with CREATE [OR REPLACE] TEMP VIEW instead")
+    case p => p
+  }
+
+  /** Where an embedded MATCH_RECOGNIZE clause reads from — a table name
+    * (Left) or a subquery's text (Right) — and the clause itself. */
+  private final case class Match(source: Either[String, String],
+      clause: String)
+
+  /** Step 3: the one rewrite of the parsed statement — CTE bodies and
+    * subquery expressions included. */
+  private def rewrite(spark: SparkSession, parsed: LogicalPlan,
+      matches: Map[String, Match]): LogicalPlan = {
+    val relations = everywhere(parsed) {
+      case r: UnresolvedRelation
+          if matches.contains(r.multipartIdentifier.mkString(".")) =>
+        val name = r.multipartIdentifier.mkString(".")
+        val m = matches(name)
+        val src = m.source.fold(spark.table, sql(spark, _))
+        SubqueryAlias(name, MatchRecognizeSql
+          .sqlDf(src, s"SELECT * FROM graft_mr_src ${m.clause}")
+          .queryExecution.analyzed)
+      // `UNNEST(x)` right of a join is what Spark parses for
+      // `LATERAL explode|inline(x)` in the same position
+      case Join(left, right @ FromCall("UNNEST", _), joinType, cond, _) =>
+        LateralJoin(left, LateralSubquery(generator(right)), joinType, cond)
+      case j @ LateralJoin(left, sub, joinType, cond)
+          if FromCall.unapply(sub.plan).isDefined =>
+        versionedJoin(spark, Some(left), sub.plan, joinType, cond)
+          .getOrElse(j.copy(right = sub.withNewPlan(generator(sub.plan))))
+      // no left side: a plain generator
+      case p @ FromCall(_, _) =>
+        versionedJoin(spark, None, p, Inner, None).getOrElse(generator(p))
+    }
+    GroupWindowSql.translate(spark, relations)
+  }
+
+  /** A FROM-clause `UNNEST(…)` or `TABLE(…)` call (the latter is how
+    * Spark parses `LATERAL TABLE (…)`): the call's kind and node, under
+    * its optional alias and column list. */
+  private object FromCall {
+    def unapply(p: LogicalPlan): Option[(String, UnresolvedTableValuedFunction)] =
+      p match {
+        case SubqueryAlias(_, c) => unapply(c)
+        case a: UnresolvedTVFAliases => unapply(a.child)
+        case f: UnresolvedTableValuedFunction if f.name.size == 1 &&
+            Set("UNNEST", "TABLE").contains(f.name.head.toUpperCase) =>
+          Some((f.name.head.toUpperCase, f))
+        case _ => None
+      }
+  }
+
+  /** The call renamed to Spark's generator: `explode` for one alias
+    * column (or none), `inline` for an array of rows expanded to two or
+    * more. A two-column alias over a MAP operand would pick `inline` and
+    * fail in the analyzer — spell map expansion `LATERAL explode(m)`. */
+  private def generator(p: LogicalPlan): LogicalPlan = {
+    val cols = p.collectFirst { case a: UnresolvedTVFAliases => a.outputNames.size }
+    val fn = Seq(if (cols.exists(_ >= 2)) "inline" else "explode")
+    p.transformUp {
+      case a: UnresolvedTVFAliases => a.copy(name = fn)
+      case f: UnresolvedTableValuedFunction => f.copy(name = fn)
+    }
+  }
+
+  /** `LATERAL TABLE (fn(ts)) AS r` over a registered temporal `fn`: the
+    * versioned join of [[graft.streaming.TemporalSql]]; None for any
+    * other call. */
+  private def versionedJoin(spark: SparkSession, left: Option[LogicalPlan],
+      right: LogicalPlan, joinType: JoinType,
+      cond: Option[Expression]): Option[LogicalPlan] = {
+    val alias = right match {
+      case SubqueryAlias(id, _) => Some(id.name)
+      case _ => None
+    }
+    FromCall.unapply(right).collect { case ("TABLE", f) => f }.flatMap(f =>
+      TemporalSql.versionedJoin(spark, left, alias, f.functionArgs, joinType, cond))
+  }
+
+  /** `rule` applied top-down to every node of `plan`, of its subquery
+    * expressions and of its CTE bodies (`UnresolvedWith.cteRelations`
+    * are not children). */
+  private[graft] def everywhere(plan: LogicalPlan)(
+      rule: PartialFunction[LogicalPlan, LogicalPlan]): LogicalPlan =
+    plan.transformDownWithSubqueries(rule.orElse {
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (n, body, depth) =>
+          (n, everywhere(body)(rule).asInstanceOf[SubqueryAlias], depth)
+      })
+    })
+
+  /** Every node of `plan`, of its subquery expressions and of its CTE
+    * bodies. */
+  private[graft] def nodes(plan: LogicalPlan): Seq[LogicalPlan] =
+    plan.collectWithSubqueries {
+      case w: UnresolvedWith => w +: w.cteRelations.flatMap(r => nodes(r._2))
+      case n => Seq(n)
+    }.flatten
 
   /** Statements over a STREAMING registered table that Spark SQL cannot
-    * plan on a stream — the reference's rank/dedup `ROW_NUMBER()` filter
-    * (StreamExecDeduplicateRule / StreamExecRank), OVER frame aggregates
-    * (StreamExecOverAggregate), and the sort / limit shapes — route to
-    * the stateful executors, so one `sql(text)` call serves them by
-    * table NAME just like everything else. The route reads the PARSED
-    * plan, never the raw text: [[graft.streaming.WindowSql.route]]
-    * splices an executor under each window Project whose child reads a
-    * stream (any child Spark can analyze — joins, derived tables, CTEs,
-    * qualified columns), and a window entirely on the static side of a
-    * stream-static statement, or OVER/ROW_NUMBER inside a string
-    * literal or comment, never trips it. Spark itself could never run
-    * the routed statements (UnsupportedOperationChecker rejects
-    * rank/OVER/sort on streams at query start), so there is nothing the
-    * routing can shadow. Everything else (streaming or batch) stays with
-    * Spark SQL. */
-  private def routeStreaming(spark: SparkSession,
-      text: String): Option[DataFrame] = {
-    import graft.streaming.WindowSql
-    // parse only — an unparsable statement falls through to spark.sql
-    // for its real error
-    val parsed = scala.util.Try(spark.sessionState.sqlParser.parsePlan(text))
-      .getOrElse(return None)
-    val plan = WindowSql.prepare(spark, parsed)
-    WindowSql.route(spark, plan).orElse(routeStreamingSort(spark, plan))
-  }
-
-  /** Streaming sort / limit shapes Spark cannot plan on a stream, routed
-    * to the stateful executors with the same child splice as the window
-    * route: the Sort or Limit node is replaced by the executor's plan
-    * over the projection's (streaming, aggregate-free) child, and Spark
-    * analyzes the projection above it. Everything else falls through
-    * untouched:
+    * plan on a stream: the sort / limit shapes route to the stateful
+    * executors with the same child splice as the window route — the
+    * Sort or Limit node is replaced by the executor's plan over the
+    * projection's (streaming, aggregate-free) child, and Spark analyzes
+    * the projection above it. Spark itself could never run the routed
+    * statements (UnsupportedOperationChecker rejects sort/limit on
+    * streams at query start), so there is nothing the routing can
+    * shadow. Everything else falls through untouched:
     *
     *  - `ORDER BY <rowtime>[, ties]` (no LIMIT) — the reference's
     *    temporal sort (TemporalSortITCase; StreamExecSortRule admits
@@ -118,13 +228,8 @@ object Sql {
     *    executor ordered on the arrival pseudo-column. OFFSET is not
     *    routed (Spark then rejects the stream loudly). */
   private def routeStreamingSort(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedStar
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression, Literal, SortOrder}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
-    import org.apache.spark.sql.graftbridge.Bridge
-    import graft.streaming.{RankOps, RowSort, WindowSql}
+      plan: LogicalPlan): Option[DataFrame] = {
+    import graft.streaming.{RankOps, RowSort}
 
     // splice `exec` under the projection when its child is a stream
     def under(p: LogicalPlan, keys: => Seq[Expression])(
@@ -144,6 +249,12 @@ object Sql {
           }, s.plan))
         }
     }
+    // the global top-n; over another graft stateful executor (an
+    // embedded MATCH_RECOGNIZE) it chains as the window route's rank does
+    def ranked(df: DataFrame, order: Seq[(String, Boolean)], n: Int) = {
+      WindowSql.allowChainedStateful(spark, df)
+      RankOps.rankRows(df, Nil, order, n)
+    }
     def checked(order: Seq[SortOrder], requireAsc: Boolean): Seq[SortOrder] =
       order.map {
         case o if (o.direction == Ascending ||
@@ -161,13 +272,11 @@ object Sql {
           LocalLimit(_, Sort(order, true, child, _))) =>
         lazy val o = checked(order, requireAsc = false)
         under(child, o.map(_.child)) { (df, cols) =>
-          RankOps.rankRows(df, Nil, cols.zip(o.map(_.direction == Ascending)), n)
+          ranked(df, cols.zip(o.map(_.direction == Ascending)), n)
         }
       // LIMIT n -> first n rows in arrival order
       case GlobalLimit(Literal(n: Int, _), LocalLimit(_, child)) =>
-        under(child, Nil) { (df, _) =>
-          RankOps.rankRows(df, Nil, Seq(("proctime", true)), n)
-        }
+        under(child, Nil) { (df, _) => ranked(df, Seq(("proctime", true)), n) }
       // bare ORDER BY -> event-time (temporal) sort
       case Sort(order, true, child, _) =>
         under(child, checked(order, requireAsc = true).map(_.child)) {
@@ -177,123 +286,166 @@ object Sql {
     }).map(Bridge.ofRows(spark, _))
   }
 
-  /** Replace every `<table> MATCH_RECOGNIZE (...)` reference with a temp
-    * view holding the executed clause result; returns the spliced
-    * statement. Exposed for tests. */
-  private[graft] def spliceMatchRecognize(spark: SparkSession,
-      text: String): String = {
+  /** Step 1: every `<table> MATCH_RECOGNIZE (…)` or `(subquery)
+    * MATCH_RECOGNIZE (…)` source → a placeholder relation name that the
+    * statement spells nowhere else (so a session view of that name is
+    * neither read nor replaced); returns the text and each placeholder's
+    * source and clause. The reference accepts both source forms
+    * (MatchRecognizeITCase.testMatchRecognizeAppliedToWindowedGrouping). */
+  private def placeMatchRecognize(text: String): (String, Map[String, Match]) = {
+    val s = new Scan(text)
+    val lower = text.toLowerCase
+    val names = Iterator.from(0).map(n => s"graft_mr_$n").filterNot(lower.contains)
+    val out = new StringBuilder
+    val found = Map.newBuilder[String, Match]
+    var i = 0
+    var kw = s.indexOfWord("MATCH_RECOGNIZE", 0)
+    while (kw >= 0) {
+      // backtrack over whitespace to the source
+      var e = kw - 1
+      while (e >= i && text.charAt(e).isWhitespace) e -= 1
+      val (source, start) =
+        if (e >= i && text.charAt(e) == ')' && s.code(e)) {
+          val open = s.balancedOpen(e)
+          require(open >= i, "unbalanced subquery before MATCH_RECOGNIZE")
+          val sub = text.substring(open + 1, e).trim
+          require(sub.nonEmpty, "empty subquery before MATCH_RECOGNIZE")
+          (Right(sub), open)
+        } else {
+          val idEnd = e + 1
+          while (e >= i && (Scan.isIdentChar(text.charAt(e)) ||
+            text.charAt(e) == '.')) e -= 1
+          val table = text.substring(e + 1, idEnd)
+          require(table.nonEmpty && !table.head.isDigit,
+            s"MATCH_RECOGNIZE must follow a table reference or " +
+              s"(subquery), found " +
+              s"'${text.substring(math.max(i, kw - 20), kw)}'")
+          (Left(table), e + 1)
+        }
+      // forward: the balanced clause body
+      var j = kw + "MATCH_RECOGNIZE".length
+      while (j < text.length && text.charAt(j).isWhitespace) j += 1
+      require(j < text.length && text.charAt(j) == '(',
+        "expected '(' after MATCH_RECOGNIZE")
+      val close = s.balancedClose(j)
+      val name = names.next()
+      found += name -> Match(source, text.substring(kw, close + 1))
+      out.append(text.substring(i, start)).append(name)
+      i = close + 1
+      kw = s.indexOfWord("MATCH_RECOGNIZE", i)
+    }
+    (out.append(text.substring(i)).result(), found.result())
+  }
+
+  private val Precision = java.util.regex.Pattern.compile(
+    """INTERVAL\s*'[^']*'\s*(?:DAY|HOUR|MINUTE|SECOND)(\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))""",
+    java.util.regex.Pattern.CASE_INSENSITIVE)
+
+  /** Step 1: `INTERVAL '5.111' SECOND(1,3)` → `INTERVAL '5.111' SECOND`.
+    * The reference's precision suffix only constrains the literal's
+    * printed digits — the value already carries them. */
+  private def dropIntervalPrecision(text: String): String = {
+    val s = new Scan(text)
+    val m = Precision.matcher(text)
     val out = new StringBuilder
     var i = 0
-    var n = 0
-    while (i < text.length) {
-      val kw = indexOfWord(text, "MATCH_RECOGNIZE", i)
-      if (kw < 0) { out.append(text.substring(i)); i = text.length }
-      else {
-        // backtrack over whitespace to the source: a table identifier or
-        // a parenthesized subquery (reference accepts both —
-        // MatchRecognizeITCase.testMatchRecognizeAppliedToWindowedGrouping)
-        var e = kw - 1
-        while (e >= i && text.charAt(e).isWhitespace) e -= 1
-        val (srcDf, srcStart) =
-          if (e >= i && text.charAt(e) == ')') {
-            val open = balancedOpen(text, e)
-            require(open >= i, "unbalanced subquery before MATCH_RECOGNIZE")
-            val sub = text.substring(open + 1, e).trim
-            require(sub.nonEmpty, "empty subquery before MATCH_RECOGNIZE")
-            (spark.sql(sub), open)
-          } else {
-            val idEnd = e + 1
-            while (e >= i && (text.charAt(e).isLetterOrDigit ||
-              text.charAt(e) == '_' || text.charAt(e) == '.')) e -= 1
-            val table = text.substring(e + 1, idEnd)
-            require(table.nonEmpty && !table.head.isDigit,
-              s"MATCH_RECOGNIZE must follow a table reference or " +
-                s"(subquery), found " +
-                s"'${text.substring(math.max(i, kw - 20), kw)}'")
-            (spark.table(table), e + 1)
-          }
-        // forward: the balanced clause body
-        var j = kw + "MATCH_RECOGNIZE".length
-        while (j < text.length && text.charAt(j).isWhitespace) j += 1
-        require(j < text.length && text.charAt(j) == '(',
-          "expected '(' after MATCH_RECOGNIZE")
-        val close = balancedClose(text, j)
-        val clause = text.substring(kw, close + 1)
-        val view = s"graft_mr_$n"
-        n += 1
-        graft.streaming.MatchRecognizeSql
-          .sqlDf(srcDf, s"SELECT * FROM graft_mr_src $clause")
-          .createOrReplaceTempView(view)
-        out.append(text.substring(i, srcStart)).append(view)
-        i = close + 1
+    var k = s.indexOfWord("INTERVAL", 0)
+    while (k >= 0) {
+      if (m.region(k, text.length).lookingAt()) {
+        out.append(text.substring(i, m.start(1)))
+        i = m.end(1)
       }
+      k = s.indexOfWord("INTERVAL", math.max(k + 1, i))
     }
-    out.result()
+    out.append(text.substring(i)).result()
   }
 
-  /** First occurrence of `word` at or after `from`, case-insensitive, on
-    * identifier boundaries, outside single-quoted string literals. */
-  private def indexOfWord(s: String, word: String, from: Int): Int = {
-    val u = s.toUpperCase
-    var i = from
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 2 // skip the escaped char (ADVICE r14)
-      else if (c == '\'') { inStr = !inStr; i += 1 }
-      else if (!inStr && u.startsWith(word, i) &&
-          (i == 0 || !isIdentChar(s.charAt(i - 1))) &&
-          (i + word.length >= s.length || !isIdentChar(s.charAt(i + word.length))))
-        return i
-      else i += 1
+  /** The one text scanner of the pre-pass: `code(i)` tells whether
+    * character `i` of `text` is SQL code — outside `'…'` and `"…"`
+    * literals (backslash escapes honoured; Spark's default dialect reads
+    * both as strings), backtick identifiers, `--` line comments and
+    * (nested) block comments. */
+  private[graft] final class Scan(val text: String) {
+    val code: Array[Boolean] = {
+      val m = new Array[Boolean](text.length)
+      def quoted(from: Int, q: Char, escapes: Boolean): Int = {
+        var j = from + 1
+        while (j < text.length && text.charAt(j) != q)
+          j += (if (escapes && text.charAt(j) == '\\') 2 else 1)
+        j + 1
+      }
+      def blockComment(from: Int): Int = {
+        var depth = 0
+        var j = from
+        do {
+          if (text.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (text.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        } while (depth > 0 && j < text.length)
+        j
+      }
+      var i = 0
+      while (i < text.length) {
+        val c = text.charAt(i)
+        if (c == '\'' || c == '"') i = quoted(i, c, escapes = true)
+        else if (c == '`') i = quoted(i, c, escapes = false)
+        else if (text.startsWith("--", i)) {
+          val nl = text.indexOf('\n', i)
+          i = if (nl < 0) text.length else nl
+        } else if (text.startsWith("/*", i)) i = blockComment(i)
+        else { m(i) = true; i += 1 }
+      }
+      m
     }
-    -1
+
+    /** First code occurrence of `word` at or after `from`,
+      * case-insensitive, on identifier boundaries; -1 when none. */
+    def indexOfWord(word: String, from: Int): Int = {
+      var i = from
+      while (i + word.length <= text.length) {
+        if (code(i) && text.regionMatches(true, i, word, 0, word.length) &&
+            (i == 0 || !Scan.isIdentChar(text.charAt(i - 1))) &&
+            (i + word.length == text.length ||
+              !Scan.isIdentChar(text.charAt(i + word.length))))
+          return i
+        i += 1
+      }
+      -1
+    }
+
+    /** Index of the ')' balancing the '(' at `open`. */
+    def balancedClose(open: Int): Int = {
+      var depth = 0
+      var i = open
+      while (i < text.length) {
+        if (code(i) && text.charAt(i) == '(') depth += 1
+        else if (code(i) && text.charAt(i) == ')') {
+          depth -= 1
+          if (depth == 0) return i
+        }
+        i += 1
+      }
+      throw new IllegalArgumentException("unbalanced parentheses from '" +
+        text.substring(math.max(0, open - 24), open + 1).trim + "'")
+    }
+
+    /** Index of the '(' balancing the ')' at `close`; -1 when none. */
+    def balancedOpen(close: Int): Int = {
+      var depth = 0
+      var i = close
+      while (i >= 0) {
+        if (code(i) && text.charAt(i) == ')') depth += 1
+        else if (code(i) && text.charAt(i) == '(') {
+          depth -= 1
+          if (depth == 0) return i
+        }
+        i -= 1
+      }
+      -1
+    }
   }
 
-  private def isIdentChar(c: Char): Boolean =
-    c.isLetterOrDigit || c == '_'
-
-  /** Index of the '(' balancing the ')' at `close`, scanning backward
-    * and skipping string literals (quote state derived by a forward
-    * pass — backward quote scanning is ambiguous). */
-  private def balancedOpen(s: String, close: Int): Int = {
-    // forward pass: record paren depth transitions outside strings
-    var inStr = false
-    var depth = 0
-    val opens = new java.util.ArrayDeque[Int]()
-    var i = 0
-    while (i <= close) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 1 // skip the escaped char
-      else if (c == '\'') inStr = !inStr
-      else if (!inStr && c == '(') { opens.push(i); depth += 1 }
-      else if (!inStr && c == ')') {
-        if (i == close) return if (opens.isEmpty) -1 else opens.pop()
-        if (!opens.isEmpty) opens.pop()
-        depth -= 1
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Index of the ')' balancing the '(' at `open`, skipping string
-    * literals. */
-  private def balancedClose(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 1 // skip the escaped char
-      else if (c == '\'') inStr = !inStr
-      else if (!inStr && c == '(') depth += 1
-      else if (!inStr && c == ')') {
-        depth -= 1
-        if (depth == 0) return i
-      }
-      i += 1
-    }
-    sys.error("unbalanced parentheses in MATCH_RECOGNIZE clause")
+  private[graft] object Scan {
+    def isIdentChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
   }
 }

@@ -241,7 +241,7 @@ object Aggregates {
 
   /** The reference's `UNNEST` SQL spelling through the single front door
     * (r13 — reference SqlITCase.scala:551-705 forms; rewritten to
-    * Spark's `LATERAL explode` by [[graft.streaming.UnnestSql]]); q79
+    * Spark's `LATERAL explode` by [[graft.Sql]]); q79
     * pins the DataFrame/posexplode path, this pins the TEXT path. */
   val q165SqlUnnest: QueryDef = QueryDef("q165_sql_unnest",
     """SELECT vec_id, unnest(embedding) AS v
@@ -259,7 +259,7 @@ object Aggregates {
   /** The reference's UDTF `LATERAL TABLE(fn(x))` spelling through the
     * front door (r13 — stream CorrelateITCase.scala:150-163; rewritten
     * to `LATERAL explode` over an array-returning scalar UDF by
-    * [[graft.streaming.TemporalSql]]'s generic lateral branch). */
+    * [[graft.Sql]]'s lateral generator rewrite). */
   val q168SqlLateralUdtf: QueryDef = QueryDef("q168_sql_lateral_udtf",
     """SELECT doc_id, unnest(string_split(text, ' ')) AS tok
       |FROM documents

@@ -1,5 +1,13 @@
 package graft.streaming
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, Subtract}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Sort}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DayTimeIntervalType
+
 /** The reference's group-window SQL surface, rewritten to Spark's
   * grouping expressions (reference: flink-table planner-blink — the
   * `TUMBLE`/`HOP`/`SESSION` GROUP BY functions with their `_START` /
@@ -9,11 +17,13 @@ package graft.streaming
   * assignment semantics `TumblingWindowAssigner.java:34`,
   * `SlidingWindowAssigner.java:40`, `SessionWindowAssigner.java:37`).
   *
-  * Spark spells the identical [start, end) epoch-aligned windows
+  * Spark parses every one of these calls as an `UnresolvedFunction`, and
+  * spells the identical [start, end) epoch-aligned windows
   * `window(ts, size[, slide])` and `session_window(ts, gap)`, so the
-  * translation is a pure text rewrite in front of `spark.sql` — the
-  * plan underneath is Spark's native (and streaming-capable) windowed
-  * aggregate, never a custom operator:
+  * translation is a rewrite of Spark's parsed plan in front of the
+  * analyzer ([[graft.Sql]] step 3) — the plan underneath is Spark's
+  * native (and streaming-capable) windowed aggregate, never a custom
+  * operator:
   *
   *   - `TUMBLE(ts, size)`        → `window(ts, size)`
   *   - `HOP(ts, slide, size)`    → `window(ts, size, slide)`  (note the
@@ -30,11 +40,17 @@ package graft.streaming
   *     wall-clock processing artifact with no batch/SQL value; the
   *     proc-time executors take DataFrames directly.
   *
-  * Interval literals (`INTERVAL '5.111' SECOND(1,3)`) become Spark
-  * duration strings (`'5.111 second'`); only single-unit DAY / HOUR /
-  * MINUTE / SECOND intervals are valid window sizes — the reference
-  * likewise rejects months/years for group windows, and compound
-  * (`TO`) forms fail loudly here.
+  * A size is a day-time interval literal, which Spark's parser already
+  * reads as microseconds (`INTERVAL '5.111' SECOND` → 5111000); it
+  * reaches `window()` as a duration string. Month/year intervals are not
+  * fixed durations — the reference likewise rejects them for group
+  * windows — and fail loudly.
+  *
+  * `TUMBLE(PROCTIME() | <registered proc-time attribute>, size)` groups
+  * on the wall clock: its `Aggregate` runs as
+  * [[ProcTimeWindows.procTumbleAgg]] instead. HOP/SESSION over proc-time
+  * are rejected (sliding/merging wall-clock assigners have no checkable
+  * collapse).
   *
   * Rows with a NULL group-window timestamp are dropped by both engines
   * (reference `WindowAggregateITCase.testNullValueInputTimestamp` —
@@ -44,391 +60,184 @@ package graft.streaming
   * Contract, enforced fail-loud: an auxiliary must repeat the family
   * and arguments of the grouping call of ITS OWN query block (the
   * reference's planner resolves an auxiliary against its block's
-  * GROUP BY window and rejects a mismatch). Distinct group windows may
-  * coexist across query blocks — each block carries its own `window`
-  * struct — and the validation is per block: a scan pass assigns every
-  * character a block id (a new block opens at each `SELECT` keyword and
-  * closes when paren depth drops below the depth it opened at), so an
-  * auxiliary in block A that repeats block B's window arguments fails
-  * loudly instead of silently emitting block A's bounds.
+  * GROUP BY window and rejects a mismatch). A block is an `Aggregate`
+  * with the HAVING and ORDER BY directly above it; distinct group
+  * windows may coexist across blocks — each carries its own `window`
+  * struct — so an auxiliary in block A that repeats block B's window
+  * arguments fails loudly instead of silently emitting block A's
+  * bounds.
   */
 object GroupWindowSql {
 
   private val Families = Seq("TUMBLE", "HOP", "SESSION")
-  private val Suffixes = Seq("_START", "_END", "_ROWTIME", "_PROCTIME", "")
+  private val Suffixes = Seq("", "_START", "_END", "_ROWTIME", "_PROCTIME")
 
-  /** All 15 keywords, one scan table: (family, suffix). */
-  private val Keywords: Seq[(String, String)] =
-    for (f <- Families; s <- Suffixes) yield (f, s)
-
-  /** Rewrite every group-window call in `text`; returns `text` unchanged
-    * when no TUMBLE/HOP/SESSION form appears. Pure text → text, no
-    * session needed. */
-  def rewrite(text: String): String = {
-    // cheap bail-out before any real scanning
-    val upper = text.toUpperCase
-    if (!Families.exists(upper.contains)) return text
-
-    val out = new StringBuilder
-    var i = 0
-    val bid = blockIds(text)
-    // every group-window (non-aux) call, normalized and tagged with its
-    // query block; aux calls recorded as (block, family, normalized args)
-    var groupCalls = List.empty[(Int, String, String)]
-    var auxCalls = List.empty[(Int, String, String)]
-
-    while (i < text.length) {
-      // earliest keyword occurrence at or after i (word-boundary,
-      // string-literal-aware); boundaries make TUMBLE vs TUMBLE_START
-      // unambiguous — '_' is an identifier char
-      val hit = Keywords
-        .map { case (f, s) => (f, s, indexOfWord(text, f + s, i)) }
-        .filter(_._3 >= 0)
-        .sortBy(_._3)
-        .headOption
-      hit match {
-        case None =>
-          out.append(text.substring(i)); i = text.length
-        case Some((family, suffix, k)) =>
-          var j = k + family.length + suffix.length
-          while (j < text.length && text.charAt(j).isWhitespace) j += 1
-          if (j >= text.length || text.charAt(j) != '(') {
-            // bare identifier (e.g. a column named `hop`) — not a call;
-            // copy through and keep scanning
-            out.append(text.substring(i, k + family.length + suffix.length))
-            i = k + family.length + suffix.length
-          } else {
-            val close = balancedClose(text, j)
-            val args = splitTopLevel(text.substring(j + 1, close))
-            val norm = args.map(normalize).mkString(", ")
-            out.append(text.substring(i, k))
-            suffix match {
-              case "" =>
-                groupCalls ::= (bid(k), family, norm)
-                out.append(groupExpr(family, args))
-              case "_PROCTIME" =>
-                sys.error(s"$family$suffix is not supported: proc-time " +
-                  "attributes are wall-clock artifacts with no SQL/batch " +
-                  "meaning — use the proc-time DataFrame executors " +
-                  "(graft.streaming) for proc-time composition")
-              case _ =>
-                auxCalls ::= (bid(k), family, norm)
-                val struct =
-                  if (family == "SESSION") "session_window" else "window"
-                out.append(suffix match {
-                  case "_START" => s"$struct.start"
-                  case "_END" => s"$struct.end"
-                  case "_ROWTIME" =>
-                    s"($struct.end - INTERVAL '0.001' SECOND)"
-                })
-            }
-            i = close + 1
-          }
-      }
-    }
-
-    // Auxiliary/grouping agreement is validated PER QUERY BLOCK: an
-    // auxiliary must repeat the family and arguments of the group-window
-    // call of its own block — the reference's analyzer resolves the
-    // auxiliary against its block's GROUP BY window, and an auxiliary
-    // that repeats a DIFFERENT block's window args would otherwise
-    // silently resolve to its own block's `window` struct (wrong bounds).
-    val distinctGroups = groupCalls.distinct
-    auxCalls.distinct.foreach { case (b, f, a) =>
-      val inBlock = distinctGroups.collect { case (`b`, gf, ga) => (gf, ga) }
-      require(inBlock.contains((f, a)),
-        s"group-window auxiliary ${f}_START/_END/_ROWTIME($a) must repeat " +
-          s"its own query block's GROUP BY window; this block " +
-          (if (inBlock.isEmpty) "has no group window in GROUP BY"
-           else "groups by " + inBlock
-             .map { case (gf, ga) => s"$gf($ga)" }.mkString("; ")) +
-          (if (distinctGroups.exists { case (gb, gf, ga) =>
-              gb != b && (gf, ga) == (f, a) })
-            " (a DIFFERENT block groups by that window — write the " +
-              "auxiliary in the block whose GROUP BY it repeats)"
-           else ""))
-    }
-    out.result()
+  /** One group-window call `<family><suffix>(args)`; an empty suffix is
+    * the grouping call itself. */
+  private final case class Call(family: String, suffix: String,
+      args: Seq[Expression]) {
+    /** What an auxiliary must repeat: family and arguments, names
+      * case-folded. */
+    def key: (String, Seq[Expression]) = (family, args.map(_.transform {
+      case a: UnresolvedAttribute => UnresolvedAttribute(a.nameParts.map(_.toLowerCase))
+      case f: UnresolvedFunction => f.copy(nameParts = f.nameParts.map(_.toLowerCase))
+    }))
+    def procTime: Boolean = args.headOption.exists(TemporalSql.isProcTime)
+    def sql: String = s"$family$suffix(${args.map(_.sql).mkString(", ")})"
   }
 
-  /** Per-character query-block ids: block 0 is the statement root; each
-    * `SELECT` keyword (word-boundary, outside string literals) opens a
-    * new block at the current paren depth, and a block closes when the
-    * depth drops below the depth it opened at. Sibling SELECTs at one
-    * depth (UNION branches) shadow left-to-right, which is exact for a
-    * linear scan — a branch's text ends where the next branch's SELECT
-    * begins. */
-  private def blockIds(text: String): Array[Int] = {
-    val ids = new Array[Int](text.length)
-    val u = text.toUpperCase
-    var depth = 0
-    var inStr = false
-    var nextId = 0
-    // (blockId, paren depth at its SELECT); root block never pops
-    var stack = List((0, -1))
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      // backslash-escaped chars inside a literal ('it\'s') must not
-      // toggle the string state (ADVICE r14); ''-doubling needs no
-      // special case — two toggles cancel
-      if (inStr && c == '\\' && i + 1 < text.length) {
-        ids(i) = stack.head._1; ids(i + 1) = stack.head._1; i += 2
-      }
-      else if (c == '\'') { inStr = !inStr; ids(i) = stack.head._1; i += 1 }
-      else if (!inStr && c == '(') { depth += 1; ids(i) = stack.head._1; i += 1 }
-      else if (!inStr && c == ')') {
-        depth -= 1
-        while (stack.head._2 > depth) stack = stack.tail
-        ids(i) = stack.head._1; i += 1
-      } else if (!inStr && u.startsWith("SELECT", i) &&
-          (i == 0 || !isIdentChar(text.charAt(i - 1))) &&
-          (i + 6 >= text.length || !isIdentChar(text.charAt(i + 6)))) {
-        nextId += 1
-        stack = (nextId, depth) :: stack
-        var j = i
-        while (j < i + 6) { ids(j) = nextId; j += 1 }
-        i += 6
-      } else { ids(i) = stack.head._1; i += 1 }
-    }
-    ids
+  private def call(e: Expression): Option[Call] = e match {
+    case f: UnresolvedFunction if f.nameParts.size == 1 =>
+      val n = f.nameParts.head.toUpperCase
+      (for (fam <- Families; sfx <- Suffixes if n == fam + sfx)
+        yield Call(fam, sfx, f.arguments)).headOption
+    case _ => None
   }
 
-  /** r16: route the reference's PROC-TIME TUMBLE spelling —
-    * `SELECT keys/aggs FROM t GROUP BY TUMBLE(PROCTIME(), size)[, keys]`
-    * (stream WindowAggregateITCase proc-time cases) — to
-    * [[ProcTimeWindows.procTumbleAgg]], closing the r15 tested
-    * rejection for the TUMBLE assigner. Returns None when the statement
-    * carries no proc-time TUMBLE (the normal rewrite pipeline
-    * continues); a statement that HAS one but deviates from the
-    * one-table grammar fails loudly in this parser. Window auxiliaries
-    * (`TUMBLE_START`/`_END`) stay rejected — they ARE the wall clock.
-    * HOP/SESSION over proc-time remain tested rejections in
-    * [[groupExpr]] (sliding/merging wall-clock assigners have no
-    * checkable collapse). */
-  def procTumbleRoute(spark: org.apache.spark.sql.SparkSession,
-      text: String): Option[org.apache.spark.sql.DataFrame] = {
-    // cheap detection: any TUMBLE( whose first argument is proc-time
-    val hasProcTumble = {
-      var found = false
-      var from = 0
-      var i = indexOfWord(text, "TUMBLE", from)
-      while (i >= 0 && !found) {
-        val open = text.indexOf('(', i + 6)
-        if (open >= 0) {
-          val close = balancedClose(text, open)
-          if (close > open) {
-            val args = splitTopLevel(text.substring(open + 1, close))
-            found = args.nonEmpty && TemporalSql.isProcTime(args(0))
-          }
+  private def calls(e: Expression): Seq[Call] = e.collect(Function.unlift(call))
+
+  private def groupsOf(a: Aggregate): Seq[Call] =
+    a.groupingExpressions.flatMap(calls).filter(_.suffix.isEmpty)
+
+  /** The `Aggregate` of the block `n` belongs to: itself, or the one
+    * under the HAVING / ORDER BY directly above it. */
+  private def block(n: LogicalPlan): Option[Aggregate] = n match {
+    case a: Aggregate => Some(a)
+    case h: UnresolvedHaving => block(h.child)
+    case s: Sort => block(s.child)
+    case _ => None
+  }
+
+  /** Rewrite every group-window call of the parsed `plan`, CTE bodies
+    * and subqueries included; `plan` itself when it has none. */
+  def translate(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
+    val all = graft.Sql.nodes(plan).flatMap(_.expressions.flatMap(calls))
+    if (all.isEmpty) return plan
+    val groups = all.filter(_.suffix.isEmpty)
+    graft.Sql.everywhere(plan) {
+      case a: Aggregate if groupsOf(a).exists(_.procTime) => procTumble(spark, a)
+      case n if n.expressions.exists(_.exists(call(_).isDefined)) =>
+        val own = block(n).map(groupsOf).getOrElse(Nil)
+        n.transformExpressionsDown(Function.unlift((e: Expression) =>
+          call(e).map(expr(_, own, groups))))
+    }
+  }
+
+  /** The Spark expression for one call; `own` are the grouping calls of
+    * the call's block, `all` those of the whole statement. */
+  private def expr(c: Call, own: Seq[Call], all: Seq[Call]): Expression = {
+    val struct = if (c.family == "SESSION") "session_window" else "window"
+    c.suffix match {
+      case "" =>
+        require(!c.procTime, procTimeGroups(c))
+        val (fn, arity, args) = c.family match {
+          case "TUMBLE" => ("window", "(time_attr, size)", Seq(0, 1))
+          // reference order is slide-then-size; Spark is size-then-slide
+          case "HOP" => ("window", "(time_attr, slide, size)", Seq(0, 2, 1))
+          case "SESSION" => ("session_window", "(time_attr, gap)", Seq(0, 1))
         }
-        from = i + 6
-        i = indexOfWord(text, "TUMBLE", from)
-      }
-      found
-    }
-    if (!hasProcTumble) return None
-    import graft.streaming.{MatchRecognizeSql => MR}
-    val p = new MR.P(MR.tokenize(text))
-    p.expect("SELECT")
-    // select items: bare group keys, or COUNT/SUM/MIN/MAX/AVG with a
-    // required alias (deterministic output names for the oracle compare)
-    sealed trait Item
-    case class Key(name: String) extends Item
-    case class Meas(agg: OverAggregates.Agg) extends Item
-    val AggFns = Set("COUNT", "SUM", "MIN", "MAX", "AVG")
-    def parseItem(): Item = {
-      val t = p.ident()
-      require(!Suffixes.filter(_.nonEmpty)
-          .exists(sfx => t.toUpperCase == s"TUMBLE$sfx"),
-        s"$t on a PROC-TIME window is the wall clock itself — window " +
-          "bounds never surface through SQL (not oracle-checkable); " +
-          "select keys and aggregates only")
-      if (AggFns.contains(t.toUpperCase) && p.accept("(")) {
-        val distinct = p.accept("DISTINCT")
-        val arg =
-          if (p.accept("*")) None
-          else {
-            val a = p.next()
-            if (a == "1") None else Some(a.toLowerCase)
-          }
-        p.expect(")")
-        require(!(arg.isEmpty && t.toUpperCase != "COUNT"),
-          s"${t.toUpperCase}(*) is not an aggregate; name a column")
-        p.expect("AS")
-        Meas(OverAggregates.Agg(t.toUpperCase, arg, p.ident().toLowerCase,
-          distinct))
-      } else Key(t.toLowerCase)
-    }
-    val items = scala.collection.mutable.ArrayBuffer(parseItem())
-    while (p.accept(",")) items += parseItem()
-    p.expect("FROM")
-    val table = p.ident()
-    p.expect("GROUP"); p.expect("BY")
-    var width: Option[java.time.Duration] = None
-    val keys = scala.collection.mutable.ArrayBuffer.empty[String]
-    do {
-      if (p.peekIs("TUMBLE")) {
-        p.next(); p.expect("(")
-        val attr = if (p.accept("PROCTIME")) { p.expect("("); p.expect(")"); "proctime()" }
-          else p.ident()
-        require(TemporalSql.isProcTime(attr),
-          s"this route serves TUMBLE over proc-time; '$attr' is an " +
-            "event-time attribute (the rewrite pipeline plans those)")
-        p.expect(","); p.expect("INTERVAL")
-        val lit = p.next()
-        require(lit.length >= 3 && lit.head == '\'' && lit.last == '\'',
-          s"expected a quoted interval literal, found '$lit'")
-        val n = lit.substring(1, lit.length - 1)
-        val unit = p.ident().toUpperCase
-        val ms = unit match {
-          case "DAY" => 86400000L
-          case "HOUR" => 3600000L
-          case "MINUTE" => 60000L
-          case "SECOND" => 1000L
-          case other => sys.error(
-            s"proc-time TUMBLE size unit must be DAY|HOUR|MINUTE|SECOND, " +
-              s"got $other")
-        }
-        require(width.isEmpty, "more than one TUMBLE in GROUP BY")
-        width = Some(java.time.Duration.ofMillis(
-          (BigDecimal(n) * ms).toLongExact))
-        p.expect(")")
-      } else keys += p.ident().toLowerCase
-    } while (p.accept(","))
-    require(p.peek.isEmpty,
-      s"unexpected trailing tokens from '${p.peek}' — the proc-time " +
-        "TUMBLE route serves a single-table SELECT/GROUP BY statement")
-    val w = width.getOrElse(sys.error("internal: TUMBLE not parsed"))
-    items.collect { case Key(k) => k }.foreach(k =>
-      require(keys.contains(k),
-        s"select item '$k' is not a GROUP BY key"))
-    val aggs = items.collect { case Meas(a) => a }
-    require(aggs.nonEmpty, "no aggregate in the SELECT list")
-    val out = ProcTimeWindows.procTumbleAgg(spark.table(table),
-      keys.toSeq, w, aggs.toSeq)
-    // project the statement's select order; the wall-clock w_start_ms
-    // never surfaces through SQL (not oracle-checkable) — the executor
-    // API exposes it for callers that want it
-    val cols = items.map {
-      case Key(k) => org.apache.spark.sql.functions.col(k)
-      case Meas(a) => org.apache.spark.sql.functions.col(a.alias)
-    }
-    Some(out.select(cols.toSeq: _*))
-  }
-
-  /** The Spark grouping expression for one reference group-window call.
-    * Proc-time group windows — `TUMBLE/HOP/SESSION(PROCTIME(), …)` or a
-    * registered proc-time attribute as the time argument — are a TESTED
-    * REJECTION (r15): the reference's stream WindowAggregateITCase
-    * accepts them, but wall-clock window bounds cannot be
-    * oracle-checked and have no batch meaning; the capability is served
-    * by the proc-time DataFrame executors
-    * ([[OverAggregates]] proc-time frames, [[CountWindows]]). */
-  private def groupExpr(family: String, args: Seq[String]): String = {
-    require(args.isEmpty || !TemporalSql.isProcTime(args(0)),
-      s"$family(${args.headOption.getOrElse("").trim}, …) groups by a " +
-        "proc-time attribute: proc-time group windows are not supported " +
-        "at the SQL front door (wall-clock bounds cannot be " +
-        "oracle-checked) — use the proc-time DataFrame executors " +
-        "(graft.streaming.OverAggregates / CountWindows)")
-    family match {
-      case "TUMBLE" =>
-        require(args.length == 2,
-          s"TUMBLE takes (time_attr, size); got ${args.length} arguments")
-        s"window(${args(0).trim}, ${duration(args(1))})"
-      case "HOP" =>
-        require(args.length == 3,
-          s"HOP takes (time_attr, slide, size); got ${args.length} arguments")
-        // reference order is slide-then-size; Spark is size-then-slide
-        s"window(${args(0).trim}, ${duration(args(2))}, ${duration(args(1))})"
-      case "SESSION" =>
-        require(args.length == 2,
-          s"SESSION takes (time_attr, gap); got ${args.length} arguments")
-        s"session_window(${args(0).trim}, ${duration(args(1))})"
+        require(c.args.size == args.size,
+          s"${c.family} takes $arity; got ${c.args.size} arguments")
+        UnresolvedFunction(fn, c.args.head +: args.tail.map(i =>
+          Literal(s"${micros(c.args(i))} microseconds")), isDistinct = false)
+      case "_PROCTIME" =>
+        sys.error(s"${c.family}_PROCTIME is not supported: proc-time " +
+          "attributes are wall-clock artifacts with no SQL/batch " +
+          "meaning — use the proc-time DataFrame executors " +
+          "(graft.streaming) for proc-time composition")
+      case sfx =>
+        require(!c.procTime, wallClock(c))
+        require(own.exists(_.key == c.key),
+          s"group-window auxiliary ${c.sql} must repeat its own query " +
+            "block's GROUP BY window; this block " +
+            (if (own.isEmpty) "has no group window in GROUP BY"
+             else "groups by " + own.map(_.sql).mkString("; ")) +
+            (if (all.exists(_.key == c.key))
+              " (a DIFFERENT block groups by that window — write the " +
+                "auxiliary in the block whose GROUP BY it repeats)"
+             else ""))
+        val bound = UnresolvedAttribute(Seq(struct,
+          if (sfx == "_START") "start" else "end"))
+        if (sfx == "_ROWTIME") Subtract(bound,
+          Literal(1000L, DayTimeIntervalType(DayTimeIntervalType.SECOND)))
+        else bound
     }
   }
 
-  private val IntervalRe =
-    """(?is)\s*INTERVAL\s*'([0-9.]+)'\s*(DAY|HOUR|MINUTE|SECOND)\s*(?:\(\s*\d+\s*(?:,\s*\d+\s*)?\))?\s*""".r
+  private def procTimeGroups(c: Call): String =
+    s"${c.family}(${c.args.head.sql}, …) groups by a proc-time attribute: " +
+      "proc-time group windows are not supported at the SQL front door " +
+      "(wall-clock bounds cannot be oracle-checked) — use the proc-time " +
+      "DataFrame executors (graft.streaming.OverAggregates / CountWindows)"
 
-  /** A reference interval literal rendered as a Spark duration string:
-    * `INTERVAL '5.111' SECOND(1,3)` → `'5.111 second'`. The optional
-    * precision suffix only constrains the literal's printed digits —
-    * the value already carries them. */
-  private def duration(arg: String): String = arg match {
-    case IntervalRe(v, unit) => s"'$v ${unit.toLowerCase}'"
+  private def wallClock(c: Call): String =
+    s"${c.family}${c.suffix} on a PROC-TIME window is the wall clock " +
+      "itself — window bounds never surface through SQL (not " +
+      "oracle-checkable); select keys and aggregates only"
+
+  /** A window size in microseconds: a day-time interval literal. */
+  private def micros(e: Expression): Long = e match {
+    case Literal(us: Long, _: DayTimeIntervalType) => us
     case other => sys.error(
-      s"group-window size must be a single-unit interval literal " +
-        s"(INTERVAL '<n>' DAY|HOUR|MINUTE|SECOND), got: ${other.trim} — " +
-        "month/year intervals are not fixed durations and compound " +
-        "(TO) forms are not window sizes")
+      "group-window size must be a day-time interval literal " +
+        s"(INTERVAL '<n>' DAY|HOUR|MINUTE|SECOND), got: ${other.sql} — " +
+        "month/year intervals are not fixed durations")
   }
 
-  private def normalize(s: String): String =
-    s.trim.replaceAll("\\s+", " ").toUpperCase
-
-  /** Split `s` on commas at paren depth 0, outside string literals. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 1 // skip the escaped char
-      else if (c == '\'') inStr = !inStr
-      else if (!inStr && c == '(') depth += 1
-      else if (!inStr && c == ')') depth -= 1
-      else if (!inStr && c == ',' && depth == 0) {
-        parts += s.substring(start, i); start = i + 1
+  /** r16: the reference's PROC-TIME TUMBLE spelling — `SELECT
+    * keys/aggs … GROUP BY TUMBLE(PROCTIME(), size)[, keys]` (stream
+    * WindowAggregateITCase proc-time cases) — as
+    * [[ProcTimeWindows.procTumbleAgg]] over the `Aggregate`'s child.
+    * The select list holds bare group keys and COUNT/SUM/MIN/MAX/AVG
+    * calls with an alias (deterministic output names for the oracle
+    * compare); window auxiliaries (`TUMBLE_START`/`_END`) are rejected —
+    * they ARE the wall clock, and never surface through SQL. */
+  private def procTumble(spark: SparkSession, a: Aggregate): LogicalPlan = {
+    val (wins, keyExprs) = a.groupingExpressions.partition(call(_).isDefined)
+    val w = call(wins.head).get
+    require(w.family == "TUMBLE", procTimeGroups(w))
+    require(wins.size == 1, "more than one TUMBLE in GROUP BY")
+    require(w.args.size == 2,
+      s"TUMBLE takes (time_attr, size); got ${w.args.size} arguments")
+    val keys = keyExprs.map {
+      case k: UnresolvedAttribute => k.nameParts.last
+      case k => sys.error(s"proc-time TUMBLE groups by columns, got ${k.sql}")
+    }
+    val AggFns = Set("COUNT", "SUM", "MIN", "MAX", "AVG")
+    val items = a.aggregateExpressions.map { e =>
+      require(calls(e).isEmpty, wallClock(calls(e).head))
+      e match {
+        case k: UnresolvedAttribute =>
+          require(keys.exists(_.equalsIgnoreCase(k.nameParts.last)),
+            s"select item '${k.name}' is not a GROUP BY key")
+          Left(k.nameParts.last)
+        case Alias(f: UnresolvedFunction, alias)
+            if AggFns.contains(f.nameParts.last.toUpperCase) =>
+          val fn = f.nameParts.last.toUpperCase
+          val arg = f.arguments match {
+            case Seq(Literal(1, _)) if fn == "COUNT" => None // COUNT(*)
+            case Seq(c: UnresolvedAttribute) => Some(c.nameParts.last)
+            case Seq(_: UnresolvedStar) =>
+              throw new IllegalArgumentException(
+                s"$fn(*) is not an aggregate; name a column")
+            case other => sys.error(s"proc-time TUMBLE aggregates take one " +
+              s"column, got $fn(${other.map(_.sql).mkString(", ")})")
+          }
+          Right(OverAggregates.Agg(fn, arg, alias, f.isDistinct))
+        case other => sys.error("a proc-time TUMBLE selects GROUP BY keys " +
+          "and aliased COUNT/SUM/MIN/MAX/AVG(column) calls, got " + other.sql)
       }
-      i += 1
     }
-    parts += s.substring(start)
-    parts.result()
-  }
-
-  /** First occurrence of `word` at or after `from`, case-insensitive, on
-    * identifier boundaries, outside single-quoted string literals. */
-  private def indexOfWord(s: String, word: String, from: Int): Int = {
-    val u = s.toUpperCase
-    var i = from
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 2 // skip the escaped char
-      else if (c == '\'') { inStr = !inStr; i += 1 }
-      else if (!inStr && u.startsWith(word, i) &&
-          (i == 0 || !isIdentChar(s.charAt(i - 1))) &&
-          (i + word.length >= s.length || !isIdentChar(s.charAt(i + word.length))))
-        return i
-      else i += 1
-    }
-    -1
-  }
-
-  private def isIdentChar(c: Char): Boolean =
-    c.isLetterOrDigit || c == '_'
-
-  /** Index of the ')' balancing the '(' at `open`, skipping string
-    * literals. */
-  private def balancedClose(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 1 // skip the escaped char
-      else if (c == '\'') inStr = !inStr
-      else if (!inStr && c == '(') depth += 1
-      else if (!inStr && c == ')') {
-        depth -= 1
-        if (depth == 0) return i
-      }
-      i += 1
-    }
-    sys.error("unbalanced parentheses in group-window call")
+    val aggs = items.collect { case Right(agg) => agg }
+    require(aggs.nonEmpty, "no aggregate in the SELECT list")
+    val out = ProcTimeWindows.procTumbleAgg(
+      Bridge.ofRows(spark, translate(spark, a.child)), keys,
+      java.time.Duration.of(micros(w.args(1)), java.time.temporal.ChronoUnit.MICROS),
+      aggs)
+    // the statement's select order; the wall-clock w_start_ms never
+    // surfaces through SQL (not oracle-checkable) — the executor API
+    // exposes it for callers that want it
+    out.select(items.map(_.fold(col, agg => col(agg.alias))): _*)
+      .queryExecution.analyzed
   }
 }

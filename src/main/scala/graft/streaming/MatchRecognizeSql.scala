@@ -520,7 +520,7 @@ object MatchRecognizeSql {
   // =====================================================================
   // Tokenizer (unchanged model: words, numbers, 'strings', operators)
   // =====================================================================
-  private[streaming] def tokenize(s: String): Vector[String] = {
+  private def tokenize(s: String): Vector[String] = {
     val out = Vector.newBuilder[String]
     var i = 0
     while (i < s.length) {
@@ -558,7 +558,7 @@ object MatchRecognizeSql {
   // =====================================================================
   // Parser
   // =====================================================================
-  private[streaming] final class P(toks: Vector[String]) {
+  private final class P(toks: Vector[String]) {
     var i = 0
     def peek: String = if (i < toks.length) toks(i) else ""
     def peekAt(k: Int): String = if (i + k < toks.length) toks(i + k) else ""

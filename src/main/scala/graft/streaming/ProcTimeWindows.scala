@@ -12,10 +12,11 @@ import OverAggregates.{Acc, Agg}
   * `.withProcessingTime()`; the stream `WindowAggregateITCase` proc-time
   * cases group by exactly this spelling). r16 closes the last group-window
   * SQL spelling the front door refused (the r15 tested rejection):
-  * [[GroupWindowSql.procTumbleRoute]] parses the reference SQL and runs
-  * this executor; HOP/SESSION over proc-time remain rejected (a sliding
-  * or merging wall-clock assigner multiplies the nondeterminism without
-  * a checkable collapse).
+  * [[GroupWindowSql]] runs this executor in place of an `Aggregate` of
+  * Spark's parsed plan that groups by `TUMBLE(PROCTIME(), size)`;
+  * HOP/SESSION over proc-time remain rejected (a sliding or merging
+  * wall-clock assigner multiplies the nondeterminism without a
+  * checkable collapse).
   *
   * Semantics (micro-batch rendering of the reference's wall-clock
   * assigner): a row joins the processing-time window of the instant its

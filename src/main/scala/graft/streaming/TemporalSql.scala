@@ -2,6 +2,14 @@ package graft.streaming
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.plans.JoinType
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, SubqueryAlias}
+
+import graft.Sql.Scan.isIdentChar
+
 /** The reference's temporal-join SQL spellings, rewritten to native
   * Spark joins (reference: flink-table planner-blink —
   * `Orders AS o, LATERAL TABLE (Rates(o.rowtime)) AS r` over a
@@ -33,8 +41,8 @@ import scala.collection.concurrent.TrieMap
   * Catalyst pushes the equality into the join, leaving the interval as
   * a residual on an ordinary equi-join (broadcastable for small dims,
   * SMJ at scale; never a cross join). Aliases survive because the
-  * rewrite swaps only the relation text, so `o.amount * r.rate`
-  * resolves untouched. `r` additionally exposes the internal
+  * rewrite swaps only the relation, so `o.amount * r.rate` resolves
+  * untouched. `r` additionally exposes the internal
   * `graft_vend` column (visible to `SELECT r.*`; select columns
   * explicitly, as every reference IT case does).
   *
@@ -55,6 +63,12 @@ import scala.collection.concurrent.TrieMap
   * one timestamp) make the interval split ambiguous — register a
   * deduplicated history, as the reference's `createTemporalTableFunction`
   * assumes unique version times per key.
+  *
+  * `LATERAL TABLE (fn(ts))` is rewritten on Spark's parsed plan (Spark
+  * reads it as a table-valued function named `TABLE`,
+  * [[versionedJoin]]); `FOR SYSTEM_TIME AS OF <column>` is text
+  * ([[rewrite]]), because Spark's parser refuses a column reference as
+  * a time-travel timestamp.
   *
   * Streaming: these spellings rewrite to a plain join, which Spark
   * plans on a stream only in its stream-static form (static versioned
@@ -108,105 +122,20 @@ object TemporalSql {
   def dropTemporalFunction(name: String): Unit =
     registry.remove(name.toLowerCase)
 
-  /** Rewrite every temporal spelling in `text`; returns `text`
-    * unchanged when neither form appears. */
-  def rewrite(text: String): String =
-    rewriteSystemTime(rewriteLateralTable(text))
-
-  /** `, LATERAL TABLE ( fn(arg) ) [AS] alias` → versioned-subquery JOIN
-    * for registered temporal `fn`s; any OTHER `LATERAL TABLE (call)` is
-    * the reference's UDTF correlate and rewrites to
-    * `LATERAL explode/inline(call)` over an array-returning scalar UDF
-    * (see the branch comment). */
-  private def rewriteLateralTable(text: String): String = {
+  /** Rewrite every `FOR SYSTEM_TIME AS OF` join of `text` — the front
+    * door's text pre-pass, since Spark's parser refuses a column
+    * reference as a time-travel timestamp; returns `text` unchanged when
+    * the form does not appear. `LATERAL TABLE (fn(ts))` parses, and is
+    * rewritten on the parsed plan ([[versionedJoin]]). */
+  def rewrite(text: String): String = {
+    // `JOIN name FOR SYSTEM_TIME AS OF expr [AS] alias ON cond` →
+    // versioned-subquery JOIN with the interval containment prepended to
+    // the ON condition
+    val scan = new graft.Sql.Scan(text)
     val out = new StringBuilder
     var i = 0
     while (i < text.length) {
-      val k = indexOfWord(text, "LATERAL", i)
-      val isTable = k >= 0 && {
-        var j = k + "LATERAL".length
-        while (j < text.length && text.charAt(j).isWhitespace) j += 1
-        text.regionMatches(true, j, "TABLE", 0, 5)
-      }
-      if (k < 0) { out.append(text.substring(i)); i = text.length }
-      else if (!isTable) {
-        // a plain LATERAL (e.g. from the UNNEST rewrite) — copy it and
-        // keep scanning for a later LATERAL TABLE
-        out.append(text.substring(i, k + "LATERAL".length))
-        i = k + "LATERAL".length
-      } else {
-        val hit = k
-        var j = hit + "LATERAL".length
-        while (j < text.length && text.charAt(j).isWhitespace) j += 1
-        j += "TABLE".length
-        while (j < text.length && text.charAt(j).isWhitespace) j += 1
-        require(j < text.length && text.charAt(j) == '(',
-          "expected '(' after LATERAL TABLE")
-        val outerClose = balancedClose(text, j)
-        val call = text.substring(j + 1, outerClose).trim
-        val paren = call.indexOf('(')
-        val fnName = if (paren < 0) "" else call.substring(0, paren).trim
-        registry.get(fnName.toLowerCase) match {
-          case None =>
-            // not a temporal function: the reference's UDTF correlate
-            // (`FROM T1, LATERAL TABLE(str_split(c, ',')) AS T2(s)`,
-            // stream CorrelateITCase.scala:90-163 incl. the constant
-            // no-left-side form). A Scala UDTF's graft twin is an
-            // ARRAY-RETURNING scalar UDF (spark.udf.register), so the
-            // spelling rewrites to Spark's lateral generators exactly
-            // like UNNEST: explode for a one-column alias, inline for a
-            // multi-column row type. An unknown function then fails in
-            // the analyzer under its own name.
-            val fn = if (aliasColumns(text, outerClose + 1) >= 2)
-              "inline" else "explode"
-            out.append(text.substring(i, hit))
-              .append("LATERAL ").append(fn)
-              .append(text.substring(j, outerClose + 1))
-            i = outerClose + 1
-          case Some(v) =>
-            val argClose = balancedClose(call, paren)
-            val arg = call.substring(paren + 1, argClose).trim
-            require(arg.nonEmpty && !arg.contains(","),
-              s"temporal table function $fnName takes exactly one time " +
-                s"attribute argument, got ($arg)")
-            // backtrack over the comma the reference writes before the
-            // lateral correlate — the rewritten JOIN replaces it
-            var c = hit - 1
-            while (c >= i && text.charAt(c).isWhitespace) c -= 1
-            require(c >= i && text.charAt(c) == ',',
-              "LATERAL TABLE (temporal fn) must follow a comma join: " +
-                "FROM <left> AS <alias>, LATERAL TABLE (fn(ts)) AS r")
-            // the alias after the clause
-            var a = outerClose + 1
-            while (a < text.length && text.charAt(a).isWhitespace) a += 1
-            if (text.regionMatches(true, a, "AS", 0, 2) &&
-                (a + 2 >= text.length || !isIdentChar(text.charAt(a + 2))))
-              a += 2
-            while (a < text.length && text.charAt(a).isWhitespace) a += 1
-            val as = a
-            while (a < text.length && isIdentChar(text.charAt(a))) a += 1
-            val alias = text.substring(as, a)
-            require(alias.nonEmpty,
-              s"temporal table function $fnName needs an alias: " +
-                "LATERAL TABLE (fn(ts)) AS r")
-            out.append(text.substring(i, c))
-              .append(' ')
-              .append(joinText(v, alias, arg))
-            i = a
-        }
-      }
-    }
-    out.result()
-  }
-
-  /** `JOIN name FOR SYSTEM_TIME AS OF expr [AS] alias ON cond` →
-    * versioned-subquery JOIN with the interval containment prepended to
-    * the ON condition. */
-  private def rewriteSystemTime(text: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < text.length) {
-      val k = indexOfWord(text, "FOR", i)
+      val k = scan.indexOfWord("FOR", i)
       val isSysTime = k >= 0 && text.substring(k).toUpperCase
         .replaceAll("\\s+", " ").startsWith("FOR SYSTEM_TIME AS OF ")
       if (k < 0) { out.append(text.substring(i)); i = text.length }
@@ -238,7 +167,7 @@ object TemporalSql {
         while (j < text.length && (isIdentChar(text.charAt(j)) ||
           text.charAt(j) == '.')) j += 1
         if (j < text.length && text.charAt(j) == '(')
-          j = balancedClose(text, j) + 1
+          j = scan.balancedClose(j) + 1
         val asOf = text.substring(es, j).trim
         require(asOf.nonEmpty, "empty AS OF expression")
         out.append(text.substring(i, e + 1))
@@ -262,8 +191,9 @@ object TemporalSql {
             a += 2
             // the original condition is wrapped in parens before the
             // interval is ANDed on — a top-level OR must not rebind
-            val condEnd = endOfCondition(text, a)
-            out.append(versionedSubquery(v)).append(" AS ").append(alias)
+            val condEnd = endOfCondition(scan, a)
+            out.append('(').append(versionedSubquery(v)).append(") AS ")
+              .append(alias)
               .append(" ON (").append(text.substring(a, condEnd).trim)
               .append(") AND ").append(intervalCond(v, alias, asOf))
               .append(' ')
@@ -282,13 +212,47 @@ object TemporalSql {
     out.result()
   }
 
-  private def joinText(v: Versioned, alias: String, arg: String): String =
-    s"JOIN ${versionedSubquery(v)} AS $alias ON " +
-      intervalCond(v, alias, arg)
+  /** `<left> [, | JOIN] LATERAL TABLE (fn(asOf)) AS alias [ON cond]`
+    * for a registered temporal `fn` (`args` are the `TABLE(…)` call's
+    * arguments, Spark's parse of the spelling): the versioned-subquery
+    * join, the interval containment ANDed onto any ON condition. None
+    * when `args` name no registered function — the reference's UDTF
+    * correlate, which [[graft.Sql]] runs as a lateral generator over an
+    * array-returning scalar UDF (a Scala UDTF's graft twin,
+    * `spark.udf.register`; stream CorrelateITCase.scala:90-163). */
+  private[graft] def versionedJoin(spark: SparkSession,
+      left: Option[LogicalPlan], alias: Option[String], args: Seq[Expression],
+      joinType: JoinType, cond: Option[Expression]): Option[LogicalPlan] = {
+    val (fn, fnArgs) = args match {
+      case Seq(f: UnresolvedFunction) => (f.nameParts.mkString("."), f.arguments)
+      case _ => return None
+    }
+    registry.get(fn.toLowerCase).map { v =>
+      require(fnArgs.size == 1, s"temporal table function $fn takes " +
+        s"exactly one time attribute argument, got " +
+        s"(${fnArgs.map(_.sql).mkString(", ")})")
+      require(left.isDefined, "LATERAL TABLE (temporal fn) must follow a " +
+        "join: FROM <left> AS <alias>, LATERAL TABLE (fn(ts)) AS r")
+      val r = alias.getOrElse(throw new IllegalArgumentException(
+        s"temporal table function $fn needs an alias: " +
+          "LATERAL TABLE (fn(ts)) AS r"))
+      val parser = spark.sessionState.sqlParser
+      // the interval over a placeholder, then the call's argument in its
+      // place
+      val asOf = if (isProcTime(fnArgs.head)) "PROCTIME()" else "graft_asof"
+      val interval = parser.parseExpression(intervalCond(v, r, asOf))
+        .transform {
+          case a: UnresolvedAttribute if a.nameParts == Seq("graft_asof") =>
+            fnArgs.head
+        }
+      Join(left.get, SubqueryAlias(r, parser.parsePlan(versionedSubquery(v))),
+        joinType, Some(cond.fold(interval)(And(_, interval))), JoinHint.NONE)
+    }
+  }
 
   private def versionedSubquery(v: Versioned): String =
-    s"(SELECT *, lead(${v.timeCol}) OVER (PARTITION BY ${v.keyCol} " +
-      s"ORDER BY ${v.timeCol}) AS graft_vend FROM ${v.view})"
+    s"SELECT *, lead(${v.timeCol}) OVER (PARTITION BY ${v.keyCol} " +
+      s"ORDER BY ${v.timeCol}) AS graft_vend FROM ${v.view}"
 
   private def intervalCond(v: Versioned, alias: String,
       asOf: String): String =
@@ -308,33 +272,25 @@ object TemporalSql {
     e == "proctime()" || procTimeNames.contains(last)
   }
 
-  /** Number of columns in the optional `[AS] alias (c1, c2, ...)`
-    * following the call at `from`; 1 when there is no column list
-    * (mirrors [[UnnestSql]]'s rule). */
-  private def aliasColumns(s: String, from: Int): Int = {
-    var i = from
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    if (s.regionMatches(true, i, "AS", 0, 2) &&
-        (i + 2 >= s.length || !isIdentChar(s.charAt(i + 2)))) i += 2
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    val idStart = i
-    while (i < s.length && isIdentChar(s.charAt(i))) i += 1
-    if (i == idStart) return 1
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    if (i >= s.length || s.charAt(i) != '(') return 1
-    1 + s.substring(i + 1, balancedClose(s, i)).count(_ == ',')
+  /** [[isProcTime]] of a parsed expression: `PROCTIME()` or a column. */
+  private[streaming] def isProcTime(e: Expression): Boolean = e match {
+    case f: UnresolvedFunction =>
+      f.arguments.isEmpty && isProcTime(f.nameParts.mkString(".") + "()")
+    case a: UnresolvedAttribute => isProcTime(a.nameParts.mkString("."))
+    case _ => false
   }
 
   /** End index (exclusive) of a join's ON condition starting at `from`:
     * the next clause keyword, another join, or a closing paren at depth
-    * 0 — whichever comes first — outside string literals.
+    * 0 — whichever comes first — in code (see [[graft.Sql.Scan]]).
     *
     * Two-word clause heads only stop the scan when their second word
     * follows (`GROUP BY`, `LEFT [OUTER|SEMI|ANTI] JOIN`, `WINDOW w AS`):
     * a bare column literally named `left`, `cross`, `group` or `window`
     * referenced unqualified at depth 0 (`ON r.k = left`) is an ordinary
     * identifier there and must not truncate the condition mid-expression. */
-  private def endOfCondition(s: String, from: Int): Int = {
+  private def endOfCondition(scan: graft.Sql.Scan, from: Int): Int = {
+    val s = scan.text
     // standalone clause heads: reserved words that cannot appear as a
     // bare unqualified identifier inside an expression
     val bare = Seq("WHERE", "HAVING", "LIMIT", "UNION", "INTERSECT",
@@ -373,16 +329,14 @@ object TemporalSql {
     }
     var i = from
     var depth = 0
-    var inStr = false
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inStr && c == '\\') i += 2 // skip the escaped char (ADVICE r14)
-      else if (c == '\'') { inStr = !inStr; i += 1 }
-      else if (!inStr && c == '(') { depth += 1; i += 1 }
-      else if (!inStr && c == ')') {
+      if (!scan.code(i)) i += 1
+      else if (c == '(') { depth += 1; i += 1 }
+      else if (c == ')') {
         if (depth == 0) return i
         depth -= 1; i += 1
-      } else if (!inStr && depth == 0 && c.isLetter &&
+      } else if (depth == 0 && c.isLetter &&
           // a '.'-qualified identifier (t.left, t.cross) is a column
           // reference, never a clause keyword
           (i == 0 || (!isIdentChar(s.charAt(i - 1)) && s.charAt(i - 1) != '.')) &&
@@ -391,43 +345,5 @@ object TemporalSql {
       else i += 1
     }
     s.length
-  }
-
-  private def indexOfWord(s: String, word: String, from: Int): Int = {
-    val u = s.toUpperCase
-    var i = from
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 2 // skip the escaped char
-      else if (c == '\'') { inStr = !inStr; i += 1 }
-      else if (!inStr && u.startsWith(word, i) &&
-          (i == 0 || !isIdentChar(s.charAt(i - 1))) &&
-          (i + word.length >= s.length || !isIdentChar(s.charAt(i + word.length))))
-        return i
-      else i += 1
-    }
-    -1
-  }
-
-  private def isIdentChar(c: Char): Boolean =
-    c.isLetterOrDigit || c == '_'
-
-  private def balancedClose(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr && c == '\\') i += 1 // skip the escaped char
-      else if (c == '\'') inStr = !inStr
-      else if (!inStr && c == '(') depth += 1
-      else if (!inStr && c == ')') {
-        depth -= 1
-        if (depth == 0) return i
-      }
-      i += 1
-    }
-    sys.error("unbalanced parentheses in temporal join clause")
   }
 }

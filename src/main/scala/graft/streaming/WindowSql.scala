@@ -412,13 +412,20 @@ object WindowSql {
       case _ => false
     })
 
-  /** Whether any table the parsed `plan` names is a stream — the cheap
-    * gate in front of analyzing whole subtrees. */
+  /** Whether any table the parsed `plan` names, or any analyzed subtree
+    * the front door spliced into it (an embedded MATCH_RECOGNIZE, a
+    * proc-time TUMBLE), is a stream — the cheap gate in front of
+    * analyzing whole subtrees. */
   private[graft] def readsStream(spark: SparkSession,
       plan: LogicalPlan): Boolean =
-    plan.collectWithSubqueries { case r: UnresolvedRelation => r }.distinct
-      .exists(r => scala.util.Try(Bridge.ofRows(spark, r).isStreaming)
-        .getOrElse(false))
+    plan.collectWithSubqueries {
+      case r: UnresolvedRelation => r
+      case p if p.resolved && p.isStreaming => p
+    }.distinct.exists {
+      case r: UnresolvedRelation =>
+        scala.util.Try(Bridge.ofRows(spark, r).isStreaming).getOrElse(false)
+      case _ => true
+    }
 
   /** When a splice composes a stateful executor ATOP another graft
     * stateful executor (rank over a derived table computing an OVER
@@ -434,9 +441,10 @@ object WindowSql {
     * ordinary columns with order-insensitive state — no downstream
     * late-row filter exists to drop anything. Spark's sanctioned escape
     * is the session conf below (error → logged warning), which this
-    * route sets ONLY when the spliced child actually contains a
-    * stateful executor. */
-  private def allowChainedStateful(spark: SparkSession,
+    * route and the front door's streaming top-n ([[graft.Sql]]'s sort
+    * route; its rank executor keeps no watermark either) set ONLY when
+    * the spliced child actually contains a stateful executor. */
+  private[graft] def allowChainedStateful(spark: SparkSession,
       df: DataFrame): Unit = {
     val stateful = df.isStreaming && df.queryExecution.logical.exists {
       case _: FlatMapGroupsWithState => true

@@ -73,9 +73,33 @@ class SqlSpec extends SparkSpec {
         |    DEFINE C AS event_type = 'click', D AS event_type = 'purchase'))
         |ORDER BY user_id, first_id""".stripMargin)
     assert(rows(got).nonEmpty)
-    // both clause executions registered distinct views
-    assert(spark.catalog.tableExists("graft_mr_0"))
-    assert(spark.catalog.tableExists("graft_mr_1"))
+    // both clause executions are spliced into the plan: no view
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("graft_mr_")))
+  }
+
+  test("an embedded clause neither reads nor replaces a session view " +
+    "that shares its placeholder's name") {
+    registerEvents()
+    import spark.implicits._
+    Seq(41, 42).toDF("x").createOrReplaceTempView("graft_mr_0")
+    try {
+      val clause =
+        """events MATCH_RECOGNIZE (
+          |  PARTITION BY user_id ORDER BY ts, event_id
+          |  MEASURES A.event_id AS view_id ONE ROW PER MATCH
+          |  PATTERN (A B)
+          |  DEFINE A AS event_type = 'view', B AS event_type = 'purchase')""".stripMargin
+      val n = rows(graft.Sql.sql(spark, s"SELECT COUNT(*) FROM $clause"))
+        .head.head.asInstanceOf[Long]
+      assert(n > 0)
+      assert(rows(spark.table("graft_mr_0")).toSet ==
+        Set(Seq[Any](41), Seq[Any](42)))
+      // a statement that reads the view and embeds a clause sees both
+      val both = graft.Sql.sql(spark,
+        s"SELECT (SELECT SUM(x) FROM graft_mr_0) AS s, COUNT(*) AS n FROM $clause")
+      assert(rows(both) == Seq(Seq[Any](83L, n)))
+    } finally spark.catalog.dropTempView("graft_mr_0")
   }
 
   test("plain statements pass straight through; keyword inside a string " +
@@ -83,7 +107,55 @@ class SqlSpec extends SparkSpec {
     registerEvents()
     val got = graft.Sql.sql(spark,
       "SELECT COUNT(*) AS n, 'not MATCH_RECOGNIZE (here)' AS s FROM events")
-    assert(rows(got).head.head.asInstanceOf[Long] > 0)
+    val n = rows(got).head.head.asInstanceOf[Long]
+    assert(n > 0)
+    // nor inside a comment: neither the clause keyword nor the
+    // temporal-join spelling
+    Seq("SELECT COUNT(*) AS n FROM events -- not events MATCH_RECOGNIZE (",
+      "SELECT COUNT(*) AS n FROM events " +
+        "/* JOIN dim FOR SYSTEM_TIME AS OF t.ts AS r ON r.k = t.k */",
+      "SELECT COUNT(*) AS n FROM events -- FOR SYSTEM_TIME AS OF t.ts"
+    ).foreach(text => assert(rows(graft.Sql.sql(spark, text)) == Seq(Seq[Any](n))))
+    // a SQL script parses to a CompoundBody, which runs the same way
+    assert(rows(graft.Sql.sql(spark,
+      "BEGIN DECLARE x INT = 41; SELECT x + 1 AS y; END")) == Seq(Seq[Any](42)))
+  }
+
+  test("a temp view over a rewritten spelling stores its analyzed plan " +
+    "and reads back; a view Spark keeps as SQL text is refused") {
+    registerEvents()
+    import spark.implicits._
+    def ts(s: Int) = new java.sql.Timestamp(s * 1000L)
+    Seq((ts(1), 1), (ts(2), 2), (ts(3700), 4)).toDF("ts", "v")
+      .createOrReplaceTempView("sql_view_src")
+    val tumble =
+      """SELECT TUMBLE_START(ts, INTERVAL '1' HOUR) AS ws, SUM(v) AS s
+        |FROM sql_view_src GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)""".stripMargin
+    val clause =
+      """SELECT view_id FROM events MATCH_RECOGNIZE (
+        |  PARTITION BY user_id ORDER BY ts, event_id
+        |  MEASURES A.event_id AS view_id ONE ROW PER MATCH
+        |  PATTERN (A B)
+        |  DEFINE A AS event_type = 'view', B AS event_type = 'purchase')""".stripMargin
+    try {
+      graft.Sql.sql(spark, s"CREATE OR REPLACE TEMP VIEW sql_view_tumble AS $tumble")
+      assert(rows(spark.table("sql_view_tumble").orderBy("ws")) ==
+        Seq(Seq[Any](ts(0), 3L), Seq[Any](ts(3600), 4L)))
+      graft.Sql.sql(spark, s"CREATE OR REPLACE TEMP VIEW sql_view_mr AS $clause")
+      val want = rows(graft.Sql.sql(spark, clause)).toSet
+      assert(want.nonEmpty)
+      assert(rows(spark.table("sql_view_mr")).toSet == want)
+      // the view holds the executor's plan, not the placeholder's name:
+      // a session view created later under that name changes nothing
+      Seq(41L).toDF("view_id").createOrReplaceTempView("graft_mr_0")
+      assert(rows(spark.table("sql_view_mr")).toSet == want)
+      Seq(s"CREATE VIEW sql_view_perm AS $tumble",
+        s"ALTER VIEW sql_view_tumble AS $tumble").foreach { text =>
+        val e = intercept[IllegalArgumentException](graft.Sql.sql(spark, text))
+        assert(e.getMessage.contains("TEMP VIEW"), e.getMessage)
+      }
+    } finally Seq("sql_view_tumble", "sql_view_mr", "graft_mr_0")
+      .foreach(spark.catalog.dropTempView)
   }
 
   test("malformed embedded clause fails loudly") {
@@ -667,6 +739,60 @@ class SqlSpec extends SparkSpec {
       .agg(max("a").as("a"), max_by(col("tag"), col("a")).as("tag"))
       .as[(Long, Int, String)].collect().toSet
     assert(fin == Set((1L, 5, "z"), (2L, 3, "y")), s"got $fin")
+  }
+
+  test("streaming table by name: ROW_NUMBER and ORDER BY ... LIMIT over " +
+    "an embedded MATCH_RECOGNIZE result route to the rank executor in one " +
+    "statement") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.MrTick
+    def ts(m: Long) = new java.sql.Timestamp(m * 60000L)
+    val input = MemoryStream[MrTick]
+    input.toDF().createOrReplaceTempView("sql_stream_mr_rank")
+    val mr =
+      """sql_stream_mr_rank MATCH_RECOGNIZE (
+        |  PARTITION BY sym ORDER BY rowtime
+        |  MEASURES UP.price AS up_p
+        |  ONE ROW PER MATCH
+        |  PATTERN (DOWN+ UP)
+        |  DEFINE DOWN AS price < PREV(price), UP AS price > PREV(price))""".stripMargin
+    def start(text: String, name: String) = {
+      val df = graft.Sql.sql(spark, text)
+      assert(df.isStreaming)
+      df.writeStream.format("memory").queryName(name).outputMode("append")
+        .start()
+    }
+    // each route lifts the chained-stateful check for its own query
+    spark.conf.unset(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
+    val qs = Seq(
+      start(s"SELECT sym, up_p FROM $mr ORDER BY up_p DESC LIMIT 1", "sqlmrtop"),
+      start(s"""SELECT sym, up_p, rn FROM (
+               |  SELECT sym, up_p,
+               |    ROW_NUMBER() OVER (PARTITION BY sym ORDER BY up_p DESC) AS rn
+               |  FROM $mr)
+               |WHERE rn = 1""".stripMargin, "sqlmrrank"))
+    def step(): Unit = qs.foreach(_.processAllAvailable())
+    // ACME matches (10 -> 11) and (9 -> 13); BETA matches (6 -> 8)
+    input.addData(MrTick("ACME", 12, 1, ts(1)), MrTick("ACME", 10, 2, ts(2)),
+      MrTick("ACME", 11, 3, ts(3)), MrTick("BETA", 7, 10, ts(1)))
+    step()
+    input.addData(MrTick("ACME", 9, 4, ts(4)), MrTick("ACME", 13, 5, ts(5)),
+      MrTick("BETA", 6, 11, ts(7)), MrTick("BETA", 8, 12, ts(8)))
+    step()
+    input.addData(MrTick("ZZZ", 0, 99, ts(100))); step()
+    input.addData(MrTick("ZZZ", 0, 98, ts(200))); step()
+    qs.foreach(_.stop())
+    // append log: the latest keep-1 emission per key is the top match
+    val fin = spark.table("sqlmrrank").filter(col("sym") =!= "ZZZ")
+      .groupBy("sym").agg(max("up_p").as("up_p"))
+      .as[(String, Int)].collect().toSet
+    assert(fin == Set(("ACME", 13), ("BETA", 8)), s"got $fin")
+    // the global top-1 re-emits on each improvement; the best is ACME's
+    val best = spark.table("sqlmrtop").orderBy(col("up_p").desc)
+      .as[(String, Int)].collect().head
+    assert(best == ("ACME", 13), s"got $best")
   }
 
   test("routed streaming statements register no temp views: a session " +

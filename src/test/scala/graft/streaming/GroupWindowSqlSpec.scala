@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The reference's group-window SQL spelling (TUMBLE/HOP/SESSION +
-  * auxiliaries) through the single front door: rewrite contract,
+  * auxiliaries) through the single front door: rewrite contract (the
+  * analyzed plan equals Spark's native spelling's),
   * reference IT-case reproductions (batch
   * WindowAggregateITCase.testTumblingWindow / testNullValueInputTimestamp,
   * stream WindowAggregateITCase.testEventTimeSlidingWindow /
@@ -17,45 +18,74 @@ import graft.SparkSpec
   * view via Spark's native streaming windowed aggregate. */
 class GroupWindowSqlSpec extends SparkSpec {
 
-  private def rw(s: String) = GroupWindowSql.rewrite(s)
+  /** `gw` (ts, v, tag, proctime_ts): a small batch view for the
+    * rewrite contract. */
+  private def gw(): Unit = {
+    import spark.implicits._
+    Seq((new Timestamp(1000L), 1, "don't (really)", new Timestamp(0L)),
+      (new Timestamp(4000L), 2, "x", new Timestamp(0L)),
+      (new Timestamp(11000L), 3, "x", new Timestamp(0L)))
+      .toDF("ts", "v", "tag", "proctime_ts").createOrReplaceTempView("gw")
+  }
+
+  /** The reference spelling analyzes to the same plan as Spark's native
+    * spelling of the same windows. */
+  private def same(reference: String, native: String): Boolean =
+    graft.Sql.sql(spark, reference).queryExecution.analyzed
+      .sameResult(spark.sql(native).queryExecution.analyzed)
 
   // ---------------------------------------------------------- rewrite
 
   test("TUMBLE/HOP/SESSION rewrite to window()/session_window(); HOP's " +
     "slide-first args swap to Spark's size-first order") {
-    assert(rw("GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)") ==
-      "GROUP BY window(ts, '1 hour')")
-    assert(rw("GROUP BY HOP(ts, INTERVAL '30' MINUTE, INTERVAL '1' HOUR)") ==
-      "GROUP BY window(ts, '1 hour', '30 minute')")
-    assert(rw("GROUP BY SESSION(ts, INTERVAL '4' SECOND)") ==
-      "GROUP BY session_window(ts, '4 second')")
+    gw()
+    def q(group: String) = s"SELECT COUNT(*) AS n FROM gw GROUP BY $group"
+    assert(same(q("TUMBLE(ts, INTERVAL '1' HOUR)"), q("window(ts, '1 hour')")))
+    assert(same(q("HOP(ts, INTERVAL '30' MINUTE, INTERVAL '1' HOUR)"),
+      q("window(ts, '1 hour', '30 minute')")))
+    // Spark keeps a session gap as its duration string in the analyzed
+    // plan, so the native side spells it the way the rewrite does
+    assert(same(q("SESSION(ts, INTERVAL '4' SECOND)"),
+      q("session_window(ts, '4000000 microseconds')")))
+    // the comparison discriminates: a different size is a different plan
+    assert(!same(q("TUMBLE(ts, INTERVAL '1' HOUR)"), q("window(ts, '2 hours')")))
   }
 
   test("auxiliaries become grouping-struct fields; _ROWTIME is end - 1ms; " +
     "SESSION auxiliaries use the session_window struct") {
-    val t = rw("SELECT TUMBLE_START(ts, INTERVAL '3' SECOND), " +
-      "TUMBLE_END(ts, INTERVAL '3' SECOND), " +
-      "TUMBLE_ROWTIME(ts, INTERVAL '3' SECOND) " +
-      "FROM T GROUP BY TUMBLE(ts, INTERVAL '3' SECOND)")
-    assert(t.contains("window.start") && t.contains("window.end"))
-    assert(t.contains("(window.end - INTERVAL '0.001' SECOND)"))
-    val s = rw("SELECT SESSION_START(ts, INTERVAL '4' SECOND) " +
-      "FROM T GROUP BY SESSION(ts, INTERVAL '4' SECOND)")
-    assert(s.contains("session_window.start"))
+    gw()
+    assert(same("SELECT TUMBLE_START(ts, INTERVAL '3' SECOND) AS s, " +
+      "TUMBLE_END(ts, INTERVAL '3' SECOND) AS e, " +
+      "TUMBLE_ROWTIME(ts, INTERVAL '3' SECOND) AS r " +
+      "FROM gw GROUP BY TUMBLE(ts, INTERVAL '3' SECOND)",
+      "SELECT window.start AS s, window.end AS e, " +
+        "window.end - INTERVAL '0.001' SECOND AS r " +
+        "FROM gw GROUP BY window(ts, '3 second')"))
+    assert(same("SELECT SESSION_START(ts, INTERVAL '4' SECOND) AS s " +
+      "FROM gw GROUP BY SESSION(ts, INTERVAL '4' SECOND)",
+      "SELECT session_window.start AS s " +
+        "FROM gw GROUP BY session_window(ts, '4000000 microseconds')"))
   }
 
   test("the reference's precision-suffixed fractional interval " +
     "(INTERVAL '5.111' SECOND(1,3), batch ITCase :235) parses") {
-    assert(rw("GROUP BY HOP(ts, INTERVAL '5.111' SECOND(1,3), INTERVAL '9' SECOND)") ==
-      "GROUP BY window(ts, '9 second', '5.111 second')")
+    gw()
+    assert(same("SELECT COUNT(*) AS n FROM gw GROUP BY " +
+      "HOP(ts, INTERVAL '5.111' SECOND(1,3), INTERVAL '9' SECOND)",
+      "SELECT COUNT(*) AS n FROM gw GROUP BY " +
+        "window(ts, '9 second', '5.111 second')"))
   }
 
   test("fail-loud contract: _PROCTIME, month intervals, mismatched aux " +
     "args, two different group windows") {
-    intercept[RuntimeException](rw(
+    def rw(text: String) = graft.Sql.sql(spark, text)
+    val e1 = intercept[RuntimeException](rw(
       "SELECT TUMBLE_PROCTIME(ts, INTERVAL '1' HOUR) FROM T " +
         "GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)"))
-    intercept[RuntimeException](rw("GROUP BY TUMBLE(ts, INTERVAL '1' MONTH)"))
+    assert(e1.getMessage.contains("_PROCTIME is not supported"), e1.getMessage)
+    val e2 = intercept[RuntimeException](rw(
+      "SELECT COUNT(*) FROM T GROUP BY TUMBLE(ts, INTERVAL '1' MONTH)"))
+    assert(e2.getMessage.contains("month/year intervals"), e2.getMessage)
     intercept[IllegalArgumentException](rw(
       "SELECT TUMBLE_START(ts, INTERVAL '2' HOUR) FROM T " +
         "GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)"))
@@ -68,8 +98,12 @@ class GroupWindowSqlSpec extends SparkSpec {
     "registered proc-time attribute is rejected with the executor " +
     "pointer (the reference's stream WindowAggregateITCase accepts the " +
     "spelling; wall-clock bounds cannot be oracle-checked here)") {
+    gw()
+    def rw(text: String) = graft.Sql.sql(spark, text)
+    // TUMBLE over proc-time is served only as an Aggregate's grouping
+    // (ProcTimeWindowsSpec); anywhere else it is this rejection
     val e = intercept[IllegalArgumentException](rw(
-      "SELECT COUNT(*) FROM T GROUP BY TUMBLE(PROCTIME(), INTERVAL '1' HOUR)"))
+      "SELECT TUMBLE(PROCTIME(), INTERVAL '1' HOUR) AS w FROM T"))
     assert(e.getMessage.contains("proc-time group windows are not supported"))
     assert(e.getMessage.contains("OverAggregates"), e.getMessage)
     // the default registered proc-time attribute name
@@ -77,29 +111,31 @@ class GroupWindowSqlSpec extends SparkSpec {
       "SELECT COUNT(*) FROM T GROUP BY HOP(proctime, " +
         "INTERVAL '30' MINUTE, INTERVAL '1' HOUR)"))
     assert(e2.getMessage.contains("proc-time group windows"), e2.getMessage)
+    assert(e2.getMessage.contains("OverAggregates"), e2.getMessage)
     val e3 = intercept[IllegalArgumentException](rw(
       "SELECT COUNT(*) FROM T GROUP BY SESSION(t.proctime, " +
         "INTERVAL '4' SECOND)"))
     assert(e3.getMessage.contains("proc-time group windows"), e3.getMessage)
     // an event-time column merely RESEMBLING proc-time stays accepted
-    assert(rw("GROUP BY TUMBLE(proctime_ts, INTERVAL '1' HOUR)") ==
-      "GROUP BY window(proctime_ts, '1 hour')")
+    assert(same(
+      "SELECT COUNT(*) AS n FROM gw GROUP BY TUMBLE(proctime_ts, INTERVAL '1' HOUR)",
+      "SELECT COUNT(*) AS n FROM gw GROUP BY window(proctime_ts, '1 hour')"))
   }
 
   test("r15: backslash-escaped quotes inside string literals do not " +
     "desync the block scanner or the argument splitter") {
+    gw()
     // the literal contains \' and the word SELECT — a desynced scanner
     // would open a phantom block and misattribute the auxiliary
-    val t = rw("SELECT TUMBLE_START(ts, INTERVAL '1' HOUR), " +
+    val t = graft.Sql.sql(spark, "SELECT TUMBLE_START(ts, INTERVAL '1' HOUR) AS ws, " +
       "'it\\'s a SELECT literal' AS note " +
-      "FROM T GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)")
-    assert(t.contains("window.start") && t.contains("'it\\'s a SELECT literal'"))
-    // an escaped quote inside a group-window argument string — the
-    // splitter must not split or unbalance inside the literal
-    val u = rw("SELECT COUNT(*) FROM T " +
+      "FROM gw GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)")
+    assert(rows(t) == Seq(Seq[Any](new Timestamp(0L), "it's a SELECT literal")))
+    // an escaped quote inside a literal next to a group-window call
+    val u = graft.Sql.sql(spark, "SELECT COUNT(*) AS n FROM gw " +
       "WHERE tag = 'don\\'t (really)' " +
       "GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)")
-    assert(u.contains("window(ts, '1 hour')"), u)
+    assert(rows(u) == Seq(Seq[Any](1L)))
   }
 
   test("the rewrite composes inside DML: INSERT ... SELECT with a group " +
@@ -147,7 +183,7 @@ class GroupWindowSqlSpec extends SparkSpec {
     "bounds) — same-block auxiliaries keep working") {
     // block 1 groups by the 10s window, block 2 by the 5s window; the
     // second block's auxiliary repeats BLOCK 1's arguments
-    val e = intercept[IllegalArgumentException](GroupWindowSql.rewrite(
+    val e = intercept[IllegalArgumentException](graft.Sql.sql(spark,
       """SELECT TUMBLE_START(ts, INTERVAL '10' SECOND) AS ws, COUNT(*)
         |FROM t GROUP BY TUMBLE(ts, INTERVAL '10' SECOND)
         |UNION ALL
@@ -158,7 +194,7 @@ class GroupWindowSqlSpec extends SparkSpec {
     // a subquery block's auxiliary must not leak into the outer block:
     // outer aux with no outer group window fails even though the inner
     // block groups by those exact arguments
-    val e2 = intercept[IllegalArgumentException](GroupWindowSql.rewrite(
+    val e2 = intercept[IllegalArgumentException](graft.Sql.sql(spark,
       """SELECT TUMBLE_END(ts, INTERVAL '10' SECOND) FROM (
         |  SELECT window.start AS ts2, COUNT(*)
         |  FROM t GROUP BY TUMBLE(ts, INTERVAL '10' SECOND)) x""".stripMargin))
@@ -167,10 +203,29 @@ class GroupWindowSqlSpec extends SparkSpec {
 
   test("inert text passes through: no keywords (same instance), keywords " +
     "in string literals, a bare column named hop") {
-    val plain = "SELECT a FROM t GROUP BY a"
-    assert(rw(plain) eq plain)
-    val lit = "SELECT 'TUMBLE(ts, INTERVAL 1 HOUR)' AS s, hop FROM t"
-    assert(rw(lit) == lit)
+    import spark.implicits._
+    Seq((1, 7)).toDF("a", "hop").createOrReplaceTempView("gw_inert")
+    def one(text: String) = rows(graft.Sql.sql(spark, text))
+    assert(one("SELECT a FROM gw_inert GROUP BY a") == Seq(Seq[Any](1)))
+    assert(one("SELECT 'TUMBLE(ts, INTERVAL 1 HOUR)' AS s, hop FROM gw_inert") ==
+      Seq(Seq[Any]("TUMBLE(ts, INTERVAL 1 HOUR)", 7)))
+    // a comment and a double-quoted literal are not code either
+    assert(one("SELECT COUNT(*) AS n FROM gw_inert " +
+      "-- TUMBLE_START(ts, INTERVAL '1' HOUR)") == Seq(Seq[Any](1L)))
+    assert(one("SELECT \"TUMBLE_END(x, INTERVAL '1' HOUR)\" AS s FROM gw_inert") ==
+      Seq(Seq[Any]("TUMBLE_END(x, INTERVAL '1' HOUR)")))
+    // nothing to rewrite: the group-window pass returns the parsed plan
+    // itself, and the front door hands Spark exactly that plan
+    Seq("SELECT a FROM gw_inert GROUP BY a",
+      "SELECT 'TUMBLE(ts, INTERVAL 1 HOUR)' AS s, hop FROM gw_inert",
+      "SELECT COUNT(*) AS n FROM gw_inert -- TUMBLE_START(ts, INTERVAL '1' HOUR)"
+    ).foreach { text =>
+      val parsed = spark.sessionState.sqlParser.parsePlan(text)
+      assert(GroupWindowSql.translate(spark, parsed) eq parsed, text)
+    }
+    val plain = "SELECT a, hop FROM gw_inert WHERE a > 0 GROUP BY a, hop"
+    assert(graft.Sql.sql(spark, plain).queryExecution.logical ==
+      spark.sessionState.sqlParser.parsePlan(plain))
   }
 
   // ------------------------------------- reference ITCase reproductions

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LateralJoin}
+
 import graft.SparkSpec
 
 /** The reference's temporal-join SQL spellings through the single front
@@ -9,28 +11,50 @@ import graft.SparkSpec
   * reproduced verbatim, and the FOR SYSTEM_TIME forms. */
 class TemporalSqlSpec extends SparkSpec {
 
+  /** The generators (`explode` / `inline`) of the analyzed plan. */
+  private def generators(text: String): Seq[String] =
+    graft.Sql.sql(spark, text).queryExecution.analyzed.collectWithSubqueries {
+      case g: Generate => g.generator.prettyName
+    }
+
   test("rewrite contract: LATERAL TABLE over a registered function " +
     "becomes a versioned equi-join; unregistered calls pass through; " +
     "proc-time arguments select the latest version") {
+    import spark.implicits._
+    Seq((2L, "Euro", new Timestamp(2L)), (3L, "Euro", new Timestamp(5L)))
+      .toDF("a", "cur", "rowtime").withColumn("proctime", $"rowtime")
+      .createOrReplaceTempView("Orders_t")
+    Seq(("Euro", 114L, new Timestamp(1L)), ("Euro", 116L, new Timestamp(5L)))
+      .toDF("cur", "rate", "rt").createOrReplaceTempView("rates_v")
     TemporalSql.registerTemporalFunction("RatesT", "rates_v", "rt", "cur")
     try {
-      val got = TemporalSql.rewrite(
-        "SELECT o.a * r.rate FROM Orders AS o, " +
+      val got = graft.Sql.sql(spark,
+        "SELECT o.a * r.rate FROM Orders_t AS o, " +
           "LATERAL TABLE (RatesT(o.rowtime)) AS r WHERE r.cur = o.cur")
-      assert(got.contains("JOIN (SELECT *, lead(rt) OVER (PARTITION BY " +
-        "cur ORDER BY rt) AS graft_vend FROM rates_v) AS r"), got)
-      assert(got.contains("o.rowtime >= r.rt") &&
-        got.contains("o.rowtime < r.graft_vend"), got)
-      assert(!got.toUpperCase.contains("LATERAL"), got)
+      // a plain join over the versioned history, no lateral correlate
+      val plan = got.queryExecution.analyzed
+      assert(plan.collectFirst { case j: LateralJoin => j }.isEmpty, plan)
+      val cond = got.queryExecution.logical.collectFirst {
+        case j: Join => j.condition.get.sql
+      }.get
+      assert(cond.contains("o.rowtime >= r.rt") &&
+        cond.contains("o.rowtime < r.graft_vend"), cond)
+      assert(rows(got).map(_.head).toSet == Set(228L, 348L))
       // proc-time argument -> latest-version condition only
-      val proc = TemporalSql.rewrite(
-        "FROM Orders AS o, LATERAL TABLE (RatesT(o.proctime)) AS r")
-      assert(proc.contains("r.graft_vend IS NULL") &&
-        !proc.contains(">="), proc)
+      val proc = graft.Sql.sql(spark,
+        "SELECT o.a * r.rate FROM Orders_t AS o, " +
+          "LATERAL TABLE (RatesT(o.proctime)) AS r")
+      val pcond = proc.queryExecution.logical.collectFirst {
+        case j: Join => j.condition.get.sql
+      }.get
+      assert(pcond.contains("r.graft_vend IS NULL") && !pcond.contains(">="),
+        pcond)
+      assert(rows(proc).map(_.head).toSet == Set(232L, 348L))
       // an unregistered function is the UDTF correlate: routes to the
       // generators and fails in the analyzer under its own name
-      assert(TemporalSql.rewrite("FROM T, LATERAL TABLE (SomeUdtf(x)) AS r")
-        == "FROM T, LATERAL explode(SomeUdtf(x)) AS r")
+      val e = intercept[org.apache.spark.sql.AnalysisException](graft.Sql.sql(
+        spark, "SELECT * FROM Orders_t AS T, LATERAL TABLE (SomeUdtf(a)) AS r"))
+      assert(e.getMessage.toLowerCase.contains("someudtf"), e.getMessage)
     } finally TemporalSql.dropTemporalFunction("RatesT")
   }
 
@@ -113,25 +137,27 @@ class TemporalSqlSpec extends SparkSpec {
     // the UDTF's graft twin: an array-returning scalar UDF
     spark.udf.register("str_split",
       (s: String, d: String) => s.split(java.util.regex.Pattern.quote(d)))
+    spark.udf.register("pairs",
+      (s: String) => s.split(",").map(x => (x, x.length)))
+    Seq((1, 2, "abc-bcd"), (1, 2, "hhh"), (1, 3, "xyz"))
+      .toDF("a", "b", "c").createOrReplaceTempView("T1")
     // rewrite contract: unregistered LATERAL TABLE routes to the
     // generators (explode / inline by alias column count)
-    assert(TemporalSql.rewrite(
-      "FROM T1, LATERAL TABLE(str_split(c, ',')) as T2(s)") ==
-      "FROM T1, LATERAL explode(str_split(c, ',')) as T2(s)")
-    assert(TemporalSql.rewrite(
-      "FROM T1, LATERAL TABLE(pairs(c)) as T2(x, y)") ==
-      "FROM T1, LATERAL inline(pairs(c)) as T2(x, y)")
+    assert(generators(
+      "SELECT s FROM T1, LATERAL TABLE(str_split(c, ',')) as T2(s)") ==
+      Seq("explode"))
+    assert(generators(
+      "SELECT x, y FROM T1, LATERAL TABLE(pairs(c)) as T2(x, y)") ==
+      Seq("inline"))
     // testConstantTableFunc2 (:100-109) verbatim
     val const = graft.Sql.sql(spark,
       "SELECT * FROM LATERAL TABLE(str_split('Jack,John', ',')) as T0(d)")
     assert(rows(const).map(_.head).toSet == Set("Jack", "John"))
-    // a plain LATERAL earlier in the text (e.g. the UNNEST rewrite's
-    // output) must not stop the scan before a later LATERAL TABLE
-    assert(TemporalSql.rewrite(
-      "FROM t, LATERAL explode(arr) AS a(s), LATERAL TABLE(f(y)) AS b(r)") ==
-      "FROM t, LATERAL explode(arr) AS a(s), LATERAL explode(f(y)) AS b(r)")
-    // likewise a stray FOR word before a FOR SYSTEM_TIME (a comment is
-    // raw text to the rewriter, so it exercises the continue branch)
+    // a plain LATERAL before a LATERAL TABLE leaves the latter rewritten
+    assert(generators("SELECT s, r FROM T1, " +
+      "LATERAL explode(str_split(c, '-')) AS a(s), " +
+      "LATERAL TABLE(str_split(c, 'b')) AS b(r)") == Seq("explode", "explode"))
+    // a FOR word inside a comment before a FOR SYSTEM_TIME is not code
     TemporalSql.registerTemporalFunction("dimx", "dimx", "rt", "k")
     try {
       val s = TemporalSql.rewrite("/* FOR */ SELECT * FROM t " +
@@ -140,8 +166,6 @@ class TemporalSqlSpec extends SparkSpec {
       assert(s.startsWith("/* FOR */"), s)
     } finally TemporalSql.dropTemporalFunction("dimx")
     // testUdfIsOpenedAfterUdtf's correlate shape (:150-156)
-    Seq((1, 2, "abc-bcd"), (1, 2, "hhh"), (1, 3, "xyz"))
-      .toDF("a", "b", "c").createOrReplaceTempView("T1")
     val corr = graft.Sql.sql(spark,
       """SELECT a, b, s
         |FROM T1, LATERAL TABLE(str_split(c, '-')) as T2(s)""".stripMargin)

@@ -1,30 +1,51 @@
 package graft.streaming
 
+import org.apache.spark.sql.catalyst.expressions.{Explode, Inline}
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LateralJoin}
+
 import graft.SparkSpec
 
 /** The reference's `UNNEST` SQL spelling through the single front door:
-  * rewrite contract plus reproductions of the old-planner
+  * rewrite contract (the analyzed plan's generators) plus reproductions of the old-planner
   * SqlITCase UNNEST IT cases (primitive array, object array with a
   * multi-column alias + filter, LEFT JOIN ... ON TRUE over a collected
   * array). */
 class UnnestSqlSpec extends SparkSpec {
 
-  private def rw(s: String) = UnnestSql.rewrite(s)
+  /** The generators (`explode` / `inline`) of the analyzed plan. */
+  private def generators(text: String): Seq[String] =
+    graft.Sql.sql(spark, text).queryExecution.analyzed.collectWithSubqueries {
+      case g: Generate => g.generator match {
+        case _: Explode => "explode"
+        case _: Inline => "inline"
+        case other => other.prettyName
+      }
+    }
 
   test("rewrite: one-column alias (or none) routes to explode, " +
     "multi-column alias to inline; bare identifiers and string " +
     "literals pass through") {
-    assert(rw("FROM T, UNNEST(T.b) AS A (s)") ==
-      "FROM T, LATERAL explode(T.b) AS A (s)")
-    assert(rw("FROM T, UNNEST(T.b) AS A (s, t)") ==
-      "FROM T, LATERAL inline(T.b) AS A (s, t)")
-    assert(rw("FROM T, UNNEST(T.b)") == "FROM T, LATERAL explode(T.b)")
-    assert(rw("LEFT JOIN UNNEST(t2.st) AS A(s) ON TRUE") ==
-      "LEFT JOIN LATERAL explode(t2.st) AS A(s) ON TRUE")
-    val plain = "SELECT unnest FROM t"
-    assert(rw(plain) == plain)
-    val lit = "SELECT 'UNNEST(x)' AS s FROM t"
-    assert(rw(lit) == lit)
+    import spark.implicits._
+    Seq((1, Array(12, 45), Array((12, "45.6")), "it's", 7))
+      .toDF("a", "b", "p", "c", "unnest").createOrReplaceTempView("T")
+    assert(generators("SELECT s FROM T, UNNEST(T.b) AS A (s)") == Seq("explode"))
+    assert(generators("SELECT s, t FROM T, UNNEST(T.p) AS A (s, t)") ==
+      Seq("inline"))
+    assert(generators("SELECT * FROM T, UNNEST(T.b)") == Seq("explode"))
+    val left = graft.Sql.sql(spark,
+      "SELECT a, s FROM T LEFT JOIN UNNEST(T.b) AS A(s) ON TRUE")
+    assert(left.queryExecution.analyzed.collectFirst {
+      case j: LateralJoin => j.joinType
+    }.contains(LeftOuter))
+    assert(rows(left).toSet == Set(Seq[Any](1, 12), Seq[Any](1, 45)))
+    assert(rows(graft.Sql.sql(spark, "SELECT unnest FROM T")) == Seq(Seq[Any](7)))
+    assert(rows(graft.Sql.sql(spark, "SELECT 'UNNEST(x)' AS s FROM T")) ==
+      Seq(Seq[Any]("UNNEST(x)")))
+    // a backslash-escaped quote before the call
+    assert(rows(graft.Sql.sql(spark,
+      "SELECT 'it\\'s' AS q, s FROM T, UNNEST(T.b) AS A (s)")).toSet ==
+      Set(Seq[Any]("it's", 12), Seq[Any]("it's", 45)))
   }
 
   test("reference stream SqlITCase.testUnnestPrimitiveArrayFromTable" +
