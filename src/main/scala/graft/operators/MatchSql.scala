@@ -10,10 +10,11 @@ import graft.streaming.MatchRecognizeSql
   * MatchCodeGenerator.scala:82, MatchRecognizeITCase grammar surface)
   * through [[graft.streaming.MatchRecognizeSql.sqlDf]], each of q125–q130
   * hash-checked by the SAME DuckDB oracle as its programmatic-API twin in
-  * [[Funnel]] — so the SQL compiler is verified to produce bit-identical
-  * results to the [[graft.streaming.PatternMatch.Step]] surface over the
-  * same executor, and a reference user can paste the clause instead of
-  * building steps. */
+  * [[Funnel]] — so the SQL entry (its clause parser, with DEFINE and
+  * MEASURES parsed, typed and evaluated by Spark) is verified to produce
+  * bit-identical results to the [[graft.streaming.PatternMatch.Step]]
+  * surface over the same executor, and a reference user can paste the
+  * clause instead of building steps. */
 object MatchSql {
 
   def defs: Seq[QueryDef] =

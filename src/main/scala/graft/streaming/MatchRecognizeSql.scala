@@ -1,19 +1,25 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Cast, Divide, EvalMode, Expression, Generator, GenericInternalRow, IntegralDivide, JoinedRow, Literal, MutableProjection, Not, Or, RuntimeReplaceable, SpecificInternalRow, SubqueryExpression, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate, First, Last}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Sql.Scan
 import graft.streaming.PatternMatch._
 
-/** SQL-syntax entry for MATCH_RECOGNIZE — a clause parser and expression
-  * compiler onto the generic NFA ([[PatternMatch]]), covering the
-  * reference's IT-case grammar surface (reference:
-  * flink-table-planner-blink StreamExecMatch.scala:68 compiles the
-  * parsed clause, MatchCodeGenerator.scala:82 codegens DEFINE/MEASURES,
-  * and stream/sql/MatchRecognizeITCase.scala exercises the grammar),
-  * while Spark's parser has no MATCH_RECOGNIZE production at all.
+/** SQL-syntax entry for MATCH_RECOGNIZE — a clause parser onto the
+  * generic NFA ([[PatternMatch]]), covering the reference's IT-case
+  * grammar surface (reference: flink-table-planner-blink
+  * StreamExecMatch.scala:68 compiles the parsed clause,
+  * MatchCodeGenerator.scala:82 codegens DEFINE/MEASURES, and
+  * stream/sql/MatchRecognizeITCase.scala exercises the grammar), while
+  * Spark's parser has no MATCH_RECOGNIZE production at all.
   *
   * One entry, [[sqlDf]]: ARBITRARY DataFrames, schema-driven field
   * registry, composite or empty `PARTITION BY`, arbitrary `ORDER BY`
@@ -38,32 +44,38 @@ import graft.streaming.PatternMatch._
   * )
   * }}}
   *
-  * The expression language covers the reference IT cases: AND/OR/NOT,
-  * comparisons, IS [NOT] NULL, [NOT] LIKE, arithmetic (+ - * /), string
-  * and numeric literals, bare fields (DEFINE: the current row; MEASURES:
-  * the universal variable's last row), `VAR.field`, cross-variable
+  * The expression language of DEFINE and MEASURES is Spark SQL's, as
+  * the reference compiles them with its one expression code generator:
+  * each DEFINE body and MEASURES item is cut out of the clause as text,
+  * parsed by Spark's `parseExpression`, typed by Spark's analyzer and
+  * evaluated by Spark's codegen'd projections. On top of it come the
+  * pattern functions, each rewritten into a slot of a per-evaluation
+  * context row ([[Slot]]) that the executor fills: `VAR.field` (the
+  * variable's last bound row); bare fields (DEFINE: the current row;
+  * MEASURES: the universal variable's last row); cross-variable
   * navigation `FIRST(expr[, n])` / `LAST(expr[, n])` over rows already
   * bound in the attempt (RUNNING semantics — the row under DEFINE
-  * evaluation counts as bound, so `LAST(DOWN.price, 1)` is the
-  * previous DOWN row and `LAST(A.name, 2) IS NULL` holds when A bound
-  * fewer than 3 rows; MatchRecognizeITCase.scala:178-182,404-409),
-  * input navigation `PREV(expr[, n])` / `NEXT(expr[, n])` at arbitrary
-  * offsets in both modes (r14 — the streaming executor retains the last
-  * k consumed rows as the predecessor marker, k = the deepest PREV
-  * offset declared; r15 — also in MEASURES, anchored at the match's
-  * LAST row under FINAL semantics and at each output row under ALL
-  * ROWS, navigating the contiguous input window captured with the
-  * match; r16 — NEXT in MEASURES streams too, via DELAYED EMISSION:
-  * the executor holds an adjudicated match until its successor rows
-  * close, then emits), aggregates `COUNT(*)`, `COUNT(V.*)`,
-  * `COUNT/SUM/MIN/MAX/AVG(expr)` (COUNT(expr) skips null evaluations,
-  * per SQL), `CLASSIFIER()` / `MATCH_NUMBER()`, and `MATCH_ROWTIME()`
-  * (the last matched row's primary order value, the reference's
-  * MatchRowTimeFunction — enables windowed GROUP BY over the clause
-  * result, MatchRecognizeITCase.testWindowedGroupingAppliedTo...), and
-  * the SQL:2016 `FINAL` / `RUNNING` modifiers on an aggregate or
+  * evaluation counts as bound, so `LAST(DOWN.price, 1)` is the previous
+  * DOWN row and `LAST(A.name, 2) IS NULL` holds when A bound fewer than
+  * 3 rows; MatchRecognizeITCase.scala:178-182,404-409); input navigation
+  * `PREV(expr[, n])` / `NEXT(expr[, n])` at arbitrary offsets in both
+  * modes (a streaming DEFINE holds a row whose NEXT has not arrived; in
+  * MEASURES it anchors at the match's LAST row under FINAL semantics and
+  * at each output row under ALL ROWS, and a stream holds the match until
+  * its successor rows close — DELAYED EMISSION); aggregates `COUNT(*)`,
+  * `COUNT(V.*)`, `COUNT/SUM/MIN/MAX/AVG(expr)`, folded with Spark's own
+  * aggregate functions; `CLASSIFIER()` / `MATCH_NUMBER()`; and
+  * `MATCH_ROWTIME()` (the last matched row's primary order value, the
+  * reference's MatchRowTimeFunction — enables windowed GROUP BY over the
+  * clause result, MatchRecognizeITCase.testWindowedGroupingAppliedTo...).
+  * The SQL:2016 `FINAL` / `RUNNING` modifiers apply to an aggregate or
   * FIRST/LAST in MEASURES (`FINAL COUNT(B.*)` on an ALL ROWS row is the
-  * whole match's count; DEFINE rejects FINAL at parse time).
+  * whole match's count; DEFINE rejects FINAL). Result types are Spark's,
+  * with one exception kept from the reference: `/` over two integral
+  * operands divides integrally (Calcite's rule; Spark's analyzer would
+  * return DOUBLE), and division by zero raises. A function outside this
+  * surface (an unknown aggregate, a window function) fails and names
+  * itself.
   *
   * Bounded quantifiers `{n}` / `{n,}` / `{n,m}` carry the reference's
   * POSSESSIVE-greedy semantics (see [[PatternMatch.Times]]): the
@@ -87,439 +99,463 @@ import graft.streaming.PatternMatch._
 object MatchRecognizeSql {
 
   // =====================================================================
-  // Expression AST
+  // Slots: the pattern-specific values an expression reads
   // =====================================================================
-  private sealed trait Ex
-  private final case class Lit(v: Any, dt: DataType) extends Ex
-  /** Bare field of the context row (DEFINE: the current row; inside a
-    * navigation: the navigated row). */
-  private final case class CurField(field: String) extends Ex
-  /** `VAR.field` placeholder — rewritten during parse finalization to
-    * either a CurField (inside its own navigation) or LAST(v, 0). */
-  private final case class VarField(variable: String, field: String) extends Ex
-  /** FIRST/LAST logical navigation over bound rows. variable None = the
-    * universal row-pattern variable (all bound rows in order). */
-  private final case class Nav(first: Boolean, variable: Option[String],
-      expr: Ex, off: Int) extends Ex
-  /** PREV/NEXT physical navigation over the key's input order. */
-  private final case class InputNav(dir: Int, expr: Ex, off: Int) extends Ex
-  private final case class Arith(op: Char, l: Ex, r: Ex) extends Ex
-  private final case class Neg(e: Ex) extends Ex
-  private final case class Cmp(op: String, l: Ex, r: Ex) extends Ex
-  private final case class IsNullEx(e: Ex, negated: Boolean) extends Ex
-  private final case class LikeEx(e: Ex, pattern: String, negated: Boolean) extends Ex
-  private final case class AndEx(l: Ex, r: Ex) extends Ex
-  private final case class OrEx(l: Ex, r: Ex) extends Ex
-  private final case class NotEx(e: Ex) extends Ex
-  /** fn in COUNT/SUM/MIN/MAX/AVG; expr None = COUNT(*) / COUNT(V.*). */
-  private final case class AggEx(fn: String, variable: Option[String],
-      expr: Option[Ex]) extends Ex
-  private case object ClassifierEx extends Ex
-  private case object MatchNumberEx extends Ex
-  /** `MATCH_ROWTIME()` — parse-time sugar, rewritten during parse
-    * finalization to universal `LAST(<primary order column>)` (the last
-    * matched row's event time, the reference's
-    * `MatchRowTimeFunction`). */
-  private case object MatchRowtimeEx extends Ex
-  /** SQL:2016 `FINAL` on an aggregate or FIRST/LAST navigation in
-    * MEASURES: evaluated over the WHOLE match's bindings even on an
-    * ALL ROWS PER MATCH row, where every measure is RUNNING by default.
-    * (`RUNNING` parses to the bare expression.) */
-  private final case class FinalEx(e: Ex) extends Ex
+  /** A value the executor computes per evaluation; the Catalyst
+    * expression reads it as an attribute. `inner` is a row-level
+    * expression over ONE input row (for [[Agg]], the aggregate call —
+    * Spark's `DeclarativeAggregate` once resolved); `fin` is SQL:2016
+    * FINAL: the whole match's rows, even on an ALL ROWS PER MATCH row. */
+  private sealed trait Slot extends Serializable
+  /** FIRST/LAST(inner, off) over the rows bound to `v` (None = the
+    * universal variable: every bound row). `V.col` is LAST(V.col, 0). */
+  private final case class Nav(first: Boolean, v: Option[String],
+      inner: Expression, off: Int, fin: Boolean) extends Slot
+  /** PREV (off < 0) / NEXT (off > 0) over the key's input order. */
+  private final case class Phys(off: Int, inner: Expression) extends Slot
+  /** COUNT/SUM/MIN/MAX/AVG over the rows bound to `v`. */
+  private final case class Agg(v: Option[String], inner: Expression,
+      fin: Boolean) extends Slot
+  private case object Classifier extends Slot
+  private case object MatchNumber extends Slot
 
-  private final case class Parsed(partCols: Seq[String],
-      orderKeys: Seq[(String, Boolean)],
-      measures: Seq[(String, Ex)], allRows: Boolean, skip: SkipStrategy,
-      pattern: Seq[(String, Quant)], within: Option[java.time.Duration],
-      defines: Map[String, Ex])
+  private def slotName(k: Int): String = s"slot#$k"
 
-  // =====================================================================
-  // Field access (schema-driven registry; reference MatchRecognizeITCase
-  // runs the clause over arbitrary registered tables)
-  // =====================================================================
-  private final class RowAccess(schema: StructType) extends Serializable {
-    private val byLower =
-      schema.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
-    def indexOf(name: String): Option[Int] = byLower.get(name.toLowerCase)
-    def canonical(i: Int): String = schema.fieldNames(i)
-    def dataType(i: Int): DataType = schema.fields(i).dataType
-    def fieldNames: Seq[String] = schema.fieldNames.toSeq
+  private def slotType(s: Slot): DataType = s match {
+    case n: Nav => n.inner.dataType
+    case p: Phys => p.inner.dataType
+    case a: Agg => a.inner.dataType
+    case Classifier => StringType
+    case MatchNumber => LongType
+  }
+
+  private val NavFns = Set("first", "last")
+  private val PhysFns = Set("prev", "next")
+  private val AggFns = Set("count", "sum", "min", "max", "avg")
+  /** `FINAL <call>` travels through Spark's parser as `FINAL(<call>)`. */
+  private val FinalFn = "final"
+  private val PatternFns = NavFns ++ PhysFns ++ AggFns ++
+    Set("classifier", "match_number", "match_rowtime", FinalFn)
+
+  /** A parsed call by lower-case name. Spark's parser returns a
+    * one-argument FIRST/LAST as its own `first`/`last` aggregate (with
+    * IGNORE NULLS it stays Spark's, and fails as unsupported). */
+  private object Call {
+    def unapply(e: Expression): Option[(String, Seq[Expression])] = e match {
+      case f: UnresolvedFunction if f.nameParts.length == 1 =>
+        val name = f.nameParts.head.toLowerCase(java.util.Locale.ROOT)
+        require(!PatternFns(name) || !(f.isDistinct || f.filter.isDefined ||
+          f.ignoreNulls), s"${name.toUpperCase} in MATCH_RECOGNIZE takes no " +
+          "DISTINCT, FILTER or IGNORE NULLS")
+        Some((name, f.arguments))
+      case AggregateExpression(First(c, false), _, _, _, _) => Some(("first", Seq(c)))
+      case AggregateExpression(Last(c, false), _, _, _, _) => Some(("last", Seq(c)))
+      case _ => None
+    }
+  }
+
+  /** Rewrites parsed DEFINE bodies (`measures = false`: a bare field is
+    * the current row) or MEASURES items (a bare field is the universal
+    * variable's last row): every pattern-specific call becomes the
+    * attribute of a [[Slot]], which leaves plain Spark SQL. Identical
+    * calls share one slot. */
+  private final class Slotter(vars: Set[String], orderCol: String,
+      measures: Boolean) {
+    val slots = scala.collection.mutable.LinkedHashMap.empty[Slot, Int]
+
+    private def slot(s: Slot): Expression =
+      UnresolvedAttribute(Seq(slotName(slots.getOrElseUpdate(s, slots.size))))
+
+    private def known(v: String): String = {
+      require(vars(v), s"expression references '$v' which is not a " +
+        s"PATTERN variable (${vars.mkString(", ")})")
+      v
+    }
+
+    def rewrite(e: Expression, where: String): Expression = e match {
+      case Call(FinalFn, args) =>
+        require(measures, s"FINAL is only allowed in MEASURES (found in $where)")
+        slot(args match {
+          case Seq(c @ Call(fn, _)) if NavFns(fn) || AggFns(fn) => call(c, fin = true)
+          case _ => throw new IllegalArgumentException(
+            s"FINAL applies to an aggregate or FIRST/LAST (in $where)")
+        })
+      case Call(fn, _) if NavFns(fn) || AggFns(fn) => slot(call(e, fin = false))
+      case Call(fn, args) if PhysFns(fn) =>
+        val (_, inner) = rowLevel(fn, args, "PREV/NEXT cannot nest navigation")
+        val off = offset(fn, args, 1)
+        slot(Phys(if (fn == "prev") -off else off, inner))
+      case Call("classifier", Seq()) => slot(Classifier)
+      case Call("match_number", Seq()) => slot(MatchNumber)
+      case Call("match_rowtime", Seq()) =>
+        require(orderCol.nonEmpty, "MATCH_ROWTIME() requires an ORDER BY")
+        slot(Nav(first = false, None, UnresolvedAttribute(Seq(orderCol)), 0,
+          fin = false))
+      case a: UnresolvedAttribute if a.nameParts.length > 1 =>
+        slot(Nav(first = false, Some(known(a.nameParts.head)),
+          UnresolvedAttribute(a.nameParts.tail), 0, fin = false))
+      case a: UnresolvedAttribute if measures =>
+        slot(Nav(first = false, None, a, 0, fin = false))
+      case _: UnresolvedStar => throw new IllegalArgumentException(
+        s"only COUNT(*) and COUNT(<var>.*) take a star (in $where)")
+      case other => other.mapChildren(rewrite(_, where))
+    }
+
+    private def call(e: Expression, fin: Boolean): Slot = e match {
+      case Call(fn, args) if NavFns(fn) =>
+        val (v, inner) = rowLevel(fn, args,
+          "FIRST/LAST cannot nest navigation or aggregates")
+        Nav(fn == "first", v, inner, offset(fn, args, 0), fin)
+      case Call("count", Seq(UnresolvedStar(Some(Seq(v))))) =>
+        Agg(Some(known(v)), UnresolvedFunction("count", Seq(Literal(1)),
+          isDistinct = false), fin)
+      case Call(fn, args) =>
+        require(args.length == 1, s"${fn.toUpperCase} takes one argument")
+        val (v, inner) = rowLevel(fn, args,
+          s"${fn.toUpperCase} argument must be a row-level expression")
+        Agg(v, UnresolvedFunction(fn, Seq(inner), isDistinct = false), fin)
+    }
+
+    /** A navigation or aggregate argument: a row-level expression over
+      * the rows of at most one variable, its `V.` qualifiers dropped. */
+    private def rowLevel(fn: String, args: Seq[Expression],
+        nested: String): (Option[String], Expression) = {
+      require(args.nonEmpty, s"${fn.toUpperCase} needs an argument")
+      val e = args.head
+      require(!e.exists {
+        case Call(f, _) => PatternFns(f)
+        case _ => false
+      }, nested)
+      val vs = e.collect {
+        case a: UnresolvedAttribute if a.nameParts.length > 1 => known(a.nameParts.head)
+      }.distinct
+      require(vs.size <= 1, s"${fn.toUpperCase} argument references " +
+        s"multiple pattern variables (${vs.mkString(", ")})")
+      (vs.headOption, e.transform {
+        case a: UnresolvedAttribute if a.nameParts.length > 1 =>
+          UnresolvedAttribute(a.nameParts.tail)
+      })
+    }
+
+    private def offset(fn: String, args: Seq[Expression], default: Int): Int =
+      args match {
+        case Seq(_) => default
+        case Seq(_, Literal(n: Int, IntegerType)) if n >= 0 => n
+        case _ => throw new IllegalArgumentException(s"${fn.toUpperCase} " +
+          s"takes (expr[, non-negative integer offset]), got (${args.mkString(", ")})")
+      }
   }
 
   // =====================================================================
-  // Evaluation
+  // Analysis: Spark types every expression
   // =====================================================================
-  /** Sentinel for a value that CANNOT BE KNOWN YET in streaming (a NEXT
-    * reference past a non-final buffer tail). Propagates through every
-    * operator — even IS NULL — and surfaces as Undecided at a predicate
-    * root, so the NFA holds the row instead of mis-deciding. */
+  /** Spark's analysis of `exprs` over `relation`, as one `Project` (or,
+    * for aggregate calls, one global `Aggregate`), with integral `/`
+    * made integral and RuntimeReplaceable expressions replaced the way
+    * Spark's optimizer replaces them. */
+  private def analyze(spark: SparkSession, exprs: Seq[Expression],
+      relation: LogicalPlan, aggregate: Boolean): Seq[Expression] =
+    if (exprs.isEmpty) Nil
+    else {
+      val items = exprs.zipWithIndex.map { case (e, i) => Alias(e, s"_$i")() }
+      def run(plan: LogicalPlan) = Bridge.ofRows(spark, plan).queryExecution.analyzed
+      val first = run(if (aggregate) Aggregate(Nil, items, relation, None)
+        else Project(items, relation))
+      val divided = first.transformAllExpressions(integralDivide)
+      val analyzed = if (divided == first) first else run(divided)
+      val out = analyzed match {
+        case Project(list, _: LocalRelation) if !aggregate => list
+        case Aggregate(Nil, list, _: LocalRelation, _) if aggregate => list
+        case other => unsupported(other)
+      }
+      if (out.exists(_.exists(_.isInstanceOf[SubqueryExpression])))
+        unsupported(analyzed)
+      out.map { case a: Alias => replaced(a.child) }
+    }
+
+  /** `/` over two integral operands divides integrally (the reference's
+    * Calcite rule — `SUM(price * weight) / SUM(weight)` is a BIGINT),
+    * where Spark's analyzer widens both sides to DOUBLE; division by
+    * zero raises. */
+  private val integralDivide: PartialFunction[Expression, Expression] = {
+    case Divide(Widened(l), Widened(r), _) => IntegralDivide(l, r, EvalMode.ANSI)
+  }
+
+  /** An integral operand that Spark's analyzer cast to DOUBLE (not a
+    * cast the statement wrote). */
+  private object Widened {
+    def unapply(e: Expression): Option[Expression] = e match {
+      case c @ Cast(child, DoubleType, _, _)
+          if c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty =>
+        child.dataType match {
+          case ByteType | ShortType | IntegerType | LongType => Some(child)
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
+  private def replaced(e: Expression): Expression = e match {
+    case r: RuntimeReplaceable => replaced(r.replacement)
+    case _ => e.mapChildren(replaced)
+  }
+
+  private def unsupported(plan: LogicalPlan): Nothing = {
+    val fn = plan.collect { case n => n.expressions }.flatten.flatMap(_.collectFirst {
+      case a: AggregateExpression => a.aggregateFunction.prettyName
+      case w: WindowExpression => w.windowFunction.prettyName
+      case g: Generator => g.prettyName
+      case _: SubqueryExpression => "a subquery"
+    }).headOption.getOrElse(plan.nodeName)
+    throw new IllegalArgumentException(s"MATCH_RECOGNIZE cannot evaluate " +
+      s"$fn: DEFINE and MEASURES take row-level expressions, " +
+      "PREV/NEXT/FIRST/LAST, COUNT/SUM/MIN/MAX/AVG, CLASSIFIER(), " +
+      "MATCH_NUMBER() and MATCH_ROWTIME()")
+  }
+
+  /** Resolve every slot's inner expression over the input relation: one
+    * analysis for the row-level ones, one for the aggregate calls. */
+  private def resolveSlots(spark: SparkSession, slots: IndexedSeq[Slot],
+      input: Seq[Attribute]): IndexedSeq[Slot] = {
+    val rel = LocalRelation(input)
+    val rows = analyze(spark, slots.collect {
+      case n: Nav => n.inner
+      case p: Phys => p.inner
+    }, rel, aggregate = false).iterator
+    val aggs = analyze(spark, slots.collect { case a: Agg => a.inner }, rel,
+      aggregate = true).iterator.map {
+      case a: AggregateExpression => a.aggregateFunction
+      case e => e
+    }
+    slots.map {
+      case n: Nav => n.copy(inner = rows.next())
+      case p: Phys => p.copy(inner = rows.next())
+      case a: Agg => a.copy(inner = aggs.next())
+      case s => s
+    }
+  }
+
+  // =====================================================================
+  // Evaluation (in the task: codegen'd projections do not serialize)
+  // =====================================================================
+  /** What the slots of one evaluation read: the rows bound so far
+    * (`running`) and in the whole match (`whole`, for FINAL) by variable
+    * (None = all), the key's input order around the anchor row, and
+    * CLASSIFIER() / MATCH_NUMBER(). */
+  private final class Env(val running: Option[String] => IndexedSeq[Row],
+      val whole: Option[String] => IndexedSeq[Row],
+      val inputAt: Int => Option[Row], val pendingAt: Int => Boolean,
+      val classifier: String, val matchNo: Long)
+
+  /** A value that CANNOT BE KNOWN YET on a stream: a NEXT slot past a
+    * non-final buffer tail. */
   private case object Pending
 
-  /** Evaluation environment: the pinned context row (for bare fields and
-    * navigated sub-expressions), the attempt/match bindings (`boundF`,
-    * RUNNING; `finalF`, the whole match for FINAL), and — in DEFINE
-    * position — the key's input order. */
-  private final class Env(
-      val cur: Option[Row],
-      boundF: Option[String] => IndexedSeq[Row],
-      inputF: Int => Option[Row],
-      pendingF: Int => Boolean,
-      val classifier: String,
-      val matchNo: Long,
-      finalF: Option[String] => IndexedSeq[Row]) {
-    def bound(v: Option[String]): IndexedSeq[Row] = boundF(v)
-    def inputAt(off: Int): Option[Row] = inputF(off)
-    def inputPending(off: Int): Boolean = pendingF(off)
-    def withCur(r: Row): Env = new Env(Some(r), boundF, inputF, pendingF,
-      classifier, matchNo, finalF)
-    def finalView: Env =
-      new Env(cur, finalF, inputF, pendingF, classifier, matchNo, finalF)
-  }
-
-  private type Eval = Env => Any
-
-  private def isIntegral(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-  private def isNumeric(dt: DataType): Boolean = dt match {
-    case _: NumericType => true
-    case _ => false
-  }
-
-  /** Static result type of an expression — drives the output schema and
-    * the arithmetic mode. Integral arithmetic stays exact in Long; any
-    * fractional/decimal operand promotes to Double (documented
-    * simplification: decimal-typed MEASURE arithmetic returns DOUBLE). */
-  private def typeOf(e: Ex, acc: RowAccess): DataType = e match {
-    case Lit(_, dt) => dt
-    case CurField(f) => acc.dataType(fieldIdx(acc, f))
-    case VarField(_, f) => acc.dataType(fieldIdx(acc, f))
-    case Nav(_, _, inner, _) => typeOf(inner, acc)
-    case InputNav(_, inner, _) => typeOf(inner, acc)
-    case Neg(inner) =>
-      if (isIntegral(typeOf(inner, acc))) LongType else DoubleType
-    case Arith(_, l, r) =>
-      if (isIntegral(typeOf(l, acc)) && isIntegral(typeOf(r, acc))) LongType
-      else DoubleType
-    case AggEx("COUNT", _, _) => LongType
-    case AggEx("AVG", _, _) => DoubleType
-    case AggEx("SUM", _, Some(inner)) =>
-      if (isIntegral(typeOf(inner, acc))) LongType else DoubleType
-    case AggEx(_, _, Some(inner)) => typeOf(inner, acc) // MIN/MAX
-    case AggEx(fn, _, None) => sys.error(s"$fn requires an argument")
-    case ClassifierEx => StringType
-    case MatchNumberEx => LongType
-    case FinalEx(inner) => typeOf(inner, acc)
-    case _: Cmp | _: IsNullEx | _: LikeEx | _: AndEx | _: OrEx | _: NotEx =>
-      BooleanType
-  }
-
-  private def fieldIdx(acc: RowAccess, f: String): Int =
-    acc.indexOf(f).getOrElse(sys.error(
-      s"unknown field '$f' (have: ${acc.fieldNames.mkString(", ")})"))
-
-  private def toD(a: Any): Double = a match {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case l: Long => l.toDouble
-    case i: Int => i.toDouble
-    case s: Short => s.toDouble
-    case b: Byte => b.toDouble
-    case d: java.math.BigDecimal => d.doubleValue()
-    case d: BigDecimal => d.toDouble
-    case other => sys.error(
-      s"cannot use ${other.getClass.getSimpleName} numerically")
-  }
-  private def toL(a: Any): Long = a match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case b: Byte => b.toLong
-    case other => sys.error(
-      s"cannot use ${other.getClass.getSimpleName} as an integer")
-  }
-
-  /** SQL ordering comparison; both sides non-null. */
-  private def cmpVals(a: Any, b: Any): Int = (a, b) match {
-    case (x: String, y: String) => x.compareTo(y)
-    case (x: Timestamp, y: Timestamp) => x.compareTo(y)
-    case (x: java.sql.Date, y: java.sql.Date) => x.compareTo(y)
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => x.compareTo(y)
-    case _ => java.lang.Double.compare(toD(a), toD(b))
-  }
-
-  private def likeRegex(pattern: String): java.util.regex.Pattern = {
-    val sb = new StringBuilder
-    pattern.foreach {
-      case '%' => sb.append(".*")
-      case '_' => sb.append('.')
-      case c => sb.append(java.util.regex.Pattern.quote(c.toString))
+  /** Row → InternalRow over the input fields `exprs` read (the others
+    * stay null); the returned row is reused. */
+  private def converter(exprs: Seq[Expression],
+      input: Seq[Attribute]): Row => InternalRow = {
+    val used = input.indices.filter(i =>
+      exprs.exists(_.references.contains(input(i)))).toArray
+    val toCatalyst = used.map(i =>
+      CatalystTypeConverters.createToCatalystConverter(input(i).dataType))
+    val out = new GenericInternalRow(input.length)
+    r => {
+      var k = 0
+      while (k < used.length) {
+        out.update(used(k), toCatalyst(k)(r.get(used(k))))
+        k += 1
+      }
+      out
     }
-    java.util.regex.Pattern.compile(sb.toString, java.util.regex.Pattern.DOTALL)
   }
 
-  /** Compile to a closure over Env. Values follow SQL 3-valued logic:
-    * null propagates; Pending (streaming-undecidable) dominates except
-    * where Kleene logic already decides (false AND x, true OR x).
-    *
-    * `lenient` marks positions whose value feeds the predicate root only
-    * through AND/OR (never through NOT / IS NULL / a comparison, which all
-    * distinguish FALSE from NULL). There the root maps FALSE and NULL to
-    * the same outcome (Unsat), so AND(Pending, null) — whose truth value
-    * is confined to {FALSE, NULL} — is already decided and must not hold
-    * the NFA buffer as Undecided (advice r10). */
-  private def compile(e: Ex, acc: RowAccess,
-      lenient: Boolean = false): Eval = e match {
-    case Lit(v, _) => _ => v
-    case CurField(f) =>
-      val i = fieldIdx(acc, f)
-      env => env.cur.getOrElse(sys.error(
-        s"field '$f' has no context row here")).get(i)
-    case VarField(v, f) =>
-      // post-finalization this only remains as sugar for LAST(v, 0)
-      compile(Nav(first = false, Some(v), CurField(f), 0), acc)
-    case Nav(first, variable, inner, off) =>
-      val fInner = compile(inner, acc)
-      env => {
-        val rows = env.bound(variable)
-        val idx = if (first) off else rows.length - 1 - off
-        if (idx < 0 || idx >= rows.length) null
-        else fInner(env.withCur(rows(idx)))
+  /** One side's slots (all DEFINEs, or all MEASURES), filled per
+    * evaluation into `row` (field k = slot k); `pending(k)` marks a
+    * slot whose value cannot be known yet. */
+  private final class Slots(slots: IndexedSeq[Slot], input: Seq[Attribute])
+      extends Serializable {
+    def width: Int = slots.length
+    @transient lazy val row = new GenericInternalRow(width)
+    @transient lazy val pending = new Array[Boolean](width)
+    @transient private lazy val evals: Array[Env => Any] =
+      slots.map(compile).toArray
+
+    def fill(env: Env, which: Array[Int]): Unit = {
+      var j = 0
+      while (j < which.length) {
+        val k = which(j)
+        val v = evals(k)(env)
+        pending(k) = v.asInstanceOf[AnyRef] eq Pending
+        row.update(k, if (pending(k)) null else v)
+        j += 1
       }
-    case InputNav(dir, inner, off) =>
-      val fInner = compile(inner, acc)
-      env => env.inputAt(dir * off) match {
-        case Some(r) => fInner(env.withCur(r))
-        case None => if (dir > 0 && env.inputPending(off)) Pending else null
+    }
+
+    private def rowFn(inner: Expression): Row => Any = {
+      val p = MutableProjection.create(Seq(inner), input)
+      val conv = converter(Seq(inner), input)
+      r => p(conv(r)).get(0, inner.dataType)
+    }
+
+    private def compile(s: Slot): Env => Any = s match {
+      case Nav(first, v, inner, off, fin) =>
+        val f = rowFn(inner)
+        env => {
+          val rows = if (fin) env.whole(v) else env.running(v)
+          val i = if (first) off else rows.length - 1 - off
+          if (i < 0 || i >= rows.length) null else f(rows(i))
+        }
+      case Phys(off, inner) =>
+        val f = rowFn(inner)
+        env => env.inputAt(off) match {
+          case Some(r) => f(r)
+          case None => if (off > 0 && env.pendingAt(off)) Pending else null
+        }
+      case Agg(v, d: DeclarativeAggregate, fin) =>
+        // Spark's own fold: initial values, per-row update over
+        // (buffer ++ input row), evaluate
+        val buf = new SpecificInternalRow(d.aggBufferAttributes.map(_.dataType))
+        val init = MutableProjection.create(d.initialValues).target(buf)
+        val update = MutableProjection.create(d.updateExpressions,
+          d.aggBufferAttributes ++ input).target(buf)
+        val result = MutableProjection.create(Seq(d.evaluateExpression),
+          d.aggBufferAttributes)
+        val conv = converter(d.children, input)
+        val join = new JoinedRow
+        env => {
+          init(InternalRow.empty)
+          (if (fin) env.whole(v) else env.running(v))
+            .foreach(r => update(join(buf, conv(r))))
+          result(buf).get(0, d.dataType)
+        }
+      case Classifier => env => UTF8String.fromString(env.classifier)
+      case MatchNumber => env => env.matchNo
+      case other => sys.error(s"unresolved slot $other")
+    }
+  }
+
+  /** Kleene view of a DEFINE: AND/OR/NOT over leaves, split only above
+    * leaves that read a NEXT slot (the one source of Pending). A leaf
+    * reading a pending slot is Pending whatever its operators, IS NULL
+    * included. */
+  private sealed trait Tri extends Serializable
+  private final case class Leaf(id: Int, next: Seq[Int]) extends Tri
+  private final case class TAnd(l: Tri, r: Tri) extends Tri
+  private final case class TOr(l: Tri, r: Tri) extends Tri
+  private final case class TNot(c: Tri) extends Tri
+
+  private final val T = 1
+  private final val F = 0
+  private final val N = -1 // SQL NULL
+  private final val P = 2 // Pending
+
+  /** A DEFINE condition as the NFA's tri-state predicate (TRUE → Sat;
+    * FALSE/NULL → Unsat; Pending → Undecided) over the context row
+    * (the DEFINE slots ++ the current input row). */
+  private final class Define(v: String, cond: Expression, slots: Slots,
+      slotAttrs: Seq[Attribute], nextSlots: Set[Int], input: Seq[Attribute])
+      extends (MatchCtx => PredRes) with Serializable {
+    private val used: Array[Int] = slotAttrs.indices
+      .filter(k => cond.references.contains(slotAttrs(k))).toArray
+    private val leaves = scala.collection.mutable.ArrayBuffer.empty[Expression]
+    private val tree: Tri = tri(cond)
+    @transient private lazy val leafEvals =
+      leaves.map(e => MutableProjection.create(Seq(e), slotAttrs ++ input)).toArray
+    @transient private lazy val conv = converter(Seq(cond), input)
+    @transient private lazy val joined = new JoinedRow
+
+    private def tri(e: Expression): Tri = {
+      val next = slotAttrs.indices.filter(k =>
+        nextSlots(k) && e.references.contains(slotAttrs(k)))
+      (next.nonEmpty, e) match {
+        case (true, And(l, r)) => TAnd(tri(l), tri(r))
+        case (true, Or(l, r)) => TOr(tri(l), tri(r))
+        case (true, Not(c)) => TNot(tri(c))
+        case _ => leaves += e; Leaf(leaves.length - 1, next)
       }
-    case Neg(inner) =>
-      val f = compile(inner, acc)
-      val intg = isIntegral(typeOf(inner, acc))
-      env => f(env) match {
-        case null => null
-        case Pending => Pending
-        case v => if (intg) -toL(v) else -toD(v)
-      }
-    case Arith(op, l, r) =>
-      val (fl, fr) = (compile(l, acc), compile(r, acc))
-      val intg = isIntegral(typeOf(l, acc)) && isIntegral(typeOf(r, acc))
-      env => (fl(env), fr(env)) match {
-        case (null, _) | (_, null) => null
-        case (Pending, _) | (_, Pending) => Pending
-        case (x, y) =>
-          if (intg) {
-            // fail loudly like Calcite's runtime: integer division by zero
-            // and silent Long wraparound both raise, instead of yielding a
-            // NULL that quietly un-matches the predicate
-            val (a, b) = (toL(x), toL(y))
-            op match {
-              case '+' => Math.addExact(a, b)
-              case '-' => Math.subtractExact(a, b)
-              case '*' => Math.multiplyExact(a, b)
-              case '/' =>
-                if (b == 0) throw new ArithmeticException(
-                  "MATCH_RECOGNIZE: integer division by zero in DEFINE/MEASURES")
-                else a / b
-            }
-          } else {
-            val (a, b) = (toD(x), toD(y))
-            op match {
-              case '+' => a + b
-              case '-' => a - b
-              case '*' => a * b
-              case '/' => a / b
-            }
-          }
-      }
-    case Cmp(op, l, r) =>
-      val (fl, fr) = (compile(l, acc), compile(r, acc))
-      env => (fl(env), fr(env)) match {
-        case (null, _) | (_, null) => null
-        case (Pending, _) | (_, Pending) => Pending
-        case (x, y) =>
-          val c = cmpVals(x, y)
-          val b = op match {
-            case "=" => c == 0
-            case "<>" | "!=" => c != 0
-            case "<" => c < 0
-            case "<=" => c <= 0
-            case ">" => c > 0
-            case ">=" => c >= 0
-          }
-          java.lang.Boolean.valueOf(b)
-      }
-    case IsNullEx(inner, negated) =>
-      val f = compile(inner, acc)
-      env => f(env) match {
-        case Pending => Pending // cannot know yet whether it will be null
-        case v => java.lang.Boolean.valueOf((v == null) != negated)
-      }
-    case LikeEx(inner, pattern, negated) =>
-      val f = compile(inner, acc)
-      val re = likeRegex(pattern)
-      env => f(env) match {
-        case null => null
-        case Pending => Pending
-        case s: String => java.lang.Boolean.valueOf(re.matcher(s).matches() != negated)
-        case other => sys.error(s"LIKE over non-string ${other.getClass.getSimpleName}")
-      }
-    case AndEx(l, r) =>
-      val (fl, fr) = (compile(l, acc, lenient), compile(r, acc, lenient))
-      env => {
-        val a = fl(env)
-        if (a == java.lang.Boolean.FALSE) java.lang.Boolean.FALSE
+    }
+
+    /** Kleene logic with Pending dominating except where FALSE AND x /
+      * TRUE OR x already decide. `lenient` marks positions that reach
+      * the root only through AND/OR: there FALSE and NULL both mean
+      * Unsat, so AND(Pending, NULL) is already decided (NULL). */
+    private def eval(t: Tri, lenient: Boolean): Int = t match {
+      case Leaf(id, next) =>
+        if (next.exists(slots.pending(_))) P
         else {
-          val b = fr(env)
-          if (b == java.lang.Boolean.FALSE) java.lang.Boolean.FALSE
-          // Pending AND null can only resolve to FALSE or NULL; when the
-          // root folds those together (lenient), the conjunction is
-          // already decided — emit null instead of withholding as Pending
-          else if (lenient && (a == Pending && b == null ||
-            a == null && b == Pending)) null
-          else if (a == Pending || b == Pending) Pending
-          else if (a == null || b == null) null
-          else java.lang.Boolean.TRUE
+          val r = leafEvals(id)(joined)
+          if (r.isNullAt(0)) N else if (r.getBoolean(0)) T else F
         }
-      }
-    case OrEx(l, r) =>
-      // OR(Pending, null) stays Pending even at the root: the Pending side
-      // may yet resolve TRUE (Sat) while null pins the alternative at
-      // Unsat — genuinely undecided, unlike the AND dual
-      val (fl, fr) = (compile(l, acc, lenient), compile(r, acc, lenient))
-      env => {
-        val a = fl(env)
-        if (a == java.lang.Boolean.TRUE) java.lang.Boolean.TRUE
+      case TAnd(l, r) =>
+        val a = eval(l, lenient)
+        if (a == F) F
         else {
-          val b = fr(env)
-          if (b == java.lang.Boolean.TRUE) java.lang.Boolean.TRUE
-          else if (a == Pending || b == Pending) Pending
-          else if (a == null || b == null) null
-          else java.lang.Boolean.FALSE
+          val b = eval(r, lenient)
+          if (b == F) F
+          else if (lenient && (a == P && b == N || a == N && b == P)) N
+          else if (a == P || b == P) P
+          else if (a == N || b == N) N
+          else T
         }
-      }
-    case NotEx(inner) =>
-      val f = compile(inner, acc)
-      env => f(env) match {
-        case null => null
-        case Pending => Pending
-        case b: java.lang.Boolean => java.lang.Boolean.valueOf(!b)
-        case other => sys.error(s"NOT over non-boolean $other")
-      }
-    case AggEx(fn, variable, exprOpt) =>
-      val fInner = exprOpt.map(compile(_, acc))
-      val intg = exprOpt.forall(ex => isIntegral(typeOf(ex, acc)))
-      env => {
-        val rows = env.bound(variable)
-        fn match {
-          case "COUNT" => fInner match {
-            case None => rows.size.toLong
-            // COUNT(expr) skips rows where the expression is null (SQL;
-            // the old front-end silently counted them — advice r9)
-            case Some(f) =>
-              rows.count(r => f(env.withCur(r)) != null).toLong
-          }
-          case "SUM" =>
-            val vs = rows.flatMap(r => Option(fInner.get(env.withCur(r))))
-            if (vs.isEmpty) null
-            else if (intg) vs.map(toL).sum
-            else vs.map(toD).sum
-          case "AVG" =>
-            val vs = rows.flatMap(r => Option(fInner.get(env.withCur(r))))
-            if (vs.isEmpty) null else vs.map(toD).sum / vs.size
-          case "MIN" | "MAX" =>
-            val vs = rows.flatMap(r => Option(fInner.get(env.withCur(r))))
-            if (vs.isEmpty) null
-            else if (fn == "MIN") vs.reduce((a, b) => if (cmpVals(a, b) <= 0) a else b)
-            else vs.reduce((a, b) => if (cmpVals(a, b) >= 0) a else b)
+      case TOr(l, r) =>
+        // OR(Pending, NULL) stays Pending even at the root: the Pending
+        // side may yet resolve TRUE
+        val a = eval(l, lenient)
+        if (a == T) T
+        else {
+          val b = eval(r, lenient)
+          if (b == T) T
+          else if (a == P || b == P) P
+          else if (a == N || b == N) N
+          else F
         }
+      case TNot(c) => eval(c, lenient = false) match {
+        case T => F
+        case F => T
+        case x => x
       }
-    case ClassifierEx => env => env.classifier
-    case MatchNumberEx => env => env.matchNo
-    case FinalEx(inner) =>
-      val f = compile(inner, acc)
-      env => f(env.finalView)
-  }
+    }
 
-  /** A compiled DEFINE predicate: boolean root collapsed to the NFA's
-    * tri-state (TRUE → Sat; FALSE/NULL → Unsat; Pending → Undecided). */
-  private def compilePred(e: Ex, acc: RowAccess)
-      : MatchCtx => PredRes = {
-    val f = compile(e, acc, lenient = true)
-    ctx => f(defineEnv(ctx)) match {
-      case java.lang.Boolean.TRUE => Sat
-      case Pending => Undecided
-      case _ => Unsat
+    def apply(ctx: MatchCtx): PredRes = {
+      slots.fill(new Env(ctx.boundRows, ctx.boundRows, ctx.inputAt,
+        ctx.pendingAt, v, 0L), used)
+      joined(slots.row, conv(ctx.row))
+      eval(tree, lenient = true) match {
+        case T => Sat
+        case P => Undecided
+        case _ => Unsat
+      }
     }
   }
 
-  private def defineEnv(ctx: MatchCtx): Env =
-    new Env(Some(ctx.row), ctx.boundRows, ctx.inputAt,
-      ctx.pendingAt, "", 0L, ctx.boundRows)
+  /** The MEASURES, evaluated over the measure slots into Scala values. */
+  private final class Measures(exprs: Seq[Expression], slots: Slots,
+      slotAttrs: Seq[Attribute]) extends Serializable {
+    private val types = exprs.map(_.dataType)
+    @transient private lazy val proj = MutableProjection.create(exprs, slotAttrs)
+    @transient private lazy val toScala =
+      types.map(CatalystTypeConverters.createToScalaConverter).toArray
+    @transient private lazy val all = (0 until slots.width).toArray
 
-  // =====================================================================
-  // AST walks (validation)
-  // =====================================================================
-  private def children(e: Ex): Seq[Ex] = e match {
-    case Nav(_, _, i, _) => Seq(i)
-    case InputNav(_, i, _) => Seq(i)
-    case Arith(_, l, r) => Seq(l, r)
-    case Neg(i) => Seq(i)
-    case Cmp(_, l, r) => Seq(l, r)
-    case IsNullEx(i, _) => Seq(i)
-    case LikeEx(i, _, _) => Seq(i)
-    case AndEx(l, r) => Seq(l, r)
-    case OrEx(l, r) => Seq(l, r)
-    case NotEx(i) => Seq(i)
-    case AggEx(_, _, i) => i.toSeq
-    case FinalEx(i) => Seq(i)
-    case _ => Nil
-  }
-  private def walk(e: Ex)(f: Ex => Unit): Unit = {
-    f(e); children(e).foreach(walk(_)(f))
-  }
-  private def referencedVars(e: Ex): Set[String] = {
-    val b = Set.newBuilder[String]
-    walk(e) {
-      case Nav(_, Some(v), _, _) => b += v
-      case VarField(v, _) => b += v
-      case AggEx(_, Some(v), _) => b += v
-      case _ => ()
+    def apply(env: Env): Seq[Any] = {
+      slots.fill(env, all)
+      val out = proj(slots.row)
+      types.indices.map(i => toScala(i)(out.get(i, types(i))))
     }
-    b.result()
-  }
-  /** Deepest PREV offset in a DEFINE — the streaming executor sizes
-    * its O(k) predecessor marker by it (r14: arbitrary physical
-    * offsets on streams, matching the reference CEP). */
-  private def maxPrevOffset(e: Ex): Int = {
-    var m = 0
-    walk(e) {
-      case InputNav(d, _, off) if d < 0 => m = math.max(m, off)
-      case _ => ()
-    }
-    m
-  }
-  private def usesInputNav(e: Ex): Boolean = {
-    var b = false
-    walk(e) { case _: InputNav => b = true; case _ => () }
-    b
-  }
-  /** Deepest physical (PREV, NEXT) offsets across a set of expressions —
-    * sizes the per-match navigation context MEASURES-side PREV/NEXT
-    * reads (r15). */
-  private def navDepths(es: Iterable[Ex]): (Int, Int) = {
-    var (p, n) = (0, 0)
-    es.foreach(walk(_) {
-      case InputNav(d, _, off) if d < 0 => p = math.max(p, off)
-      case InputNav(d, _, off) if d > 0 => n = math.max(n, off)
-      case _ => ()
-    })
-    (p, n)
   }
 
   // =====================================================================
-  // Tokenizer (unchanged model: words, numbers, 'strings', operators)
+  // Clause parser
   // =====================================================================
+  private final case class Parsed(partCols: Seq[String],
+      orderKeys: Seq[(String, Boolean)],
+      measures: Seq[(String, Expression)], allRows: Boolean, skip: SkipStrategy,
+      pattern: Seq[(String, Quant)], within: Option[java.time.Duration],
+      defines: Seq[(String, Expression)])
+
+  /** Tokenizer of the clause skeleton (words, numbers, 'strings',
+    * operators); expressions never reach it. */
   private def tokenize(s: String): Vector[String] = {
     val out = Vector.newBuilder[String]
     var i = 0
@@ -555,13 +591,9 @@ object MatchRecognizeSql {
     out.result()
   }
 
-  // =====================================================================
-  // Parser
-  // =====================================================================
   private final class P(toks: Vector[String]) {
     var i = 0
     def peek: String = if (i < toks.length) toks(i) else ""
-    def peekAt(k: Int): String = if (i + k < toks.length) toks(i + k) else ""
     def peekIs(kw: String): Boolean = peek.equalsIgnoreCase(kw)
     def next(): String = { val t = peek; i += 1; t }
     def expect(kw: String): String = {
@@ -588,13 +620,97 @@ object MatchRecognizeSql {
     }
   }
 
-  private val ReservedInExpr = Set("AND", "OR", "NOT", "IS", "NULL", "LIKE",
-    "TRUE", "FALSE", "AS")
+  private val MeasuresEnd = java.util.regex.Pattern.compile(
+    "(?i)\\b(?:(?:ONE\\s+ROW|ALL\\s+ROWS)\\s+PER\\s+MATCH\\b" +
+      "|AFTER\\s+MATCH\\s+SKIP\\b|PATTERN\\s*\\(|DEFINE\\b)")
 
-  /** Parse one clause; measure/define expressions are finalized
-    * (VarField sugar resolved, variables validated) afterward. */
-  private def parse(text: String): Parsed = {
-    val p = new P(tokenize(text))
+  /** The MEASURES and DEFINE item lists cut out of the clause with the
+    * front door's one scanner ([[graft.Sql.Scan]]: literals and comments
+    * never match): the clause without them, for the clause parser, and
+    * each list's items. An item ends at a top-level comma; the MEASURES
+    * list ends at the next clause keyword, the DEFINE list at the
+    * clause's closing parenthesis. */
+  private def cutLists(text: String): (String, Seq[String], Seq[String]) = {
+    val s = new Scan(text)
+    val kw = s.indexOfWord("MATCH_RECOGNIZE", 0)
+    require(kw >= 0, "expected MATCH_RECOGNIZE")
+    val open = text.indexWhere(!_.isWhitespace, kw + "MATCH_RECOGNIZE".length)
+    require(open >= 0 && text.charAt(open) == '(',
+      "expected '(' after MATCH_RECOGNIZE")
+    val close = s.balancedClose(open)
+    // top(i): code at parenthesis depth 0 of the clause body
+    val top = new Array[Boolean](text.length)
+    var depth = 0
+    for (i <- open + 1 until close if s.code(i)) {
+      if (text.charAt(i) == ')') depth -= 1
+      top(i) = depth == 0
+      if (text.charAt(i) == '(') depth += 1
+    }
+    def at(i: Int) = top(i) && text.charAt(i - 1) != '.'
+    def word(w: String): Int = {
+      var i = s.indexOfWord(w, open)
+      while (i >= 0 && i < close && !at(i)) i = s.indexOfWord(w, i + 1)
+      if (i >= 0 && i < close) i else -1
+    }
+    val m = word("MEASURES")
+    val d = word("DEFINE")
+    require(m < 0 || d < 0 || m < d, "MEASURES must precede DEFINE")
+    val mEnd = if (m < 0) -1 else {
+      val mm = MeasuresEnd.matcher(text).region(m + "MEASURES".length, close)
+      var e = close
+      while (e == close && mm.find()) if (at(mm.start())) e = mm.start()
+      e
+    }
+    def items(what: String, from: Int, to: Int): Seq[String] = {
+      val commas = (from until to).filter(i => top(i) && text.charAt(i) == ',')
+      val out = (from +: commas.map(_ + 1)).zip(commas :+ to)
+        .map { case (a, b) => text.substring(a, b).trim }
+      require(out.forall(_.nonEmpty), s"empty $what item")
+      out
+    }
+    (splice(text, Seq((m, mEnd, " "), (d, close, " ")).filter(_._1 >= 0)),
+      if (m < 0) Nil else items("MEASURES", m + "MEASURES".length, mEnd),
+      if (d < 0) Nil else items("DEFINE", d + "DEFINE".length, close))
+  }
+
+  private val Modifier = java.util.regex.Pattern.compile(
+    "(?i)\\b(FINAL|RUNNING)\\s+(?:COUNT|SUM|MIN|MAX|AVG|FIRST|LAST)\\s*\\(")
+
+  /** Strip each SQL:2016 `FINAL`/`RUNNING` prefix of an aggregate or
+    * FIRST/LAST call, which Spark's parser has no production for.
+    * RUNNING is the default and drops; FINAL stays as `FINAL(<call>)`. */
+  private def modifiers(item: String): String = {
+    val s = new Scan(item)
+    val m = Modifier.matcher(item)
+    val edits = Iterator.continually(m.find()).takeWhile(identity)
+      .filter(_ => s.code(m.start()))
+      .flatMap { _ =>
+        if (m.group(1).equalsIgnoreCase("RUNNING")) Seq((m.start(), m.end(1), ""))
+        else {
+          val close = s.balancedClose(m.end() - 1)
+          Seq((m.start(), m.end(1), "FINAL("), (close + 1, close + 1, ")"))
+        }
+      }.toSeq.sortBy(_._1)
+    splice(item, edits)
+  }
+
+  /** `text` with each (from, until) range, in order, replaced. */
+  private def splice(text: String, edits: Seq[(Int, Int, String)]): String = {
+    val out = new StringBuilder
+    var i = 0
+    edits.foreach { case (a, b, ins) =>
+      out.append(text.substring(i, a)).append(ins); i = b
+    }
+    out.append(text.substring(i)).result()
+  }
+
+  private val DefineItem = "(?s)([A-Za-z_][A-Za-z0-9_]*)\\s+(?i:AS)\\s+(.*)".r
+
+  /** Parse one clause: the skeleton with the clause parser, each DEFINE
+    * body and MEASURES item with Spark's `parseExpression`. */
+  private def parse(spark: SparkSession, text: String): Parsed = {
+    val (skeleton, measureItems, defineItems) = cutLists(text)
+    val p = new P(tokenize(skeleton))
     if (p.accept("SELECT")) { p.expect("*"); p.expect("FROM"); p.ident() }
     p.expect("MATCH_RECOGNIZE"); p.expect("(")
 
@@ -616,20 +732,6 @@ object MatchRecognizeSql {
     orderKey()
     while (p.accept(",")) orderKey()
     val orderKeys = ordB.result()
-
-    var measures = Seq.empty[(String, Ex)]
-    if (p.accept("MEASURES")) {
-      val ms = Seq.newBuilder[(String, Ex)]
-      var more = true
-      while (more) {
-        val ex = parseExpr(p)
-        p.expect("AS")
-        val alias = p.ident()
-        ms += ((alias, ex))
-        more = p.accept(",")
-      }
-      measures = ms.result()
-    }
 
     var allRows = false
     if (p.acceptWords("ONE", "ROW", "PER", "MATCH")) ()
@@ -691,261 +793,52 @@ object MatchRecognizeSql {
         case u => sys.error(s"unsupported WITHIN unit '$u'")
       })
     }
-
-    var defines = Map.empty[String, Ex]
-    if (p.accept("DEFINE")) {
-      var more = true
-      while (more) {
-        val v = p.ident()
-        p.expect("AS")
-        defines += (v -> parseExpr(p))
-        more = p.accept(",")
-      }
-    }
     p.expect(")")
     p.accept("AS") // optional trailing alias
     if (p.peek.nonEmpty && p.peek.matches("[A-Za-z_][A-Za-z0-9_]*")) p.next()
     require(p.peek.isEmpty,
       s"trailing tokens after MATCH_RECOGNIZE: '${p.peek}'")
 
+    val parser = spark.sessionState.sqlParser
+    val measures = measureItems.map { item =>
+      parser.parseExpression(modifiers(item)) match {
+        case a: Alias => (a.name, a.child)
+        case _ => throw new IllegalArgumentException(
+          s"MEASURES item needs AS <alias>: '$item'")
+      }
+    }
     val knownVars = patternVars.map(_._1).toSet
-    defines.keys.foreach(v => require(knownVars(v),
-      s"DEFINE names '$v' which is not a PATTERN variable ($knownVars)"))
-    // SQL:2016: a DEFINE sees only the rows bound so far — FINAL is a
-    // MEASURES-only modifier
-    defines.foreach { case (v, ex) =>
-      var fin = false
-      walk(ex) { case _: FinalEx => fin = true; case _ => () }
-      require(!fin, s"FINAL is only allowed in MEASURES (found in DEFINE $v)")
+    val defines = defineItems.map {
+      case DefineItem(v, body) =>
+        require(knownVars(v),
+          s"DEFINE names '$v' which is not a PATTERN variable ($knownVars)")
+        (v, parser.parseExpression(modifiers(body)))
+      case item => throw new IllegalArgumentException(
+        s"expected '<variable> AS <condition>' in DEFINE, found '$item'")
     }
-    (defines.values ++ measures.map(_._2)).foreach { ex =>
-      referencedVars(ex).foreach(v => require(knownVars(v),
-        s"expression references '$v' which is not a PATTERN variable " +
-          s"($knownVars)"))
-    }
-    // MATCH_ROWTIME() sugar: the last matched row's primary order value
-    val orderCol = orderKeys.headOption.map(_._1).getOrElse("")
-    def deRowtime(ex: Ex): Ex = ex match {
-      case MatchRowtimeEx =>
-        require(orderCol.nonEmpty, "MATCH_ROWTIME() requires an ORDER BY")
-        Nav(first = false, variable = None, CurField(orderCol), 0)
-      case Arith(op, l, r) => Arith(op, deRowtime(l), deRowtime(r))
-      case Neg(e) => Neg(deRowtime(e))
-      case Cmp(op, l, r) => Cmp(op, deRowtime(l), deRowtime(r))
-      case IsNullEx(e, n) => IsNullEx(deRowtime(e), n)
-      case LikeEx(e, pat, n) => LikeEx(deRowtime(e), pat, n)
-      case AndEx(l, r) => AndEx(deRowtime(l), deRowtime(r))
-      case OrEx(l, r) => OrEx(deRowtime(l), deRowtime(r))
-      case NotEx(e) => NotEx(deRowtime(e))
-      case other => other // leaves + Nav/InputNav/AggEx (no nesting)
-    }
-    Parsed(partCols, orderKeys, measures.map { case (a, e) =>
-      (a, deRowtime(e)) }, allRows, skip, patternVars,
-      within, defines.map { case (v, e) => (v, deRowtime(e)) })
-  }
-
-  // ---- expression parsing (precedence climbing) ----
-  private def parseExpr(p: P): Ex = parseOr(p)
-
-  private def parseOr(p: P): Ex = {
-    var l = parseAnd(p)
-    while (p.accept("OR")) l = OrEx(l, parseAnd(p))
-    l
-  }
-  private def parseAnd(p: P): Ex = {
-    var l = parseNot(p)
-    while (p.accept("AND")) l = AndEx(l, parseNot(p))
-    l
-  }
-  private def parseNot(p: P): Ex =
-    if (p.accept("NOT")) NotEx(parseNot(p)) else parsePredicate(p)
-
-  private def parsePredicate(p: P): Ex = {
-    val l = parseAdditive(p)
-    if (p.accept("IS")) {
-      val neg = p.accept("NOT")
-      p.expect("NULL")
-      IsNullEx(l, neg)
-    } else if (p.peekIs("NOT") && p.peekAt(1).equalsIgnoreCase("LIKE")) {
-      p.next(); p.next()
-      LikeEx(l, strLit(p), negated = true)
-    } else if (p.accept("LIKE")) {
-      LikeEx(l, strLit(p), negated = false)
-    } else if (Set("=", "<>", "!=", "<", "<=", ">", ">=")(p.peek)) {
-      val op = p.next()
-      Cmp(op, l, parseAdditive(p))
-    } else l
-  }
-
-  private def strLit(p: P): String = {
-    val t = p.next()
-    require(t.startsWith("'") && t.endsWith("'") && t.length >= 2,
-      s"expected string literal, found '$t'")
-    t.substring(1, t.length - 1)
-  }
-
-  private def parseAdditive(p: P): Ex = {
-    var l = parseMultiplicative(p)
-    var more = true
-    while (more) {
-      if (p.accept("+")) l = Arith('+', l, parseMultiplicative(p))
-      else if (p.accept("-")) l = Arith('-', l, parseMultiplicative(p))
-      else more = false
-    }
-    l
-  }
-  private def parseMultiplicative(p: P): Ex = {
-    var l = parseUnary(p)
-    var more = true
-    while (more) {
-      if (p.accept("*")) l = Arith('*', l, parseUnary(p))
-      else if (p.accept("/")) l = Arith('/', l, parseUnary(p))
-      else more = false
-    }
-    l
-  }
-  private def parseUnary(p: P): Ex =
-    if (p.accept("-")) Neg(parseUnary(p)) else parsePrimary(p)
-
-  private val AggFns = Set("COUNT", "SUM", "MIN", "MAX", "AVG")
-
-  private def parsePrimary(p: P): Ex = {
-    val t = p.peek
-    if (t.startsWith("'")) { p.next(); Lit(t.substring(1, t.length - 1), StringType) }
-    else if (t.nonEmpty && t.charAt(0).isDigit) {
-      p.next()
-      if (t.contains('.')) Lit(t.toDouble, DoubleType)
-      else Lit(t.toLong, LongType)
-    }
-    else if (p.accept("(")) { val e = parseExpr(p); p.expect(")"); e }
-    else if (p.accept("TRUE")) Lit(java.lang.Boolean.TRUE, BooleanType)
-    else if (p.accept("FALSE")) Lit(java.lang.Boolean.FALSE, BooleanType)
-    else if (t.equalsIgnoreCase("FIRST") || t.equalsIgnoreCase("LAST")) {
-      val first = t.equalsIgnoreCase("FIRST")
-      p.next(); p.expect("(")
-      val inner = parseExpr(p)
-      val off = if (p.accept(",")) p.intLit() else 0
-      p.expect(")")
-      mkNav(first, inner, off)
-    }
-    else if (t.equalsIgnoreCase("PREV") || t.equalsIgnoreCase("NEXT")) {
-      val dir = if (t.equalsIgnoreCase("PREV")) -1 else 1
-      p.next(); p.expect("(")
-      val inner = parseExpr(p)
-      val off = if (p.accept(",")) p.intLit() else 1
-      p.expect(")")
-      require(!hasNav(inner) && !usesInputNav(inner),
-        "PREV/NEXT cannot nest navigation")
-      InputNav(dir, stripVarsToCur(inner, "PREV/NEXT"), off)
-    }
-    else if (Set("FINAL", "RUNNING")(t.toUpperCase) &&
-        (AggFns ++ Set("FIRST", "LAST"))(p.peekAt(1).toUpperCase) &&
-        p.peekAt(2) == "(") {
-      p.next()
-      val inner = parsePrimary(p)
-      if (t.equalsIgnoreCase("FINAL")) FinalEx(inner) else inner
-    }
-    else if (AggFns(t.toUpperCase)) {
-      val fn = t.toUpperCase
-      p.next(); p.expect("(")
-      val agg =
-        if (fn == "COUNT" && p.accept("*")) AggEx("COUNT", None, None)
-        else if (fn == "COUNT" && p.peekAt(1) == "." && p.peekAt(2) == "*") {
-          val v = p.ident(); p.next(); p.next() // ident . *
-          AggEx("COUNT", Some(v), None)
-        } else {
-          val inner = parseExpr(p)
-          require(!hasNav(inner) && !usesInputNav(inner) && !hasAgg(inner),
-            s"$fn argument must be a row-level expression")
-          val vars = referencedVars(inner)
-          require(vars.size <= 1,
-            s"$fn argument references multiple pattern variables ($vars)")
-          AggEx(fn, vars.headOption,
-            Some(stripVarsToCur(inner, fn)))
-        }
-      p.expect(")")
-      agg
-    }
-    else if (t.equalsIgnoreCase("CLASSIFIER")) {
-      p.next(); p.expect("("); p.expect(")"); ClassifierEx
-    }
-    else if (t.equalsIgnoreCase("MATCH_NUMBER")) {
-      p.next(); p.expect("("); p.expect(")"); MatchNumberEx
-    }
-    else if (t.equalsIgnoreCase("MATCH_ROWTIME")) {
-      p.next(); p.expect("("); p.expect(")"); MatchRowtimeEx
-    }
-    else {
-      val id = p.ident()
-      require(!ReservedInExpr(id.toUpperCase),
-        s"unexpected keyword '$id' in expression")
-      if (p.accept(".")) VarField(id, p.ident())
-      else CurField(id)
-    }
-  }
-
-  /** Finalize a FIRST/LAST navigation: its argument may reference ONE
-    * pattern variable (`FIRST(DOWN.price + DOWN.tax + 1)`) or none (the
-    * universal variable: `LAST(price, 7)`,
-    * MatchRecognizeITCase.scala:445-466); the refs pin to the navigated
-    * row. */
-  private def mkNav(first: Boolean, inner: Ex, off: Int): Ex = {
-    require(!hasNav(inner) && !usesInputNav(inner) && !hasAgg(inner),
-      "FIRST/LAST cannot nest navigation or aggregates")
-    val vars = referencedVars(inner)
-    require(vars.size <= 1,
-      s"FIRST/LAST argument references multiple pattern variables ($vars)")
-    Nav(first, vars.headOption, stripVarsToCur(inner, "FIRST/LAST"), off)
-  }
-
-  private def hasNav(e: Ex): Boolean = {
-    var b = false
-    walk(e) { case _: Nav => b = true; case _ => () }
-    b
-  }
-  private def hasAgg(e: Ex): Boolean = {
-    var b = false
-    walk(e) { case _: AggEx => b = true; case _ => () }
-    b
-  }
-
-  /** Replace `V.field` refs with bare CurField inside a navigation whose
-    * row is already pinned to V. */
-  private def stripVarsToCur(e: Ex, what: String): Ex = e match {
-    case VarField(_, f) => CurField(f)
-    case Nav(f, v, i, o) => Nav(f, v, stripVarsToCur(i, what), o)
-    case InputNav(d, i, o) => InputNav(d, stripVarsToCur(i, what), o)
-    case Arith(op, l, r) => Arith(op, stripVarsToCur(l, what), stripVarsToCur(r, what))
-    case Neg(i) => Neg(stripVarsToCur(i, what))
-    case Cmp(op, l, r) => Cmp(op, stripVarsToCur(l, what), stripVarsToCur(r, what))
-    case IsNullEx(i, n) => IsNullEx(stripVarsToCur(i, what), n)
-    case LikeEx(i, pat, n) => LikeEx(stripVarsToCur(i, what), pat, n)
-    case AndEx(l, r) => AndEx(stripVarsToCur(l, what), stripVarsToCur(r, what))
-    case OrEx(l, r) => OrEx(stripVarsToCur(l, what), stripVarsToCur(r, what))
-    case NotEx(i) => NotEx(stripVarsToCur(i, what))
-    case other => other
+    Parsed(partCols, orderKeys, measures, allRows, skip, patternVars,
+      within, defines)
   }
 
   // =====================================================================
   // Shared emission
   // =====================================================================
+  /** Input navigation around `anchor` of a contiguous row window. */
+  private def physical(rows: IndexedSeq[Row], anchor: Int): Int => Option[Row] =
+    off => rows.lift(anchor + off)
+
   /** FINAL-semantics measure environment over a complete match.
-    * Physical PREV/NEXT in MEASURES (r15) anchors at the LAST matched
-    * row (SQL:2016 FINAL semantics) and navigates the contiguous input
+    * Physical PREV/NEXT in MEASURES anchors at the LAST matched row
+    * (SQL:2016 FINAL semantics) and navigates the contiguous input
     * window `preCtx ++ matched ++ postCtx` the scan captured with the
     * match. */
-  private def finalEnv(bound: Seq[Bound],
-      matchNo: Long, preCtx: IndexedSeq[Row] = IndexedSeq.empty,
-      postCtx: IndexedSeq[Row] = IndexedSeq.empty): Env = {
+  private def finalEnv(bound: Seq[Bound], matchNo: Long,
+      preCtx: IndexedSeq[Row], postCtx: IndexedSeq[Row]): Env = {
     val whole = wholeMatch(bound)
     val all = whole(None)
     val lastCls = bound.reverse.find(_.rows.nonEmpty).map(_.name).getOrElse("")
-    val phys = preCtx ++ all ++ postCtx
-    val anchor = preCtx.length + all.length - 1
-    new Env(None, whole,
-      off => { val j = anchor + off
-        if (j >= 0 && j < phys.length) Some(phys(j)) else None },
-      _ => false, lastCls, matchNo, whole)
+    new Env(whole, whole, physical(preCtx ++ all ++ postCtx,
+      preCtx.length + all.length - 1), _ => false, lastCls, matchNo)
   }
 
   /** The bindings of a complete match by variable (None = all rows). */
@@ -959,22 +852,16 @@ object MatchRecognizeSql {
     * (row, env truncated to the rows seen so far) — SQL's ALL ROWS PER
     * MATCH measure semantics; FINAL measures still see the whole match.
     * Physical PREV/NEXT anchors at the current output row. */
-  private def runningEnvs(bound: Seq[Bound],
-      matchNo: Long, preCtx: IndexedSeq[Row] = IndexedSeq.empty,
-      postCtx: IndexedSeq[Row] = IndexedSeq.empty): Iterator[(Row, Env)] = {
+  private def runningEnvs(bound: Seq[Bound], matchNo: Long,
+      preCtx: IndexedSeq[Row], postCtx: IndexedSeq[Row]): Iterator[(Row, Env)] = {
     val seq = bound.flatMap(b => b.rows.map(r => (b.name, r))).toIndexedSeq
     val phys = preCtx ++ seq.map(_._2) ++ postCtx
     val whole = wholeMatch(bound)
     seq.indices.iterator.map { p =>
       val sofar = seq.take(p + 1)
       val (cls, row) = seq(p)
-      val anchor = preCtx.length + p
-      val env = new Env(Some(row),
-        v => sofar.collect { case (n, r) if v.forall(_ == n) => r },
-        off => { val j = anchor + off
-          if (j >= 0 && j < phys.length) Some(phys(j)) else None },
-        _ => false, cls, matchNo, whole)
-      (row, env)
+      (row, new Env(v => sofar.collect { case (n, r) if v.forall(_ == n) => r },
+        whole, physical(phys, preCtx.length + p), _ => false, cls, matchNo))
     }
   }
 
@@ -988,26 +875,71 @@ object MatchRecognizeSql {
     * measures. Both modes run [[PatternMatch.matchRows]]; a STREAMING
     * input follows its watermark protocol: the leading ORDER BY column
     * must be an ascending timestamp; physical PREV/NEXT offsets are
-    * arbitrary (r14 — the retained predecessor marker holds the deepest
+    * arbitrary (the retained predecessor marker holds the deepest
     * declared PREV depth); `delay` is the watermark. */
   def sqlDf(df: DataFrame, text: String, delay: String = "0 seconds")
       : DataFrame = {
-    val q = parse(text)
-    val acc = new RowAccess(df.schema)
-    // resolve partition/order column names against the schema, loudly
-    val partCols = q.partCols.map(c => acc.canonical(fieldIdx(acc, c)))
-    val orderKeys = q.orderKeys.map { case (c, asc) =>
-      (acc.canonical(fieldIdx(acc, c)), asc)
+    val spark = df.sparkSession
+    val q = parse(spark, text)
+    def field(c: String): String = df.schema.fieldNames
+      .find(_.equalsIgnoreCase(c)).getOrElse(sys.error(
+        s"unknown field '$c' (have: ${df.schema.fieldNames.mkString(", ")})"))
+    val partCols = q.partCols.map(field)
+    val orderKeys = q.orderKeys.map { case (c, asc) => (field(c), asc) }
+    val input: Seq[Attribute] =
+      df.schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    val vars = q.pattern.map(_._1).toSet
+    val orderCol = orderKeys.headOption.map(_._1).getOrElse("")
+
+    val defSlotter = new Slotter(vars, orderCol, measures = false)
+    val defs = q.defines.map { case (v, e) => (v, defSlotter.rewrite(e, s"DEFINE $v")) }
+    val measSlotter = new Slotter(vars, orderCol, measures = true)
+    val meas = q.measures.map { case (a, e) => (a, measSlotter.rewrite(e, s"MEASURES $a")) }
+    val resolved = resolveSlots(spark,
+      defSlotter.slots.keys.toIndexedSeq ++ measSlotter.slots.keys, input)
+    val (defSlots, measSlots) = resolved.splitAt(defSlotter.slots.size)
+    def attrs(slots: Seq[Slot]): Seq[Attribute] = slots.zipWithIndex.map {
+      case (s, k) => AttributeReference(slotName(k), slotType(s))()
     }
-    val steps = compileSteps(q, acc)
-    val measureFields = q.measures.map { case (alias, ex) =>
-      StructField(alias, typeOf(ex, acc))
+
+    // DEFINE: one analysis over (slots ++ input), the current row's fields
+    val defAttrs = attrs(defSlots)
+    val conds = analyze(spark, defs.map(_._2), LocalRelation(defAttrs ++ input),
+      aggregate = false)
+    val defSlotsEval = new Slots(defSlots, input)
+    val nextSlots = defSlots.indices.filter(k => defSlots(k) match {
+      case Phys(off, _) => off > 0
+      case _ => false
+    }).toSet
+    val byVar = defs.map(_._1).zip(conds).toMap
+    val steps = q.pattern.map { case (v, quant) =>
+      byVar.get(v) match {
+        case None => GStep(v, quant, _ => Sat) // SQL default: any row
+        case Some(cond) =>
+          require(cond.dataType == BooleanType,
+            s"DEFINE $v must be a boolean condition, got ${cond.dataType.sql}")
+          val prevDepth = defSlots.indices.collect {
+            case k if cond.references.contains(defAttrs(k)) => defSlots(k)
+          }.collect { case Phys(off, _) if off < 0 => -off }.foldLeft(0)(math.max)
+          GStep(v, quant, new Define(v, cond, defSlotsEval, defAttrs, nextSlots,
+            input), prevDepth)
+      }
     }
-    val measureEvals = q.measures.map { case (_, ex) => compile(ex, acc) }
-    // physical PREV/NEXT in MEASURES (r15): size the per-match input
-    // context the scan captures; streaming NEXT is served by delayed
-    // emission (r16) — the executor holds a match until the context closes
-    val (measPrev, measNext) = navDepths(q.measures.map(_._2))
+
+    // MEASURES: one analysis over the slots alone
+    val measAttrs = attrs(measSlots)
+    val measExprs = analyze(spark, meas.map(_._2), LocalRelation(measAttrs),
+      aggregate = false)
+    val measures = new Measures(measExprs, new Slots(measSlots, input), measAttrs)
+    val measureFields = meas.map(_._1).zip(measExprs).map { case (alias, e) =>
+      StructField(alias, e.dataType)
+    }
+    // physical PREV/NEXT in MEASURES: size the per-match input context
+    // the scan captures; streaming NEXT is served by delayed emission —
+    // the executor holds a match until the context closes
+    val offs = measSlots.collect { case Phys(off, _) => off }
+    val (measPrev, measNext) =
+      (offs.map(-_).foldLeft(0)(math.max), offs.foldLeft(0)(math.max))
 
     val (outSchema, emit) =
       if (q.allRows)
@@ -1015,27 +947,16 @@ object MatchRecognizeSql {
           (_: Row, matchNo: Long, bound: Seq[Bound], pre: IndexedSeq[Row],
               post: IndexedSeq[Row]) =>
             runningEnvs(bound, matchNo, pre, post).map { case (row, env) =>
-              Row.fromSeq(row.toSeq ++ measureEvals.map(_(env)))
+              Row.fromSeq(row.toSeq ++ measures(env))
             })
       else
         (StructType(partCols.map(c => df.schema(df.schema.fieldIndex(c))) ++
           measureFields),
           (key: Row, matchNo: Long, bound: Seq[Bound], pre: IndexedSeq[Row],
-              post: IndexedSeq[Row]) => {
-            val env = finalEnv(bound, matchNo, pre, post)
-            Iterator.single(Row.fromSeq(key.toSeq ++ measureEvals.map(_(env))))
-          })
+              post: IndexedSeq[Row]) =>
+            Iterator.single(Row.fromSeq(key.toSeq ++
+              measures(finalEnv(bound, matchNo, pre, post)))))
     PatternMatch.matchRows(df, partCols, orderKeys, steps, q.skip, q.within,
       emit, Encoders.row(outSchema), delay, measPrev, measNext)
-  }
-
-  private def compileSteps(q: Parsed, acc: RowAccess)
-      : Seq[GStep] = q.pattern.map { case (v, quant) =>
-    q.defines.get(v) match {
-      case None => GStep(v, quant, _ => Sat) // SQL default: any row
-      case Some(ex) =>
-        GStep(v, quant, compilePred(ex, acc),
-          prevDepth = maxPrevOffset(ex))
-    }
   }
 }

@@ -728,7 +728,8 @@ object StatefulBatch {
   /** The events table in its five event columns (`StatefulOps.Event`). */
   private def events(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    StatefulOps.typedEvents(spark, dir).toDF()
+    graft.core.Catalog.load(spark, dir, "events")
+      .select("user_id", "event_id", "ts", "event_type", "value")
 
   /** COUNT(*) / SUM(value) / MAX(value) under the given output names. */
   private[graft] def countSumMax(cnt: String, sum: String,

@@ -2,14 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The events-table stream model shared by the streaming package: the
   * typed [[Event]] row, its full-precision event-time key
-  * ([[eventMicros]]), the typed batch loader ([[typedEvents]]) and the
-  * streaming per-stratum reservoir sampler.
+  * ([[eventMicros]]) and the streaming per-stratum reservoir sampler.
   *
   * The keyed stateful families (top-n / dedup, streaming OVER, count
   * windows, event-time sort) each have ONE executor that runs on any
@@ -92,15 +90,5 @@ object StatefulOps {
             } else Iterator.empty
           }
         })
-  }
-
-  /** Batch events table → typed stream-shaped Dataset (micro-batch specs
-    * feed the same rows through MemoryStream). */
-  def typedEvents(spark: SparkSession, dir: String): Dataset[Event] = {
-    import spark.implicits._
-    graft.core.Catalog.load(spark, dir, "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("event_type"), col("value"))
-      .as[Event]
   }
 }

@@ -12,7 +12,8 @@ import graft.SparkSpec
 class CountWindowsSpec extends SparkSpec {
 
   test("general tumble equals the native batch tumble on the events table") {
-    val ev = StatefulOps.typedEvents(spark, sf()).toDF()
+    val ev = graft.core.Catalog.load(spark, sf(), "events")
+      .select("user_id", "event_id", "ts", "event_type", "value")
     // double sums: the native partial aggregation associates differently
     // from the executor's sequential fold in the last ulp — compare at 4dp
     def project(df: org.apache.spark.sql.DataFrame) = df
@@ -29,7 +30,8 @@ class CountWindowsSpec extends SparkSpec {
 
   test("general slide equals Spark's ROWS 4 PRECEDING window") {
     import org.apache.spark.sql.expressions.Window
-    val ev = StatefulOps.typedEvents(spark, sf()).toDF()
+    val ev = graft.core.Catalog.load(spark, sf(), "events")
+      .select("user_id", "event_id", "ts", "event_type", "value")
     // size 5, slide 2: the window of the 5 most recent rows completes at
     // the 5th row and every 2nd row after it
     val byTime = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -203,4 +203,53 @@ class ExecutorPropertySpec extends SparkSpec {
       df.unpersist()
     }
   }
+
+  test("MATCH_RECOGNIZE DEFINE and MEASURES mean what the same text means " +
+    "in SELECT: the same rows, values and types on random data with nulls") {
+    import spark.implicits._
+    // conditions over the current row: (MATCH_RECOGNIZE text, SELECT text)
+    val conds = Seq("i > 3", "l % 7 = 2 OR l IS NULL", "d * 2 < i",
+      "dec + 1.5 > 2.25", "s LIKE 's%1' OR s = 's3'",
+      "t >= TIMESTAMP '2024-01-01 12:00:00'",
+      "coalesce(i, 0) + coalesce(l, 0) > 10",
+      "CASE WHEN s = 's1' THEN i ELSE l END > 0",
+      "NOT (i IS NULL) AND d IS NULL").map(c => (c, c)) :+
+      ("i / 3 = 1" -> "i div 3 = 1") // integral `/` divides integrally
+    // measures over A's row: (MATCH_RECOGNIZE text, SELECT text)
+    val measures = Seq("A.i + A.l", "A.dec * 2 + 0.5", "A.dec / 4", "A.d / 2",
+      "CASE WHEN A.s = 's1' THEN A.t END", "coalesce(A.dec, A.d)", "A.t",
+      "concat(A.s, 'x')", "A.l - A.i * 2").map(m => (m, m.replace("A.", ""))) :+
+      ("A.i / 3" -> "i div 3")
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      def maybe[T](v: => T): Option[T] = if (rnd.nextInt(5) == 0) None else Some(v)
+      (0 until 80).map { k =>
+        (k.toLong, maybe(rnd.nextInt(20) - 5), maybe(rnd.nextInt(2000) - 1000L),
+          maybe(rnd.nextInt(2000) / 100.0 - 5), maybe(BigDecimal(rnd.nextInt(900)) / 100),
+          maybe(s"s${rnd.nextInt(5)}"),
+          maybe(new Timestamp(1704067200000L + rnd.nextInt(48) * 3600000L)))
+      }.toDF("ord", "i", "l", "d", "dec", "s", "t")
+        .withColumn("dec", col("dec").cast(DecimalType(10, 2)))
+        .createOrReplaceTempView("ep_mr")
+      val t = spark.table("ep_mr")
+      conds.foreach { case (mr, sel) =>
+        val got = MatchRecognizeSql.sqlDf(t,
+          s"MATCH_RECOGNIZE (ORDER BY ord MEASURES A.ord AS ord PATTERN (A) " +
+            s"DEFINE A AS $mr)").as[Long].collect().toSet
+        val want = spark.sql(s"SELECT ord FROM ep_mr WHERE $sel")
+          .as[Long].collect().toSet
+        assert(got == want, s"seed=$seed DEFINE A AS $mr")
+      }
+      val got = MatchRecognizeSql.sqlDf(t,
+        "MATCH_RECOGNIZE (ORDER BY ord MEASURES A.ord AS ord, " +
+          measures.zipWithIndex.map { case ((m, _), k) => s"$m AS m$k" }
+            .mkString(", ") + " PATTERN (A))").orderBy("ord")
+      val want = spark.sql("SELECT ord, " +
+        measures.zipWithIndex.map { case ((_, m), k) => s"$m AS m$k" }
+          .mkString(", ") + " FROM ep_mr").orderBy("ord")
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType),
+        s"seed=$seed types ${got.schema} vs ${want.schema}")
+      assert(rows(got) == rows(want), s"seed=$seed MEASURES values")
+    }
+  }
 }

@@ -10,7 +10,8 @@ import graft.operators.{Funnel, MatchSql}
   * five columns. */
 class MatchRecognizeSqlSpec extends SparkSpec {
 
-  private def events = StatefulOps.typedEvents(spark, sf()).toDF()
+  private def events = graft.core.Catalog.load(spark, sf(), "events")
+    .select("user_id", "event_id", "ts", "event_type", "value")
 
   test("SQL shapes are row-identical to their Scala-API twins") {
     val pairs = Seq(
@@ -76,10 +77,28 @@ class MatchRecognizeSqlSpec extends SparkSpec {
       assert(e.getMessage.contains(fragment),
         s"error '${e.getMessage}' should mention '$fragment'")
     }
-    // unknown field
+    // unknown field: Spark's analyzer names the column
     bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
           |PATTERN (A) DEFINE A AS price > 5)""".stripMargin,
-      "unknown field")
+      "UNRESOLVED_COLUMN")
+    bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
+          |PATTERN (A) DEFINE A AS price > 5)""".stripMargin,
+      "`price`")
+    // a function outside the surface fails and names itself
+    bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
+          |PATTERN (A) DEFINE A AS STDDEV(A.value) > 1)""".stripMargin,
+      "stddev")
+    bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
+          |PATTERN (A)
+          |DEFINE A AS ROW_NUMBER() OVER (ORDER BY ts) > 1)""".stripMargin,
+      "row_number")
+    // navigation and aggregate arguments stay row-level over one variable
+    bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
+          |MEASURES LAST(A.value + B.value) AS x PATTERN (A B))""".stripMargin,
+      "references multiple pattern variables")
+    bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
+          |MEASURES SUM(LAST(A.value)) AS x PATTERN (A))""".stripMargin,
+      "row-level expression")
     // DEFINE of a variable the PATTERN does not name
     bad("""MATCH_RECOGNIZE (PARTITION BY user_id ORDER BY ts
           |PATTERN (A) DEFINE Z AS value > 0)""".stripMargin,
@@ -165,6 +184,32 @@ class MatchRecognizeSqlSpec extends SparkSpec {
     val got = df.collect()
     assert(got.nonEmpty)
     assert(got.forall(_.getDouble(2) >= 50.0))
+
+    import spark.implicits._
+    // BIGINT literals compare exactly: 2^53 and 2^53 + 1 are one double
+    val big = Seq((1L, 9007199254740992L, 1), (1L, 9007199254740993L, 2))
+      .toDF("k", "id", "ord")
+    val exact = MatchRecognizeSql.sqlDf(big,
+      """MATCH_RECOGNIZE (PARTITION BY k ORDER BY ord
+        |MEASURES A.id AS id PATTERN (A)
+        |DEFINE A AS id = 9007199254740993)""".stripMargin)
+    assert(rows(exact) == Seq(Seq[Any](1L, 9007199254740993L)), rows(exact))
+
+    // string literals follow Spark's lexer: \' escapes a quote, and \ is
+    // LIKE's default escape character — through sqlDf and the front door
+    Seq((1L, "it's", 1), (1L, "a_b", 2), (1L, "axb", 3), (1L, "a\\_b", 4))
+      .toDF("k", "name", "ord").createOrReplaceTempView("mr_names")
+    def matched(cond: String): (Set[Int], Set[Int]) = {
+      val clause = s"""MATCH_RECOGNIZE (PARTITION BY k ORDER BY ord
+                      |MEASURES A.ord AS o PATTERN (A)
+                      |DEFINE A AS $cond)""".stripMargin
+      (MatchRecognizeSql.sqlDf(spark.table("mr_names"), clause)
+        .select("o").as[Int].collect().toSet,
+        graft.Sql.sql(spark, s"SELECT o FROM mr_names $clause")
+          .as[Int].collect().toSet)
+    }
+    assert(matched("""name = 'it\'s'""") == ((Set(1), Set(1))))
+    assert(matched("""name LIKE 'a\_b'""") == ((Set(2), Set(2))))
   }
 
   test("integer division by zero in DEFINE fails loudly, not as NULL") {
@@ -180,8 +225,9 @@ class MatchRecognizeSqlSpec extends SparkSpec {
     val e = intercept[Throwable](df.collect())
     def chain(t: Throwable): List[Throwable] =
       if (t == null) Nil else t :: chain(t.getCause)
+    // Spark's DIVIDE_BY_ZERO message capitalises "Division"
     assert(chain(e).exists(c => c.isInstanceOf[ArithmeticException] &&
-      c.getMessage.contains("division by zero")),
+      c.getMessage.toLowerCase.contains("division by zero")),
       s"expected an ArithmeticException in the cause chain, got $e")
   }
 }

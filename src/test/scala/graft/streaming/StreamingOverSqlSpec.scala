@@ -10,7 +10,8 @@ import graft.operators.OverSql
   * mis-executing. */
 class StreamingOverSqlSpec extends SparkSpec {
 
-  private def events = StatefulOps.typedEvents(spark, sf()).toDF()
+  private def events = graft.core.Catalog.load(spark, sf(), "events")
+    .select("user_id", "event_id", "ts", "event_type", "value")
 
   test("SQL shapes are row-identical to their Scala-API twins") {
     val pairs = Seq(

@@ -168,11 +168,12 @@ class TemporalJoinSpec extends SparkSpec {
 
   test("batch collapse matches the q63 as-of join on the events fixture") {
     import spark.implicits._
-    val ev = StatefulOps.typedEvents(spark, sf())
-    val facts = ev.filter(_.event_type == "purchase")
-      .map(e => Fact(e.user_id, e.ts, e.event_id, e.value))
-    val dims = ev.filter(_.event_type == "view")
-      .map(e => DimVersion(e.user_id, e.ts, e.event_id, e.value))
+    val ev = graft.core.Catalog.load(spark, sf(), "events")
+      .select("user_id", "ts", "event_id", "value", "event_type")
+    val facts = ev.filter($"event_type" === "purchase")
+      .map(r => Fact(r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
+    val dims = ev.filter($"event_type" === "view")
+      .map(r => DimVersion(r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
     val got = temporalJoin(facts, dims, delay = "0 seconds")
       .collect().map(e => e.fact_id -> e.dim_ver.getOrElse(-1L)).toMap
 
