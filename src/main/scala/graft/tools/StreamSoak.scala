@@ -4,7 +4,7 @@ import java.io.PrintWriter
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.{CountWindows, OverAggregates, RankOps,
   StatefulOps, WindowAggAny}
@@ -548,8 +548,8 @@ object StreamSoak {
     // replay, end-of-soak is "source exhausted + a few quiet timer batches"
     // (every real window's final fires within ~2 timer batches of the
     // sentinel watermark push), then an explicit stop.
-    def awaitQuiesced(q: org.apache.spark.sql.streaming.StreamingQuery,
-        quietBatches: Int = 6): Unit = {
+    def awaitQuiesced(q: StreamingQuery, ckpt: String,
+        quietBatches: Int = 6): Boolean = {
       var lastSeen = -1L
       var quiet = 0
       while (q.isActive && quiet < quietBatches) {
@@ -564,8 +564,7 @@ object StreamSoak {
           }
         Thread.sleep(100)
       }
-      if (q.isActive) q.stop()
-      q.awaitTermination()
+      stopChecked(q, ckpt)
     }
     val procTimerOps = Set("early_fire", "late_fire", "gen_window",
       "gen_hop", "gen_session", "gen_session_skew")
@@ -580,7 +579,9 @@ object StreamSoak {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .start()
-        if (procTimerOps(name)) awaitQuiesced(q) else q.awaitTermination()
+        val cut =
+          if (procTimerOps(name)) awaitQuiesced(q, ckpt)
+          else { q.awaitTermination(); false }
         val wall = (System.nanoTime() - t0) / 1e9
         // per-batch state metrics (recentProgress keeps the last ~100)
         q.recentProgress.foreach { p =>
@@ -631,7 +632,7 @@ object StreamSoak {
         out.println(s"""{"op":"$name","summary":true,"wall_sec":$wall,""" +
           s""""final_rows":$rows,"only_stream":$onlyS,"only_batch":$onlyB,""" +
           s""""drift":${if (onlyS + onlyB > 0) "true" else "false"},""" +
-          s""""exact_multiset":$exactMultiset$extra}""")
+          s""""exact_multiset":$exactMultiset,"stop_cut_batch":$cut$extra}""")
         out.flush()
         System.err.println(s"[stream-soak] $name done: wall=$wall drift=${onlyS + onlyB}")
     }
@@ -640,7 +641,6 @@ object StreamSoak {
     // Round-10 extension (r9 VERDICT #5): the SINKS through the same
     // replay, plus a kill-and-restart recovery leg.
     // =================================================================
-    import org.apache.spark.sql.streaming.StreamingQuery
     import graft.streaming.{RetractSink, UpsertSink}
     def wipe(paths: String*): Unit = paths.foreach(p =>
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p)))
@@ -743,7 +743,10 @@ object StreamSoak {
     //      replay's midpoint, restart from the checkpoint, and require
     //      the final answer IDENTICAL to the uninterrupted run's —
     //      the exactly-once property a real cluster depends on ----
-    def runInterrupted(mk: () => StreamingQuery, stopAfterBatch: Long): Int = {
+    // returns the summary fields of the interrupted run: whether the stop
+    // came before the end, and whether it cut a batch short
+    def runInterrupted(mk: () => StreamingQuery, ckpt: String,
+        stopAfterBatch: Long): String = {
       val q = mk()
       var stopped = 0
       while (q.isActive) {
@@ -752,8 +755,7 @@ object StreamSoak {
           q.stop(); stopped = 1
         } else Thread.sleep(200)
       }
-      q.awaitTermination()
-      stopped
+      s""","stopped_midway":$stopped,"stop_cut_batch":${stopChecked(q, ckpt)}"""
     }
     if ("recovery_topn".startsWith(opPrefix) || opPrefix.isEmpty) {
       val sinkDir = s"$work/out_recovery_topn"; val ckpt = s"$work/ckpt_recovery_topn"
@@ -764,7 +766,7 @@ object StreamSoak {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       val t0 = System.nanoTime()
-      val stopped = runInterrupted(mk, nFiles / 2)
+      val stopFields = runInterrupted(mk, ckpt, nFiles / 2)
       // restart from the checkpoint: the remaining files replay, the
       // aborted batch (if any) re-executes against the file-sink commit
       // log, duplicates are impossible
@@ -780,7 +782,7 @@ object StreamSoak {
         else finalTopN(topN(batchDs(eventsDir)))
       summarize("recovery_topn", wall, got.count(),
         got.exceptAll(want).count(), want.exceptAll(got).count(),
-        s""","stopped_midway":$stopped""")
+        stopFields)
       got.unpersist()
     }
     if ("recovery_upsert".startsWith(opPrefix) || opPrefix.isEmpty) {
@@ -794,7 +796,7 @@ object StreamSoak {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       val t0 = System.nanoTime()
-      val stopped = runInterrupted(mk, nFiles / 2)
+      val stopFields = runInterrupted(mk, ckpt, nFiles / 2)
       val q2 = mk(); q2.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
       drainProgress(q2, "recovery_upsert")
@@ -805,7 +807,7 @@ object StreamSoak {
       val got = upsertGot(dirSink).cache(); val want = upsertWant()
       summarize("recovery_upsert", wall, got.count(),
         got.exceptAll(want).count(), want.exceptAll(got).count(),
-        s""","stopped_midway":$stopped""")
+        stopFields)
       got.unpersist()
     }
     // The retract sink is the sharpest recovery probe: its algebra is
@@ -824,12 +826,12 @@ object StreamSoak {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       val t0 = System.nanoTime()
-      val stopped = runInterrupted(mk, nFiles / 2)
+      val stopFields = runInterrupted(mk, ckpt, nFiles / 2)
       val q2 = mk(); q2.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
       drainProgress(q2, "recovery_retract")
       retractCheck("recovery_retract", wall, dirSink,
-        s""","stopped_midway":$stopped""")
+        stopFields)
     }
     // ---- r16 (VERDICT r15 #5): recovery legs for the newer stateful
     //      operators — session early/late-fire (merging-assigner window
@@ -851,17 +853,17 @@ object StreamSoak {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       val t0 = System.nanoTime()
-      val stopped = runInterrupted(mk, nFiles / 2)
+      val stopFields = runInterrupted(mk, ckpt, nFiles / 2)
       // restart from the checkpoint: open sessions (merge state, fired
       // identities, late-bridge markers) must survive; the proc-time
       // early timers re-register on recovery
-      val q2 = mk(); awaitQuiesced(q2)
+      val q2 = mk(); awaitQuiesced(q2, ckpt)
       val wall = (System.nanoTime() - t0) / 1e9
       drainProgress(q2, "recovery_session")
       val (onlyS, onlyB, rows) = sessionCheck(withDistinct = true)(
         spark.read.parquet(sinkDir), sessionOp(batchDs(eventsDir)))
       summarize("recovery_session", wall, rows, onlyS, onlyB,
-        s""","stopped_midway":$stopped""")
+        stopFields)
     }
     if ("recovery_match".startsWith(opPrefix) || opPrefix.isEmpty) {
       val sinkDir = s"$work/out_recovery_match"
@@ -885,7 +887,7 @@ object StreamSoak {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
       val t0 = System.nanoTime()
-      val stopped = runInterrupted(mk, nFiles / 2)
+      val stopFields = runInterrupted(mk, ckpt, nFiles / 2)
       // the NFA's partial-match buffers (MatchState: pending rows, PREV
       // marker, match counter) recover from the state store; a replayed
       // batch re-finds its matches with the same match ordinals
@@ -896,11 +898,36 @@ object StreamSoak {
       val want = matchOp(batchDs(eventsDir))
       summarize("recovery_match", wall, got.count(),
         got.exceptAll(want).count(), want.exceptAll(got).count(),
-        s""","stopped_midway":$stopped""")
+        stopFields)
       got.unpersist()
     }
     out.close()
     spark.stop()
+  }
+
+  /** Stop `q` (if still running) and tell a stop that cut a micro-batch
+    * short apart from a batch that failed; returns whether the stop cut one
+    * short. `stop()` cancels the running batch's jobs with interrupts, and
+    * a state-store task interrupted inside its commit logs
+    * `CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT` — that batch keeps its
+    * `offsets/` entry but gets no `commits/` entry, and a restart re-runs
+    * it from the last committed state version. A failure that is not the
+    * stop's interrupt ends the query with `exception` set (local mode does
+    * not retry tasks), and anything but "commits = offsets" or "commits =
+    * offsets − 1" means the checkpoint lost a batch: both fail the soak. */
+  private def stopChecked(q: StreamingQuery, ckpt: String): Boolean = {
+    if (q.isActive) q.stop()
+    q.exception.foreach(e => throw new IllegalStateException(
+      s"stream soak: query over $ckpt failed instead of stopping", e))
+    def lastBatch(log: String): Long =
+      Option(new java.io.File(ckpt, log).listFiles()).toSeq.flatten
+        .map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
+        .map(_.toLong).maxOption.getOrElse(-1L)
+    val (offsets, commits) = (lastBatch("offsets"), lastBatch("commits"))
+    if (commits != offsets && commits != offsets - 1)
+      throw new IllegalStateException(s"stream soak: checkpoint $ckpt has " +
+        s"last offsets/ batch $offsets but last commits/ batch $commits")
+    commits == offsets - 1
   }
 
   /** Emission-order check for the streaming sort: rows inside each sink
