@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   * runtime-sized partitions, demotes shuffles to broadcasts when the built
   * side turns out small, and splits skewed join partitions.
   *
-  * Two settings carry no semantics and exist so that a JVM compiles each
-  * generated class once, as the reference's runtime compiles its
+  * Three settings carry no semantics. Two exist so that a JVM compiles
+  * each generated class once, as the reference's runtime compiles its
   * generated projections, comparators and equalisers once: a codegen
   * cache sized to the measured working set, and no per-session executor
   * classloader (see the comments at each). A rerun of a query in the same
@@ -24,6 +24,13 @@ import org.apache.spark.sql.SparkSession
   * more; and the first run of a query compiles each whole-stage class
   * twice, once for WholeStageCodegenExec's compile check before the job
   * and once under the executor's classloader.
+  *
+  * The third sizes the chunks a broadcast is cut into below G1's
+  * humongous-object threshold, as the reference's runtime works on
+  * fixed-size memory segments rather than on buffers sized by a default:
+  * every task binary and every broadcast-join build side is a broadcast,
+  * and Spark's 4 MiB chunk, allocated whatever the payload, made each one
+  * a short-lived humongous array that set the process's peak RSS.
   */
 object SessionFactory {
 
@@ -90,15 +97,29 @@ object SessionFactory {
       // graft adds no session artifacts (no addArtifact, no ADD JAR, no
       // Spark Connect), so there is nothing to isolate.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // TorrentBroadcast cuts every broadcast into chunks of this size and
+      // allocates a whole chunk however small the payload. Every stage's
+      // task binary and every broadcast-join build side is a broadcast
+      // (about 95 per perfbench tpcds_power pass), and G1 allocates an
+      // array of half a region or more as a humongous object in regions
+      // of its own: Spark's 4 MiB chunk took three 2 MiB regions under
+      // perfbench's 3 GiB heap. A JFR allocation profile of one
+      // tpcds_power run counted 621 such chunks, 2.4 of its 3.4 GiB of
+      // allocations of 1 MiB or more, and those pages, not live data,
+      // set the peak RSS. 256 KiB plus the array header stays under half
+      // of G1's smallest (1 MiB) region, so no chunk is humongous at any
+      // heap size (BroadcastChunkSpec); perfbench's median tpcds_power
+      // peak RSS fell from 2.5 to 1.7 GiB (10 run pairs, 4 cores), with the
+      // same plans.
+      .config("spark.broadcast.blockSize", "256k")
     // dev-harness knob (audits/soaks only, never set by library users):
-    // ';'-separated k=v pairs layered on top of the standard config —
-    // e.g. the skewed-fixture soak scales the AQE skew thresholds down to
-    // sandbox partition sizes the same way the ScaleSpec skew test does
+    // ';'-separated spark.* k=v pairs layered on top of the standard
+    // config — e.g. the skewed-fixture soak scales the AQE skew thresholds
+    // down to sandbox partition sizes the same way the ScaleSpec skew test
+    // does
     val withExtra = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(';').filter(_.contains('=')).foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }).getOrElse(builder)
+      .map(parseExtraConf(_).foldLeft(builder) { case (b, (k, v)) => b.config(k, v) })
+      .getOrElse(builder)
     val spark = withExtra.getOrCreate()
     // opt-in rewrites (qds72 week-set filter; qds95 pair-exists → min/max):
     // always injected, each no-ops unless its spark.graft.* flag is set
@@ -111,4 +132,20 @@ object SessionFactory {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The settings in a `SPARK_GRAFT_EXTRA_CONF` value: `;`-separated
+    * `key=value` entries, each key and value trimmed, empty entries
+    * skipped. An entry without `=`, or whose key is not a `spark.` key,
+    * throws and names the entry: a typo must not be dropped or set under
+    * a key that nothing reads. */
+  def parseExtraConf(value: String): Seq[(String, String)] =
+    value.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { entry =>
+      entry.split("=", 2) match {
+        case Array(k, v) if k.trim.startsWith("spark.") => k.trim -> v.trim
+        case Array(_, _) => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF entry '$entry': key is not a spark.* key")
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF entry '$entry' has no '='")
+      }
+    }
 }
