@@ -7,16 +7,18 @@ import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, Expressi
 
 import graft.functions.{IsAlpha, IsDecimal, IsDigit, JavaHashCode, KeyValue, SplitIndex, TopWordRun}
 
-/** Spark extensions entry point: makes the library's native expressions
-  * available to pure-SQL users via
-  * `spark.sql.extensions=graft.GraftExtensions` (the same wiring any
-  * Spark-native library ships — no session-side registration calls
-  * needed). [[graft.functions.GraftFunctions.register]] installs the same
-  * builders per-session for programmatic use. */
+/** Spark extensions entry point: the library's native expressions and
+  * its SQL dialect ([[Sql.Parser]] around Spark's parser), for every
+  * session built with it — `SessionFactory` installs it in code, any
+  * other session via `spark.sql.extensions=graft.GraftExtensions` (the
+  * same wiring any Spark-native library ships — no session-side
+  * registration calls needed). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
+    ext.injectParser((spark, delegate) => new Sql.Parser(spark, delegate))
+  }
 }
 
 object GraftExtensions {

@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{PersistedView, UnresolvedRelation, UnresolvedStar, UnresolvedTVFAliases, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation, UnresolvedStar, UnresolvedTVFAliases, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression, LateralSubquery, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, AlterViewAs, CacheTableAsSelect, CreateView, GlobalLimit, Join, LateralJoin, LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.streaming.{GroupWindowSql, MatchRecognizeSql, TemporalSql, WindowSql}
 
@@ -18,37 +21,39 @@ import graft.streaming.{GroupWindowSql, MatchRecognizeSql, TemporalSql, WindowSq
   * graft.streaming.MatchRecognizeSql.sqlDf]], [[
   * graft.streaming.WindowSql.sqlDf]]).
   *
-  * Division of labor: a statement is parsed ONCE, by Spark's parser,
-  * the way the reference's planner rules match nodes of its one Calcite
-  * tree. Spark SQL evaluates OVER windows, ROW_NUMBER filters, joins,
-  * subqueries and unions natively in batch; graft adds four steps in
-  * front of it, batch and streaming alike:
+  * Division of labor: a statement is parsed ONCE, by the session's
+  * parser, the way the reference's planner rules match nodes of its one
+  * Calcite tree. That parser is [[Parser]], which [[GraftExtensions]]
+  * installs around Spark's own, so `spark.sql`, this entry and the view
+  * text Spark re-parses on every read all accept the same dialect. Spark
+  * SQL evaluates OVER windows, ROW_NUMBER filters, joins, subqueries and
+  * unions natively in batch; the parser adds three steps around Spark's
+  * parse, batch and streaming alike:
   *
   *  1. a text pre-pass for exactly the spellings Spark's parser rejects —
   *     each `<table> MATCH_RECOGNIZE (…)` or `(subquery) MATCH_RECOGNIZE
   *     (…)` source becomes a placeholder relation name (Spark has no
-  *     MATCH_RECOGNIZE grammar), `FOR SYSTEM_TIME AS OF <column>` becomes
-  *     a versioned join ([[graft.streaming.TemporalSql]]; Spark's time
-  *     travel refuses column references), and the precision suffix of
-  *     `INTERVAL '5.111' SECOND(1,3)` is dropped. All three share one
-  *     [[Scan]], so string literals, quoted identifiers and comments
-  *     never match;
-  *  2. one `parsePlan`;
-  *  3. one rewrite of the parsed plan ([[rewrite]]): each placeholder
-  *     becomes a `SubqueryAlias` over the pattern executor's plan — the
-  *     subquery source runs through this same entry first, as a windowed
-  *     aggregate feeding pattern matching is the reference's own IT
-  *     composition; `UNNEST(x)` and `LATERAL TABLE (udtf(x))` become
-  *     Spark's lateral generators (`explode` for one alias column,
-  *     `inline` for more), `LATERAL TABLE (fn(ts))` over a registered
-  *     temporal table function a versioned equi-join, and the group
-  *     windows `TUMBLE`/`HOP`/`SESSION` with their auxiliaries
+  *     MATCH_RECOGNIZE grammar), the operand of `FOR SYSTEM_TIME AS OF
+  *     <column>` a placeholder string literal (Spark's time travel takes
+  *     only constants), and the precision suffix of `INTERVAL '5.111'
+  *     SECOND(1,3)` is dropped. All three share one [[Scan]], so string
+  *     literals, quoted identifiers and comments never match;
+  *  2. Spark's parse;
+  *  3. one rewrite of the parsed plan ([[rewrite]]): each MATCH_RECOGNIZE
+  *     placeholder becomes a `SubqueryAlias` over the pattern executor's
+  *     plan — the subquery source runs through this same entry first, as
+  *     a windowed aggregate feeding pattern matching is the reference's
+  *     own IT composition; each AS OF placeholder a versioned join
+  *     ([[graft.streaming.TemporalSql]]); `UNNEST(x)` and `LATERAL TABLE
+  *     (udtf(x))` become Spark's lateral generators (`explode` for one
+  *     alias column, `inline` for more), `LATERAL TABLE (fn(ts))` over a
+  *     registered temporal table function a versioned equi-join, and the
+  *     group windows `TUMBLE`/`HOP`/`SESSION` with their auxiliaries
   *     `window()`/`session_window()` grouping
-  *     ([[graft.streaming.GroupWindowSql]]);
-  *  4. the streaming routes below, else `Bridge.ofRows` on the rewritten
-  *     plan — the same call `spark.sql` makes on its own parse. A view
-  *     defined by a statement that steps 1 or 3 changed stores its
-  *     analyzed plan, not its text ([[storedAsPlan]]).
+  *     ([[graft.streaming.GroupWindowSql]]).
+  *
+  * This entry then tries the streaming routes below, else runs the plan
+  * as `spark.sql` does (`Bridge.ofRows`).
   *
   * Quotes, escapes and comments are Spark's lexer's business, query
   * blocks are `Aggregate` nodes, and alias column counts are
@@ -77,46 +82,99 @@ import graft.streaming.{GroupWindowSql, MatchRecognizeSql, TemporalSql, WindowSq
 object Sql {
 
   def sql(spark: SparkSession, text: String): DataFrame = {
-    val (placed, matches) = placeMatchRecognize(text)
-    val spelled = dropIntervalPrecision(TemporalSql.rewrite(placed))
-    // an unparsable statement goes to spark.sql for its real error
-    val parsed = scala.util.Try(spark.sessionState.sqlParser.parsePlan(spelled))
-      .getOrElse(return spark.sql(spelled))
-    val rewritten = rewrite(spark, parsed, matches)
-    val plan =
-      if (spelled == text && rewritten == parsed) rewritten
-      else storedAsPlan(rewritten)
+    val plan = spark.sessionState.sqlParser.parsePlan(text)
     val prepared = WindowSql.prepare(spark, plan)
     WindowSql.route(spark, prepared)
       .orElse(routeStreamingSort(spark, prepared))
       .getOrElse(Bridge.ofRows(spark, plan))
   }
 
-  /** A view-defining statement that step 1 or 3 changed. Spark stores a
-    * view's SQL text and re-parses it on every read, and that text still
-    * spells what only this entry understands (a group window, UNNEST,
-    * LATERAL TABLE, a MATCH_RECOGNIZE placeholder). A temp view stores
-    * the analyzed plan instead; the text-only forms are refused. */
-  private def storedAsPlan(plan: LogicalPlan): LogicalPlan = plan match {
-    case c: CreateViewCommand if c.viewType != PersistedView =>
-      c.copy(originalText = None)
-    case _: CreateView | _: CreateViewCommand | _: AlterViewAs |
-        _: CacheTableAsSelect => throw new IllegalArgumentException(
-      s"${plan.nodeName}: Spark stores this view as SQL text and re-parses " +
-        "it on every read, and the text uses a spelling only graft.Sql.sql " +
-        "rewrites; define it with CREATE [OR REPLACE] TEMP VIEW instead")
-    case p => p
+  /** The session parser: steps 1–3 around each statement or query that
+    * `delegate` (Spark's parser) parses; expressions, identifiers and
+    * types go to `delegate` unchanged. `parsePlanWithParameters` is what
+    * `spark.sql` calls, and `parseQuery` what reads a view's text. */
+  final class Parser(spark: SparkSession, delegate: ParserInterface)
+      extends ParserInterface {
+
+    private def graft(text: String)(parse: String => LogicalPlan): LogicalPlan = {
+      val (placed, matches) = placeMatchRecognize(text)
+      val (spelled, asOfs) = placeAsOf(placed)
+      val parsed = parse(dropIntervalPrecision(spelled))
+      // the spellings in place of the placeholders, AS OF operands first
+      // (a MATCH_RECOGNIZE spelling is original text)
+      val spellings = asOfs.toSeq.map { case (name, operand) => s"'$name'" -> operand } ++
+        matches.toSeq.map { case (name, m) => name -> m.spelling }
+      rewrite(spark, storedText(parsed, spellings), matches,
+        asOfs.map { case (name, operand) => name -> delegate.parseExpression(operand) })
+    }
+
+    override def parsePlan(sqlText: String): LogicalPlan =
+      graft(sqlText)(delegate.parsePlan)
+    override def parsePlanWithParameters(sqlText: String,
+        params: ParameterContext): LogicalPlan =
+      graft(sqlText)(delegate.parsePlanWithParameters(_, params))
+    override def parseQuery(sqlText: String): LogicalPlan =
+      graft(sqlText)(delegate.parseQuery)
+
+    override def parseExpression(sqlText: String): Expression =
+      delegate.parseExpression(sqlText)
+    override def parseTableIdentifier(sqlText: String): TableIdentifier =
+      delegate.parseTableIdentifier(sqlText)
+    override def parseFunctionIdentifier(sqlText: String): FunctionIdentifier =
+      delegate.parseFunctionIdentifier(sqlText)
+    override def parseMultipartIdentifier(sqlText: String): Seq[String] =
+      delegate.parseMultipartIdentifier(sqlText)
+    override def parseRoutineParam(sqlText: String): StructType =
+      delegate.parseRoutineParam(sqlText)
+    override def parseTableSchema(sqlText: String): StructType =
+      delegate.parseTableSchema(sqlText)
+    override def parseDataType(sqlText: String): DataType =
+      delegate.parseDataType(sqlText)
   }
 
   /** Where an embedded MATCH_RECOGNIZE clause reads from — a table name
-    * (Left) or a subquery's text (Right) — and the clause itself. */
+    * (Left) or a subquery's text (Right) —, the clause itself, and the
+    * source and clause as the statement spells them. */
   private final case class Match(source: Either[String, String],
-      clause: String)
+      clause: String, spelling: String)
+
+  /** A view-defining statement with its stored text spelled as written:
+    * Spark keeps the SQL text of a view and re-parses it on every read,
+    * and the text it cut from the parsed statement holds the pre-pass
+    * placeholders (`spellings`: placeholder → original spelling). */
+  private def storedText(plan: LogicalPlan,
+      spellings: Seq[(String, String)]): LogicalPlan = {
+    def spelled(text: String) = spellings.foldLeft(text) {
+      case (t, (placeholder, spelling)) => t.replace(placeholder, spelling)
+    }
+    plan match {
+      case _ if spellings.isEmpty => plan
+      case c: CreateView => c.copy(originalText = c.originalText.map(spelled))
+      case c: CreateViewCommand => c.copy(originalText = c.originalText.map(spelled))
+      case a: AlterViewAs => a.copy(originalText = spelled(a.originalText))
+      case c: CacheTableAsSelect => c.copy(originalText = spelled(c.originalText))
+      case p => p
+    }
+  }
 
   /** Step 3: the one rewrite of the parsed statement — CTE bodies and
-    * subquery expressions included. */
+    * subquery expressions included. `asOfs` are the AS OF placeholders'
+    * operands. */
   private def rewrite(spark: SparkSession, parsed: LogicalPlan,
-      matches: Map[String, Match]): LogicalPlan = {
+      matches: Map[String, Match], asOfs: Map[String, Expression]): LogicalPlan = {
+    // `t FOR SYSTEM_TIME AS OF <placeholder> [[AS] r]`: alias, table, operand
+    object AsOf {
+      def unapply(p: LogicalPlan): Option[(Option[String], UnresolvedRelation, Expression)] =
+        p match {
+          case SubqueryAlias(id, AsOf(None, table, operand)) =>
+            Some((Some(id.name), table, operand))
+          case RelationTimeTravel(table: UnresolvedRelation,
+              Some(Literal(placeholder, _: StringType)), None)
+              if asOfs.contains(String.valueOf(placeholder)) =>
+            Some((None, table, asOfs(String.valueOf(placeholder))))
+          case _ => None
+        }
+    }
     val relations = everywhere(parsed) {
       case r: UnresolvedRelation
           if matches.contains(r.multipartIdentifier.mkString(".")) =>
@@ -126,6 +184,11 @@ object Sql {
         SubqueryAlias(name, MatchRecognizeSql
           .sqlDf(src, s"SELECT * FROM graft_mr_src ${m.clause}")
           .queryExecution.analyzed)
+      case Join(left, AsOf(alias, table, operand), joinType, cond, _) =>
+        TemporalSql.systemTimeJoin(spark, Some(left), alias, table, operand,
+          joinType, cond)
+      case AsOf(alias, table, operand) =>
+        TemporalSql.systemTimeJoin(spark, None, alias, table, operand, Inner, None)
       // `UNNEST(x)` right of a join is what Spark parses for
       // `LATERAL explode|inline(x)` in the same position
       case Join(left, right @ FromCall("UNNEST", _), joinType, cond, _) =>
@@ -329,10 +392,63 @@ object Sql {
         "expected '(' after MATCH_RECOGNIZE")
       val close = s.balancedClose(j)
       val name = names.next()
-      found += name -> Match(source, text.substring(kw, close + 1))
+      found += name -> Match(source, text.substring(kw, close + 1),
+        text.substring(start, close + 1))
       out.append(text.substring(i, start)).append(name)
       i = close + 1
       kw = s.indexOfWord("MATCH_RECOGNIZE", i)
+    }
+    (out.append(text.substring(i)).result(), found.result())
+  }
+
+  private val SystemTimeAsOf = java.util.regex.Pattern.compile(
+    """FOR\s+SYSTEM_TIME\s+AS\s+OF\s+""", java.util.regex.Pattern.CASE_INSENSITIVE)
+
+  /** Step 1: the operand of every `FOR SYSTEM_TIME AS OF <operand>` that
+    * is a dotted, possibly backticked identifier or a call such as
+    * `PROCTIME()` → a string placeholder `'graft_asof_<n>'`, which
+    * Spark's parser reads as a time-travel timestamp under the table's
+    * alias; returns the text and each placeholder's operand. A literal
+    * operand (`'2020-01-01'`, `TIMESTAMP '…'`) is Spark's own time
+    * travel and stays. */
+  private def placeAsOf(text: String): (String, Map[String, String]) = {
+    val s = new Scan(text)
+    val lower = text.toLowerCase
+    val names = Iterator.from(0).map(n => s"graft_asof_$n").filterNot(lower.contains)
+    // end of the operand at `from`; `from` when it is not a column or call
+    def operand(from: Int): Int = {
+      var j = from
+      var segment = true
+      while (segment) {
+        val st = j
+        if (j < text.length && text.charAt(j) == '`')
+          j = math.max(text.indexOf('`', j + 1) + 1, st)
+        else while (j < text.length && Scan.isIdentChar(text.charAt(j))) j += 1
+        if (j == st || text.charAt(st).isDigit) return from
+        segment = j < text.length && text.charAt(j) == '.'
+        if (segment) j += 1
+      }
+      val next = text.indexWhere(!_.isWhitespace, j)
+      if (next >= 0 && text.charAt(next) == '\'') from // TIMESTAMP '…'
+      else if (j < text.length && text.charAt(j) == '(') s.balancedClose(j) + 1
+      else j
+    }
+    val m = SystemTimeAsOf.matcher(text)
+    val out = new StringBuilder
+    val found = Map.newBuilder[String, String]
+    var i = 0
+    var k = s.indexOfWord("FOR", 0)
+    while (k >= 0) {
+      if (m.region(k, text.length).lookingAt()) {
+        val end = operand(m.end)
+        if (end > m.end) {
+          val name = names.next()
+          found += name -> text.substring(m.end, end)
+          out.append(text.substring(i, m.end)).append(s"'$name'")
+          i = end
+        }
+      }
+      k = s.indexOfWord("FOR", math.max(k + 1, i))
     }
     (out.append(text.substring(i)).result(), found.result())
   }

@@ -38,6 +38,9 @@ object SessionFactory {
 
   def local(appName: String, cpus: String = defaultParallelism): SparkSession = {
     val builder = SparkSession.builder()
+      // graft's SQL dialect and native functions in every session of
+      // this context: spark.sql, view text and streaming clones included
+      .withExtensions(new graft.GraftExtensions)
       .appName(appName)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -59,8 +62,7 @@ object SessionFactory {
       // ceiling is indistinguishable from 32 within session noise
       // (SCALE.md, scale/bench_ab.md). At cluster scale the same knob is
       // what lets one config serve sf0.001 specs and 100 TB runs.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "128"))
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "128")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // let AQE re-size partitions on plans that feed a persist(): the
       // iterative operators (connected components, Lloyd training) cache a

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputT
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's scalar-function surface that Spark does not ship under
@@ -92,29 +92,6 @@ object GraftFunctions {
     * [[minHashSig96]], in one kernel call per row. */
   def minHashBands96(hs: Column, bands: Int): Column =
     Bridge.column(MinHashBands96(Bridge.expression(hs), bands))
-
-  /** Register SQL names so `spark.sql` queries can call the gap functions
-    * by their reference names. All five resolve to the native codegen'd
-    * expressions below — no ScalaUDF boxing anywhere on this surface
-    * (`hash_code` set the house style; round-7 review flagged the old
-    * closure registrations as the only UDF-where-an-Expression-fits). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("split_index",
-      graft.GraftExtensions.splitIndexBuilder _, "built-in")
-    reg.createOrReplaceTempFunction("keyvalue",
-      graft.GraftExtensions.keyValueBuilder _, "built-in")
-    reg.createOrReplaceTempFunction("is_decimal",
-      graft.GraftExtensions.isDecimalBuilder _, "built-in")
-    reg.createOrReplaceTempFunction("is_digit",
-      graft.GraftExtensions.isDigitBuilder _, "built-in")
-    reg.createOrReplaceTempFunction("is_alpha",
-      graft.GraftExtensions.isAlphaBuilder _, "built-in")
-    reg.createOrReplaceTempFunction("hash_code",
-      graft.GraftExtensions.hashCodeBuilder _, "built-in")
-    reg.createOrReplaceTempFunction("top_word_run",
-      graft.GraftExtensions.topWordRunBuilder _, "built-in")
-  }
 }
 
 /** Static kernels invoked from both interpreted eval and generated Java —

@@ -46,15 +46,14 @@ object StatefulBatch {
     * contract: at 100 TB the same sizing saturates the cluster
     * (bytes/4 MB >> cores and the cores cap binds), exactly like the
     * reference sizing operator parallelism to the job, not to one
-    * host. Override the divisor via SPARK_GRAFT_STREAM_PARTITION_BYTES.
+    * host.
     * The session's `spark.sql.shuffle.partitions` is restored on exit
     * (state partitioning is fixed at each query's first batch from the
     * setting's value at `start()`, so scoping it to the replay is
     * exact). */
   private[graft] def withReplayParallelism[T](
       spark: org.apache.spark.sql.SparkSession, dir: String)(f: => T): T = {
-    val target = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITION_BYTES",
-      (4L * 1024 * 1024).toString).toLong
+    val target = 4L * 1024 * 1024
     val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes =

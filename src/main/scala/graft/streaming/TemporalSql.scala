@@ -3,12 +3,10 @@ package graft.streaming
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, IsNull, LessThan, Or}
 import org.apache.spark.sql.catalyst.plans.JoinType
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, SubqueryAlias}
-
-import graft.Sql.Scan.isIdentChar
 
 /** The reference's temporal-join SQL spellings, rewritten to native
   * Spark joins (reference: flink-table planner-blink —
@@ -64,11 +62,13 @@ import graft.Sql.Scan.isIdentChar
   * deduplicated history, as the reference's `createTemporalTableFunction`
   * assumes unique version times per key.
   *
-  * `LATERAL TABLE (fn(ts))` is rewritten on Spark's parsed plan (Spark
-  * reads it as a table-valued function named `TABLE`,
-  * [[versionedJoin]]); `FOR SYSTEM_TIME AS OF <column>` is text
-  * ([[rewrite]]), because Spark's parser refuses a column reference as
-  * a time-travel timestamp.
+  * Both spellings are rewritten on Spark's parsed plan by the session
+  * parser ([[graft.Sql.Parser]]): Spark reads `LATERAL TABLE (fn(ts))`
+  * as a table-valued function named `TABLE` ([[versionedJoin]]), and
+  * `FOR SYSTEM_TIME AS OF <column>` as time travel under the alias,
+  * inside the join that keeps its ON condition, once the parser's text
+  * pre-pass has swapped the column for a placeholder literal (Spark's
+  * time travel takes only constants; [[systemTimeJoin]]).
   *
   * Streaming: these spellings rewrite to a plain join, which Spark
   * plans on a stream only in its stream-static form (static versioned
@@ -122,104 +122,13 @@ object TemporalSql {
   def dropTemporalFunction(name: String): Unit =
     registry.remove(name.toLowerCase)
 
-  /** Rewrite every `FOR SYSTEM_TIME AS OF` join of `text` — the front
-    * door's text pre-pass, since Spark's parser refuses a column
-    * reference as a time-travel timestamp; returns `text` unchanged when
-    * the form does not appear. `LATERAL TABLE (fn(ts))` parses, and is
-    * rewritten on the parsed plan ([[versionedJoin]]). */
-  def rewrite(text: String): String = {
-    // `JOIN name FOR SYSTEM_TIME AS OF expr [AS] alias ON cond` →
-    // versioned-subquery JOIN with the interval containment prepended to
-    // the ON condition
-    val scan = new graft.Sql.Scan(text)
-    val out = new StringBuilder
-    var i = 0
-    while (i < text.length) {
-      val k = scan.indexOfWord("FOR", i)
-      val isSysTime = k >= 0 && text.substring(k).toUpperCase
-        .replaceAll("\\s+", " ").startsWith("FOR SYSTEM_TIME AS OF ")
-      if (k < 0) { out.append(text.substring(i)); i = text.length }
-      else if (!isSysTime) {
-        // some other FOR — copy it and keep scanning
-        out.append(text.substring(i, k + "FOR".length))
-        i = k + "FOR".length
-      } else {
-        val hit = k
-        // the dim name just before FOR
-        var e = hit - 1
-        while (e >= i && text.charAt(e).isWhitespace) e -= 1
-        val nameEnd = e + 1
-        while (e >= i && (isIdentChar(text.charAt(e)) || text.charAt(e) == '.')) e -= 1
-        val dimName = text.substring(e + 1, nameEnd)
-        require(dimName.nonEmpty,
-          "FOR SYSTEM_TIME AS OF must follow a table name")
-        // skip FOR SYSTEM_TIME AS OF
-        var j = hit
-        Seq("FOR", "SYSTEM_TIME", "AS", "OF").foreach { w =>
-          while (j < text.length && text.charAt(j).isWhitespace) j += 1
-          require(text.regionMatches(true, j, w, 0, w.length),
-            s"malformed FOR SYSTEM_TIME AS OF (at '$w')")
-          j += w.length
-        }
-        while (j < text.length && text.charAt(j).isWhitespace) j += 1
-        // the AS OF expression: a dotted identifier or PROCTIME()
-        val es = j
-        while (j < text.length && (isIdentChar(text.charAt(j)) ||
-          text.charAt(j) == '.')) j += 1
-        if (j < text.length && text.charAt(j) == '(')
-          j = scan.balancedClose(j) + 1
-        val asOf = text.substring(es, j).trim
-        require(asOf.nonEmpty, "empty AS OF expression")
-        out.append(text.substring(i, e + 1))
-        registry.get(dimName.toLowerCase) match {
-          case Some(v) =>
-            // alias + ON follow; prepend the interval containment to ON
-            var a = j
-            while (a < text.length && text.charAt(a).isWhitespace) a += 1
-            if (text.regionMatches(true, a, "AS", 0, 2) &&
-                (a + 2 >= text.length || !isIdentChar(text.charAt(a + 2))))
-              a += 2
-            while (a < text.length && text.charAt(a).isWhitespace) a += 1
-            val as = a
-            while (a < text.length && isIdentChar(text.charAt(a))) a += 1
-            val alias = text.substring(as, a)
-            require(alias.nonEmpty,
-              "FOR SYSTEM_TIME AS OF needs an alias before ON")
-            while (a < text.length && text.charAt(a).isWhitespace) a += 1
-            require(text.regionMatches(true, a, "ON", 0, 2),
-              "FOR SYSTEM_TIME AS OF join needs an ON condition")
-            a += 2
-            // the original condition is wrapped in parens before the
-            // interval is ANDed on — a top-level OR must not rebind
-            val condEnd = endOfCondition(scan, a)
-            out.append('(').append(versionedSubquery(v)).append(") AS ")
-              .append(alias)
-              .append(" ON (").append(text.substring(a, condEnd).trim)
-              .append(") AND ").append(intervalCond(v, alias, asOf))
-              .append(' ')
-            i = condEnd
-          case None =>
-            require(isProcTime(asOf),
-              s"FOR SYSTEM_TIME AS OF $asOf over '$dimName': event-time " +
-                "versioning needs registerTemporalFunction(name, view, " +
-                "timeCol, keyCol) — only a proc-time AS OF can read the " +
-                "table's current contents as-is (lookup join)")
-            out.append(dimName) // lookup join = the current table
-            i = j
-        }
-      }
-    }
-    out.result()
-  }
-
   /** `<left> [, | JOIN] LATERAL TABLE (fn(asOf)) AS alias [ON cond]`
     * for a registered temporal `fn` (`args` are the `TABLE(…)` call's
-    * arguments, Spark's parse of the spelling): the versioned-subquery
-    * join, the interval containment ANDed onto any ON condition. None
-    * when `args` name no registered function — the reference's UDTF
-    * correlate, which [[graft.Sql]] runs as a lateral generator over an
-    * array-returning scalar UDF (a Scala UDTF's graft twin,
-    * `spark.udf.register`; stream CorrelateITCase.scala:90-163). */
+    * arguments, Spark's parse of the spelling): the versioned join of
+    * `fn`'s history. None when `args` name no registered function — the
+    * reference's UDTF correlate, which [[graft.Sql]] runs as a lateral
+    * generator over an array-returning scalar UDF (a Scala UDTF's graft
+    * twin, `spark.udf.register`; stream CorrelateITCase.scala:90-163). */
   private[graft] def versionedJoin(spark: SparkSession,
       left: Option[LogicalPlan], alias: Option[String], args: Seq[Expression],
       joinType: JoinType, cond: Option[Expression]): Option[LogicalPlan] = {
@@ -236,114 +145,72 @@ object TemporalSql {
       val r = alias.getOrElse(throw new IllegalArgumentException(
         s"temporal table function $fn needs an alias: " +
           "LATERAL TABLE (fn(ts)) AS r"))
-      val parser = spark.sessionState.sqlParser
-      // the interval over a placeholder, then the call's argument in its
-      // place
-      val asOf = if (isProcTime(fnArgs.head)) "PROCTIME()" else "graft_asof"
-      val interval = parser.parseExpression(intervalCond(v, r, asOf))
-        .transform {
-          case a: UnresolvedAttribute if a.nameParts == Seq("graft_asof") =>
-            fnArgs.head
-        }
-      Join(left.get, SubqueryAlias(r, parser.parsePlan(versionedSubquery(v))),
-        joinType, Some(cond.fold(interval)(And(_, interval))), JoinHint.NONE)
+      historyJoin(spark, left.get, v, r, fnArgs.head, joinType, cond)
     }
   }
 
-  private def versionedSubquery(v: Versioned): String =
-    s"SELECT *, lead(${v.timeCol}) OVER (PARTITION BY ${v.keyCol} " +
-      s"ORDER BY ${v.timeCol}) AS graft_vend FROM ${v.view}"
+  /** `<left> JOIN table FOR SYSTEM_TIME AS OF asOf [AS alias] [ON cond]`
+    * (`left` None: the table outside a join; the alias defaults to the
+    * table's name): over a registered `table`, the versioned join of its
+    * history; over any other table, under a proc-time `asOf`, the table
+    * itself (a lookup join reads current contents). An event-time AS OF
+    * over an unregistered table fails loudly: its version history is
+    * unknown. */
+  private[graft] def systemTimeJoin(spark: SparkSession,
+      left: Option[LogicalPlan], alias: Option[String],
+      table: UnresolvedRelation, asOf: Expression, joinType: JoinType,
+      cond: Option[Expression]): LogicalPlan = {
+    val name = table.multipartIdentifier.mkString(".")
+    registry.get(name.toLowerCase) match {
+      case Some(v) =>
+        require(left.isDefined, s"FOR SYSTEM_TIME AS OF over '$name' must " +
+          "be the right side of a join: <left> JOIN t FOR SYSTEM_TIME AS OF " +
+          "<left>.ts AS r ON …")
+        historyJoin(spark, left.get, v,
+          alias.getOrElse(table.multipartIdentifier.last), asOf, joinType, cond)
+      case None =>
+        require(isProcTime(asOf),
+          s"FOR SYSTEM_TIME AS OF ${asOf.sql} over '$name': event-time " +
+            "versioning needs registerTemporalFunction(name, view, " +
+            "timeCol, keyCol) — only a proc-time AS OF can read the " +
+            "table's current contents as-is (lookup join)")
+        val current = alias.fold[LogicalPlan](table)(SubqueryAlias(_, table))
+        left.fold(current)(Join(_, current, joinType, cond, JoinHint.NONE))
+    }
+  }
+
+  /** `left` joined to `v`'s history under `alias`, the interval
+    * containment of `asOf` ANDed onto any ON condition. */
+  private def historyJoin(spark: SparkSession, left: LogicalPlan,
+      v: Versioned, alias: String, asOf: Expression, joinType: JoinType,
+      cond: Option[Expression]): LogicalPlan = {
+    val history = spark.sessionState.sqlParser.parsePlan(
+      s"SELECT *, lead(${v.timeCol}) OVER (PARTITION BY ${v.keyCol} " +
+        s"ORDER BY ${v.timeCol}) AS graft_vend FROM ${v.view}")
+    val interval = intervalCond(v, alias, asOf)
+    Join(left, SubqueryAlias(alias, history), joinType,
+      Some(cond.fold(interval)(And(_, interval))), JoinHint.NONE)
+  }
 
   private def intervalCond(v: Versioned, alias: String,
-      asOf: String): String =
-    if (isProcTime(asOf)) s"$alias.graft_vend IS NULL"
-    else s"$asOf >= $alias.${v.timeCol} AND " +
-      s"($alias.graft_vend IS NULL OR $asOf < $alias.graft_vend)"
-
-  /** A processing-time AS OF expression: the literal `PROCTIME()` or a
-    * column whose last dotted segment EXACTLY matches a registered
-    * proc-time attribute name (see [[registerProcTimeAttribute]]).
-    * Exact match only — prefix/substring inference would silently turn
-    * an event-time join over a column named `proctime_ts` into a
-    * latest-version lookup. */
-  private[streaming] def isProcTime(expr: String): Boolean = {
-    val e = expr.trim.toLowerCase
-    val last = e.substring(e.lastIndexOf('.') + 1)
-    e == "proctime()" || procTimeNames.contains(last)
+      asOf: Expression): Expression = {
+    def col(name: String) = UnresolvedAttribute(Seq(alias, name))
+    val latest = IsNull(col("graft_vend"))
+    if (isProcTime(asOf)) latest
+    else And(GreaterThanOrEqual(asOf, col(v.timeCol)),
+      Or(latest, LessThan(asOf, col("graft_vend"))))
   }
 
-  /** [[isProcTime]] of a parsed expression: `PROCTIME()` or a column. */
+  /** A processing-time AS OF expression: the call `PROCTIME()` or a
+    * column whose last name part EXACTLY matches a registered proc-time
+    * attribute name (see [[registerProcTimeAttribute]]). Exact match
+    * only — prefix/substring inference would silently turn an event-time
+    * join over a column named `proctime_ts` into a latest-version
+    * lookup. */
   private[streaming] def isProcTime(e: Expression): Boolean = e match {
     case f: UnresolvedFunction =>
-      f.arguments.isEmpty && isProcTime(f.nameParts.mkString(".") + "()")
-    case a: UnresolvedAttribute => isProcTime(a.nameParts.mkString("."))
+      f.arguments.isEmpty && f.nameParts.map(_.toLowerCase) == Seq("proctime")
+    case a: UnresolvedAttribute => procTimeNames.contains(a.nameParts.last.toLowerCase)
     case _ => false
-  }
-
-  /** End index (exclusive) of a join's ON condition starting at `from`:
-    * the next clause keyword, another join, or a closing paren at depth
-    * 0 — whichever comes first — in code (see [[graft.Sql.Scan]]).
-    *
-    * Two-word clause heads only stop the scan when their second word
-    * follows (`GROUP BY`, `LEFT [OUTER|SEMI|ANTI] JOIN`, `WINDOW w AS`):
-    * a bare column literally named `left`, `cross`, `group` or `window`
-    * referenced unqualified at depth 0 (`ON r.k = left`) is an ordinary
-    * identifier there and must not truncate the condition mid-expression. */
-  private def endOfCondition(scan: graft.Sql.Scan, from: Int): Int = {
-    val s = scan.text
-    // standalone clause heads: reserved words that cannot appear as a
-    // bare unqualified identifier inside an expression
-    val bare = Seq("WHERE", "HAVING", "LIMIT", "UNION", "INTERSECT",
-      "EXCEPT", "JOIN", "MATCH_RECOGNIZE")
-    // clause heads that are only a boundary when their continuation
-    // token follows (otherwise they are a plain column name)
-    val twoWord: Map[String, Set[String]] = Map(
-      "GROUP" -> Set("BY"), "ORDER" -> Set("BY"),
-      "LEFT" -> Set("JOIN", "OUTER", "SEMI", "ANTI"),
-      "RIGHT" -> Set("JOIN", "OUTER", "SEMI", "ANTI"),
-      "FULL" -> Set("JOIN", "OUTER"),
-      "CROSS" -> Set("JOIN"), "INNER" -> Set("JOIN"))
-    val u = s.toUpperCase
-    def wordAfter(pos: Int): String = {
-      var j = pos
-      while (j < s.length && s.charAt(j).isWhitespace) j += 1
-      val st = j
-      while (j < s.length && isIdentChar(s.charAt(j))) j += 1
-      u.substring(st, j)
-    }
-    def stopsHere(i: Int): Boolean = {
-      def hit(w: String) = u.startsWith(w, i) &&
-        (i + w.length >= s.length || !isIdentChar(s.charAt(i + w.length)))
-      bare.exists(hit) ||
-        twoWord.exists { case (w, nexts) =>
-          hit(w) && nexts.contains(wordAfter(i + w.length)) } ||
-        // WINDOW clause: `WINDOW <name> AS (` — require the shape, a
-        // column named `window` is never followed by `<ident> AS`
-        (hit("WINDOW") && {
-          var j = i + "WINDOW".length
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          val st = j
-          while (j < s.length && isIdentChar(s.charAt(j))) j += 1
-          j > st && wordAfter(j) == "AS"
-        })
-    }
-    var i = from
-    var depth = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!scan.code(i)) i += 1
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') {
-        if (depth == 0) return i
-        depth -= 1; i += 1
-      } else if (depth == 0 && c.isLetter &&
-          // a '.'-qualified identifier (t.left, t.cross) is a column
-          // reference, never a clause keyword
-          (i == 0 || (!isIdentChar(s.charAt(i - 1)) && s.charAt(i - 1) != '.')) &&
-          stopsHere(i))
-        return i
-      else i += 1
-    }
-    s.length
   }
 }

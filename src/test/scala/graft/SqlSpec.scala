@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.streaming.{OverT1, RankT3}
+import graft.streaming.{OverT1, RankT3, TemporalSql}
 
 /** The single SQL front door must execute embedded MATCH_RECOGNIZE
   * clauses through the general-schema executor and let the surrounding
@@ -121,41 +121,163 @@ class SqlSpec extends SparkSpec {
       "BEGIN DECLARE x INT = 41; SELECT x + 1 AS y; END")) == Seq(Seq[Any](42)))
   }
 
-  test("a temp view over a rewritten spelling stores its analyzed plan " +
-    "and reads back; a view Spark keeps as SQL text is refused") {
-    registerEvents()
+  test("views over a rewritten spelling read back however Spark stores " +
+    "them: temp and permanent views, ALTER VIEW ... AS and CACHE TABLE " +
+    "... AS, over TUMBLE and over MATCH_RECOGNIZE") {
     import spark.implicits._
     def ts(s: Int) = new java.sql.Timestamp(s * 1000L)
-    Seq((ts(1), 1), (ts(2), 2), (ts(3700), 4)).toDF("ts", "v")
-      .createOrReplaceTempView("sql_view_src")
+    // permanent sources: Spark refuses a permanent view over a temp view
+    val wh = java.nio.file.Files.createTempDirectory("graft_sqlviews")
+    Seq((ts(1), 1), (ts(2), 2), (ts(3700), 4)).toDF("ts", "v").write
+      .option("path", wh.resolve("src").toString).saveAsTable("sql_view_src")
+    Seq((1L, 1, 1L, "view"), (1L, 2, 2L, "purchase"), (2L, 1, 3L, "view"),
+      (2L, 2, 4L, "click"), (2L, 3, 5L, "view"), (2L, 4, 6L, "purchase"))
+      .toDF("user_id", "t", "event_id", "event_type")
+      .selectExpr("user_id", "timestamp_seconds(t) AS ts", "event_id", "event_type")
+      .write.option("path", wh.resolve("ev").toString).saveAsTable("sql_view_ev")
     val tumble =
       """SELECT TUMBLE_START(ts, INTERVAL '1' HOUR) AS ws, SUM(v) AS s
         |FROM sql_view_src GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)""".stripMargin
     val clause =
-      """SELECT view_id FROM events MATCH_RECOGNIZE (
+      """SELECT view_id FROM sql_view_ev MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY ts, event_id
         |  MEASURES A.event_id AS view_id ONE ROW PER MATCH
         |  PATTERN (A B)
         |  DEFINE A AS event_type = 'view', B AS event_type = 'purchase')""".stripMargin
+    val windows = Set(Seq[Any](ts(0), 3L), Seq[Any](ts(3600), 4L))
+    val matches = Set(Seq[Any](1L), Seq[Any](5L))
+    def read(view: String) = rows(spark.table(view)).toSet
     try {
-      graft.Sql.sql(spark, s"CREATE OR REPLACE TEMP VIEW sql_view_tumble AS $tumble")
-      assert(rows(spark.table("sql_view_tumble").orderBy("ws")) ==
-        Seq(Seq[Any](ts(0), 3L), Seq[Any](ts(3600), 4L)))
-      graft.Sql.sql(spark, s"CREATE OR REPLACE TEMP VIEW sql_view_mr AS $clause")
-      val want = rows(graft.Sql.sql(spark, clause)).toSet
-      assert(want.nonEmpty)
-      assert(rows(spark.table("sql_view_mr")).toSet == want)
-      // the view holds the executor's plan, not the placeholder's name:
-      // a session view created later under that name changes nothing
+      assert(rows(spark.sql(tumble)).toSet == windows)
+      assert(rows(spark.sql(clause)).toSet == matches)
+      spark.sql(s"CREATE OR REPLACE TEMP VIEW sql_view_tt AS $tumble")
+      spark.sql(s"CREATE OR REPLACE TEMP VIEW sql_view_tm AS $clause")
+      spark.sql(s"CREATE VIEW sql_view_pt AS $tumble")
+      spark.sql(s"CREATE VIEW sql_view_pm AS $clause")
+      assert(read("sql_view_tt") == windows && read("sql_view_pt") == windows)
+      assert(read("sql_view_tm") == matches && read("sql_view_pm") == matches)
+      // the view keeps the spelling, not the placeholder's name: a
+      // session view created later under that name changes nothing
       Seq(41L).toDF("view_id").createOrReplaceTempView("graft_mr_0")
-      assert(rows(spark.table("sql_view_mr")).toSet == want)
-      Seq(s"CREATE VIEW sql_view_perm AS $tumble",
-        s"ALTER VIEW sql_view_tumble AS $tumble").foreach { text =>
-        val e = intercept[IllegalArgumentException](graft.Sql.sql(spark, text))
-        assert(e.getMessage.contains("TEMP VIEW"), e.getMessage)
-      }
-    } finally Seq("sql_view_tumble", "sql_view_mr", "graft_mr_0")
-      .foreach(spark.catalog.dropTempView)
+      assert(read("sql_view_tm") == matches && read("sql_view_pm") == matches)
+      assert(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("sql_view_pm"))
+        .viewText.exists(_.contains("MATCH_RECOGNIZE")))
+      spark.sql(s"ALTER VIEW sql_view_pt AS $clause")
+      spark.sql(s"ALTER VIEW sql_view_pm AS $tumble")
+      assert(read("sql_view_pt") == matches && read("sql_view_pm") == windows)
+      spark.sql(s"CACHE TABLE sql_view_ct AS $tumble")
+      spark.sql(s"CACHE TABLE sql_view_cm AS $clause")
+      assert(read("sql_view_ct") == windows && read("sql_view_cm") == matches)
+      // a read of the MATCH_RECOGNIZE view re-parses its text, and the
+      // executor's plan never equals the cached one: it reads back, but
+      // is not served from the cache
+      assert(spark.catalog.isCached("sql_view_ct"))
+    } finally {
+      Seq("sql_view_ct", "sql_view_cm").foreach(v =>
+        spark.sql(s"UNCACHE TABLE IF EXISTS $v"))
+      Seq("sql_view_tt", "sql_view_tm", "sql_view_ct", "sql_view_cm",
+        "graft_mr_0").foreach(spark.catalog.dropTempView)
+      Seq("sql_view_pt", "sql_view_pm").foreach(v =>
+        spark.sql(s"DROP VIEW IF EXISTS $v"))
+      Seq("sql_view_src", "sql_view_ev").foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+      org.apache.commons.io.FileUtils.deleteQuietly(wh.toFile)
+    }
+  }
+
+  test("spark.sql binds named and positional parameters in graft's " +
+    "dialect; a malformed statement raises Spark's own ParseException") {
+    import spark.implicits._
+    def ts(s: Int) = new java.sql.Timestamp(s * 1000L)
+    Seq((ts(1), 1), (ts(2), 2), (ts(3700), 4)).toDF("ts", "v")
+      .createOrReplaceTempView("sql_param_src")
+    def tumble(param: String) =
+      s"""SELECT TUMBLE_START(ts, INTERVAL '1' HOUR) AS ws, SUM(v) AS s
+         |FROM sql_param_src WHERE v >= $param
+         |GROUP BY TUMBLE(ts, INTERVAL '1' HOUR)""".stripMargin
+    val want = Set(Seq[Any](ts(0), 2L), Seq[Any](ts(3600), 4L))
+    assert(rows(spark.sql(tumble(":lo"), Map("lo" -> 2))).toSet == want)
+    assert(rows(spark.sql(tumble("?"), Array[Any](2))).toSet == want)
+    val malformed = tumble("2") + " HAVING"
+    val e = intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      spark.sql(malformed))
+    val own = intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      new org.apache.spark.sql.execution.SparkSqlParser().parsePlan(malformed))
+    // the same error at the same place as Spark's parser reports it
+    assert(e.getMessage == own.getMessage && e.getMessage.contains("'HAVING'"))
+    assert((e.getCondition, e.start.line, e.start.startPosition) ==
+      (own.getCondition, own.start.line, own.start.startPosition))
+  }
+
+  test("one entry for batch SQL: every front-door spelling returns the " +
+    "same rows through spark.sql as through graft.Sql.sql") {
+    import spark.implicits._
+    def ts(s: Int) = new java.sql.Timestamp(s * 1000L)
+    Seq((1, ts(1), 1L, "view", Array(12, 45)), (1, ts(2), 2L, "purchase", Array(7)),
+      (2, ts(3), 3L, "view", Array[Int]()), (2, ts(4000), 4L, "click", Array(1, 2)),
+      (2, ts(4001), 5L, "view", Array(3)), (2, ts(4002), 6L, "purchase", Array(9)))
+      .toDF("u", "ts", "id", "kind", "arr")
+      .selectExpr("*", "ts AS proctime",
+        "transform(arr, x -> named_struct('x', x, 'y', x * 2)) AS pairs")
+      .createOrReplaceTempView("eq_ev")
+    Seq((1, ts(0), 10), (1, ts(2), 11), (2, ts(0), 20), (2, ts(4000), 21))
+      .toDF("u", "rt", "rate").createOrReplaceTempView("eq_rates")
+    spark.udf.register("eq_split", (s: String) => s.split(","))
+    val mr = """eq_ev MATCH_RECOGNIZE (
+      |  PARTITION BY u ORDER BY ts, id
+      |  MEASURES A.id AS a_id, LAST(B.id) AS b_id, FINAL COUNT(B.id) AS n
+      |  ONE ROW PER MATCH AFTER MATCH SKIP PAST LAST ROW
+      |  PATTERN (A B+)
+      |  DEFINE A AS kind = 'view', B AS kind <> 'view') AS m""".stripMargin
+    val statements = Seq(
+      // plain Spark SQL, with a keyword inside a literal and a comment
+      "SELECT u, COUNT(*) AS n, 'MATCH_RECOGNIZE (x)' AS s FROM eq_ev " +
+        "GROUP BY u -- TUMBLE(ts, INTERVAL '1' HOUR)",
+      // group windows (GroupWindowSqlSpec)
+      "SELECT u, TUMBLE_START(ts, INTERVAL '1' HOUR) AS ws, " +
+        "TUMBLE_ROWTIME(ts, INTERVAL '1' HOUR) AS rt, COUNT(*) AS n " +
+        "FROM eq_ev GROUP BY u, TUMBLE(ts, INTERVAL '1' HOUR)",
+      "SELECT HOP_END(ts, INTERVAL '30' MINUTE, INTERVAL '1' HOUR) AS we, " +
+        "SUM(id) AS s FROM eq_ev " +
+        "GROUP BY HOP(ts, INTERVAL '30' MINUTE, INTERVAL '1' HOUR)",
+      "SELECT u, SESSION_START(ts, INTERVAL '10' SECOND) AS ss, COUNT(*) AS n " +
+        "FROM eq_ev GROUP BY u, SESSION(ts, INTERVAL '10' SECOND)",
+      "SELECT COUNT(*) AS n FROM eq_ev GROUP BY " +
+        "HOP(ts, INTERVAL '5.111' SECOND(1,3), INTERVAL '9' SECOND)",
+      // UNNEST (UnnestSqlSpec)
+      "SELECT u, s FROM eq_ev, UNNEST(eq_ev.arr) AS A (s)",
+      "SELECT u, x, y FROM eq_ev, UNNEST(eq_ev.pairs) AS A (x, y) WHERE y > 4",
+      "SELECT id, s FROM eq_ev LEFT JOIN UNNEST(eq_ev.arr) AS A(s) ON TRUE",
+      // LATERAL TABLE and FOR SYSTEM_TIME (TemporalSqlSpec)
+      "SELECT o.id, r.rate FROM eq_ev AS o, " +
+        "LATERAL TABLE (EqRates(o.ts)) AS r WHERE r.u = o.u",
+      "SELECT o.id, r.rate FROM eq_ev AS o, " +
+        "LATERAL TABLE (EqRates(o.proctime)) AS r WHERE r.u = o.u",
+      "SELECT s FROM LATERAL TABLE(eq_split('Jack,John')) AS T0(s)",
+      "SELECT o.id, r.rate FROM eq_ev o JOIN eq_rates FOR SYSTEM_TIME " +
+        "AS OF o.ts AS r ON r.u = o.u OR r.u = o.id",
+      "SELECT o.id, r.rate FROM eq_ev o LEFT JOIN eq_cur FOR SYSTEM_TIME " +
+        "AS OF o.proctime AS r ON r.u = o.u",
+      // MATCH_RECOGNIZE (MatchRecognizeSqlSpec, SqlSpec)
+      s"SELECT * FROM $mr",
+      s"SELECT m.u, m.a_id, c.n FROM $mr " +
+        "JOIN (SELECT u, COUNT(*) AS n FROM eq_ev GROUP BY u) c ON c.u = m.u",
+      """SELECT * FROM (SELECT u, TUMBLE_START(ts, INTERVAL '1' HOUR) AS ws,
+        |  COUNT(*) AS n FROM eq_ev GROUP BY u, TUMBLE(ts, INTERVAL '1' HOUR))
+        |MATCH_RECOGNIZE (PARTITION BY u ORDER BY ws
+        |  MEASURES FIRST(A.ws) AS first_ws ONE ROW PER MATCH
+        |  PATTERN (A) DEFINE A AS n > 0)""".stripMargin,
+      s"WITH w AS (SELECT a_id FROM $mr) SELECT COUNT(*) AS n FROM w")
+    spark.sql("SELECT u, rate FROM eq_rates WHERE rt = TIMESTAMP '1970-01-01 00:00:00'")
+      .createOrReplaceTempView("eq_cur")
+    TemporalSql.registerTemporalFunction("EqRates", "eq_rates", "rt", "u")
+    TemporalSql.registerTemporalFunction("eq_rates", "eq_rates", "rt", "u")
+    try statements.foreach { text =>
+      val want = rows(graft.Sql.sql(spark, text))
+      assert(want.nonEmpty, text)
+      assert(rows(spark.sql(text)).sortBy(_.toString) == want.sortBy(_.toString), text)
+    } finally Seq("EqRates", "eq_rates").foreach(TemporalSql.dropTemporalFunction)
   }
 
   test("malformed embedded clause fails loudly") {

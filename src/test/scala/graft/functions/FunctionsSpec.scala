@@ -4,13 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Specs for the gap scalar functions: SQL-name registration, codegen'd
-  * HASH_CODE parity with Java String.hashCode, and null/edge semantics
-  * (reference SqlFunctionUtils.java behaviors). */
+/** Specs for the gap scalar functions: SQL names (injected into every
+  * session by graft.GraftExtensions), codegen'd HASH_CODE parity with
+  * Java String.hashCode, and null/edge semantics (reference
+  * SqlFunctionUtils.java behaviors). */
 class FunctionsSpec extends SparkSpec {
 
   test("registered SQL names evaluate like the Column API") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT split_index('a,b,c', ',', 1) AS si,
         |  split_index('a,b,c', ',', 9) AS si_oob,
@@ -53,7 +53,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("gap-function edge semantics: empties, signs, first-kvSep, non-ASCII") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT split_index('a,,c', ',', 1) AS empty_field,
         |  split_index('a,b,', ',', 2) AS trailing_empty,
@@ -99,7 +98,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("top_word_run: max word frequency, SQL name and Column API agree") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, "x y x z x y w"), // x: 3

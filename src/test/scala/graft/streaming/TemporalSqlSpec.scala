@@ -2,13 +2,15 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.expressions.{And, Or}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LateralJoin}
 
 import graft.SparkSpec
 
-/** The reference's temporal-join SQL spellings through the single front
-  * door: rewrite contract, the TemporalJoinITCase event-time join
-  * reproduced verbatim, and the FOR SYSTEM_TIME forms. */
+/** The reference's temporal-join SQL spellings through the session
+  * parser: rewrite contract, the TemporalJoinITCase event-time join
+  * reproduced verbatim, and the FOR SYSTEM_TIME forms through
+  * `spark.sql`. */
 class TemporalSqlSpec extends SparkSpec {
 
   /** The generators (`explode` / `inline`) of the analyzed plan. */
@@ -58,76 +60,85 @@ class TemporalSqlSpec extends SparkSpec {
     } finally TemporalSql.dropTemporalFunction("RatesT")
   }
 
-  test("rewrite contract: FOR SYSTEM_TIME AS OF wraps the original ON " +
-    "condition before ANDing the interval (top-level OR keeps its " +
-    "binding); unregistered + proc-time reads current contents; " +
-    "unregistered + event-time fails loudly") {
-    TemporalSql.registerTemporalFunction("dimv", "dimv", "rt", "k")
+  /** `ts_orders` (oid, k, k2, ts, a, proctime, proc, proctime_ts), the
+    * versioned history `ts_dim` (k, rt, v) and the unversioned `ts_cur`
+    * (k, v); times in seconds. */
+  private def systemTimeTables(): Unit = {
+    import spark.implicits._
+    def t(s: Int) = new Timestamp(s * 1000L)
+    Seq((1, 1, 2, t(3), 1), (2, 1, 9, t(6), 1), (3, 2, 9, t(2), 0))
+      .toDF("oid", "k", "k2", "ts", "a")
+      .selectExpr("*", "ts AS proctime", "ts AS proc", "ts AS proctime_ts")
+      .createOrReplaceTempView("ts_orders")
+    Seq((1, t(1), 10), (1, t(5), 11), (2, t(1), 20), (2, t(5), 21))
+      .toDF("k", "rt", "v").createOrReplaceTempView("ts_dim")
+    Seq((1, 100), (2, 200)).toDF("k", "v").createOrReplaceTempView("ts_cur")
+  }
+
+  /** (oid, v) rows of `spark.sql(text)`. */
+  private def pairs(text: String): Set[(Int, Int)] =
+    spark.sql(text).collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+
+  test("FOR SYSTEM_TIME AS OF through spark.sql: the interval is ANDed " +
+    "onto the parsed ON condition (a top-level OR keeps its binding); " +
+    "backticked table, alias and column; ON columns named left/window; " +
+    "FOR in a comment") {
+    systemTimeTables()
+    TemporalSql.registerTemporalFunction("ts_dim", "ts_dim", "rt", "k")
     try {
-      val got = TemporalSql.rewrite(
-        "SELECT * FROM t JOIN dimv FOR SYSTEM_TIME AS OF t.ts AS r " +
-          "ON r.k = t.k OR r.k = t.k2 WHERE t.a > 0")
-      assert(got.contains("ON (r.k = t.k OR r.k = t.k2) AND"), got)
-      assert(got.contains("t.ts >= r.rt"), got)
-      assert(got.contains("WHERE t.a > 0"), got)
-    } finally TemporalSql.dropTemporalFunction("dimv")
-    // the canonical `proctime` attribute is pre-registered; `proc` is
-    // opt-in — unregistered it is an event-time column and fails loudly
-    // over an unversioned table instead of silently degenerating
-    val lookup = TemporalSql.rewrite(
-      "SELECT * FROM t JOIN rates FOR SYSTEM_TIME AS OF t.proctime AS r " +
-        "ON r.k = t.k")
-    assert(lookup == "SELECT * FROM t JOIN rates AS r ON r.k = t.k", lookup)
-    intercept[IllegalArgumentException](TemporalSql.rewrite(
-      "SELECT * FROM t JOIN rates FOR SYSTEM_TIME AS OF t.proc AS r " +
-        "ON r.k = t.k"))
+      val or = "SELECT o.oid, r.v FROM ts_orders o JOIN ts_dim FOR " +
+        "SYSTEM_TIME AS OF o.ts AS r ON r.k = o.k OR r.k = o.k2 WHERE o.a > 0"
+      // bound inside the OR, the interval would also admit (1, 11)
+      assert(pairs(or) == Set((1, 10), (1, 20), (2, 11)))
+      val cond = spark.sql(or).queryExecution.logical.collectFirst {
+        case j: Join => j.condition.get
+      }.get
+      assert(cond.isInstanceOf[And] &&
+        cond.asInstanceOf[And].left.isInstanceOf[Or], cond.sql)
+      val asOf = Set((1, 10), (2, 11), (3, 20))
+      assert(pairs("SELECT o.oid, r.v FROM ts_orders o JOIN `ts_dim` FOR " +
+        "SYSTEM_TIME AS OF o.`ts` AS `r` ON r.k = o.k") == asOf)
+      assert(pairs("/* FOR */ SELECT o.oid, r.v FROM ts_orders o -- FOR\n" +
+        "JOIN ts_dim FOR SYSTEM_TIME AS OF o.ts AS r ON r.k = o.k") == asOf)
+      // no alias: the table's name qualifies its columns
+      assert(pairs("SELECT o.oid, ts_dim.v FROM ts_orders o JOIN ts_dim " +
+        "FOR SYSTEM_TIME AS OF o.ts ON ts_dim.k = o.k") == asOf)
+      // columns named like clause keywords inside ON, a LEFT JOIN and a
+      // GROUP BY after it
+      spark.sql("SELECT oid, k AS left, k2 AS window, ts FROM ts_orders")
+        .createOrReplaceTempView("ts_kw")
+      assert(pairs("SELECT o.oid, MAX(r.v) FROM ts_kw o JOIN ts_dim FOR " +
+        "SYSTEM_TIME AS OF o.ts AS r ON r.k = left OR r.k = window " +
+        "LEFT JOIN ts_cur c ON c.k = o.left GROUP BY o.oid") ==
+        Set((1, 20), (2, 11), (3, 20)))
+    } finally TemporalSql.dropTemporalFunction("ts_dim")
+  }
+
+  test("FOR SYSTEM_TIME AS OF proc-time is opt-in and matched exactly: " +
+    "unregistered + proc-time reads current contents; unregistered + " +
+    "event-time fails loudly") {
+    systemTimeTables()
+    def current(col: String) = pairs("SELECT o.oid, r.v FROM ts_orders o " +
+      s"JOIN ts_cur FOR SYSTEM_TIME AS OF $col AS r ON r.k = o.k")
+    val now = Set((1, 100), (2, 100), (3, 200))
+    assert(current("o.proctime") == now)
+    assert(current("PROCTIME()") == now)
+    // `proc` is an event-time column until declared proc-time
+    val e = intercept[IllegalArgumentException](current("o.proc"))
+    assert(e.getMessage.contains("registerTemporalFunction"), e.getMessage)
+    intercept[IllegalArgumentException](current("o.ts"))
     TemporalSql.registerProcTimeAttribute("proc")
+    try assert(current("o.proc") == now)
+    finally TemporalSql.dropProcTimeAttribute("proc")
+    // over a versioned table: proc-time is the latest version, and a
+    // column that merely resembles the name keeps event-time semantics
+    TemporalSql.registerTemporalFunction("ts_dim", "ts_dim", "rt", "k")
     try {
-      val optIn = TemporalSql.rewrite(
-        "SELECT * FROM t JOIN rates FOR SYSTEM_TIME AS OF t.proc AS r " +
-          "ON r.k = t.k")
-      assert(optIn == "SELECT * FROM t JOIN rates AS r ON r.k = t.k", optIn)
-    } finally TemporalSql.dropProcTimeAttribute("proc")
-    // exact match only: an event-time column that merely RESEMBLES a
-    // proc-time name keeps event-time (interval) semantics
-    TemporalSql.registerTemporalFunction("dimz", "dimz", "rt", "k")
-    try {
-      val resemble = TemporalSql.rewrite(
-        "FROM t JOIN dimz FOR SYSTEM_TIME AS OF t.proctime_ts AS r " +
-          "ON r.k = t.k")
-      assert(resemble.contains("t.proctime_ts >= r.rt"), resemble)
-    } finally TemporalSql.dropTemporalFunction("dimz")
-    // a '.'-qualified column named like a clause keyword must not
-    // truncate the ON condition
-    TemporalSql.registerTemporalFunction("dimw", "dimw", "rt", "k")
-    try {
-      val dotted = TemporalSql.rewrite(
-        "FROM t JOIN dimw FOR SYSTEM_TIME AS OF t.ts AS r " +
-          "ON r.k = t.left WHERE t.a > 0")
-      assert(dotted.contains("ON (r.k = t.left) AND"), dotted)
-      assert(dotted.contains("WHERE t.a > 0"), dotted)
-      // a BARE column named like a two-word clause head is an ordinary
-      // identifier unless its continuation token follows: `= left` and
-      // `= window` must not truncate the condition, while a real
-      // `LEFT JOIN` / `GROUP BY` / `WINDOW w AS` after it still stops
-      val bare = TemporalSql.rewrite(
-        "FROM t JOIN dimw FOR SYSTEM_TIME AS OF t.ts AS r " +
-          "ON r.k = left AND r.j = window WHERE t.a > 0")
-      assert(bare.contains("ON (r.k = left AND r.j = window) AND"), bare)
-      assert(bare.contains("WHERE t.a > 0"), bare)
-      val stillStops = TemporalSql.rewrite(
-        "FROM t JOIN dimw FOR SYSTEM_TIME AS OF t.ts AS r " +
-          "ON r.k = t.k LEFT JOIN u ON u.k = t.k")
-      assert(stillStops.contains("ON (r.k = t.k) AND"), stillStops)
-      assert(stillStops.contains("LEFT JOIN u ON u.k = t.k"), stillStops)
-      val groupStops = TemporalSql.rewrite(
-        "FROM t JOIN dimw FOR SYSTEM_TIME AS OF t.ts AS r " +
-          "ON r.k = t.k GROUP BY t.k")
-      assert(groupStops.contains("ON (r.k = t.k) AND"), groupStops)
-      assert(groupStops.contains("GROUP BY t.k"), groupStops)
-    } finally TemporalSql.dropTemporalFunction("dimw")
-    intercept[IllegalArgumentException](TemporalSql.rewrite(
-      "FROM t JOIN rates FOR SYSTEM_TIME AS OF t.rowtime AS r ON r.k = t.k"))
+      def versioned(col: String) = pairs("SELECT o.oid, r.v FROM ts_orders " +
+        s"o JOIN ts_dim FOR SYSTEM_TIME AS OF $col AS r ON r.k = o.k")
+      assert(versioned("o.proctime") == Set((1, 11), (2, 11), (3, 21)))
+      assert(versioned("o.proctime_ts") == Set((1, 10), (2, 11), (3, 20)))
+    } finally TemporalSql.dropTemporalFunction("ts_dim")
   }
 
   test("reference stream CorrelateITCase:90-163: LATERAL TABLE over an " +
@@ -157,14 +168,6 @@ class TemporalSqlSpec extends SparkSpec {
     assert(generators("SELECT s, r FROM T1, " +
       "LATERAL explode(str_split(c, '-')) AS a(s), " +
       "LATERAL TABLE(str_split(c, 'b')) AS b(r)") == Seq("explode", "explode"))
-    // a FOR word inside a comment before a FOR SYSTEM_TIME is not code
-    TemporalSql.registerTemporalFunction("dimx", "dimx", "rt", "k")
-    try {
-      val s = TemporalSql.rewrite("/* FOR */ SELECT * FROM t " +
-        "JOIN dimx FOR SYSTEM_TIME AS OF t.ts AS r ON r.k = t.k")
-      assert(s.contains("t.ts >= r.rt"), s)
-      assert(s.startsWith("/* FOR */"), s)
-    } finally TemporalSql.dropTemporalFunction("dimx")
     // testUdfIsOpenedAfterUdtf's correlate shape (:150-156)
     val corr = graft.Sql.sql(spark,
       """SELECT a, b, s
