@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
 
 import graft.core.{QueryDef, Tables}
+import graft.streaming.KeyedState
 
 /** Deterministic sampling operators for training-data curation: exact
   * k-per-stratum selection, weighted source mixing, and train/val/test
@@ -60,7 +62,7 @@ object Sampling {
     s"((($id + ${seed + 1}) % $M + $M) % $M * 48271 % $M * 48271 % $M * 48271 % $M)"
 
   /** The same rank as plain Scala, for stateful operators that score rows
-    * inside `flatMapGroupsWithState` (the streaming reservoir) — one
+    * per key (the streaming reservoir, [[reservoirPerKey]]) — one
     * arithmetic, three spellings, spec-pinned equal. */
   def pseudoRankLong(id: Long, seed: Long = 0L): Long = {
     require(seed >= 0 && seed < (1L << 46), s"seed out of range: $seed")
@@ -82,6 +84,47 @@ object Sampling {
     df.withColumn("sample_rank", row_number().over(w).cast(LongType))
       .filter(col("sample_rank") <= k)
   }
+
+  /** Streaming reservoir row: current sample membership for a stratum. */
+  case class Sampled(stratum: String, item_id: Long, sample_rank: Int)
+  case class ResEntry(rank: Long, item_id: Long)
+  case class ResState(entries: Seq[ResEntry])
+
+  /** Streaming per-stratum reservoir sample: maintain the k rows with the
+    * SMALLEST deterministic pseudo-rank per stratum (bottom-k-by-hash, aka
+    * consistent sampling), re-emitting the refreshed sample whenever
+    * membership changes. Because the priority is a pure function of the
+    * item id, the maintained sample is ARRIVAL-ORDER-INDEPENDENT — any
+    * interleaving of batches converges to the same k rows, which is what
+    * makes the operator exactly-once-friendly across retries and
+    * partition reshuffles at scale, unlike a classic randomized reservoir.
+    * Batch collapse (one invocation per key, empty state) therefore equals
+    * [[stratifiedSample]] with the same seed — the oracle-checked
+    * contract.
+    *
+    * State is bounded by k entries per stratum; `idleTtl` is
+    * [[graft.streaming.KeyedState.run]]'s processing-time cleanup timer. */
+  def reservoirPerKey(rows: Dataset[(String, Long)], k: Int, seed: Long,
+      idleTtl: Option[String] = None): Dataset[Sampled] =
+    KeyedState.run[ResState, Sampled](rows.toDF("stratum", "item_id"),
+      Seq("stratum"), GroupStateTimeout.NoTimeout, Encoders.product[Sampled],
+      idleTtl) {
+      (key, it, state) =>
+        val prev = state.getOption.getOrElse(ResState(Nil)).entries
+        val incoming = it.map { r =>
+          val id = r.getLong(1)
+          ResEntry(pseudoRankLong(id, seed), id)
+        }
+        val merged = (prev ++ incoming).distinct
+          .sortBy(e => (e.rank, e.item_id)).take(k)
+        if (merged != prev) {
+          state.update(ResState(merged))
+          val stratum = key.getString(0)
+          merged.zipWithIndex.iterator.map { case (e, i) =>
+            Sampled(stratum, e.item_id, i + 1)
+          }
+        } else Iterator.empty
+    }
 
   /** Deterministic Bernoulli mixing: keep a row of stratum s with
     * probability weights(s) (default `defaultWeight`), decided by the

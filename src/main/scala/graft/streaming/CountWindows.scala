@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 /** Count-based windows over an ARBITRARY DataFrame — the one
@@ -90,12 +90,10 @@ object CountWindows {
       idCol: String, idleTtl: Option[String] = None): DataFrame = {
     require(size > 0 && slide > 0,
       s"count-window size/slide must be positive, got size=$size slide=$slide")
-    val schema = df.schema
-    (partCols ++ orderCols :+ valueCol :+ idCol).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}"))
-    orderCols.foreach(c => OverAggregates.requireOrderable(schema, c))
     require(orderCols.nonEmpty, "orderCols must name the determinism key")
+    val schema = df.schema
+    KeyedState.requireColumns(schema, partCols :+ valueCol :+ idCol)
+    val ord = KeyedState.order(schema, orderCols.map(_ -> true))
     val isStreaming = df.isStreaming
     val vIdx = schema.fieldIndex(valueCol)
     val vDec = schema.fields(vIdx).dataType match {
@@ -104,10 +102,8 @@ object CountWindows {
       case other => sys.error(s"sum column '$valueCol' must be numeric, got $other")
     }
     val idIdx = schema.fieldIndex(idCol)
-    val partIdx = partCols.map(schema.fieldIndex).toArray
-    val ordIdx = orderCols.map(schema.fieldIndex)
     val outSchema = StructType(
-      partIdx.map(schema.fields(_)).toSeq ++ Seq(
+      partCols.map(schema(_)) ++ Seq(
         StructField("win_seq", LongType, nullable = false),
         StructField("n_rows", LongType, nullable = false),
         StructField("sum_v",
@@ -115,8 +111,6 @@ object CountWindows {
             : DataType).getOrElse(DoubleType), nullable = true),
         StructField("first_id", schema.fields(idIdx).dataType, nullable = true),
         StructField("last_id", schema.fields(idIdx).dataType, nullable = true)))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[CWState] = Encoders.javaSerialization[CWState]
 
     def toV(v: Any): Any = v match {
       case null => null
@@ -140,25 +134,10 @@ object CountWindows {
       }
       s
     }
-    val ord: Ordering[Seq[Any]] = new Ordering[Seq[Any]] {
-      override def compare(a: Seq[Any], b: Seq[Any]): Int = {
-        ordIdx.foreach { i =>
-          val (x, y) = (a(i), b(i))
-          val c =
-            if (x == null && y == null) 0
-            else if (x == null) -1
-            else if (y == null) 1
-            else x.asInstanceOf[Comparable[Any]].compareTo(y)
-          if (c != 0) return c
-        }
-        0
-      }
-    }
 
-    def process(key: Seq[Any], rows: Iterator[Row],
+    def process(key: Row, rows: Iterator[Row],
         state: GroupState[CWState]): Iterator[Row] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      if (isStreaming) idleTtl.foreach(state.setTimeoutDuration)
+      val keyVals = key.toSeq
       val st = state.getOption.getOrElse(CWState(0L, Nil))
       val ring = scala.collection.mutable.ArrayDeque.from(st.ring)
       var seen = st.seen
@@ -168,7 +147,7 @@ object CountWindows {
         if (ring.length > size) ring.removeHead()
         seen += 1
         if (seen >= size && (seen - size) % slide == 0)
-          out += Row.fromSeq(key ++ Seq((seen - size) / slide,
+          out += Row.fromSeq(keyVals ++ Seq((seen - size) / slide,
             ring.length.toLong, sumRing(ring), ring.head._1, ring.last._1))
       }
       // persist only the trailing size-1 rows any future window can still
@@ -178,21 +157,7 @@ object CountWindows {
       out.result().iterator
     }
 
-    val timeout =
-      if (idleTtl.isDefined && isStreaming) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    if (partCols.isEmpty) {
-      df.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(
-          (_: Int, rows: Iterator[Row], state: GroupState[CWState]) =>
-            process(Nil, rows, state))(stEnc, outEnc)
-    } else {
-      val keySchema = StructType(partIdx.map(schema.fields(_)).toSeq)
-      val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-      df.groupByKey(r => Row.fromSeq(partIdx.toSeq.map(r.get)))(keyEnc)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(
-          (key: Row, rows: Iterator[Row], state: GroupState[CWState]) =>
-            process(key.toSeq, rows, state))(stEnc, outEnc)
-    }
+    KeyedState.run(df, partCols, GroupStateTimeout.NoTimeout,
+      Encoders.row(outSchema), idleTtl)(process)
   }
 }

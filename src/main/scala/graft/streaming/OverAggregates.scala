@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 /** Streaming OVER aggregates over an ARBITRARY DataFrame — the
@@ -129,9 +129,7 @@ object OverAggregates extends Serializable {
     require(aggs.nonEmpty, "at least one OVER aggregate is required")
     val schema = df.schema
     val isStreaming = df.isStreaming
-    (partCols ++ orderCols).foreach(c => require(schema.fieldNames.contains(c),
-      s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}"))
-    orderCols.foreach(c => requireOrderable(schema, c))
+    val ord = KeyedState.order(schema, orderCols.map(_ -> true))
     val leadIdx = schema.fieldIndex(orderCols.head)
     val leadIsTs = schema.fields(leadIdx).dataType == TimestampType
     if (isStreaming) require(leadIsTs,
@@ -159,13 +157,10 @@ object OverAggregates extends Serializable {
     }
     val aggIdx = checkAggs(schema, aggs)
     val outSchema = StructType(schema.fields.toSeq ++ outFields(aggs, aggIdx))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[GenState] = Encoders.javaSerialization[GenState]
 
     def entryOf(vals: Seq[Any]): Seq[Any] = entryOfVals(vals, aggIdx)
     def leadUs(vals: Seq[Any]): Long =
-      StatefulOps.eventMicros(vals(leadIdx).asInstanceOf[java.sql.Timestamp])
-    val ord = seqOrdering(orderCols.map(schema.fieldIndex))
+      KeyedState.eventMicros(vals(leadIdx).asInstanceOf[java.sql.Timestamp])
     def unboundedOut(rows: Long, accs: Seq[Acc],
         dsets: Seq[Set[Any]]): Seq[Any] = accOutputs(aggs, rows, accs, dsets)
     val emptyDsets: Seq[Set[Any]] = OverAggregates.emptyDsets(aggs)
@@ -174,7 +169,7 @@ object OverAggregates extends Serializable {
     def accUpdate(accs: Seq[Acc], e: Seq[Any]): Seq[Acc] =
       updateAccs(aggs, accs, e)
 
-    def process(rows: Iterator[Row], state: GroupState[GenState])
+    def process(key: Row, rows: Iterator[Row], state: GroupState[GenState])
         : Iterator[Row] = {
       val st = state.getOption.getOrElse(emptyState)
       val all = (st.pending ++ rows.map(_.toSeq)).sorted(ord)
@@ -345,9 +340,10 @@ object OverAggregates extends Serializable {
       out.result().iterator
     }
 
-    runKeyed(df, partCols, schema, stEnc, outEnc,
-      if (isStreaming) d => d.withWatermark(orderCols.head, delay)
-      else identity, process)
+    KeyedState.run(
+      if (isStreaming) df.withWatermark(orderCols.head, delay) else df,
+      partCols, GroupStateTimeout.EventTimeTimeout,
+      Encoders.row(outSchema))(process)
   }
 
   /** PROC-TIME streaming OVER with a bounded ROWS frame over an ARBITRARY
@@ -370,25 +366,13 @@ object OverAggregates extends Serializable {
     require(preceding >= 0, s"ROWS frame bound must be >= 0, got $preceding")
     require(aggs.nonEmpty, "at least one OVER aggregate is required")
     val schema = df.schema
-    (partCols ++ tieBreak).foreach(c => require(schema.fieldNames.contains(c),
-      s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}"))
-    tieBreak.foreach(c => requireOrderable(schema, c))
+    val ord = KeyedState.order(schema, tieBreak.map(_ -> true))
     val aggIdx = checkAggs(schema, aggs)
     val outSchema = StructType(schema.fields.toSeq ++ outFields(aggs, aggIdx))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[GenState] = Encoders.javaSerialization[GenState]
     val isStreaming = df.isStreaming
     val cap = preceding + 1
-    val tieIdx = tieBreak.map(schema.fieldIndex)
-    val ord: Ordering[Seq[Any]] = seqOrdering(tieIdx)
-    def process(rows: Iterator[Row], state: GroupState[GenState])
+    def process(key: Row, rows: Iterator[Row], state: GroupState[GenState])
         : Iterator[Row] = {
-      // idleTtl = the reference's PROCESSING-time cleanup timer
-      // (registerProcessingCleanupTimer): an idle key's ring drops after
-      // that much processing time. Opt-in — the processing-time timeout
-      // makes Spark schedule empty micro-batches to evaluate expiry.
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      idleTtl.foreach(state.setTimeoutDuration)
       val ring = scala.collection.mutable.ArrayDeque.empty[Seq[Any]]
       val faccs = frameAccs(aggs, aggIdx)
       def ringAdd(e: Seq[Any]): Unit = {
@@ -396,7 +380,7 @@ object OverAggregates extends Serializable {
       }
       state.getOption.foreach(_.frameVals.foreach(ringAdd))
       val batch = rows.map(_.toSeq).toSeq
-      val arrived = if (tieIdx.isEmpty) batch else batch.sorted(ord)
+      val arrived = if (tieBreak.isEmpty) batch else batch.sorted(ord)
       val out = arrived.map { vals =>
         ringAdd(entryOfVals(vals, aggIdx))
         if (ring.length > cap) {
@@ -407,10 +391,11 @@ object OverAggregates extends Serializable {
       if (isStreaming) state.update(GenState(Nil, Nil, ring.toSeq, 0L, Nil))
       out.iterator
     }
-    // proc-time: no watermark exists, so no event-time timers
-    runKeyed(df, partCols, schema, stEnc, outEnc, identity, process,
-      if (idleTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout)
+    // proc-time: no watermark exists, so no event-time timers; idleTtl
+    // is the reference's PROCESSING-time cleanup timer
+    // (registerProcessingCleanupTimer)
+    KeyedState.run(df, partCols, GroupStateTimeout.NoTimeout,
+      Encoders.row(outSchema), idleTtl)(process)
   }
 
   /** PROC-TIME streaming OVER with a bounded RANGE frame over an
@@ -436,20 +421,12 @@ object OverAggregates extends Serializable {
     require(horizonMs >= 0, s"RANGE frame horizon must be >= 0, got $horizon")
     require(aggs.nonEmpty, "at least one OVER aggregate is required")
     val schema = df.schema
-    (partCols ++ tieBreak).foreach(c => require(schema.fieldNames.contains(c),
-      s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}"))
-    tieBreak.foreach(c => requireOrderable(schema, c))
+    val ord = KeyedState.order(schema, tieBreak.map(_ -> true))
     val aggIdx = checkAggs(schema, aggs)
     val outSchema = StructType(schema.fields.toSeq ++ outFields(aggs, aggIdx))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[GenState] = Encoders.javaSerialization[GenState]
     val isStreaming = df.isStreaming
-    val tieIdx = tieBreak.map(schema.fieldIndex)
-    val ord: Ordering[Seq[Any]] = seqOrdering(tieIdx)
-    def process(rows: Iterator[Row], state: GroupState[GenState])
+    def process(key: Row, rows: Iterator[Row], state: GroupState[GenState])
         : Iterator[Row] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      idleTtl.foreach(state.setTimeoutDuration)
       val now = procClock()
       val bufMs = scala.collection.mutable.ArrayDeque.empty[Long]
       val bufVals = scala.collection.mutable.ArrayDeque.empty[Seq[Any]]
@@ -462,7 +439,7 @@ object OverAggregates extends Serializable {
         bufMs.removeHead(); bufVals.removeHead()
       }
       val batch = rows.map(_.toSeq).toSeq
-      val peers = if (tieIdx.isEmpty) batch else batch.sorted(ord)
+      val peers = if (tieBreak.isEmpty) batch else batch.sorted(ord)
       peers.foreach { vals =>
         bufMs.append(now); bufVals.append(entryOfVals(vals, aggIdx))
       }
@@ -472,33 +449,8 @@ object OverAggregates extends Serializable {
         state.update(GenState(Nil, bufMs.toSeq, bufVals.toSeq, 0L, Nil))
       peers.iterator.map(vals => Row.fromSeq(vals ++ shared))
     }
-    runKeyed(df, partCols, schema, stEnc, outEnc, identity, process,
-      if (idleTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout)
-  }
-
-  // shared: keyed dispatch over (possibly empty) partition columns
-  private def runKeyed(df: DataFrame, partCols: Seq[String],
-      schema: StructType, stEnc: Encoder[GenState], outEnc: Encoder[Row],
-      pre: DataFrame => DataFrame,
-      process: (Iterator[Row], GroupState[GenState]) => Iterator[Row],
-      timeout: GroupStateTimeout = GroupStateTimeout.EventTimeTimeout)
-      : DataFrame = {
-    val wmDf = pre(df)
-    if (partCols.isEmpty) {
-      wmDf.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(
-          (_: Int, rows: Iterator[Row], state: GroupState[GenState]) =>
-            process(rows, state))(stEnc, outEnc)
-    } else {
-      val partIdx = partCols.map(schema.fieldIndex).toArray
-      val keySchema = StructType(partIdx.map(schema.fields(_)).toSeq)
-      val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-      wmDf.groupByKey(r => Row.fromSeq(partIdx.toSeq.map(r.get)))(keyEnc)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(
-          (_: Row, rows: Iterator[Row], state: GroupState[GenState]) =>
-            process(rows, state))(stEnc, outEnc)
-    }
+    KeyedState.run(df, partCols, GroupStateTimeout.NoTimeout,
+      Encoders.row(outSchema), idleTtl)(process)
   }
 
   // ---- shared kernels between the row-time and proc-time executors ----
@@ -819,40 +771,4 @@ object OverAggregates extends Serializable {
     case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.subtract(y)
     case other => sys.error(s"non-retractable accumulator types $other")
   }
-
-  /** The ORDER BY / tie-break comparators cast external values to
-    * `Comparable[Any]`; an array/map/struct column (rendered Seq/Map/Row)
-    * or binary (Array[Byte]) would pass the schema-existence check and
-    * only throw ClassCastException mid-query — fail loudly up front
-    * instead, like every other entry-point contract here. */
-  private[streaming] def requireOrderable(schema: StructType, c: String): Unit = {
-    val dt = schema.fields(schema.fieldIndex(c)).dataType
-    val ok = dt match {
-      case _: NumericType | StringType | BooleanType | DateType |
-          TimestampType | TimestampNTZType => true
-      case _ => false
-    }
-    require(ok,
-      s"ORDER BY / tie-break column '$c' has non-comparable external type " +
-        s"$dt (arrays/maps/structs/binary render as types without a " +
-        "runtime Comparable); order on an atomic column")
-  }
-
-  /** Ascending multi-column ordering over raw row values; nulls first
-    * (Spark's ASC convention). Shared with [[RowSort]]. */
-  private[streaming] def seqOrdering(idxs: Seq[Int]): Ordering[Seq[Any]] =
-    new Ordering[Seq[Any]] {
-      override def compare(a: Seq[Any], b: Seq[Any]): Int = {
-        idxs.foreach { i =>
-          val (x, y) = (a(i), b(i))
-          val c =
-            if (x == null && y == null) 0
-            else if (x == null) -1
-            else if (y == null) 1
-            else x.asInstanceOf[Comparable[Any]].compareTo(y)
-          if (c != 0) return c
-        }
-        0
-      }
-    }
 }

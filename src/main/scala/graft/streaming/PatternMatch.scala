@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 /** Quantified MATCH_RECOGNIZE — a real per-key NFA over an ARBITRARY
@@ -556,11 +556,10 @@ object PatternMatch extends Serializable {
     require(orderKeys.nonEmpty, "ORDER BY must name at least one column")
     val schema = df.schema
     val isStreaming = df.isStreaming
-    val ordKeys = orderKeys.map { case (c, asc) =>
-      OverAggregates.requireOrderable(schema, c) // fail loudly, not mid-query
-      val i = schema.fieldIndex(c); (i, asc, schema.fields(i).dataType)
-    }
-    val (leadIdx, leadAsc, leadType) = ordKeys.head
+    val ord = KeyedState.order(schema, orderKeys).rows
+    val (leadCol, leadAsc) = orderKeys.head
+    val leadIdx = schema.fieldIndex(leadCol)
+    val leadType = schema.fields(leadIdx).dataType
     val leadIsTime = leadType == TimestampType && leadAsc
     require(!isStreaming || leadIsTime,
       "streaming MATCH_RECOGNIZE orders on event time: the leading ORDER " +
@@ -594,16 +593,14 @@ object PatternMatch extends Serializable {
     val maxPrev = steps.map(_.prevDepth).foldLeft(measPrev)(math.max)
     val usesPrev = maxPrev > 0
     val stepsArr = steps.toIndexedSeq
-    val ord = rowOrdering(ordKeys)
     // full-precision (micros) event time — getTime truncates to ms and
     // would mis-order same-ms rows; read only on streams or under WITHIN,
     // both of which require the timestamp lead checked above
     val microsOf: Row => Long =
-      r => StatefulOps.eventMicros(r.getAs[java.sql.Timestamp](leadIdx))
+      r => KeyedState.eventMicros(r.getAs[java.sql.Timestamp](leadIdx))
     // rows rebuilt from state keep the schema, so Step predicates can
     // read fields by name on every trigger
     def toRow(vals: Seq[Any]): Row = new GenericRowWithSchema(vals.toArray, schema)
-    implicit val stEnc: Encoder[MatchState] = Encoders.javaSerialization[MatchState]
 
     def process(key: Row, rows: Iterator[Row],
         state: GroupState[MatchState]): Iterator[O] = {
@@ -664,44 +661,10 @@ object PatternMatch extends Serializable {
       }
     }
 
-    val input =
-      if (isStreaming) df.withWatermark(orderKeys.head._1, delay) else df
+    val input = if (isStreaming) df.withWatermark(leadCol, delay) else df
     val timeout =
       if (isStreaming) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    if (partCols.isEmpty) {
-      // partitionless clause (the reference IT cases use them): one
-      // sequential group — a constant key, since Spark rejects an empty
-      // clustering expression list
-      input.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(
-          (_: Int, rows: Iterator[Row], state: GroupState[MatchState]) =>
-            process(Row.empty, rows, state))(stEnc, outEnc)
-    } else {
-      val partIdx = partCols.map(schema.fieldIndex)
-      val keyEnc: Encoder[Row] =
-        Encoders.row(StructType(partIdx.map(schema.fields(_))))
-      input.groupByKey(r => Row.fromSeq(partIdx.map(r.get)))(keyEnc)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(process)(
-          stEnc, outEnc)
-    }
+    KeyedState.run(input, partCols, timeout, outEnc)(process)
   }
-
-  /** Multi-column Row ordering with per-key direction; nulls first on
-    * ASC, last on DESC (Spark's default sort convention). */
-  private def rowOrdering(keys: Seq[(Int, Boolean, DataType)]): Ordering[Row] =
-    new Ordering[Row] {
-      override def compare(a: Row, b: Row): Int = {
-        keys.foreach { case (i, asc, _) =>
-          val (x, y) = (a.get(i), b.get(i))
-          val c =
-            if (x == null && y == null) 0
-            else if (x == null) -1
-            else if (y == null) 1
-            else x.asInstanceOf[Comparable[Any]].compareTo(y)
-          if (c != 0) return if (asc) c else -c
-        }
-        0
-      }
-    }
 }

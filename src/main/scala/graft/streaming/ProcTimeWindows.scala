@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 import OverAggregates.{Acc, Agg}
@@ -64,20 +64,13 @@ object ProcTimeWindows {
     val widthMs = width.toMillis
     require(widthMs > 0, s"window width must be positive, got $width")
     val schema = df.schema
-    partCols.foreach(c => require(schema.fieldNames.contains(c),
-      s"group column '$c' not in input schema " +
-        schema.fieldNames.mkString(", ")))
+    KeyedState.requireColumns(schema, partCols)
     val aggIdx = OverAggregates.checkAggs(schema, aggs)
-    val keyFields = partCols.map(c => schema(schema.fieldIndex(c)))
-    val outSchema = StructType(keyFields ++
+    val outSchema = StructType(partCols.map(schema(_)) ++
       Seq(StructField("w_start_ms", LongType, nullable = false),
         StructField("w_width_ms", LongType, nullable = false)) ++
       OverAggregates.outFields(aggs, aggIdx))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[PState] = Encoders.javaSerialization[PState]
     val isStreaming = df.isStreaming
-    val partIdx = partCols.map(schema.fieldIndex)
-    val keyEnc: Encoder[Row] = Encoders.row(StructType(keyFields))
 
     def emit(keyVals: Seq[Any], w: Long, s: PWin): Row =
       Row.fromSeq(keyVals ++ Seq(w, widthMs) ++
@@ -117,17 +110,7 @@ object ProcTimeWindows {
       }
     }
 
-    if (partCols.isEmpty)
-      df.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.ProcessingTimeTimeout)(
-          (_: Int, rows: Iterator[Row], state: GroupState[PState]) =>
-            process(Row.empty, rows, state))(stEnc, outEnc)
-    else
-      df.groupByKey(r => Row.fromSeq(partIdx.map(r.get)))(keyEnc)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.ProcessingTimeTimeout)(
-          (key: Row, rows: Iterator[Row], state: GroupState[PState]) =>
-            process(key, rows, state))(stEnc, outEnc)
+    KeyedState.run(df, partCols, GroupStateTimeout.ProcessingTimeTimeout,
+      Encoders.row(outSchema))(process)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 /** Streaming TOP-N and keep-first/keep-last DEDUPLICATION over an
@@ -65,14 +65,10 @@ object RankOps {
     * @param rankAlias Some(name) appends a 1-based rank column (the
     *                  `ROW_NUMBER()` value); None emits kept rows bare
     *                  (the dedup shape, where rank is always 1).
-    * @param idleTtl   opt-in idle-state retention (the reference's
-    *                  processing-time cleanup timer): a key that
-    *                  receives no row for this much PROCESSING time
-    *                  drops its prefix — a later row starts a fresh
-    *                  ranking, the documented retention trade. Enabling
-    *                  it makes Spark schedule empty micro-batches to
-    *                  evaluate expiry, so reserve it for long-running
-    *                  jobs that need bounded state.
+    * @param idleTtl   opt-in idle-state retention, [[KeyedState.run]]'s
+    *                  processing-time cleanup timer: a key that receives
+    *                  no row for this much PROCESSING time drops its
+    *                  prefix — a later row starts a fresh ranking.
     */
   def rankRows(df: DataFrame, partCols: Seq[String],
       orderKeys: Seq[(String, Boolean)], n: Int,
@@ -81,64 +77,17 @@ object RankOps {
     require(n > 0, s"rank bound must be positive, got $n")
     require(orderKeys.nonEmpty, "ORDER BY must name at least one column")
     val schema = df.schema
-    partCols.foreach(c => require(schema.fieldNames.contains(c),
-      s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}"))
-    val hasProctime = schema.fieldNames.contains("proctime")
-    orderKeys.foreach { case (c, _) =>
-      if (c == "proctime" && !hasProctime) () // arrival pseudo-column
-      else {
-        require(schema.fieldNames.contains(c),
-          s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}")
-        OverAggregates.requireOrderable(schema, c)
-      }
-    }
+    // the ROW_NUMBER() ordering over (arrival stamp, row values); the
+    // `proctime` pseudo-column orders on the stamp
+    val ord = KeyedState.order(schema, orderKeys, arrival = true).stamped
     rankAlias.foreach(a => require(!schema.fieldNames.contains(a),
       s"rank alias '$a' collides with an input column"))
     val isStreaming = df.isStreaming
-
-    // (stamp, row) comparator: the ROW_NUMBER() ordering, stamps for the
-    // proctime pseudo-column; nulls first ASC / last DESC (Spark's
-    // default null ordering — the declared queries order on non-null
-    // fixture columns, so the oracle agrees)
-    val keyCmps: Seq[((Long, Seq[Any]), (Long, Seq[Any])) => Int] =
-      orderKeys.map { case (c, asc) =>
-        val sign = if (asc) 1 else -1
-        if (c == "proctime" && !hasProctime)
-          (a: (Long, Seq[Any]), b: (Long, Seq[Any])) =>
-            sign * java.lang.Long.compare(a._1, b._1)
-        else {
-          val i = schema.fieldIndex(c)
-          (a: (Long, Seq[Any]), b: (Long, Seq[Any])) => {
-            val (x, y) = (a._2(i), b._2(i))
-            val c0 =
-              if (x == null && y == null) 0
-              else if (x == null) -1
-              else if (y == null) 1
-              else x.asInstanceOf[Comparable[Any]].compareTo(y)
-            sign * c0
-          }
-        }
-      }
-    val ord: Ordering[(Long, Seq[Any])] = new Ordering[(Long, Seq[Any])] {
-      override def compare(a: (Long, Seq[Any]), b: (Long, Seq[Any])): Int = {
-        keyCmps.foreach { f => val c = f(a, b); if (c != 0) return c }
-        // total-order fallback on the arrival stamp: equal order tuples
-        // keep the EARLIER arrival ahead (ROW_NUMBER's stable-under-
-        // arrival tie behavior; makes the maintained prefix deterministic
-        // for a deterministically-ordered input)
-        java.lang.Long.compare(a._1, b._1)
-      }
-    }
-
     val outSchema = StructType(schema.fields.toSeq ++
       rankAlias.map(a => StructField(a, LongType, nullable = false)))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[RankState] = Encoders.javaSerialization[RankState]
 
-    def process(rows: Iterator[Row], state: GroupState[RankState])
+    def process(key: Row, rows: Iterator[Row], state: GroupState[RankState])
         : Iterator[Row] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      if (isStreaming) idleTtl.foreach(state.setTimeoutDuration)
       val st = state.getOption.getOrElse(RankState(0L, Nil))
       var seen = st.seen
       val incoming = rows.map { r =>
@@ -160,23 +109,8 @@ object RankOps {
     // rank/dedup trigger on arrival (proc-time operators in the
     // reference): no watermark, hence no event-time timers; the opt-in
     // idleTtl uses the processing-time cleanup timer instead
-    val timeout =
-      if (idleTtl.isDefined && isStreaming) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    if (partCols.isEmpty) {
-      df.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(
-          (_: Int, rows: Iterator[Row], state: GroupState[RankState]) =>
-            process(rows, state))(stEnc, outEnc)
-    } else {
-      val partIdx = partCols.map(schema.fieldIndex).toArray
-      val keySchema = StructType(partIdx.map(schema.fields(_)).toSeq)
-      val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-      df.groupByKey(r => Row.fromSeq(partIdx.toSeq.map(r.get)))(keyEnc)
-        .flatMapGroupsWithState(OutputMode.Append, timeout)(
-          (_: Row, rows: Iterator[Row], state: GroupState[RankState]) =>
-            process(rows, state))(stEnc, outEnc)
-    }
+    KeyedState.run(df, partCols, GroupStateTimeout.NoTimeout,
+      Encoders.row(outSchema), idleTtl)(process)
   }
 
   /** Keep-ONE dedup: the row `ROW_NUMBER() = 1` selects under

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
 
 /** Streaming EVENT-TIME SORT over an ARBITRARY DataFrame — the one
@@ -34,47 +34,38 @@ object RowSort {
       delay: String = "0 seconds"): DataFrame = {
     require(orderCols.nonEmpty, "ORDER BY must name at least one column")
     val schema = df.schema
-    orderCols.foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}")
-      OverAggregates.requireOrderable(schema, c)
-    }
+    val ord = KeyedState.order(schema, orderCols.map(_ -> true))
     val leadIdx = schema.fieldIndex(orderCols.head)
     val isStreaming = df.isStreaming
     if (isStreaming) require(schema.fields(leadIdx).dataType == TimestampType,
       "streaming sort orders on event time: the leading ORDER BY column " +
         s"must be a timestamp, got ${schema.fields(leadIdx).dataType}")
-    val ord = OverAggregates.seqOrdering(orderCols.map(schema.fieldIndex))
     def leadUs(vals: Seq[Any]): Long =
-      StatefulOps.eventMicros(vals(leadIdx).asInstanceOf[java.sql.Timestamp])
-    val outEnc: Encoder[Row] = Encoders.row(schema)
-    implicit val stEnc: Encoder[SortState] = Encoders.javaSerialization[SortState]
+      KeyedState.eventMicros(vals(leadIdx).asInstanceOf[java.sql.Timestamp])
 
-    df.withWatermark(orderCols.head, delay)
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        (_: Int, rows: Iterator[Row], state: GroupState[SortState]) => {
-          val buf = (state.getOption.map(_.rows).getOrElse(Nil) ++
-            rows.map(_.toSeq)).sorted(ord)
-          // batch: no watermark exists — the whole input is final (and
-          // the leading column need not be a timestamp there)
-          val (ripe, pending) =
-            if (!isStreaming) (buf, Nil)
-            else {
-              val wmUs = state.getCurrentWatermarkMs() * 1000L
-              buf.partition(v => leadUs(v) <= wmUs)
-            }
-          if (pending.isEmpty) state.remove()
+    KeyedState.run[SortState, Row](df.withWatermark(orderCols.head, delay),
+      Nil, GroupStateTimeout.EventTimeTimeout, Encoders.row(schema)) {
+      (_, rows, state) =>
+        val buf = (state.getOption.map(_.rows).getOrElse(Nil) ++
+          rows.map(_.toSeq)).sorted(ord)
+        // batch: no watermark exists — the whole input is final (and
+        // the leading column need not be a timestamp there)
+        val (ripe, pending) =
+          if (!isStreaming) (buf, Nil)
           else {
-            state.update(SortState(pending))
-            // fire as soon as the watermark can cover the earliest
-            // pending row; never at/below the current watermark
-            val headMs = leadUs(pending.head) / 1000
-            state.setTimeoutTimestamp(
-              math.max(headMs - 1, state.getCurrentWatermarkMs() + 1))
+            val wmUs = state.getCurrentWatermarkMs() * 1000L
+            buf.partition(v => leadUs(v) <= wmUs)
           }
-          ripe.iterator.map(Row.fromSeq)
-        })(stEnc, outEnc)
+        if (pending.isEmpty) state.remove()
+        else {
+          state.update(SortState(pending))
+          // fire as soon as the watermark can cover the earliest
+          // pending row; never at/below the current watermark
+          val headMs = leadUs(pending.head) / 1000
+          state.setTimeoutTimestamp(
+            math.max(headMs - 1, state.getCurrentWatermarkMs() + 1))
+        }
+        ripe.iterator.map(Row.fromSeq)
+    }
   }
 }

@@ -724,7 +724,8 @@ object StatefulBatch {
       .orderBy(col("user_id"))
   }
 
-  /** The events table in its five event columns (`StatefulOps.Event`). */
+  /** The events table in its five event columns (user_id, event_id, ts,
+    * event_type, value). */
   private def events(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.core.Catalog.load(spark, dir, "events")
@@ -1026,7 +1027,7 @@ object StatefulBatch {
       import spark.implicits._
       val docs = graft.core.Catalog.load(spark, dir, "documents")
         .select(col("source"), col("doc_id")).as[(String, Long)]
-      StatefulOps.reservoirPerKey(docs, k = 7, seed = 37).toDF()
+      graft.operators.Sampling.reservoirPerKey(docs, k = 7, seed = 37).toDF()
         .select(col("stratum").as("source"), col("item_id").as("doc_id"),
           col("sample_rank"))
         .orderBy(col("source"), col("doc_id"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 /** Streaming event-time temporal (as-of) join over ARBITRARY DataFrames
@@ -52,12 +52,10 @@ object TemporalJoinAny {
       keyCols: Seq[String], tsCol: String, dimVerCols: Seq[String],
       factTieBreak: Seq[String], dimPrefix: String = "dim_"): DataFrame =
     build(facts, dims, keyCols, tsCol, dimVerCols, factTieBreak,
-      dimPrefix) { ctx =>
+      dimPrefix) { (env, outEnc, ctx) =>
       import ctx._
-      implicit val stEnc: Encoder[TjState] =
-        Encoders.javaSerialization[TjState]
-      def process(key: Row, rows: Iterator[Row], state: GroupState[TjState])
-          : Iterator[Row] = {
+      KeyedState.run[TjState, Row](env, keyCols, GroupStateTimeout.NoTimeout,
+          outEnc) { (_, rows, state) =>
         val (dimRows, factRows) = rows.map(_.toSeq).toSeq
           .partition(_(nKeys) == 0)
         // newest version wins: later (event ts, verCols) replaces current
@@ -68,30 +66,27 @@ object TemporalJoinAny {
         cur.foreach(c => state.update(TjState(Nil, Seq(c))))
         factRows.sorted(factOrd).iterator.map(f => emit(f, cur))
       }
-      env.groupByKey(r => Row.fromSeq(keyIdx.map(r.get)))(keyEnc)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(process)(stEnc, outEnc)
     }
 
   /** Shared envelope construction for the row-time and proc-time joins:
-    * validated inputs, the tagged union, key/out encoders, the two
-    * orderings and the output emitter. */
-  private final case class Ctx(env: DataFrame, nKeys: Int,
-      keyIdx: Range, keyEnc: Encoder[Row], outEnc: Encoder[Row],
+    * validated inputs, the tagged union and the out encoder (passed
+    * beside the context, so the per-key functions capture neither), the
+    * two orderings and the output emitter. */
+  private final case class Ctx(nKeys: Int,
       dimOrd: Ordering[Seq[Any]], factOrd: Ordering[Seq[Any]],
       tsUs: Seq[Any] => Long, emit: (Seq[Any], Option[Seq[Any]]) => Row,
       isStreaming: Boolean)
 
   private def build(facts: DataFrame, dims: DataFrame, keyCols: Seq[String],
       tsCol: String, dimVerCols: Seq[String], factTieBreak: Seq[String],
-      dimPrefix: String)(body: Ctx => DataFrame): DataFrame = {
+      dimPrefix: String)(
+      body: (DataFrame, Encoder[Row], Ctx) => DataFrame): DataFrame = {
     require(keyCols.nonEmpty, "the temporal join needs at least one key column")
     val fSchema = facts.schema
     val dSchema = dims.schema
     def fieldOf(s: StructType, c: String, side: String): StructField = {
-      require(s.fieldNames.contains(c),
-        s"column '$c' not in the $side schema ${s.fieldNames.mkString(", ")}")
-      s.fields(s.fieldIndex(c))
+      KeyedState.requireColumns(s, Seq(c), s"the $side schema")
+      s(c)
     }
     keyCols.foreach { k =>
       val (fk, dk) = (fieldOf(fSchema, k, "fact"), fieldOf(dSchema, k, "dim"))
@@ -103,8 +98,8 @@ object TemporalJoinAny {
         s"the $side '$tsCol' column must be a timestamp, got " +
           s"${fieldOf(s, tsCol, side).dataType}")
     }
-    dimVerCols.foreach(c => fieldOf(dSchema, c, "dim"))
-    factTieBreak.foreach(c => fieldOf(fSchema, c, "fact"))
+    KeyedState.requireColumns(dSchema, dimVerCols, "the dim schema")
+    KeyedState.requireColumns(fSchema, factTieBreak, "the fact schema")
     val isStreaming = facts.isStreaming || dims.isStreaming
 
     // envelope: keys, __side, __ts, generated-name fact payload,
@@ -112,7 +107,6 @@ object TemporalJoinAny {
     // names keep same-named payload columns on the two sides distinct
     val factFields = fSchema.fields.toSeq
     val dimFields = dSchema.fields.toSeq.filterNot(f => keyCols.contains(f.name))
-    val keyFields = keyCols.map(k => fSchema.fields(fSchema.fieldIndex(k)))
     def fName(i: Int) = s"__f_$i"
     def dName(i: Int) = s"__d_$i"
     val factSel: Seq[Column] =
@@ -131,37 +125,28 @@ object TemporalJoinAny {
     val fOff = nKeys + 2
     val dOff = fOff + factFields.size
     def tsUs(vals: Seq[Any]): Long =
-      StatefulOps.eventMicros(vals(tsIdx).asInstanceOf[java.sql.Timestamp])
+      KeyedState.eventMicros(vals(tsIdx).asInstanceOf[java.sql.Timestamp])
 
     val outSchema = StructType(factFields ++
       dimFields.map(f => StructField(dimPrefix + f.name, f.dataType,
         nullable = true)))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val keySchema = StructType(keyFields)
-    val keyEnc: Encoder[Row] = Encoders.row(keySchema)
 
     // dim version order: (ts, dimVerCols) ascending — the LAST at-or-
-    // before a fact wins, so higher verCols win ties on ts
-    def tsThen(idx: Seq[Int]): Ordering[Seq[Any]] = {
-      val inner = OverAggregates.seqOrdering(idx)
-      new Ordering[Seq[Any]] {
-        override def compare(a: Seq[Any], b: Seq[Any]): Int = {
-          val c = java.lang.Long.compare(tsUs(a), tsUs(b))
-          if (c != 0) c else inner.compare(a, b)
-        }
-      }
-    }
-    val dimOrd = tsThen(dimVerCols.map(c =>
-      dOff + dimFields.indexWhere(_.name == c)))
-    val factOrd = tsThen(factTieBreak.map(c =>
-      fOff + factFields.indexWhere(_.name == c)))
+    // before a fact wins, so higher verCols win ties on ts. The payload
+    // columns sit in the envelope at their side's offset.
+    val byTs: Ordering[Seq[Any]] =
+      (a, b) => java.lang.Long.compare(tsUs(a), tsUs(b))
+    val dimOrd = byTs.orElse(KeyedState.order(StructType(dimFields),
+      dimVerCols.map(_ -> true), offset = dOff))
+    val factOrd = byTs.orElse(KeyedState.order(fSchema,
+      factTieBreak.map(_ -> true), offset = fOff))
     val nDim = dimFields.size
     def emit(f: Seq[Any], d: Option[Seq[Any]]): Row = Row.fromSeq(
       f.slice(fOff, fOff + factFields.size) ++
         d.map(_.slice(dOff, dOff + nDim)).getOrElse(Seq.fill(nDim)(null)))
 
-    body(Ctx(env, nKeys, keyCols.indices, keyEnc, outEnc, dimOrd, factOrd,
-      tsUs, emit, isStreaming))
+    body(env, Encoders.row(outSchema),
+      Ctx(nKeys, dimOrd, factOrd, tsUs, emit, isStreaming))
   }
 
   def temporalJoin(facts: DataFrame, dims: DataFrame, keyCols: Seq[String],
@@ -169,9 +154,8 @@ object TemporalJoinAny {
       delay: String = "0 seconds", dimPrefix: String = "dim_",
       idleRetentionMs: Option[Long] = None): DataFrame =
     build(facts, dims, keyCols, tsCol, dimVerCols, factTieBreak,
-      dimPrefix) { ctx =>
+      dimPrefix) { (env, outEnc, ctx) =>
     import ctx._
-    implicit val stEnc: Encoder[TjState] = Encoders.javaSerialization[TjState]
     def process(key: Row, rows: Iterator[Row], state: GroupState[TjState])
         : Iterator[Row] = {
       val prev = state.getOption.getOrElse(TjState(Nil, Nil))
@@ -220,9 +204,7 @@ object TemporalJoinAny {
 
     // withWatermark is a no-op on batch inputs; applying it always keeps
     // one code path
-    env.withWatermark("__ts", delay)
-      .groupByKey(r => Row.fromSeq(keyIdx.map(r.get)))(keyEnc)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(process)(stEnc, outEnc)
+    KeyedState.run(env.withWatermark("__ts", delay), keyCols,
+      GroupStateTimeout.EventTimeTimeout, outEnc)(process)
   }
 }

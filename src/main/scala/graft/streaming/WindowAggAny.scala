@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 import OverAggregates.{Acc, Agg}
@@ -127,32 +127,22 @@ object WindowAggAny {
     require(aggs.nonEmpty, "at least one window aggregate is required")
     val schema = df.schema
     val isStreaming = df.isStreaming
-    (partCols ++ tieBreak :+ tsCol).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}"))
+    KeyedState.requireColumns(schema, partCols :+ tsCol)
     val tsIdx = schema.fieldIndex(tsCol)
     require(schema.fields(tsIdx).dataType == TimestampType,
       s"the window column must be a timestamp, got " +
         s"${schema.fields(tsIdx).dataType}")
-    tieBreak.foreach(c => OverAggregates.requireOrderable(schema, c))
+    // deterministic fold order within one invocation: the double sum must
+    // not depend on post-shuffle arrival order
+    val ord = KeyedState.order(schema, (tsCol +: tieBreak).map(_ -> true))
     val aggIdx = OverAggregates.checkAggs(schema, aggs)
-    val partIdx = partCols.map(schema.fieldIndex)
     val outSchema = StructType(
-      partIdx.map(schema.fields(_)) ++
+      partCols.map(schema(_)) ++
         Seq(StructField("w_start_us", LongType, nullable = false)) ++
         OverAggregates.outFields(aggs, aggIdx) :+
         StructField("is_final", IntegerType, nullable = false))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[WinState] = Encoders.javaSerialization[WinState]
-    // key = partition values + window start micros
-    val keySchema = StructType(partIdx.map(schema.fields(_)) :+
-      StructField("w_start_us", LongType, nullable = false))
-    val keyEnc: Encoder[Row] = Encoders.row(keySchema)
     def rowUs(r: Row): Long =
-      StatefulOps.eventMicros(r.getAs[java.sql.Timestamp](tsIdx))
-    // deterministic fold order within one invocation: the double sum must
-    // not depend on post-shuffle arrival order
-    val ord = OverAggregates.seqOrdering(tsIdx +: tieBreak.map(schema.fieldIndex))
+      KeyedState.eventMicros(r.getAs[java.sql.Timestamp](tsIdx))
     val empty = WinState(0L, OverAggregates.emptyAccs(aggs),
       OverAggregates.emptyDsets(aggs), 0L, closed = false)
     val wmDelay = s"${(delay.toNanos / 1000 + lateUs) / 1000} milliseconds"
@@ -211,39 +201,36 @@ object WindowAggAny {
       }
     }
 
-    val keyed =
-      if (slideUs == winUs)
-        // tumbling: exactly one window per row — key directly, no copies
-        df.withWatermark(tsCol, wmDelay).groupByKey { r =>
-          val us = rowUs(r)
-          Row.fromSeq(partIdx.map(r.get) :+
-            (us - math.floorMod(us, slideUs)))
-        }(keyEnc)
-      else {
-        // hop: expand each row into its window list before the shuffle
-        // (the appended start column is the LAST field, so every
-        // schema-derived index above still addresses the original row).
-        // The watermark is assigned AFTER the expansion: a typed flatMap
-        // mints fresh output attributes without the event-time watermark
-        // metadata, so marking before it would leave the stateful
-        // operator watermark-less (getCurrentWatermarkMs throws); the
-        // expansion preserves timestamps, so the computed watermark is
-        // identical either way
-        val expSchema = StructType(schema.fields :+
-          StructField("graft_w_start_us", LongType, nullable = false))
-        val expEnc: Encoder[Row] = Encoders.row(expSchema)
-        val startIdx = schema.fields.length
-        df.flatMap { r =>
-          val us = rowUs(r)
-          val lastStart = us - math.floorMod(us, slideUs)
-          Iterator.iterate(lastStart)(_ - slideUs)
-            .takeWhile(_ > us - winUs)
-            .map(s => Row.fromSeq(r.toSeq :+ s))
-        }(expEnc).withWatermark(tsCol, wmDelay).groupByKey(r =>
-          Row.fromSeq(partIdx.map(r.get) :+ r.getLong(startIdx)))(keyEnc)
-      }
-    keyed.flatMapGroupsWithState(OutputMode.Append,
-      GroupStateTimeout.ProcessingTimeTimeout)(process)(stEnc, outEnc)
+    // key = partition values + window start micros
+    val startKey = StructField("w_start_us", LongType, nullable = false)
+    def keyed(in: DataFrame, startOf: Row => Any): DataFrame =
+      KeyedState.run(in.withWatermark(tsCol, wmDelay), partCols,
+        GroupStateTimeout.ProcessingTimeTimeout, Encoders.row(outSchema),
+        extraKey = Some(startKey -> startOf))(process)
+    if (slideUs == winUs)
+      // tumbling: exactly one window per row — key directly, no copies
+      keyed(df, r => { val us = rowUs(r); us - math.floorMod(us, slideUs) })
+    else {
+      // hop: expand each row into its window list before the shuffle
+      // (the appended start column is the LAST field, so every
+      // schema-derived index above still addresses the original row).
+      // The watermark is assigned AFTER the expansion: a typed flatMap
+      // mints fresh output attributes without the event-time watermark
+      // metadata, so marking before it would leave the stateful
+      // operator watermark-less (getCurrentWatermarkMs throws); the
+      // expansion preserves timestamps, so the computed watermark is
+      // identical either way
+      val expSchema = StructType(schema.fields :+
+        StructField("graft_w_start_us", LongType, nullable = false))
+      val startIdx = schema.fields.length
+      keyed(df.flatMap { r =>
+        val us = rowUs(r)
+        val lastStart = us - math.floorMod(us, slideUs)
+        Iterator.iterate(lastStart)(_ - slideUs)
+          .takeWhile(_ > us - winUs)
+          .map(s => Row.fromSeq(r.toSeq :+ s))
+      }(Encoders.row(expSchema)), _.getLong(startIdx))
+    }
   }
 
   /** One merged session: its bounds (window = `[startUs, lastUs + gap)`),
@@ -319,27 +306,20 @@ object WindowAggAny {
       "(a global session would single-key the stream)")
     val schema = df.schema
     val isStreaming = df.isStreaming
-    (partCols ++ tieBreak :+ tsCol).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"column '$c' not in input schema ${schema.fieldNames.mkString(", ")}"))
+    KeyedState.requireColumns(schema, partCols :+ tsCol)
     val tsIdx = schema.fieldIndex(tsCol)
     require(schema.fields(tsIdx).dataType == TimestampType,
       s"the window column must be a timestamp, got " +
         s"${schema.fields(tsIdx).dataType}")
-    tieBreak.foreach(c => OverAggregates.requireOrderable(schema, c))
+    // deterministic fold order within one invocation: the double sum must
+    // not depend on post-shuffle arrival order
+    val ord = KeyedState.order(schema, (tsCol +: tieBreak).map(_ -> true))
     val aggIdx = OverAggregates.checkAggs(schema, aggs)
-    val partIdx = partCols.map(schema.fieldIndex)
     val outSchema = StructType(
-      partIdx.map(schema.fields(_)) ++
+      partCols.map(schema(_)) ++
         Seq(StructField("w_start_us", LongType, nullable = false)) ++
         OverAggregates.outFields(aggs, aggIdx) :+
         StructField("is_final", IntegerType, nullable = false))
-    val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val stEnc: Encoder[SessState] =
-      Encoders.javaSerialization[SessState]
-    val keySchema = StructType(partIdx.map(schema.fields(_)))
-    val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-    val ord = OverAggregates.seqOrdering(tsIdx +: tieBreak.map(schema.fieldIndex))
     val wmDelay = s"${(delay.toNanos / 1000 + lateUs) / 1000} milliseconds"
 
     def process(key: Row, rows: Iterator[Row], state: GroupState[SessState])
@@ -367,7 +347,7 @@ object WindowAggAny {
       // singleton session [t, t + gap); overlapping retained sessions
       // merge with it (a bridging row can merge several)
       rows.map(_.toSeq).toSeq.sorted(ord).foreach { vals =>
-        val tUs = StatefulOps.eventMicros(
+        val tUs = KeyedState.eventMicros(
           vals(tsIdx).asInstanceOf[java.sql.Timestamp])
         val e = OverAggregates.entryOfVals(vals, aggIdx)
         val (touch, rest) = sess.partition(s =>
@@ -439,9 +419,7 @@ object WindowAggAny {
       }
     }
 
-    df.withWatermark(tsCol, wmDelay)
-      .groupByKey(r => Row.fromSeq(partIdx.map(r.get)))(keyEnc)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.ProcessingTimeTimeout)(process)(stEnc, outEnc)
+    KeyedState.run(df.withWatermark(tsCol, wmDelay), partCols,
+      GroupStateTimeout.ProcessingTimeTimeout, Encoders.row(outSchema))(process)
   }
 }

@@ -2,13 +2,13 @@ package graft.tools
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.streaming.{CountWindows, OverAggregates, RankOps,
-  StatefulOps, WindowAggAny}
-import graft.streaming.StatefulOps.Event
+import graft.operators.Sampling
+import graft.streaming.{CountWindows, KeyedState, OverAggregates, RankOps,
+  WindowAggAny}
 
 /** Dev utility: streaming soak at scale (round-9 VERDICT #6). The
   * stateful operator suite is spec-proven on RocksDB at toy volume; this
@@ -75,21 +75,19 @@ object StreamSoak {
     tileEvents(spark, base, straggDir, factor, nFiles, stragglers = true)
     val out = new PrintWriter(s"$work/soak.jsonl")
 
-    def batchDs(dir: String) = spark.read.parquet(dir)
+    def batchDf(dir: String) = spark.read.parquet(dir)
       .select(col("user_id"), col("event_id"),
         col("ts").cast("timestamp").as("ts"), col("event_type"), col("value"))
-      .as[Event]
-    def streamDs(dir: String) = spark.readStream
-      .schema(batchDs(dir).schema)
+    def streamDf(dir: String) = spark.readStream
+      .schema(batchDf(dir).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
-      .as[Event]
     // real (non-sentinel) data horizon, for excluding sentinel windows
-    val maxRealTs = batchDs(eventsDir).filter(col("event_id") >= 0L)
+    val maxRealTs = batchDf(eventsDir).filter(col("event_id") >= 0L)
       .agg(max(col("ts"))).head().getTimestamp(0)
     val maxRealUs = maxRealTs.getTime * 1000L
     val fileSpanMs =
-      (maxRealTs.getTime - batchDs(eventsDir).filter(col("event_id") >= 0L)
+      (maxRealTs.getTime - batchDf(eventsDir).filter(col("event_id") >= 0L)
         .agg(min(col("ts"))).head().getTimestamp(0).getTime) / nFiles
 
     val real = (df: DataFrame) => df.filter(col("event_id") >= 0L)
@@ -100,7 +98,7 @@ object StreamSoak {
     val realWin = (df: DataFrame) => df.filter(col("w_start_us") <= maxRealUs)
 
     // q72's per-user top-3 by value (shared by topn and recovery_topn)
-    val topN = (ds: Dataset[Event]) => RankOps.rankRows(ds.toDF(),
+    val topN = (in: DataFrame) => RankOps.rankRows(in,
       Seq("user_id"), Seq("value" -> false, "event_id" -> true), 3,
       rankAlias = Some("rank"))
     def finalTopN(log: DataFrame): DataFrame = {
@@ -198,7 +196,7 @@ object StreamSoak {
     // (<= 2 spans) with margin for the proc-time close-poll lag
     val lateness = java.time.Duration.ofMillis(4 * fileSpanMs)
 
-    type Op = Dataset[Event] => DataFrame
+    type Op = DataFrame => DataFrame
     // (name, sourceDir, stream/batch op, drift check given (streamLog,
     //  batchLog) -> (onlyStream, onlyBatch, finalRows), exact-multiset?)
     type Check = (DataFrame, DataFrame) => (Long, Long, Long)
@@ -258,15 +256,15 @@ object StreamSoak {
       }
 
     // q94/q95's per-user frames, watermarked for the replay
-    def frameOp(frame: OverAggregates.Frame): Op = (ds: Dataset[Event]) =>
-      OverAggregates.overAggregates(ds.toDF(), Seq("user_id"),
+    def frameOp(frame: OverAggregates.Frame): Op = (in: DataFrame) =>
+      OverAggregates.overAggregates(in, Seq("user_id"),
         Seq("ts", "event_id"), frame, graft.streaming.StatefulBatch.frameAggs,
         delay = "60 seconds")
 
     val ops: Seq[(String, String, Op, Check, Boolean)] = Seq(
       ("topn", eventsDir, topN, reconstructed(finalTopN), false),
       ("keeplast", eventsDir,
-        (ds: Dataset[Event]) => RankOps.keepOne(ds.toDF(),
+        (in: DataFrame) => RankOps.keepOne(in,
           Seq("user_id", "event_type"), Seq("ts" -> false, "event_id" -> false)),
         reconstructed(finalKeepLast), false),
       ("rows_frame", eventsDir, frameOp(OverAggregates.RowsPreceding(4)),
@@ -275,12 +273,13 @@ object StreamSoak {
         frameOp(OverAggregates.RangePreceding(java.time.Duration.ofHours(1))),
         reconstructed(real), true),
       ("reservoir", eventsDir,
-        (ds: Dataset[Event]) => StatefulOps.reservoirPerKey(
-          ds.map(e => (e.event_type, e.event_id)), 32, seed = 7L).toDF(),
+        (in: DataFrame) => Sampling.reservoirPerKey(
+          in.select(col("event_type"), col("event_id")).as[(String, Long)],
+          32, seed = 7L).toDF(),
         reconstructed(finalReservoir), false),
       // round-9 extension: the emit-strategy + count-window + sort family
       ("early_fire", eventsDir,
-        (ds: Dataset[Event]) => WindowAggAny.earlyLateFireWindowAgg(ds.toDF(),
+        (in: DataFrame) => WindowAggAny.earlyLateFireWindowAgg(in,
           Seq("user_id"), "ts", Seq("event_id"), dayWin,
           graft.streaming.StatefulBatch.userWindowAggs,
           earlyFire = "100 milliseconds",
@@ -291,7 +290,7 @@ object StreamSoak {
         reconstructed(df => realWin(df).filter(col("is_final") === 1)
           .drop("is_final")), true),
       ("late_fire", straggDir,
-        (ds: Dataset[Event]) => WindowAggAny.earlyLateFireWindowAgg(ds.toDF(),
+        (in: DataFrame) => WindowAggAny.earlyLateFireWindowAgg(in,
           Seq("user_id"), "ts", Seq("event_id"), dayWin,
           graft.streaming.StatefulBatch.userWindowAggs,
           earlyFire = "100 milliseconds",
@@ -303,13 +302,13 @@ object StreamSoak {
           val r = (mism, onlyB, sf.count()); sf.unpersist(); r
         }, false),
       ("count_tumble", eventsDir,
-        (ds: Dataset[Event]) => CountWindows.countTumble(ds.toDF(),
+        (in: DataFrame) => CountWindows.countTumble(in,
           Seq("user_id"), Seq("ts", "event_id"), 5, "value", "event_id"),
         // completed windows are a pure function of per-key (ts, event_id)
         // arrival order, which the ordered replay preserves globally
         reconstructed(identity), true),
       ("count_slide", eventsDir,
-        (ds: Dataset[Event]) => CountWindows.countSlide(ds.toDF(),
+        (in: DataFrame) => CountWindows.countSlide(in,
           Seq("user_id"), Seq("ts", "event_id"), 8, 4, "value", "event_id"),
         reconstructed(identity), true),
       // round-11 extension: the GENERAL-SCHEMA executors (java-serialized
@@ -317,8 +316,8 @@ object StreamSoak {
       // at volume — string-keyed OVER frames and streaming SQL
       // MATCH_RECOGNIZE, each against its own batch collapse
       ("gen_over_rows", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.WindowSql.sqlDf(
-          ds.toDF(),
+        (in: DataFrame) => graft.streaming.WindowSql.sqlDf(
+          in,
           """SELECT event_type, event_id,
             |  COUNT(*) OVER w AS cnt_w,
             |  SUM(value) OVER w AS sum_v,
@@ -328,8 +327,8 @@ object StreamSoak {
             |             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)""".stripMargin),
         reconstructed(real), true),
       ("gen_match", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.MatchRecognizeSql.sqlDf(
-          ds.toDF(),
+        (in: DataFrame) => graft.streaming.MatchRecognizeSql.sqlDf(
+          in,
           // every variable excludes the sentinel rows (event_id < 0), so
           // the stream (sentinel never closed) and the batch collapse
           // (sentinel is a final row) bind identical matches
@@ -350,7 +349,7 @@ object StreamSoak {
       // collapse. Sentinels sit in their own partitions (event_type
       // 'sentinel' / user_id 0) and are dropped by the real() filter.
       ("gen_topn", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.WindowSql.sqlDf(ds.toDF(),
+        (in: DataFrame) => graft.streaming.WindowSql.sqlDf(in,
           """SELECT * FROM (
             |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
             |    ORDER BY value DESC, event_id ASC) AS rn
@@ -361,14 +360,14 @@ object StreamSoak {
       // parity) — a GLOBAL retract top-n, the executor's worst case (one
       // key, O(k) state regardless of stream length)
       ("gen_sortlimit", eventsDir,
-        (ds: Dataset[Event]) => {
-          ds.toDF().createOrReplaceTempView("soak_sortlimit")
-          graft.Sql.sql(ds.sparkSession,
+        (in: DataFrame) => {
+          in.createOrReplaceTempView("soak_sortlimit")
+          graft.Sql.sql(in.sparkSession,
             "SELECT * FROM soak_sortlimit ORDER BY value DESC, event_id LIMIT 10")
         },
         reconstructed(genSortLimitFinal), false),
       ("gen_keeplast", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.WindowSql.sqlDf(ds.toDF(),
+        (in: DataFrame) => graft.streaming.WindowSql.sqlDf(in,
           """SELECT user_id, event_type, event_id, ts, value FROM (
             |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
             |    ORDER BY ts DESC, event_id DESC) AS rn
@@ -382,9 +381,9 @@ object StreamSoak {
       // gap reset applies the identical TTL semantics in both modes, and
       // the ordered replay keeps expiry behind every key's next arrival
       ("gen_over_ttl", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.OverAggregates.overAggregates(
-          ds.filter(e => e.user_id % 2 == 0 || e.ts.getTime <= ttlCutoffMs)
-            .toDF(),
+        (in: DataFrame) => graft.streaming.OverAggregates.overAggregates(
+          in.filter(col("user_id") % 2 === 0 ||
+            unix_millis(col("ts")) <= ttlCutoffMs),
           Seq("user_id"), Seq("ts", "event_id"),
           graft.streaming.OverAggregates.RowsPreceding(4),
           Seq(graft.streaming.OverAggregates.Agg("COUNT", None, "cnt_w"),
@@ -397,8 +396,8 @@ object StreamSoak {
       // stays pending at termination — excluded both sides); emission
       // ORDER is checked separately below per output file
       ("gen_sort", eventsDir,
-        (ds: Dataset[Event]) => graft.streaming.RowSort.sortByEventTime(
-          ds.toDF(), Seq("ts", "event_id"), "60 seconds"),
+        (in: DataFrame) => graft.streaming.RowSort.sortByEventTime(
+          in, Seq("ts", "event_id"), "60 seconds"),
         reconstructed(real), true),
       // round-13: the GENERAL-SCHEMA early/late-fire windowed aggregate
       // (WindowAggAny) on the straggler replay — composite key, MIN +
@@ -408,9 +407,9 @@ object StreamSoak {
       // not happen (lateness covers the straggler skew — drift would
       // show them)
       ("gen_window", straggDir,
-        (ds: Dataset[Event]) =>
+        (in: DataFrame) =>
           graft.streaming.WindowAggAny.earlyLateFireWindowAgg(
-            ds.toDF(), Seq("user_id", "event_type"), "ts", Seq("event_id"),
+            in, Seq("user_id", "event_type"), "ts", Seq("event_id"),
             dayWin,
             Seq(graft.streaming.OverAggregates.Agg("COUNT", None, "n_events"),
               graft.streaming.OverAggregates.Agg("MIN", Some("value"), "min_v"),
@@ -456,9 +455,9 @@ object StreamSoak {
       // apply per (key, w_start_us), now across overlapping windows
       // closing independently
       ("gen_hop", straggDir,
-        (ds: Dataset[Event]) =>
+        (in: DataFrame) =>
           graft.streaming.WindowAggAny.earlyLateFireHopAgg(
-            ds.toDF(), Seq("user_id", "event_type"), "ts", Seq("event_id"),
+            in, Seq("user_id", "event_type"), "ts", Seq("event_id"),
             size = dayWin, slide = java.time.Duration.ofHours(12),
             Seq(graft.streaming.OverAggregates.Agg("COUNT", None, "n_events"),
               graft.streaming.OverAggregates.Agg("MIN", Some("value"), "min_v"),
@@ -506,9 +505,9 @@ object StreamSoak {
       // relative — a session can fold arbitrarily many doubles, and the
       // stream's cross-batch fold legally reassociates
       ("gen_session", eventsDir,
-        (ds: Dataset[Event]) =>
+        (in: DataFrame) =>
           graft.streaming.WindowAggAny.earlyLateFireSessionAgg(
-            ds.toDF(), Seq("user_id"), "ts", Seq("event_id"),
+            in, Seq("user_id"), "ts", Seq("event_id"),
             gap = java.time.Duration.ofHours(1), sessionAggs,
             earlyFire = "100 milliseconds",
             delay = java.time.Duration.ofSeconds(60)),
@@ -529,9 +528,9 @@ object StreamSoak {
       // the aggregate's, not the assigner's, and would mask the
       // session-state measurement this leg exists for.
       ("gen_session_skew", eventsDir,
-        (ds: Dataset[Event]) =>
+        (in: DataFrame) =>
           graft.streaming.WindowAggAny.earlyLateFireSessionAgg(
-            ds.toDF().withColumn("user_id",
+            in.withColumn("user_id",
               when(col("user_id") % 2 === 0, 0L).otherwise(col("user_id"))),
             Seq("user_id"), "ts", Seq("event_id"),
             gap = java.time.Duration.ofHours(1),
@@ -574,7 +573,7 @@ object StreamSoak {
         val sinkDir = s"$work/out_$name"
         val ckpt = s"$work/ckpt_$name"
         val t0 = System.nanoTime()
-        val q = op(streamDs(dir)).writeStream
+        val q = op(streamDf(dir)).writeStream
           .format("parquet").option("path", sinkDir)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
@@ -601,7 +600,7 @@ object StreamSoak {
         }
         // drift check vs the batch collapse
         val streamLog = spark.read.parquet(sinkDir)
-        val (onlyS, onlyB, rows) = check(streamLog, op(batchDs(dir)).toDF())
+        val (onlyS, onlyB, rows) = check(streamLog, op(batchDf(dir)))
         val extra = name match {
           case "early_fire" =>
             s""","early_fires":${streamLog.filter(col("is_final") === 0).count()}"""
@@ -663,7 +662,7 @@ object StreamSoak {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts").desc, col("event_id").desc)
-      real(batchDs(eventsDir).toDF()).withColumn("rn", row_number().over(w))
+      real(batchDf(eventsDir)).withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select("user_id", "event_type", "event_id", "value")
     }
@@ -677,7 +676,7 @@ object StreamSoak {
       val dirSink = s"$work/sink_upsert"; val ckpt = s"$work/ckpt_upsert"
       wipe(dirSink, ckpt)
       val t0 = System.nanoTime()
-      val q = UpsertSink.upsertWriter(streamDs(eventsDir).toDF(),
+      val q = UpsertSink.upsertWriter(streamDf(eventsDir),
           Seq("user_id", "event_type"), Seq("ts", "event_id"), dirSink,
           nBuckets = 8)
         .option("checkpointLocation", ckpt)
@@ -707,7 +706,7 @@ object StreamSoak {
       .withColumn("flag", explode(
         when(col("event_id") % 3 === 0 || col("user_id") % 97 === 0,
           array(lit(1), lit(-1))).otherwise(array(lit(1)))))
-    def retractWant(): DataFrame = real(batchDs(eventsDir).toDF())
+    def retractWant(): DataFrame = real(batchDf(eventsDir))
       .filter(col("event_type").isin("click", "error") &&
         !(col("event_id") % 3 === 0 || col("user_id") % 97 === 0))
       .groupBy("user_id")
@@ -729,7 +728,7 @@ object StreamSoak {
       wipe(dirSink, ckpt)
       val t0 = System.nanoTime()
       val q = RetractSink.retractWriter(
-          retractChangelog(streamDs(eventsDir).toDF()), Seq("user_id"),
+          retractChangelog(streamDf(eventsDir)), Seq("user_id"),
           "flag", "value", dirSink, stableId = Some(ckpt))
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -761,7 +760,7 @@ object StreamSoak {
       val sinkDir = s"$work/out_recovery_topn"; val ckpt = s"$work/ckpt_recovery_topn"
       wipe(sinkDir, ckpt)
       def mk(): StreamingQuery =
-        topN(streamDs(eventsDir)).writeStream
+        topN(streamDf(eventsDir)).writeStream
           .format("parquet").option("path", sinkDir)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
@@ -779,7 +778,7 @@ object StreamSoak {
       val baseDir = new java.io.File(s"$work/out_topn")
       val want =
         if (baseDir.isDirectory) finalTopN(spark.read.parquet(baseDir.getPath))
-        else finalTopN(topN(batchDs(eventsDir)))
+        else finalTopN(topN(batchDf(eventsDir)))
       summarize("recovery_topn", wall, got.count(),
         got.exceptAll(want).count(), want.exceptAll(got).count(),
         stopFields)
@@ -790,7 +789,7 @@ object StreamSoak {
       val ckpt = s"$work/ckpt_recovery_upsert"
       wipe(dirSink, ckpt)
       def mk(): StreamingQuery =
-        UpsertSink.upsertWriter(streamDs(eventsDir).toDF(),
+        UpsertSink.upsertWriter(streamDf(eventsDir),
           Seq("user_id", "event_type"), Seq("ts", "event_id"), dirSink,
           nBuckets = 8)
           .option("checkpointLocation", ckpt)
@@ -821,7 +820,7 @@ object StreamSoak {
       wipe(dirSink, ckpt)
       def mk(): StreamingQuery =
         RetractSink.retractWriter(
-            retractChangelog(streamDs(eventsDir).toDF()), Seq("user_id"),
+            retractChangelog(streamDf(eventsDir)), Seq("user_id"),
             "flag", "value", dirSink, stableId = Some(ckpt))
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
@@ -841,14 +840,14 @@ object StreamSoak {
       val sinkDir = s"$work/out_recovery_session"
       val ckpt = s"$work/ckpt_recovery_session"
       wipe(sinkDir, ckpt)
-      def sessionOp(ds: Dataset[Event]): DataFrame =
+      def sessionOp(in: DataFrame): DataFrame =
         graft.streaming.WindowAggAny.earlyLateFireSessionAgg(
-          ds.toDF(), Seq("user_id"), "ts", Seq("event_id"),
+          in, Seq("user_id"), "ts", Seq("event_id"),
           gap = java.time.Duration.ofHours(1), sessionAggs,
           earlyFire = "100 milliseconds",
           delay = java.time.Duration.ofSeconds(60))
       def mk(): StreamingQuery =
-        sessionOp(streamDs(eventsDir)).writeStream
+        sessionOp(streamDf(eventsDir)).writeStream
           .format("parquet").option("path", sinkDir)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
@@ -861,7 +860,7 @@ object StreamSoak {
       val wall = (System.nanoTime() - t0) / 1e9
       drainProgress(q2, "recovery_session")
       val (onlyS, onlyB, rows) = sessionCheck(withDistinct = true)(
-        spark.read.parquet(sinkDir), sessionOp(batchDs(eventsDir)))
+        spark.read.parquet(sinkDir), sessionOp(batchDf(eventsDir)))
       summarize("recovery_session", wall, rows, onlyS, onlyB,
         stopFields)
     }
@@ -869,8 +868,8 @@ object StreamSoak {
       val sinkDir = s"$work/out_recovery_match"
       val ckpt = s"$work/ckpt_recovery_match"
       wipe(sinkDir, ckpt)
-      def matchOp(ds: Dataset[Event]): DataFrame =
-        graft.streaming.MatchRecognizeSql.sqlDf(ds.toDF(),
+      def matchOp(in: DataFrame): DataFrame =
+        graft.streaming.MatchRecognizeSql.sqlDf(in,
           """SELECT * FROM events MATCH_RECOGNIZE (
             |  PARTITION BY user_id
             |  ORDER BY ts, event_id
@@ -882,7 +881,7 @@ object StreamSoak {
             |         B AS event_type = 'purchase'
             |)""".stripMargin, delay = "60 seconds")
       def mk(): StreamingQuery =
-        matchOp(streamDs(eventsDir)).writeStream
+        matchOp(streamDf(eventsDir)).writeStream
           .format("parquet").option("path", sinkDir)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
@@ -895,7 +894,7 @@ object StreamSoak {
       val wall = (System.nanoTime() - t0) / 1e9
       drainProgress(q2, "recovery_match")
       val got = spark.read.parquet(sinkDir).cache()
-      val want = matchOp(batchDs(eventsDir))
+      val want = matchOp(batchDf(eventsDir))
       summarize("recovery_match", wall, got.count(),
         got.exceptAll(want).count(), want.exceptAll(got).count(),
         stopFields)
@@ -959,7 +958,7 @@ object StreamSoak {
               // full micros precision: the operator orders on eventMicros,
               // and ms-truncated stamps flag same-ms micro-ordered rows
               // as disorder (3 false positives in the r11 run)
-              val us = StatefulOps.eventMicros(ts)
+              val us = KeyedState.eventMicros(ts)
               if (us < prev._1 || (us == prev._1 && id < prev._2)) bad += 1
               prev = (us, id)
               if (us < mn) mn = us

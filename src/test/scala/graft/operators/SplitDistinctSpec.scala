@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.streaming.StatefulOps.Event
+import graft.streaming.Events.Event
 
 /** The split-distinct rewrite on a skewed STREAM: a hot key's distinct
   * set spreads over (key, bucket) level-1 state cells, the chained

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
-import graft.streaming.StatefulOps.Event
+import graft.streaming.Events.Event
 
 /** Emission-sequence spec for the allowed-lateness windowed aggregate
   * ([[WindowAggAny.earlyLateFireWindowAgg]] in q110's shape: events keyed

@@ -320,7 +320,7 @@ class MatchRecognizeAnySpec extends SparkSpec {
       "across single-row batches equals the batch collapse") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.StatefulOps.Event
+    import graft.streaming.Events.Event
     def ts(m: Long) = new java.sql.Timestamp(m * 60000L)
     val vals = Seq(5.0, 3.0, 6.0, 4.0, 7.0, 2.0, 8.0, 1.0)
     val evs = vals.zipWithIndex.map { case (v, i) =>

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 import graft.streaming.PatternMatch._
-import graft.streaming.StatefulOps.Event
+import graft.streaming.Events.Event
 
 /** Per-step bound event ids of one match (top level: Spark encoders
   * cannot instantiate suite-inner classes). */

@@ -61,7 +61,7 @@ class StreamingOverSqlSpec extends SparkSpec {
     // has no watermark to close frames on
     rejectsOn(
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-        StatefulOps.Event].toDF(),
+        Events.Event].toDF(),
       """SELECT user_id, COUNT(*) OVER w AS c FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY value
         |             ROWS UNBOUNDED PRECEDING)""".stripMargin,

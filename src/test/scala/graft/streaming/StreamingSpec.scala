@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.streaming.StatefulOps._
+import graft.streaming.Events.Event
 
 /** The executor output columns the specs below assert on (`as[...]`
   * binds by name and ignores the pass-through input columns). */
@@ -615,12 +615,12 @@ class StreamingSpec extends SparkSpec {
       Seq(ids.reverse.take(10), ids.reverse.drop(10)))
     val finals = arrivals.zipWithIndex.map { case (batches, qi) =>
       val input = MemoryStream[(String, Long)]
-      val query = StatefulOps.reservoirPerKey(input.toDS(), k = 3, seed = 5)
+      val query = graft.operators.Sampling.reservoirPerKey(input.toDS(), k = 3, seed = 5)
         .writeStream.format("memory").queryName(s"reservoir$qi")
         .outputMode("append").start()
       batches.foreach { b => input.addData(b); query.processAllAvailable() }
       query.stop()
-      val all = spark.table(s"reservoir$qi").as[StatefulOps.Sampled].collect()
+      val all = spark.table(s"reservoir$qi").as[graft.operators.Sampling.Sampled].collect()
       // final emission per stratum = last k rows for that stratum
       Seq("s0", "s1").map { s =>
         s -> all.filter(_.stratum == s).takeRight(3).sortBy(_.sample_rank)

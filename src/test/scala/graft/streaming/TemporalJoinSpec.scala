@@ -185,4 +185,33 @@ class TemporalJoinSpec extends SparkSpec {
     val diff = got.collect { case (k, v) if oracle(k) != v => (k, v, oracle(k)) }
     assert(diff.isEmpty, s"mismatched enrichments (first 5): ${diff.take(5)}")
   }
+
+  test("a non-orderable version or tie-break column fails when the join " +
+    "is built, on both the row-time and the proc-time join") {
+    import spark.implicits._
+    val t = new Timestamp(0L)
+    val facts = Seq((1L, t, 10L)).toDF("k", "ts", "fid")
+    val binVer = Seq((1L, t, Array[Byte](1), 1.0), (1L, t, Array[Byte](2), 2.0))
+      .toDF("k", "ts", "ver", "rate")
+    val joins: Seq[(String, (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame, Seq[String]) => Any)] = Seq(
+      "temporalJoin" -> ((f, d, tie) => TemporalJoinAny.temporalJoin(f, d,
+        Seq("k"), "ts", dimVerCols = Seq("ver"), factTieBreak = tie)),
+      "temporalJoinProcTime" -> ((f, d, tie) =>
+        TemporalJoinAny.temporalJoinProcTime(f, d, Seq("k"), "ts",
+          dimVerCols = Seq("ver"), factTieBreak = tie)))
+    joins.foreach { case (name, join) =>
+      // building the DataFrame runs no job: the error comes before any
+      // task could meet the column's bytes
+      val e = intercept[IllegalArgumentException](
+        join(facts, binVer, Seq("fid")))
+      assert(e.getMessage.contains("'ver'") &&
+        e.getMessage.contains("non-comparable"), s"$name: ${e.getMessage}")
+      val f2 = facts.withColumn("tags", org.apache.spark.sql.functions
+        .array($"fid"))
+      val dims = binVer.withColumn("ver", $"rate")
+      val e2 = intercept[IllegalArgumentException](join(f2, dims, Seq("tags")))
+      assert(e2.getMessage.contains("'tags'"), s"$name: ${e2.getMessage}")
+    }
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.streaming.OverAggregates.Agg
-import graft.streaming.StatefulOps.Event
+import graft.streaming.Events.Event
 
 /** One emission of the q97/q110-shaped window aggregate (events keyed by
   * user_id, COUNT/SUM(value)) — top level: Spark encoders cannot
