@@ -96,6 +96,25 @@ def quartile_spread(xs):
     return q[2] - q[0]
 
 
+def compare(parent, change, lower, bound):
+    """One end-to-end metric over paired runs (parent[i] and change[i] ran
+    as a pair): the median of each side, the change's relative move, the
+    pairs the change won, the parent's interquartile spread and the
+    verdict."""
+    mp, mc = statistics.median(parent), statistics.median(change)
+    delta = (mc - mp) / mp
+    gain = -delta if lower else delta
+    won = sum((b < a) if lower else (b > a) for a, b in zip(parent, change))
+    iqr = quartile_spread(parent)
+    if gain > bound and abs(mc - mp) > iqr and won * 10 >= 9 * len(parent):
+        verdict = "improved"
+    elif -gain > bound:
+        verdict = "worse"
+    else:
+        verdict = "unresolved"
+    return mp, mc, delta, won, iqr, verdict
+
+
 def report(records, bench):
     """Print the comparison; return the number of runs not `correct`."""
     bad = [r for r in records if not r["result"].get("correct")]
@@ -119,17 +138,7 @@ def report(records, bench):
             name, lower = m["name"], m["better"] == "lower"
             p = [pr["parent"]["result"]["metrics"][name]["value"] for pr in pairs]
             c = [pr["change"]["result"]["metrics"][name]["value"] for pr in pairs]
-            mp, mc = statistics.median(p), statistics.median(c)
-            delta = (mc - mp) / mp
-            gain = -delta if lower else delta
-            won = sum((b < a) if lower else (b > a) for a, b in zip(p, c))
-            iqr = quartile_spread(p)
-            if gain > m["bound"] and abs(mc - mp) > iqr and won * 10 >= 9 * len(pairs):
-                verdict = "improved"
-            elif -gain > m["bound"]:
-                verdict = "worse"
-            else:
-                verdict = "unresolved"
+            mp, mc, delta, won, iqr, verdict = compare(p, c, lower, m["bound"])
             print(f"{name:<13}{mp:>10.4g}{mc:>10.4g}{100 * delta:>+8.1f}"
                   f"{won:>4}/{len(pairs):<2}{iqr:>9.3g}{m['bound']:>7}  {verdict}")
         print("per-query hot latency, median over pairs (s):")

@@ -177,10 +177,10 @@ object Catalog {
     * (r16 optimization): each literal query used to rebuild its full
     * adapter view set (24 DataFrame view plans / 4 SQL view parses) per
     * call inside the timed region. The registrars now skip when their
-    * marker still names the same dir; any call that drops or re-registers
-    * fixture-name temp views (the adapters shadow `customer` etc.) MUST
-    * route through here so a stale skip can never resolve a clobbered
-    * view. */
+    * marker still names the same fixture; any call that drops or
+    * re-registers fixture-name temp views (the adapters shadow `customer`
+    * etc.) MUST route through here so a stale skip can never resolve a
+    * clobbered view. */
   private[graft] val adapterViewMarkers =
     Seq("graft.views.tpcds.dir", "graft.views.tpch.dir")
   private[graft] def invalidateAdapterViews(spark: SparkSession): Unit =
@@ -222,9 +222,13 @@ object Catalog {
     * Path-based temp views carry size-only stats, so with [[registerAll]]
     * those two config lines are inert; this variant creates external
     * parquet tables and runs `ANALYZE TABLE … COMPUTE STATISTICS FOR
-    * COLUMNS …` so the 7-8-table join graphs of the SQL corpus get
-    * cost-based ordering — on a 100 TB catalog this is the difference
-    * between a dimension-first plan and a fact-times-fact accident.
+    * COLUMNS …` so the join graphs of SQL queries over the fixture
+    * tables (the TPC-H corpus, `CboSpec`) get cost-based ordering — on a
+    * 100 TB catalog this is the difference between a dimension-first
+    * plan and a fact-times-fact accident. The TPC-DS literal texts do
+    * not: they read the adapter's views (`TpcDsLiteral.registerViews`),
+    * path-based relations with size-only statistics, so their plans are
+    * the same with or without this call.
     *
     * Idempotent per (session, dir): every SQL query entry point calls this,
     * so re-registration (and re-analysis) is skipped when the session has

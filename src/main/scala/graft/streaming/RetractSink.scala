@@ -70,9 +70,8 @@ object RetractSink {
     val delta = batch.groupBy(keys.map(col): _*)
       .agg(sum(col(flagCol)).cast(LongType).as("cnt"),
         sum(col(flagCol).cast(DoubleType) * col(valueCol)).as("total"))
-    val merged = UpsertSink.snapshotPath(spark, dir) match {
-      case Some(snap) =>
-        val old = spark.read.parquet(snap.toString)
+    val merged = UpsertSink.readSnapshot(spark, dir) match {
+      case Some(old) =>
         old.as("o").join(delta.as("d"), keys, "full_outer")
           .select(keys.map(col) ++ Seq(
             (coalesce(col("o.cnt"), lit(0L)) + coalesce(col("d.cnt"), lit(0L)))

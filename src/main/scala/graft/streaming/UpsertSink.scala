@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed upsert sink — the reference's `UpsertStreamTableSink` contract
   * (reference: flink-table-api-java-bridge .../sinks/UpsertStreamTableSink.java:
@@ -42,6 +43,13 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * has the same crash atomicity and snapshot isolation as the nBuckets=1
   * pointer swap; per-batch write volume stays proportional to touched
   * buckets, not total state.
+  *
+  * Each snapshot records the schema it was written with (a `_schema`
+  * file inside the snapshot directory; a `schema=` line of the bucket
+  * manifest), committed by the same pointer flip, and every read-back
+  * uses it: Spark's schema inference runs a footer-reading job per read.
+  * A layout written before the record existed is still read by
+  * inference.
   */
 object UpsertSink {
 
@@ -58,10 +66,9 @@ object UpsertSink {
     val latest = batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     if (nBuckets == 1) {
-      val merged = snapshotPath(spark, dir) match {
-        case Some(snap) =>
-          spark.read.parquet(snap.toString)
-            .join(latest.select(keys.map(col): _*), keys, "left_anti")
+      val merged = readSnapshot(spark, dir) match {
+        case Some(old) =>
+          old.join(latest.select(keys.map(col): _*), keys, "left_anti")
             .unionByName(latest)
         case None => latest
       }
@@ -71,7 +78,7 @@ object UpsertSink {
       val bucketed = latest.withColumn("__bucket",
         pmod(hash(keys.map(col): _*), lit(nBuckets)))
       val mv = manifestVersion(spark, dir)
-      val manifest = readManifest(spark, dir)
+      val (manifest, schema) = manifestAt(spark, dir, mv)
       // ≤ nBuckets small integers reach the driver — bounded by
       // construction, independent of state or batch size
       val touched = bucketed.select(col("__bucket")).distinct()
@@ -80,7 +87,7 @@ object UpsertSink {
         .map(i => new Path(dir, s"b$i/v${manifest(i)}").toString)
       val merged =
         if (oldPaths.isEmpty) bucketed
-        else spark.read.parquet(oldPaths: _*)
+        else readParquet(spark, schema, oldPaths)
           .withColumn("__bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
           .join(bucketed.select(keys.map(col): _*), keys, "left_anti")
           .unionByName(bucketed)
@@ -98,7 +105,8 @@ object UpsertSink {
         fs.rename(new Path(stage, s"__bucket=$i"), dest)
       }
       fs.delete(stage, true)
-      publishManifest(spark, dir, mv + 1, manifest ++ next)
+      publishManifest(spark, dir, mv + 1, manifest ++ next,
+        StructType(merged.schema.filterNot(_.name == "__bucket")))
       // retain one generation per touched bucket for in-flight readers
       touched.foreach { i =>
         if (next(i) >= 2) fs.delete(new Path(dir, s"b$i/v${next(i) - 2}"), true)
@@ -109,43 +117,41 @@ object UpsertSink {
   private def manifestPointer(dir: String) = new Path(dir, "_manifest")
 
   /** Version of the committed bucket manifest, or -1 before any commit. */
-  private[streaming] def manifestVersion(spark: SparkSession, dir: String): Int = {
-    val fs = fileSystem(spark, dir)
-    val p = manifestPointer(dir)
-    if (!fs.exists(p)) -1
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toInt
-      finally in.close()
-    }
-  }
+  private[streaming] def manifestVersion(spark: SparkSession, dir: String): Int =
+    readText(spark, manifestPointer(dir)).fold(-1)(_.trim.toInt)
 
   /** The committed bucket → version map (empty before any commit). */
-  private[streaming] def readManifest(spark: SparkSession, dir: String): Map[Int, Int] = {
-    val mv = manifestVersion(spark, dir)
-    if (mv < 0) Map.empty
+  private[streaming] def readManifest(spark: SparkSession, dir: String): Map[Int, Int] =
+    manifestAt(spark, dir, manifestVersion(spark, dir))._1
+
+  /** Manifest `mv`'s bucket → version map and its recorded schema (none in
+    * a manifest written before the record existed). */
+  private def manifestAt(spark: SparkSession, dir: String,
+      mv: Int): (Map[Int, Int], Option[String]) =
+    if (mv < 0) (Map.empty, None)
     else {
-      val fs = fileSystem(spark, dir)
-      val in = fs.open(new Path(dir, s"manifest.v$mv"))
-      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { line =>
+      val lines = readText(spark, new Path(dir, s"manifest.v$mv"))
+        .getOrElse(throw new IllegalStateException(
+          s"_manifest under $dir names v$mv, whose manifest file is missing"))
+        .linesIterator.filter(_.nonEmpty).toSeq
+      val (schema, buckets) = lines.partition(_.startsWith(SchemaLine))
+      (buckets.map { line =>
         val Array(b, v) = line.split(":", 2)
         b.toInt -> v.toInt
-      }.toMap
+      }.toMap, schema.headOption.map(_.stripPrefix(SchemaLine)))
     }
-  }
 
-  /** Write `manifest.v<mv>` then flip the `_manifest` pointer with one
-    * atomic rename; the previous manifest file is retained one
-    * generation. */
+  /** Write `manifest.v<mv>` (the bucket versions and the schema of the
+    * bucket files) then flip the `_manifest` pointer with one atomic
+    * rename; the previous manifest file is retained one generation. */
   private def publishManifest(spark: SparkSession, dir: String, mv: Int,
-      entries: Map[Int, Int]): Unit = {
+      entries: Map[Int, Int], schema: StructType): Unit = {
     val fs = fileSystem(spark, dir)
     val mfile = new Path(dir, s"manifest.v$mv")
     val out = fs.create(mfile, true)
-    try out.write(entries.toSeq.sorted.map { case (b, v) => s"$b:$v" }
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val lines = s"$SchemaLine${schema.json}" +:
+      entries.toSeq.sorted.map { case (b, v) => s"$b:$v" }
+    try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
     val tmp = new Path(dir, "_manifest.tmp")
     val pout = fs.create(tmp, true)
@@ -159,19 +165,34 @@ object UpsertSink {
   private def fileSystem(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def pointer(dir: String) = new Path(dir, "_current")
-
-  /** Version the `_current` pointer names, or -1 before the first commit. */
-  private[streaming] def currentVersion(spark: SparkSession, dir: String): Int = {
-    val fs = fileSystem(spark, dir)
-    val p = pointer(dir)
-    if (!fs.exists(p)) -1
+  /** A small metadata file's content, if it exists. */
+  private def readText(spark: SparkSession, p: Path): Option[String] = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toInt
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
       finally in.close()
     }
   }
+
+  /** The schema record: a file inside each snapshot, a line of each
+    * bucket manifest. */
+  private val SchemaFile = "_schema"
+  private val SchemaLine = "schema="
+
+  /** Parquet files read with their recorded schema — no inference job —
+    * or, without a record, by inference. */
+  private def readParquet(spark: SparkSession, schema: Option[String],
+      paths: Seq[String]): DataFrame =
+    schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .fold(spark.read)(spark.read.schema).parquet(paths: _*)
+
+  private def pointer(dir: String) = new Path(dir, "_current")
+
+  /** Version the `_current` pointer names, or -1 before the first commit. */
+  private[streaming] def currentVersion(spark: SparkSession, dir: String): Int =
+    readText(spark, pointer(dir)).fold(-1)(_.trim.toInt)
 
   /** The committed snapshot directory, if any batch has committed. */
   private[streaming] def snapshotPath(spark: SparkSession, dir: String): Option[Path] = {
@@ -179,13 +200,21 @@ object UpsertSink {
     if (v < 0) None else Some(new Path(dir, s"v$v"))
   }
 
+  /** The committed snapshot read with its recorded schema, if any batch
+    * has committed. */
+  private[streaming] def readSnapshot(spark: SparkSession,
+      dir: String): Option[DataFrame] =
+    snapshotPath(spark, dir).map(snap => readParquet(spark,
+      readText(spark, new Path(snap, SchemaFile)), Seq(snap.toString)))
+
   /** Write a fresh versioned snapshot under `dir` and flip the `_current`
     * pointer with one atomic rename. `extraFiles` are small metadata files
     * committed INSIDE the snapshot directory before it is published (the
-    * retract sink's applied-batch marker rides here, so marker and state
-    * commit together — no crash window between them). The previous
-    * snapshot is retained one generation for in-flight readers; older
-    * generations are deleted. Shared by the upsert and retract sinks. */
+    * schema record and the retract sink's applied-batch marker ride here,
+    * so they and the state commit together — no crash window between
+    * them). The previous snapshot is retained one generation for
+    * in-flight readers; older generations are deleted. Shared by the
+    * upsert and retract sinks. */
   private[streaming] def writeSnapshot(merged: DataFrame, dir: String,
       extraFiles: Map[String, String] = Map.empty): Unit = {
     val spark = merged.sparkSession
@@ -196,9 +225,10 @@ object UpsertSink {
     // leftover from a crashed attempt that never published
     if (fs.exists(snap)) fs.delete(snap, true)
     merged.write.mode("overwrite").parquet(snap.toString)
-    extraFiles.foreach { case (name, content) =>
-      val out = fs.create(new Path(snap, name), true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    (extraFiles + (SchemaFile -> merged.schema.json)).foreach {
+      case (name, content) =>
+        val out = fs.create(new Path(snap, name), true)
+        try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
     }
     val tmp = new Path(dir, "_current.tmp")
     val out = fs.create(tmp, true)
@@ -212,16 +242,7 @@ object UpsertSink {
   /** Read a small metadata file from the committed snapshot, if present. */
   private[streaming] def readSnapshotFile(spark: SparkSession, dir: String,
       name: String): Option[String] =
-    snapshotPath(spark, dir).flatMap { snap =>
-      val fs = fileSystem(spark, dir)
-      val p = new Path(snap, name)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
-        finally in.close()
-      }
-    }
+    snapshotPath(spark, dir).flatMap(snap => readText(spark, new Path(snap, name)))
 
   /** Streaming writer maintaining the latest-row-per-key state under `dir`. */
   def upsertWriter(stream: DataFrame, keys: Seq[String],
@@ -237,14 +258,14 @@ object UpsertSink {
 
   /** Read the sink's current state (empty-schema-safe only once a batch
     * has committed). Resolves the versioned-snapshot pointer when present
-    * (nBuckets = 1 layout), else the committed bucket manifest. */
+    * (nBuckets = 1 layout), else the committed bucket manifest; either
+    * way with the recorded schema, so the read runs no Spark job. */
   def currentState(spark: SparkSession, dir: String): DataFrame =
-    snapshotPath(spark, dir) match {
-      case Some(snap) => spark.read.parquet(snap.toString)
-      case None =>
-        val paths = readManifest(spark, dir).toSeq.sorted
-          .map { case (b, v) => new Path(dir, s"b$b/v$v").toString }
-        require(paths.nonEmpty, s"no committed snapshot or manifest under $dir")
-        spark.read.parquet(paths: _*)
+    readSnapshot(spark, dir).getOrElse {
+      val (manifest, schema) = manifestAt(spark, dir, manifestVersion(spark, dir))
+      val paths = manifest.toSeq.sorted
+        .map { case (b, v) => new Path(dir, s"b$b/v$v").toString }
+      require(paths.nonEmpty, s"no committed snapshot or manifest under $dir")
+      readParquet(spark, schema, paths)
     }
 }

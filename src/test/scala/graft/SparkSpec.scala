@@ -21,6 +21,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       : Seq[org.apache.spark.sql.execution.SparkPlan] =
     graft.core.PlanWalk.nodes(p)
 
+  /** `f`'s result and the number of Spark jobs it submitted from this
+    * thread (tagged with a job group, so other threads' jobs do not
+    * count; the listener bus is drained before counting). */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = f
+      org.apache.spark.GraftBusWait.drain(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Run a declared query and return every node of its final plan. */
   def executedPlanNodes(name: String, sfDir: String)
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {

@@ -1,8 +1,12 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.core.Catalog
 
 /** The literal family's claim is that the reference's own query texts run
   * unmodified — so pin each shipped body against the reference file on
@@ -54,5 +58,62 @@ class TpcDsLiteralSpec extends SparkSpec {
       val n = d.run(spark, sf("sf0.01")).count()
       assert(n > 0, s"${d.name} returned no rows at sf0.01")
     }
+  }
+
+  test("each generated table holds exactly the rows of its derivation") {
+    val s = spark.newSession()
+    TpcDsLiteral.registerViews(s, sf())
+    val derived = TpcDsLiteral.derivedTables(s, sf())
+    assert(derived.map(_._1).toSet == Set("store_sales", "store_returns",
+      "catalog_sales", "catalog_returns", "web_sales", "web_returns",
+      "date_dim"))
+    derived.foreach { case (name, df) =>
+      val view = s.table(name)
+      // a file scan, not the join or DISTINCT it was generated from
+      assert(view.queryExecution.optimizedPlan.collect {
+        case j: Join => j
+        case a: Aggregate => a
+      }.isEmpty, s"$name still derives its rows")
+      assert(view.schema.map(f => (f.name, f.dataType)) ==
+        df.schema.map(f => (f.name, f.dataType)), name)
+      assert(view.exceptAll(df).isEmpty && df.exceptAll(view).isEmpty,
+        s"$name differs from its derivation")
+    }
+  }
+
+  test("a new session reuses the generated files and runs no write job") {
+    val first = spark.newSession()
+    TpcDsLiteral.registerViews(first, sf())
+    val next = spark.newSession()
+    val (_, jobs) = jobsDuring(TpcDsLiteral.registerViews(next, sf()))
+    assert(jobs == 0, s"registerViews in a new session ran $jobs jobs")
+    Seq("store_sales", "date_dim").foreach(t =>
+      assert(next.table(t).inputFiles.toSet == first.table(t).inputFiles.toSet))
+  }
+
+  test("a fixture whose orders file is rewritten gets regenerated") {
+    val copy = Files.createTempDirectory("tpcds-fixture")
+    Catalog.tableNames.foreach(n => Files.copy(
+      Paths.get(Catalog.path(sf(), n)), copy.resolve(s"$n.parquet")))
+    val dir = copy.toString
+    val s = spark.newSession()
+    TpcDsLiteral.registerViews(s, dir)
+    val before = s.table("store_sales")
+    val (rows, files) = (before.count(), before.inputFiles.toSet)
+    // rewrite orders.parquet in place, keeping the even order keys only
+    val even = copy.resolve("orders_even").toString
+    Catalog.load(s, dir, "orders").filter(col("o_orderkey") % 2 === 0)
+      .coalesce(1).write.parquet(even)
+    val part = Files.list(Paths.get(even)).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.move(part, copy.resolve("orders.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    TpcDsLiteral.registerViews(s, dir)
+    val after = s.table("store_sales")
+    assert(after.inputFiles.toSet.intersect(files).isEmpty,
+      "store_sales was not regenerated")
+    assert(after.count() < rows)
+    assert(after.filter(col("ss_ticket_number") % 2 =!= 0).isEmpty,
+      "regenerated store_sales still holds the dropped orders' lines")
   }
 }

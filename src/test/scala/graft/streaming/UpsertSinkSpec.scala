@@ -150,6 +150,49 @@ class UpsertSinkSpec extends SparkSpec {
       .map(s => s.k -> (s.cnt, s.total)).toMap
     assert(s2 == Map(1L -> (1L, 5.0)))
   }
+
+  test("read-back uses the recorded schema and runs no Spark job") {
+    import spark.implicits._
+    val single = Files.createTempDirectory("upsert-schema").toString
+    val bucketed = Files.createTempDirectory("upsert-schema-b").toString
+    val batch = Seq(Ev(1, 1, "a"), Ev(2, 1, "b"), Ev(3, 2, null)).toDF()
+    Seq(single -> 1, bucketed -> 4).foreach { case (dir, n) =>
+      UpsertSink.mergeBatch(batch, Seq("k"), Seq("ver"), dir, nBuckets = n)
+      UpsertSink.mergeBatch(Seq(Ev(2, 5, "c")).toDF(), Seq("k"), Seq("ver"),
+        dir, nBuckets = n)
+    }
+    val inferred = spark.read.parquet(UpsertSink.snapshotPath(spark, single).get.toString)
+    def state(df: org.apache.spark.sql.DataFrame) =
+      df.as[Ev].collect().map(e => e.k -> (e.ver, e.payload)).toMap
+    val expected = Map(1L -> (1L, "a"), 2L -> (5L, "c"), 3L -> (2L, null))
+    Seq(single, bucketed).foreach { dir =>
+      val (df, jobs) = jobsDuring(UpsertSink.currentState(spark, dir))
+      assert(jobs == 0, s"currentState ran $jobs jobs under $dir")
+      assert(df.schema == inferred.schema, dir)
+      assert(state(df) == expected, dir)
+    }
+    // a snapshot written before the record existed is read by inference
+    Files.delete(java.nio.file.Paths.get(
+      UpsertSink.snapshotPath(spark, single).get.toString, "_schema"))
+    assert(state(UpsertSink.currentState(spark, single)) == expected)
+  }
+
+  test("the schema record commits with its snapshot: an unpublished " +
+      "version is invisible to read-back") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("upsert-atomic").toString
+    UpsertSink.mergeBatch(Seq(Ev(1, 1, "a")).toDF(), Seq("k"), Seq("ver"), dir)
+    // a crashed attempt at the next version: files (a different schema
+    // among them) staged, pointer never flipped
+    Seq((1L, "x")).toDF("k", "other").write.parquet(s"$dir/v1")
+    val (df, jobs) = jobsDuring(UpsertSink.currentState(spark, dir))
+    assert(jobs == 0)
+    assert(df.as[Ev].collect().toSeq == Seq(Ev(1, 1, "a")))
+    // the next merge replaces the leftover and publishes its own record
+    UpsertSink.mergeBatch(Seq(Ev(2, 1, "b")).toDF(), Seq("k"), Seq("ver"), dir)
+    assert(UpsertSink.currentState(spark, dir).as[Ev].collect().map(_.k).toSet ==
+      Set(1L, 2L))
+  }
 }
 
 private[streaming] case class Chg(k: Long, flag: Int, v: Double)
