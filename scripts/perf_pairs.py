@@ -10,11 +10,12 @@ PARENT and CHANGE are two checkouts of the repository. For each seed the
 script runs `perfbench/run.py --trace 0` once in each, for the
 BENCHMARK.json `run_seconds`, alternating which side goes first from one
 pair to the next, so that a drift of the host over the session falls on
-both sides alike. Each run's result line, its
-provenance line and the per-query hot latencies (fastest timed run,
-calibrated like the end-to-end times) are appended to --out as one JSON
-record; --report prints the comparison of an existing file again, so an
-interrupted session loses no run.
+both sides alike. Each run's result line, its provenance line, the
+per-query hot latencies (fastest timed run) and the set-up phases (per
+round the session, catalog and views spans, the warm-up pass and the
+first timed pass's JIT time), all calibrated like the end-to-end times,
+are appended to --out as one JSON record; --report prints the comparison
+of an existing file again, so an interrupted session loses no run.
 
 Per end-to-end metric the report gives the median of each side, the
 change in %, the number of pairs the change won, the spread between the
@@ -25,6 +26,10 @@ quartiles of the parent's runs, the bound and a verdict:
               won at least nine pairs in ten;
   worse       the median moved the wrong way by more than the bound;
   unresolved  anything else: a move inside the bound is not a win.
+
+Under that table come the medians of each side's set-up phases and
+per-query hot latencies, so a set-up change names the phase that moved
+without a traced run.
 
 Any run whose result is not `correct` is flagged, and the exit status is
 then 1.
@@ -48,20 +53,46 @@ def seed_list(text):
     return out
 
 
+def read_spans(checkout, provenance):
+    spans_file = Path(checkout) / provenance["spans"]
+    return [json.loads(l) for l in spans_file.read_text().splitlines() if l.strip()]
+
+
+def dur(span):
+    return (span["end_ns"] - span["start_ns"]) / 1e9
+
+
 def hot_latencies(checkout, provenance, scale):
     """Per-query fastest timed run from the run's span file, multiplied by
     the run's calibration factor `scale`."""
-    spans_file = Path(checkout) / provenance["spans"]
-    spans = [json.loads(l) for l in spans_file.read_text().splitlines() if l.strip()]
+    spans = read_spans(checkout, provenance)
     untraced = {s["id"] for s in spans
                 if s["name"] == "pass" and not s["attrs"]["traced"]}
     best = {}
     for s in spans:
         if s["name"] == "query" and s["parent"] in untraced:
-            d = (s["end_ns"] - s["start_ns"]) / 1e9
+            d = dur(s)
             q = s["attrs"]["query"]
             best[q] = min(best.get(q, d), d)
     return {q: round(v * scale, 4) for q, v in sorted(best.items())}
+
+
+def phases(checkout, provenance, scale):
+    """Set-up phases of a run from its span file, multiplied by the run's
+    calibration factor `scale`: per round `r<n>.session_s`,
+    `r<n>.catalog_s` and `r<n>.views_s`, the warm-up pass as `warmup_s`
+    and the JIT compile time of the first timed pass as `pass1.jit_s`."""
+    spans = read_spans(checkout, provenance)
+    rounds = {s["id"]: s["attrs"]["round"] for s in spans if s["name"] == "setup"}
+    out = {}
+    for s in spans:
+        if s["parent"] in rounds and s["name"] in ("session", "catalog", "views"):
+            out[f"r{rounds[s['parent']]}.{s['name']}_s"] = dur(s)
+        elif s["name"] == "warmup":
+            out["warmup_s"] = dur(s)
+        elif s["name"] == "pass" and s["attrs"]["pass"] == 1:
+            out["pass1.jit_s"] = s["attrs"]["jit_s"]
+    return {k: round(v * scale, 4) for k, v in sorted(out.items())}
 
 
 def run_once(checkout, side, workload, seed, seconds):
@@ -86,6 +117,7 @@ def run_once(checkout, side, workload, seed, seconds):
         total = rec["result"]["metrics"]["total_s"]["value"]
         scale = total / rec["provenance"]["raw_s"]["total_s"]
         rec["hot_s"] = hot_latencies(checkout, rec["provenance"], scale)
+        rec["phases"] = phases(checkout, rec["provenance"], scale)
     return rec
 
 
@@ -141,11 +173,17 @@ def report(records, bench):
             mp, mc, delta, won, iqr, verdict = compare(p, c, lower, m["bound"])
             print(f"{name:<13}{mp:>10.4g}{mc:>10.4g}{100 * delta:>+8.1f}"
                   f"{won:>4}/{len(pairs):<2}{iqr:>9.3g}{m['bound']:>7}  {verdict}")
-        print("per-query hot latency, median over pairs (s):")
-        for q in pairs[0]["parent"]["hot_s"]:
-            mp = statistics.median(pr["parent"]["hot_s"][q] for pr in pairs)
-            mc = statistics.median(pr["change"]["hot_s"][q] for pr in pairs)
-            print(f"  {q:<30}{mp:>8.3f}{mc:>8.3f}{100 * (mc - mp) / mp:>+8.1f}%")
+        for title, field in (("set-up phase", "phases"),
+                             ("per-query hot latency", "hot_s")):
+            print(f"{title}, median over pairs (s):")
+            for q in pairs[0]["parent"].get(field, {}):
+                ps = [pr["parent"][field][q] for pr in pairs if q in pr["parent"].get(field, {})]
+                cs = [pr["change"][field][q] for pr in pairs if q in pr["change"].get(field, {})]
+                if not (ps and cs):
+                    continue
+                mp, mc = statistics.median(ps), statistics.median(cs)
+                rel = f"{100 * (mc - mp) / mp:>+8.1f}%" if mp else ""
+                print(f"  {q:<30}{mp:>8.3f}{mc:>8.3f}{rel}")
     return len(bad)
 
 

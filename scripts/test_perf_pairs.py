@@ -1,5 +1,5 @@
-"""Unit tests of scripts/perf_pairs.py: seed lists, the per-metric verdict
-and the hot latencies read from a span file.
+"""Unit tests of scripts/perf_pairs.py: seed lists, the per-metric verdict,
+and the hot latencies and set-up phases read from a span file.
 
     python3 -m unittest discover -s scripts -p 'test_perf_pairs.py'
 """
@@ -88,6 +88,39 @@ class HotLatenciesTest(unittest.TestCase):
             got = perf_pairs.hot_latencies(d, {"spans": "spans.jsonl"}, 2.0)
         self.assertEqual(got, {"qa": 0.8, "qb": 0.4})
         self.assertEqual(list(got), ["qa", "qb"])
+
+
+class PhasesTest(unittest.TestCase):
+    def test_setup_rounds_warmup_and_first_pass_jit_scaled(self):
+        def span(id_, name, parent, start_s, end_s, **attrs):
+            return {"id": id_, "name": name, "parent": parent,
+                    "start_ns": int(start_s * 1e9), "end_ns": int(end_s * 1e9),
+                    "attrs": attrs}
+        spans = [
+            span(1, "run", 0, 0, 100),
+            span(2, "setup", 1, 0, 6, round=1),
+            span(3, "session", 2, 0, 1),
+            span(4, "catalog", 2, 1, 5),
+            span(5, "views", 2, 5, 6),
+            span(6, "setup", 1, 6, 8, round=2),
+            span(7, "session", 6, 6, 6.5),
+            span(8, "catalog", 6, 6.5, 7.5),
+            span(9, "views", 6, 7.5, 8),
+            span(10, "warmup", 1, 8, 11),
+            # a query of the warm-up is no set-up phase
+            span(11, "query", 10, 8, 9, query="qa"),
+            span(12, "pass", 1, 11, 20, traced=False, jit_s=1.5, **{"pass": 1}),
+            span(13, "pass", 1, 20, 30, traced=False, jit_s=3.0, **{"pass": 2}),
+        ]
+        with tempfile.TemporaryDirectory() as d:
+            path = Path(d) / "spans.jsonl"
+            path.write_text("\n".join(json.dumps(s) for s in spans) + "\n")
+            got = perf_pairs.phases(d, {"spans": "spans.jsonl"}, 2.0)
+        self.assertEqual(got, {
+            "pass1.jit_s": 3.0,
+            "r1.catalog_s": 8.0, "r1.session_s": 2.0, "r1.views_s": 2.0,
+            "r2.catalog_s": 2.0, "r2.session_s": 1.0, "r2.views_s": 1.0,
+            "warmup_s": 6.0})
 
 
 if __name__ == "__main__":

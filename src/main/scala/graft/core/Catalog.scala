@@ -1,6 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
 import org.apache.spark.sql.types._
 
 /** Explicit catalog over the driver-generated parquet fixtures.
@@ -89,23 +92,61 @@ object Catalog {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Footer-inferred schema per fixture file, cached — one footer read per
-    * (dir, table) generation. Schema inference on a single parquet file is
-    * a metadata-only read (no row groups touched). The cache key carries
-    * the file's (length, mtime) so a fixture regenerated IN PLACE while a
-    * session runs reads its fresh footer instead of the stale cached one —
-    * exactly the silent-drift scenario [[assertFixtureSchemas]] exists to
-    * catch (stale generations stay in the map; the handful of fixture
-    * files makes that leak irrelevant). */
-  private val footerSchemas =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), StructType]
+  /** One generation of a fixture file: its canonical path, its length
+    * and its modification time. A directory-layout fixture (a directory
+    * of part files) stamps as its files' summed length and latest mtime,
+    * so rewriting any part file is a new generation. Read through
+    * Hadoop's `FileSystem`, so a non-local fixture stamps too. */
+  final case class Stamp(path: String, length: Long, mtime: Long)
 
-  def footerSchema(spark: SparkSession, dir: String, name: String): StructType = {
-    val p = path(dir, name)
-    val f = new java.io.File(p)
-    footerSchemas.getOrElseUpdate((p, f.length, f.lastModified),
-      spark.read.parquet(p).schema)
+  def stamp(spark: SparkSession, dir: String, name: String): Stamp = {
+    val p = new Path(path(dir, name))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val (length, mtime) =
+      if (st.isFile) (st.getLen, st.getModificationTime)
+      else {
+        val files = fs.listFiles(p, true)
+        var (len, latest) = (0L, 0L)
+        while (files.hasNext) {
+          val f = files.next()
+          len += f.getLen
+          latest = math.max(latest, f.getModificationTime)
+        }
+        (len, latest)
+      }
+    val q = fs.makeQualified(p)
+    Stamp(if (fs.getScheme == "file") new java.io.File(q.toUri).getCanonicalPath
+      else q.toString, length, mtime)
   }
+
+  /** Footer-inferred schema per fixture file generation ([[stamp]]), so a
+    * fixture regenerated IN PLACE while a session runs reads its fresh
+    * footer instead of the stale cached one — exactly the silent-drift
+    * scenario [[assertFixtureSchemas]] exists to catch. Schema inference
+    * on a single parquet file is a metadata-only read (no row groups
+    * touched). Stale generations stay in the map; the handful of fixture
+    * files makes that leak irrelevant. */
+  private val footerSchemas =
+    scala.collection.concurrent.TrieMap.empty[Stamp, StructType]
+
+  def footerSchema(spark: SparkSession, dir: String, name: String): StructType =
+    footerSchemas.getOrElseUpdate(stamp(spark, dir, name),
+      spark.read.parquet(path(dir, name)).schema)
+
+  /** What a table's statistics depend on: its fixture file's generation,
+    * its name and DDL, the columns analyzed and the session settings that
+    * shape statistics (histograms on, their bins, NDV error, percentile
+    * accuracy). */
+  private final case class StatsKey(file: Stamp, table: String, ddl: String,
+      columns: Seq[String], settings: Seq[String])
+
+  /** Statistics per [[StatsKey]], each computed by one ANALYZE in this
+    * JVM; read and written only inside [[registerAnalyzed]], under this
+    * object's lock. No eviction: a JVM sees a handful of fixture
+    * generations. */
+  private val analyzedStats =
+    scala.collection.mutable.Map.empty[StatsKey, CatalogStatistics]
 
   /** Fail fast when a fixture file's footer does not match the pinned
     * catalog schema (names, order, types — timestamp unit included). The
@@ -209,6 +250,13 @@ object Catalog {
     }.toSeq
   }
 
+  /** The ANALYZE statement of fixture `name`, registered as `table`. */
+  private[graft] def analyzeSql(name: String, table: String): String = {
+    val cols = statsColumns(name, schemas(name))
+    s"ANALYZE TABLE $table COMPUTE STATISTICS" +
+      (if (cols.isEmpty) "" else s" FOR COLUMNS ${cols.mkString(", ")}")
+  }
+
   /** Register every fixture as an ANALYZED catalog table.
     *
     * Spark's cost-based join reorder (`spark.sql.cbo.joinReorder.enabled`,
@@ -230,9 +278,17 @@ object Catalog {
     * path-based relations with size-only statistics, so their plans are
     * the same with or without this call.
     *
-    * Idempotent per (session, dir): every SQL query entry point calls this,
-    * so re-registration (and re-analysis) is skipped when the session has
-    * already analyzed the same scale-factor directory.
+    * Every SQL query entry point calls this, so it registers only what
+    * the context's catalog does not already hold: a table is left alone
+    * when its location, schema and statistics are those this call would
+    * install, and is otherwise created again. Its statistics are computed
+    * once per JVM — the reference likewise builds its catalog once, before
+    * the timed queries — and kept in [[analyzedStats]] under a
+    * [[StatsKey]]: the fixture file's [[stamp]], the table name and DDL,
+    * the analyzed columns and the session settings that shape statistics.
+    * A later session or SparkContext then creates the table and installs
+    * the kept `CatalogStatistics`, running no Spark job; a rewritten
+    * fixture file or a changed setting is analyzed again.
     */
   def registerAnalyzed(spark: SparkSession, dir: String): Unit = synchronized {
     assertFixtureSchemas(spark, dir)
@@ -241,43 +297,50 @@ object Catalog {
     // normalizing projection as the `events` temp view (stats propagate
     // through the project, so the CBO still sees row counts)
     val eventsNanos = footerSchema(spark, dir, "events")("ts").dataType == LongType
-    def normalizeEventsView(): Unit = spark.sql(
-      """CREATE OR REPLACE TEMP VIEW events AS
-        |SELECT event_id, timestamp_micros(ts DIV 1000) AS ts, user_id,
-        |       event_type, value, props
-        |FROM events__raw""".stripMargin)
-    val marker = "graft.analyzed.dir"
-    // both branches drop fixture-name temp views below — adapter view
-    // sets that shadow those names are no longer resolvable afterwards
+    // fixture-name temp views are dropped below — adapter view sets that
+    // shadow those names are no longer resolvable afterwards
     invalidateAdapterViews(spark)
-    if (spark.conf.getOption(marker).contains(dir)) {
-      // already analyzed this dir — but a temp view registered since (e.g.
-      // registerAll in the same session) would shadow the catalog tables
-      // and silently starve the planner of statistics; always clear them
-      tableNames.foreach(spark.catalog.dropTempView)
-      if (eventsNanos) normalizeEventsView()
-      return
-    }
+    val catalog = spark.sessionState.catalog
+    val conf = spark.sessionState.conf
+    val settings = Seq(conf.histogramEnabled, conf.histogramNumBins,
+      conf.ndvMaxError, conf.percentileAccuracy).map(_.toString)
     tableNames.foreach { n =>
-      // a leftover temp view would shadow the catalog table
+      // a temp view (e.g. registerAll in this session) would shadow the
+      // catalog table and silently starve the planner of statistics
       spark.catalog.dropTempView(n)
       val (table, ddl) =
         if (n == "events" && eventsNanos)
           ("events__raw", StructType(schemas(n).map(f =>
             if (f.name == "ts") f.copy(dataType = LongType) else f)).toDDL)
         else (n, schemas(n).toDDL)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(
-        s"CREATE TABLE $table ($ddl) USING parquet LOCATION '${path(dir, n)}'")
+      val ident = TableIdentifier(table)
+      val location = new Path(path(dir, n))
+      val fs = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val cols = statsColumns(n, schemas(n))
-      if (cols.isEmpty)
-        spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
-      else
+      val key = StatsKey(stamp(spark, dir, n), table, ddl, cols, settings)
+      val kept = analyzedStats.get(key)
+      val current =
+        if (catalog.tableExists(ident)) Some(catalog.getTableMetadata(ident)) else None
+      val registered = kept.isDefined && current.exists(t =>
+        fs.makeQualified(new Path(t.location)) == fs.makeQualified(location) &&
+          t.schema.toDDL == ddl && t.stats == kept)
+      if (!registered) {
+        spark.sql(s"DROP TABLE IF EXISTS $table")
         spark.sql(
-          s"ANALYZE TABLE $table COMPUTE STATISTICS FOR COLUMNS ${cols.mkString(", ")}")
+          s"CREATE TABLE $table ($ddl) USING parquet LOCATION '${path(dir, n)}'")
+        kept match {
+          case Some(stats) => catalog.alterTableStats(ident, Some(stats))
+          case None =>
+            spark.sql(analyzeSql(n, table))
+            analyzedStats(key) = catalog.getTableMetadata(ident).stats.get
+        }
+      }
     }
-    if (eventsNanos) normalizeEventsView()
-    spark.conf.set(marker, dir)
+    if (eventsNanos) spark.sql(
+      """CREATE OR REPLACE TEMP VIEW events AS
+        |SELECT event_id, timestamp_micros(ts DIV 1000) AS ts, user_id,
+        |       event_type, value, props
+        |FROM events__raw""".stripMargin)
   }
 }
 

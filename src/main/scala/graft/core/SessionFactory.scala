@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * runtime-sized partitions, demotes shuffles to broadcasts when the built
   * side turns out small, and splits skewed join partitions.
   *
-  * Three settings carry no semantics. Two exist so that a JVM compiles
+  * Five settings carry no semantics. Two exist so that a JVM compiles
   * each generated class once, as the reference's runtime compiles its
   * generated projections, comparators and equalisers once: a codegen
   * cache sized to the measured working set, and no per-session executor
@@ -31,6 +31,12 @@ import org.apache.spark.sql.SparkSession
   * every task binary and every broadcast-join build side is a broadcast,
   * and Spark's 4 MiB chunk, allocated whatever the payload, made each one
   * a short-lived humongous array that set the process's peak RSS.
+  *
+  * The last two name graft's local file systems ([[NioLocalFileSystem]],
+  * [[NioLocalFs]]): Hadoop's own, without the native `libhadoop`, fork a
+  * `chmod` for every file and directory they create and a `readlink` for
+  * every `FileContext` rename; graft's make the same calls through
+  * `java.nio.file`.
   */
 object SessionFactory {
 
@@ -114,6 +120,17 @@ object SessionFactory {
       // peak RSS fell from 2.5 to 1.7 GiB (10 run pairs, 4 cores), with the
       // same plans.
       .config("spark.broadcast.blockSize", "256k")
+      // Hadoop's local file system, without the native libhadoop, forks
+      // `chmod` through Shell on every file create and mkdir and
+      // `readlink` on every FileContext rename (the checkpoint file
+      // manager's commits, the sinks' pointer flips): a JFR count found
+      // 1,197 processes in one perfbench stream_replay run. These classes
+      // do the same two calls through java.nio.file (falling back to
+      // Hadoop's code where NIO cannot express them): the run forks 13,
+      // and its median total_s fell 16% (10 run pairs, 4 cores).
+      // LocalFilesSpec checks them against Hadoop's.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
     // dev-harness knob (audits/soaks only, never set by library users):
     // ';'-separated spark.* k=v pairs layered on top of the standard
     // config — e.g. the skewed-fixture soak scales the AQE skew thresholds

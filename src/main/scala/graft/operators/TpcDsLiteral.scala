@@ -582,18 +582,11 @@ object TpcDsLiteral {
   }
 
   /** One generation of a fixture, as the derived tables see it: the
-    * directory and the (length, mtime) of the two files they read. A
-    * fixture rewritten in place is a new generation. */
-  private final case class Fixture(dir: String, lineitem: (Long, Long),
-      orders: (Long, Long))
-  private def fixture(dir: String): Fixture = {
-    def stamp(name: String) = {
-      val f = new java.io.File(Catalog.path(dir, name))
-      (f.length, f.lastModified)
-    }
-    Fixture(new java.io.File(dir).getCanonicalPath, stamp("lineitem"),
-      stamp("orders"))
-  }
+    * [[Catalog.stamp]]s of the two files they read. A fixture rewritten in
+    * place is a new generation. */
+  private final case class Fixture(lineitem: Catalog.Stamp, orders: Catalog.Stamp)
+  private def fixture(spark: SparkSession, dir: String): Fixture =
+    Fixture(Catalog.stamp(spark, dir, "lineitem"), Catalog.stamp(spark, dir, "orders"))
 
   /** The derived tables of one fixture generation, written as
     * `<dir>/<name>.parquet`, each with the schema it was written with. */
@@ -618,7 +611,7 @@ object TpcDsLiteral {
     * sessions wait for one writer. */
   private[operators] def generated(spark: SparkSession, dir: String)
       : Generation = synchronized {
-    generations.getOrElseUpdate(fixture(dir), {
+    generations.getOrElseUpdate(fixture(spark, dir), {
       val gen = new java.io.File(generatedRoot, s"g${generations.size}").getPath
       Generation(gen, derivedTables(spark, dir).map { case (name, df) =>
         df.write.mode("overwrite").parquet(s"$gen/$name.parquet")

@@ -101,4 +101,19 @@ class CboSpec extends SparkSpec {
     assert(costed.take(2).toSet != Set("lineitem", "orders"),
       s"CBO opened tpch08's join tree with fact×fact: $costed")
   }
+
+  test("tpch08's plan is the same over kept statistics as over a fresh ANALYZE") {
+    def plan(): String = {
+      val p = graft.SparkEntry.queries("tpch08_market_share")(spark, sf())
+        .queryExecution.optimizedPlan
+      (p.treeString + p.stats.simpleString).replaceAll("#\\d+", "#")
+    }
+    Catalog.registerAnalyzed(spark, sf())
+    Catalog.tableNames.foreach(n => spark.sql(s"DROP TABLE $n"))
+    val (_, jobs) = jobsDuring(Catalog.registerAnalyzed(spark, sf()))
+    assert(jobs == 0, "registering the fixture again re-ran ANALYZE")
+    val kept = plan()
+    Catalog.tableNames.foreach(n => spark.sql(Catalog.analyzeSql(n, n)))
+    assert(plan() == kept)
+  }
 }
